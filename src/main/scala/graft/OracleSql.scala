@@ -1581,9 +1581,8 @@ object OracleSql {
     // q114: interpolated TRIGRAM-LM cross-entropy — q106's recipe one
     // Markov order up: each position 3..n contributes the fixed-point
     // -ln of the equal-weight add-one interpolation of trigram, bigram
-    // and unigram evidence. This SQL is the DISTRIBUTED five-join
-    // formulation; the engine answers via the collected-table native
-    // kernel — the hash match proves both paths agree. Replays
+    // and unigram evidence. This SQL is the same five-join formulation
+    // the engine runs. Replays
     // QualityModel.trigramCrossEntropy. The reused CTEs are
     // MATERIALIZED: DuckDB inlines CTEs by default, and five join
     // inputs each re-deriving the regex-tokenize chain multiplied the

@@ -1767,10 +1767,9 @@ object SparkEntry {
   /** Interpolated TRIGRAM-LM cross-entropy per document — q106 one
     * Markov order up (KenLM's deployed filters are n ≥ 3; a bigram LM
     * cannot see word order beyond adjacency). Runs the DISTRIBUTED
-    * 3-aggregate/5-join plan (measured: the collected-kernel path has no
-    * winning regime at order 3 — tools/TriAB, operator scaladoc), which
-    * the oracle replays in DuckDB; the opt-in native-kernel path is
-    * spec-pinned result-identical. */
+    * 3-aggregate/5-join plan (measured: a collected-table plan has no
+    * winning regime at order 3 — `scaling/r14/newops_sweep.json`,
+    * operator scaladoc), which the oracle replays in DuckDB. */
   private def q114(s: SparkSession, dir: String): DataFrame =
     QualityModel.trigramCrossEntropy(T(s, dir, "documents"), "doc_id",
         "text")

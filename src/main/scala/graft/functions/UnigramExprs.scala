@@ -360,251 +360,6 @@ case class FrozenBigramScoreExpr(child: Expression,
     copy(child = newChild)
 }
 
-/** Static kernel for [[TrigramScoreExpr]] — shared by interpreted eval
-  * and generated code. */
-object TrigramKernel {
-
-  /** Sum the fixed-point -ln P(t_i | t_{i-2} t_{i-1}) terms over one
-    * document's order-3 conditional stream (positions 3..n) through one
-    * nested-map probe per position (p2 -> p1 -> c -> lp_i; no separator
-    * string, so tokens containing any code point can never alias a
-    * different triple). A miss throws — the self-scored contract
-    * ([[BigramKernel.score]]'s rationale, one order up). Returns packed
-    * (n_terms, lp_sum); documents with < 3 tokens yield (0, 0) and are
-    * filtered by the caller (no order-3 conditional evidence). */
-  def score(toks: ArrayData,
-            lp: java.util.HashMap[String, java.util.HashMap[String, java.util.HashMap[String, java.lang.Long]]])
-      : InternalRow = {
-    val n = if (toks == null) 0 else toks.numElements()
-    var sum = 0L
-    var i = 2
-    var p2: String = if (n > 0) toks.getUTF8String(0).toString else null
-    var p1: String = if (n > 1) toks.getUTF8String(1).toString else null
-    while (i < n) {
-      val cur = toks.getUTF8String(i).toString
-      val m1 = lp.get(p2)
-      val m2 = if (m1 == null) null else m1.get(p1)
-      val v = if (m2 == null) null else m2.get(cur)
-      if (v == null) throw new IllegalStateException(
-        s"trigram ('$p2','$p1','$cur') not in the ${lp.size}-context trigram " +
-          "LM table — the LM was trained with a different tokensOf than the scorer")
-      sum += v.longValue
-      p2 = p1
-      p1 = cur
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](if (n >= 3) n - 2 else 0, sum))
-  }
-}
-
-/** [[TrigramScoreExpr]]'s nested probe table in executor-ready form. */
-object TrigramLpTable {
-  def build(lp: Seq[((String, String, String), Long)])
-      : java.util.HashMap[String, java.util.HashMap[String, java.util.HashMap[String, java.lang.Long]]] = {
-    val m = new java.util.HashMap[String, java.util.HashMap[String, java.util.HashMap[String, java.lang.Long]]]()
-    lp.foreach { case ((p2, p1, c), v) =>
-      var m1 = m.get(p2)
-      if (m1 == null) {
-        m1 = new java.util.HashMap[String, java.util.HashMap[String, java.lang.Long]]()
-        m.put(p2, m1)
-      }
-      var m2 = m1.get(p1)
-      if (m2 == null) {
-        m2 = new java.util.HashMap[String, java.lang.Long]()
-        m1.put(p1, m2)
-      }
-      m2.put(c, java.lang.Long.valueOf(v))
-    }
-    m
-  }
-}
-
-/** Native interpolated-trigram-LM scorer: per document, `(n_terms,
-  * lp_sum)` over the order-3 conditional stream (positions 3..n) under a
-  * driver-collected (p2, p1, c) -> lp_i table — the zero-shuffle scoring
-  * pass of [[graft.operators.QualityModel.trigramCrossEntropy]] when the
-  * distinct trigram set is Zipf-small enough to collect. The distributed
-  * formulation explodes every corpus position a second time and probes
-  * FIVE count frames through joins; here the lp_i values are computed BY
-  * Catalyst on the collected trigram frame (same arithmetic expression
-  * as the distributed path, built by the same function), so the two
-  * paths cannot diverge on floating-point rounding. The table rides a
-  * BROADCAST ([[BigramScoreExpr]]'s rationale, with a strictly bigger
-  * table at this order). */
-case class TrigramScoreExpr(child: Expression,
-                            table: org.apache.spark.broadcast.Broadcast[java.util.HashMap[String, java.util.HashMap[String, java.util.HashMap[String, java.lang.Long]]]])
-  extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(_: org.apache.spark.sql.types.StringType, _) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"trigram_score expects an ARRAY<STRING> child, got ${other.catalogString}")
-    }
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_terms", DataTypes.IntegerType, nullable = false),
-    StructField("lp_sum", DataTypes.LongType, nullable = false)))
-  override def nullable: Boolean = false
-  override def prettyName: String = "trigram_score"
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    TrigramKernel.score(v.asInstanceOf[ArrayData], table.value)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val ref = ctx.addReferenceObj("trigramLpBc", table,
-      "org.apache.spark.broadcast.Broadcast")
-    ev.copy(
-      code = code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.InternalRow ${ev.value} =
-          graft.functions.TrigramKernel.score(
-            ${c.isNull} ? null : ${c.value},
-            (java.util.HashMap) $ref.value());
-      """,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): TrigramScoreExpr =
-    copy(child = newChild)
-}
-
-/** Executor-ready uni+bigram count tables for [[TriCountsExpr]] — the
-  * HYBRID trigram-perplexity side tables (guide §2.4/§3.1: the four
-  * side joins of the distributed order-3 plan each re-shuffle the
-  * position-sized conditional stream by a different string key, while
-  * the tables they probe are Zipf-small; collecting THEM — and only
-  * them — replaces four corpus-sized exchanges with O(1) broadcast
-  * probes, keeping the genuinely position-sized trigram table
-  * distributed, which is exactly where tools/TriAB measured the
-  * all-local path losing). Nested map for bigrams — no separator
-  * string, so tokens containing any code point can never alias a
-  * different pair. */
-object TriSideTables {
-  final class Tables(val uni: java.util.HashMap[String, java.lang.Long],
-                     val big: java.util.HashMap[String, java.util.HashMap[String, java.lang.Long]])
-    extends Serializable
-
-  def build(uni: Seq[(String, Long)],
-            big: Seq[((String, String), Long)]): Tables = {
-    val u = new java.util.HashMap[String, java.lang.Long](uni.size * 2)
-    uni.foreach { case (t, c) => u.put(t, java.lang.Long.valueOf(c)) }
-    val b = new java.util.HashMap[String, java.util.HashMap[String, java.lang.Long]]()
-    big.foreach { case ((p, c), v) =>
-      var m = b.get(p)
-      if (m == null) {
-        m = new java.util.HashMap[String, java.lang.Long]()
-        b.put(p, m)
-      }
-      m.put(c, java.lang.Long.valueOf(v))
-    }
-    new Tables(u, b)
-  }
-}
-
-/** Static kernel for [[TriCountsExpr]] — shared by interpreted eval and
-  * generated code. */
-object TriCountsKernel {
-
-  /** The four side counts of one (p2, p1, c) position: ctxcnt =
-    * big(p2, p1), bcnt = big(p1, c), pcnt = uni(p1), ccnt = uni(c).
-    * A miss throws — the self-scored contract ([[TrigramKernel.score]]'s
-    * rationale): the count frames and the conditional stream derive from
-    * the SAME corpus scan, so every probed key exists by construction
-    * and a miss is a wiring bug, never data. */
-  def counts(p2: org.apache.spark.unsafe.types.UTF8String,
-             p1: org.apache.spark.unsafe.types.UTF8String,
-             c: org.apache.spark.unsafe.types.UTF8String,
-             t: TriSideTables.Tables): InternalRow = {
-    val sp2 = p2.toString
-    val sp1 = p1.toString
-    val sc = c.toString
-    def bigOf(a: String, b: String): Long = {
-      val m = t.big.get(a)
-      val v = if (m == null) null else m.get(b)
-      if (v == null) throw new IllegalStateException(
-        s"bigram ('$a','$b') not in the collected side table — side " +
-          "tables and conditional stream derive from different corpora")
-      v.longValue
-    }
-    def uniOf(a: String): Long = {
-      val v = t.uni.get(a)
-      if (v == null) throw new IllegalStateException(
-        s"token '$a' not in the collected side table — side tables and " +
-          "conditional stream derive from different corpora")
-      v.longValue
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](bigOf(sp2, sp1), bigOf(sp1, sc), uniOf(sp1), uniOf(sc)))
-  }
-}
-
-/** Native side-count probe for the HYBRID trigram-perplexity plan:
-  * (p2, p1, c) -> struct(ctxcnt, bcnt, pcnt, ccnt) through broadcast
-  * uni/bigram tables — four O(1) probes replacing the four side JOINS
-  * (each a position-sized exchange) of the distributed order-3 plan.
-  * The lp arithmetic is NOT in here: the caller feeds these counts to
-  * the SAME lpInterp3 Column expression the distributed branch uses, so
-  * the two plans cannot diverge on floating-point rounding. The tables
-  * ride a BROADCAST ([[TrigramScoreExpr]]'s rationale). */
-case class TriCountsExpr(p2: Expression, p1: Expression, c: Expression,
-                         tables: org.apache.spark.broadcast.Broadcast[TriSideTables.Tables])
-  extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-
-  override def first: Expression = p2
-  override def second: Expression = p1
-  override def third: Expression = c
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (children.forall(_.dataType == DataTypes.StringType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"tri_counts expects three STRING children, got " +
-        children.map(_.dataType.catalogString).mkString(", "))
-  override def dataType: DataType = StructType(Seq(
-    StructField("ctxcnt", DataTypes.LongType, nullable = false),
-    StructField("bcnt", DataTypes.LongType, nullable = false),
-    StructField("pcnt", DataTypes.LongType, nullable = false),
-    StructField("ccnt", DataTypes.LongType, nullable = false)))
-  override def nullable: Boolean = false
-  override def prettyName: String = "tri_counts"
-
-  override def eval(input: InternalRow): Any =
-    TriCountsKernel.counts(
-      p2.eval(input).asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      p1.eval(input).asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      c.eval(input).asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      tables.value)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val a = p2.genCode(ctx)
-    val b = p1.genCode(ctx)
-    val d = c.genCode(ctx)
-    val ref = ctx.addReferenceObj("triSideBc", tables,
-      "org.apache.spark.broadcast.Broadcast")
-    ev.copy(
-      code = code"""
-        ${a.code}
-        ${b.code}
-        ${d.code}
-        org.apache.spark.sql.catalyst.InternalRow ${ev.value} =
-          graft.functions.TriCountsKernel.counts(
-            ${a.isNull} ? null : ${a.value},
-            ${b.isNull} ? null : ${b.value},
-            ${d.isNull} ? null : ${d.value},
-            (graft.functions.TriSideTables.Tables) $ref.value());
-      """,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): TriCountsExpr =
-    copy(p2 = newFirst, p1 = newSecond, c = newThird)
-}
-
 /** Static kernel for [[FrozenTrigramScoreExpr]] — shared by interpreted
   * eval and generated code. */
 object FrozenTrigramKernel {

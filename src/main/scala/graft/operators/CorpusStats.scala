@@ -423,8 +423,9 @@ object CorpusStats {
   private val Bm25Tag = "bm25-v2"
 
   // Explicit artifact schemas (r17): the distributed df read passes one,
-  // so it pays no schema-inference job — the LifecycleProbe trace showed
-  // one "parquet at" job per read before this. The 1-row meta is read
+  // so it pays no schema-inference job — the r17 per-step lifecycle
+  // trace (OPTIMIZATION_r17.md) showed one "parquet at" job per read
+  // before this. The 1-row meta is read
   // with graft.util.ArtifactIO.readLocal (r18): zero Spark jobs for
   // driver-bound metadata.
   private val Bm25DfSchema = org.apache.spark.sql.types.StructType(Seq(

@@ -42,8 +42,9 @@ object DenseIndex {
   private val IvfTag = "ivf-dense-v1"
 
   // Explicit artifact schemas: the distributed vector read passes one,
-  // so it pays no schema-inference job (the r17 LifecycleProbe trace
-  // showed one "parquet at" job per artifact read before this). The
+  // so it pays no schema-inference job (the r17 per-step lifecycle
+  // trace, OPTIMIZATION_r17.md, showed one "parquet at" job per artifact
+  // read before this). The
   // DRIVER-SIZED artifact tables (1-row meta, nlist-row centroids) are
   // read with graft.util.ArtifactIO.readLocal — zero Spark jobs (r18:
   // the remaining lifecycle jobs were exactly these collect round-trips).

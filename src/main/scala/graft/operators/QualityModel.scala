@@ -1466,8 +1466,9 @@ object QualityModel {
     collectBigramLpFrames(df, uni, big, maxLocalBigrams)
   }
 
-  // Local-path cap default RETUNED from 4M (r14, tools/TriAB measured):
-  // the collected-kernel path wins only while the bigram table is small
+  // Local-path cap default RETUNED from 4M (r14, interleaved A/B in
+  // `scaling/r14/newops_sweep.json`, "triab_order2"): the
+  // collected-kernel path wins only while the bigram table is small
   // (270k tokens: 0.91 s local vs 1.11 distributed) and LOSES 5x once
   // the table reaches millions (2.9M tokens / ~1.9M bigrams: 29.3 local
   // vs 5.9 distributed — driver collect + map build + broadcast
@@ -1579,46 +1580,6 @@ object QualityModel {
         + lit(1.0 / 3) * (ccnt + lit(1)).cast("double") / (nTotal + vocab).cast("double")
     ) * 1e6).cast("long")
 
-  /** The local trigram-LM table: collect the distinct-trigram count
-    * frame (and the bigram + unigram frames) and compute
-    * (p2, p1, c) -> lp_i BY Catalyst on the collected rows (same
-    * [[lpInterp3]] expression as the distributed branch). None past
-    * `maxLocal` — the cap bounds ALL THREE collects independently
-    * (neither "vocab ≤ bigrams" nor "bigrams ≤ trigrams" is a theorem:
-    * short-document corpora grow the lower-order frames without growing
-    * the higher ones). */
-  private def collectTrigramLpFrames(df: DataFrame, uni: DataFrame,
-                                     big: DataFrame, tri: DataFrame,
-                                     maxLocal: Int)
-      : Option[Seq[((String, String, String), Long)]] = {
-    val tRows = tri.limit(maxLocal + 1).collect()
-    if (tRows.length > maxLocal) return None
-    val bRows = big.limit(maxLocal + 1).collect()
-    if (bRows.length > maxLocal) return None
-    val uRows = uni.limit(maxLocal + 1).collect()
-    if (uRows.length > maxLocal) return None
-    val spark = df.sparkSession
-    import spark.implicits._
-    val cntOf = uRows.iterator
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val bcntOf = bRows.iterator
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val nTotal = uRows.iterator.map(_.getLong(1)).sum
-    val vocabN = uRows.length.toLong
-    Some(tRows.iterator
-      .map(r => (r.getString(0), r.getString(1), r.getString(2),
-        r.getLong(3), bcntOf((r.getString(0), r.getString(1))),
-        bcntOf((r.getString(1), r.getString(2))),
-        cntOf(r.getString(1)), cntOf(r.getString(2))))
-      .toSeq.toDF("__p2", "__p1", "__c", "tcnt", "ctxcnt", "bcnt",
-        "pcnt", "ccnt")
-      .select(col("__p2"), col("__p1"), col("__c"),
-        lpInterp3(col("tcnt"), col("ctxcnt"), col("bcnt"), col("pcnt"),
-          col("ccnt"), lit(nTotal), lit(vocabN)))
-      .as[(String, String, String, Long)].collect()
-      .map { case (p2, p1, c, v) => ((p2, p1, c), v) }.toSeq)
-  }
-
   /** Interpolated TRIGRAM-LM cross-entropy per document — the order-3
     * rung of the [[unigramCrossEntropy]]/[[bigramCrossEntropy]] ladder
     * (KenLM's deployed corpus filters run at order ≥ 3; a bigram model
@@ -1629,44 +1590,21 @@ object QualityModel {
     * Documents with < 3 tokens are omitted (no order-3 conditional
     * evidence). Output: (idCol, n_terms, xent, ppl).
     *
-    * 100 TB design: the DISTRIBUTED plan is the default
-    * (maxLocalTrigrams = 0) — three count aggregations (all
-    * map-side-combined, keyed by token/pair/triple) and five joins
-    * probing them. MEASURED (tools/TriAB, local[32]): unlike the
-    * unigram/bigram orders, the collected-table kernel path has NO
-    * winning regime at order 3 — a 3-token context almost never
-    * repeats, so the distinct-trigram table tracks the POSITION count
-    * instead of compressing Zipf-style (270k tokens: 1.34 s distributed
-    * vs 1.50 local; 2.9M tokens: 9.4 vs 53.4 — the driver collect +
-    * nested-map build + broadcast dominates). A positive
-    * `maxLocalTrigrams` opts into the
-    * [[graft.functions.TrigramScoreExpr]] kernel anyway (lp values
-    * computed BY Catalyst on the collected frame, spec-pinned
-    * result-identical) for callers that must avoid exchanges
-    * entirely.
-    *
-    * HYBRID opt-in (r18, guide §2.4/§3.1): a positive
-    * `maxLocalSideTables` collects the Zipf-small uni/bigram SIDE
-    * tables (when both fit the cap) and turns the four side joins into
-    * broadcast O(1) probes ([[graft.functions.TriCountsExpr]]) feeding
-    * the SAME lpInterp3 expression — bit-identical counts, bit-identical
-    * lp; only the genuinely position-sized trigram join stays
-    * distributed. MEASURED (tools/TriAB18, interleaved one-JVM A/B at
-    * sf0.1: hybrid min 2.34 s vs distributed 1.71) the hybrid LOSES in
-    * this bench regime and is NOT the default: AQE already promotes the
-    * small side joins to broadcast hash joins locally (ReuseExchange
-    * dedupes the two uni and two big subtrees), so the hybrid's two
-    * eager collect barriers buy nothing here. What the hybrid removes
-    * that AQE cannot is the four SHUFFLE WRITES of the position stream
-    * (AQE's runtime broadcast conversion happens after the big side's
-    * shuffle stage is materialized) — on a cluster where shuffle writes
-    * are network+disk rather than page cache, that is the dominant
-    * cost, so deployments opt in with a positive cap. Past the cap the
-    * 5-join plan runs unchanged — degrade, don't die. */
+    * 100 TB design: three count aggregations (all map-side-combined,
+    * keyed by token/pair/triple) and five joins probing them. Unlike the
+    * unigram/bigram orders there is no collected-table kernel path: a
+    * 3-token context almost never repeats, so the distinct-trigram table
+    * tracks the POSITION count instead of compressing Zipf-style, and a
+    * collected table lost at every size measured (local[32],
+    * `scaling/r14/newops_sweep.json` "triab_order3"; 270k tokens: 1.34 s
+    * distributed vs 1.50 collected; 2.9M tokens: 9.4 vs 53.4 — the
+    * driver collect + nested-map build + broadcast dominates). Broadcasting only the uni/bigram side tables lost too
+    * (interleaved one-JVM A/B at sf0.1, `scaling/r18/triab18.txt`:
+    * 2.34 s vs 1.71 s distributed): AQE already promotes the small side
+    * joins to broadcast hash joins and ReuseExchange dedupes the two uni
+    * and two big subtrees (OPTIMIZATION_r18.md). */
   def trigramCrossEntropy(df: DataFrame, idCol: String, textCol: String,
-                          tokensOf: Column => Column = TextFns.tokens,
-                          maxLocalTrigrams: Int = 0,
-                          maxLocalSideTables: Int = 0): DataFrame = {
+                          tokensOf: Column => Column = TextFns.tokens): DataFrame = {
     val base = df.select(col(idCol), tokensOf(col(textCol)).as("__toks"))
     val uni = base.select(explode(col("__toks")).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
@@ -1692,63 +1630,6 @@ object QualityModel {
         col("__t.p1").as("__p1"), col("__t.c").as("__c"))
     val tri = tripsDf.groupBy(col("__p2"), col("__p1"), col("__c"))
       .agg(count(lit(1)).as("tcnt"))
-    def finish(scored: DataFrame): DataFrame =
-      scored.groupBy(col(idCol))
-        .agg(count(lit(1)).cast("int").as("n_terms"),
-          sum(col("lp_i")).as("lp_sum"))
-        .select(col(idCol), col("n_terms"),
-          round(col("lp_sum").cast("double") / (col("n_terms") * 1e6), 6)
-            .as("xent"),
-          round(exp(col("lp_sum").cast("double") / (col("n_terms") * 1e6)), 4)
-            .as("ppl"))
-    if (maxLocalTrigrams > 0) {
-      val lpLocal = collectTrigramLpFrames(df, uni, big, tri,
-        maxLocalTrigrams)
-      if (lpLocal.isDefined) {
-        val bc = df.sparkSession.sparkContext.broadcast(
-          graft.functions.TrigramLpTable.build(lpLocal.get))
-        return df.select(col(idCol),
-            org.apache.spark.sql.graft.ExprBridge.column(
-              graft.functions.TrigramScoreExpr(
-                org.apache.spark.sql.graft.ExprBridge.expression(
-                  tokensOf(col(textCol))), bc)).as("__s"))
-          .select(col(idCol), col("__s.n_terms").as("n_terms"),
-            col("__s.lp_sum").as("lp_sum"))
-          .filter(col("n_terms") > 0) // < 3 tokens omitted, as distributed
-          .select(col(idCol), col("n_terms"),
-            round(col("lp_sum").cast("double") / (col("n_terms") * 1e6), 6)
-              .as("xent"),
-            round(exp(col("lp_sum").cast("double") / (col("n_terms") * 1e6)), 4)
-              .as("ppl"))
-      }
-    }
-    if (maxLocalSideTables > 0) {
-      val bRows = big.limit(maxLocalSideTables + 1).collect()
-      if (bRows.length <= maxLocalSideTables) {
-        val uRows = uni.limit(maxLocalSideTables + 1).collect()
-        if (uRows.length <= maxLocalSideTables) {
-          val uniSeq = uRows.iterator
-            .map(r => (r.getString(0), r.getLong(1))).toSeq
-          val bigSeq = bRows.iterator
-            .map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toSeq
-          val nTotal = uniSeq.iterator.map(_._2).sum
-          val vocabN = uniSeq.size.toLong
-          val bc = df.sparkSession.sparkContext.broadcast(
-            graft.functions.TriSideTables.build(uniSeq, bigSeq))
-          def e(c: Column) =
-            org.apache.spark.sql.graft.ExprBridge.expression(c)
-          val scored = tripsDf.join(tri, Seq("__p2", "__p1", "__c"))
-            .withColumn("__side", org.apache.spark.sql.graft.ExprBridge.column(
-              graft.functions.TriCountsExpr(
-                e(col("__p2")), e(col("__p1")), e(col("__c")), bc)))
-            .select(col(idCol),
-              lpInterp3(col("tcnt"), col("__side.ctxcnt"),
-                col("__side.bcnt"), col("__side.pcnt"), col("__side.ccnt"),
-                lit(nTotal), lit(vocabN)).as("lp_i"))
-          return finish(scored)
-        }
-      }
-    }
     val totals = uni.agg(
       sum(col("cnt")).as("n_total"), count(lit(1)).as("vocab"))
     val scored = tripsDf
@@ -1765,7 +1646,14 @@ object QualityModel {
       .select(col(idCol),
         lpInterp3(col("tcnt"), col("ctxcnt"), col("bcnt"), col("pcnt"),
           col("ccnt"), col("n_total"), col("vocab")).as("lp_i"))
-    finish(scored)
+    scored.groupBy(col(idCol))
+      .agg(count(lit(1)).cast("int").as("n_terms"),
+        sum(col("lp_i")).as("lp_sum"))
+      .select(col(idCol), col("n_terms"),
+        round(col("lp_sum").cast("double") / (col("n_terms") * 1e6), 6)
+          .as("xent"),
+        round(exp(col("lp_sum").cast("double") / (col("n_terms") * 1e6)), 4)
+          .as("ppl"))
   }
 
   /** CCNet-style perplexity bucketing: every document assigned to one of

@@ -48,8 +48,8 @@ object UrlDedup {
     * [[normalizeUrl]] is NULLABLE, so a consumer's
     * `filter(isNotNull(canon))` can no longer be optimized away and
     * partially re-evaluates the regex chain per row — measured +41% on
-    * the urlGroups scan vs +14% for the prefiltered shape
-    * (tools/UrlAb17, rich1). */
+    * the urlGroups scan vs +14% for the prefiltered shape (rich1,
+    * `scaling/r17/url_guard_ab.json`). */
   private def canonOf(url: Column): Column = {
     val noFrag = regexp_replace(url, "#.*$", "")
     val base = regexp_extract(noFrag, "^([^?]*)", 1)

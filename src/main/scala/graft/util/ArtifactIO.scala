@@ -13,12 +13,12 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType,
 /** DRIVER-LOCAL parquet reads for ENGINE-WRITTEN artifacts (frozen LMs,
   * tokenizers, retrieval-index metas/centroids): every declared schema
   * here mirrors the writer in the same file. The r17 job-count profile
-  * (tools/QueryStats + LifecycleProbe) measured one Spark job per
-  * artifact read — schema inference was eliminated in r17 by explicit
-  * schemas, and r18 removes the remaining collect round-trip: these
-  * tables are driver-sized by construction (every caller collects them
-  * anyway), so they are read in-process via parquet-hadoop, zero Spark
-  * jobs. Layout-DETECTING loads (loadLm's lm_order probe,
+  * (OPTIMIZATION_r17.md, `scaling/r17/qstats_before.txt`) measured one
+  * Spark job per artifact read — schema inference was eliminated in r17
+  * by explicit schemas, and r18 removes the remaining collect
+  * round-trip: these tables are driver-sized by construction (every
+  * caller collects them anyway), so they are read in-process via
+  * parquet-hadoop, zero Spark jobs. Layout-DETECTING loads (loadLm's lm_order probe,
   * UnigramLm.load's word_model presence check) key on [[localColumns]]:
   * the column set is the information, and the footer already holds it.
   *
@@ -29,21 +29,30 @@ object ArtifactIO {
   private def hadoopConf(spark: SparkSession) =
     spark.sparkContext.hadoopConfiguration
 
-  /** All parquet part files under `path` (recursive — covers both flat
-    * artifact dirs and partitioned ones like `bm25_meta_parts/batch_id=N`),
-    * name-sorted so multi-file reads are deterministic (part file names
-    * carry the writer task id, so name order IS the frame's task order).
-    * A `path` that is itself a single parquet FILE (the testdata layout)
-    * is returned as-is. */
+  /** All COMMITTED parquet part files under `path` (recursive — covers
+    * both flat artifact dirs and partitioned ones like
+    * `bm25_meta_parts/batch_id=N`), name-sorted so multi-file reads are
+    * deterministic (part file names carry the writer task id, so name
+    * order IS the frame's task order). Any entry below `path` whose name
+    * starts with `.` or `_` (except `_`-named partition dirs, `k=v`) is
+    * skipped along with everything under it — Spark's own listing rule
+    * (`shouldFilterOut`), so a crashed write's `_temporary/` or
+    * `.spark-staging-*` task files are never read as data. Components of
+    * `path` itself are not checked. A `path` that is itself a single
+    * parquet FILE (the testdata layout) is returned as-is. */
   private def partFiles(fs: FileSystem, root: Path): Seq[Path] = {
     if (fs.getFileStatus(root).isFile) return Seq(root)
-    val buf = ArrayBuffer.empty[Path]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val p = it.next().getPath
-      if (p.getName.startsWith("part-")) buf += p
-    }
-    buf.sortBy(_.toString).toSeq
+    def hidden(name: String): Boolean =
+      name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
+    def walk(dir: Path): Iterator[Path] =
+      fs.listStatus(dir).iterator
+        .filterNot(s => hidden(s.getPath.getName))
+        .flatMap { s =>
+          if (s.isDirectory) walk(s.getPath)
+          else if (s.getPath.getName.startsWith("part-")) Iterator(s.getPath)
+          else Iterator.empty
+        }
+    walk(root).toSeq.sortBy(_.toString)
   }
 
   /** DRIVER-LOCAL read of an ENGINE-WRITTEN artifact table: the same
@@ -157,13 +166,17 @@ object ArtifactIO {
     * writers record; `spark.sql.parquet.aggregatePushDown` serves
     * unfiltered COUNTs the same way, but flipping that moves every scan
     * to DSv2 planning — this helper applies the same idea ONLY where an
-    * unfiltered whole-table count is what's asked). */
+    * unfiltered whole-table count is what's asked). A directory with no
+    * committed part files fails LOUDLY (a mispointed path must not read
+    * as zero rows). */
   def footerRowCount(spark: SparkSession, path: String): Long = {
     val conf = hadoopConf(spark)
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
     require(fs.exists(root), s"parquet path $path does not exist")
-    partFiles(fs, root).iterator.map { f =>
+    val files = partFiles(fs, root)
+    require(files.nonEmpty, s"parquet path $path has no parquet part files")
+    files.iterator.map { f =>
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
       try r.getRecordCount finally r.close()
     }.sum

@@ -483,9 +483,9 @@ class QualityModelSpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p2))
   }
 
-  test("frozen TrigramLm: self-scoring == trigramCrossEntropy bit for bit " +
-      "(local AND distributed paths); save/load round-trips; loadLm " +
-      "dispatches order 3; unseen triples price from count-0 interpolation") {
+  test("frozen TrigramLm: self-scoring == trigramCrossEntropy bit for bit; " +
+      "save/load round-trips; loadLm dispatches order 3; unseen triples " +
+      "price from count-0 interpolation") {
     val rnd = new scala.util.Random(53)
     val corpus = docs(((1 to 120).map(i => (i.toLong,
       Seq.fill(3 + rnd.nextInt(16))(s"w${rnd.nextInt(20)}").mkString(" ")))
@@ -507,17 +507,11 @@ class QualityModelSpec extends SparkSpec {
     val frozen = corpus.select(col("doc_id"),
         QualityModel.frozenTrigramXent(col("text"), lm2).as("xent"))
       .orderBy("doc_id").collect().toSeq
-    val selfLocal = corpus.join(
-        QualityModel.trigramCrossEntropy(corpus, "doc_id", "text",
-            maxLocalTrigrams = 4000000)
-          .select(col("doc_id"), col("xent")), Seq("doc_id"), "left")
-      .select("doc_id", "xent").orderBy("doc_id").collect().toSeq
     val selfDist = corpus.join(
         QualityModel.trigramCrossEntropy(corpus, "doc_id", "text")
           .select(col("doc_id"), col("xent")), Seq("doc_id"), "left")
       .select("doc_id", "xent").orderBy("doc_id").collect().toSeq
-    assert(frozen == selfLocal, "frozen trigram LM diverged from local path")
-    assert(frozen == selfDist, "frozen trigram LM diverged from distributed path")
+    assert(frozen == selfDist, "frozen trigram LM diverged from trigramCrossEntropy")
     // day-2 OOV: an all-unseen stream scores n-2 identical count-0 terms
     val oov = Seq((1L, "zzz9 qqq8 www7 vvv6")).toDF("doc_id", "text")
       .select(QualityModel.frozenTrigramScore(col("text"), lm2).as("s"))
@@ -813,62 +807,24 @@ class QualityModelSpec extends SparkSpec {
     assert(math.abs(got(0)._3 - (lp1 + lp2) / 2) < 2e-6,
       s"doc1 xent ${got(0)._3} != ${(lp1 + lp2) / 2}")
     assert(math.abs(got(0)._4 - math.exp(got(0)._3)) < 1e-3)
-  }
-
-  test("trigramCrossEntropy: local native-scorer path == distributed " +
-      "five-join plan, row for row; local scoring pass is zero-shuffle") {
+    // on a random corpus the plan keeps its five side joins, every
+    // >= 3-token doc scores n - 2 positions, and its rows are stable
+    // run to run
     val rnd = new scala.util.Random(17)
-    val corpus = docs((1 to 300).map(i => (i.toLong,
-      Seq.fill(1 + rnd.nextInt(40))(s"w${rnd.nextInt(60)}").mkString(" "))): _*)
-    // the DEFAULT is the distributed 5-join plan (measured best in this
-    // regime — tools/TriAB18); the opt-in HYBRID (broadcast side
-    // tables, r18) and the opt-in all-local kernel must BOTH stay
-    // result-identical to it
-    val local = QualityModel.trigramCrossEntropy(corpus, "doc_id", "text",
-        maxLocalTrigrams = 4000000) // opt IN to the collected kernel
-      .orderBy("doc_id").collect().toSeq
-    val hybrid = QualityModel.trigramCrossEntropy(corpus, "doc_id", "text",
-        maxLocalSideTables = 500000) // opt IN to the hybrid plan
-      .orderBy("doc_id").collect().toSeq
-    val dist = QualityModel.trigramCrossEntropy(corpus, "doc_id", "text")
-      .orderBy("doc_id").collect().toSeq
-    assert(local == dist,
-      "local trigram-LM path diverged from the distributed plan")
-    assert(hybrid == dist,
-      "hybrid trigram-LM path diverged from the distributed plan")
-    val plan = QualityModel.trigramCrossEntropy(corpus, "doc_id", "text",
-        maxLocalTrigrams = 4000000)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"),
-      s"local trigram-LM scoring pass should be zero-shuffle:\n$plan")
-  }
-
-  test("trigramCrossEntropy hybrid (opt-in): ONE join in the plan (the " +
-      "trigram one), side probes broadcast; falls back to 5 joins past " +
-      "the cap") {
-    val rnd = new scala.util.Random(23)
-    val corpus = docs((1 to 120).map(i => (i.toLong,
-      Seq.fill(3 + rnd.nextInt(20))(s"w${rnd.nextInt(40)}").mkString(" "))): _*)
-    def joins(df: org.apache.spark.sql.DataFrame): Int =
-      "(?i)sortmergejoin|broadcasthashjoin|shuffledhashjoin".r
-        .findAllIn(df.queryExecution.executedPlan.toString).length
-    val hybrid = QualityModel.trigramCrossEntropy(corpus, "doc_id", "text",
-      maxLocalSideTables = 500000)
-    assert(joins(hybrid) == 1,
-      s"hybrid plan should contain exactly the trigram join:\n" +
-        hybrid.queryExecution.executedPlan)
-    assert(hybrid.queryExecution.executedPlan.toString.contains("tri_counts"),
-      "hybrid plan should probe the broadcast side tables natively")
-    val dist = QualityModel.trigramCrossEntropy(corpus, "doc_id", "text")
-    assert(joins(dist) >= 5,
-      s"default (distributed) plan should keep the five side joins")
-    // a cap of 1 can hold neither table: the fallback must be the
-    // distributed plan, not a throw (degrade, don't die)
-    val tiny = QualityModel.trigramCrossEntropy(corpus, "doc_id", "text",
-      maxLocalSideTables = 1)
-    assert(joins(tiny) >= 5, "past-cap fallback should be the 5-join plan")
-    assert(tiny.orderBy("doc_id").collect().toSeq ==
-      hybrid.orderBy("doc_id").collect().toSeq)
+    val lens = (1 to 300).map(i => i.toLong -> (1 + rnd.nextInt(40)))
+    val corpus = docs(lens.map { case (id, n) =>
+      (id, Seq.fill(n)(s"w${rnd.nextInt(60)}").mkString(" ")) }: _*)
+    val plan = QualityModel.trigramCrossEntropy(corpus, "doc_id", "text")
+    val joins = "(?i)sortmergejoin|broadcasthashjoin|shuffledhashjoin".r
+      .findAllIn(plan.queryExecution.executedPlan.toString).length
+    assert(joins >= 5, s"the plan should keep the five side joins:\n" +
+      plan.queryExecution.executedPlan)
+    val rows = plan.orderBy("doc_id").collect().toSeq
+    assert(rows.map(r => r.getLong(0) -> r.getInt(1)) ==
+      lens.collect { case (id, n) if n >= 3 => id -> (n - 2) })
+    assert(QualityModel.trigramCrossEntropy(corpus, "doc_id", "text")
+      .orderBy("doc_id").collect().toSeq == rows,
+      "trigramCrossEntropy rows changed between two runs")
   }
 
   test("trigramCrossEntropy: sees word order BEYOND adjacency — two docs " +

@@ -98,4 +98,56 @@ class ArtifactIOSpec extends SparkSpec {
       spark.read.parquet(one).count(),
       "a bare parquet FILE (the testdata layout) must count too")
   }
+
+  /** A partitioned artifact (`bm25_meta_parts/batch_id=0`) with a crashed
+    * writer's leftovers beside it: one task file under
+    * `.spark-staging-x/` and one under `_temporary/0/`. Both leftovers
+    * carry an extra `junk` column and their own rows, and both sort
+    * before `batch_id=0`, so reading either one changes every answer.
+    * The root sits below a `.`-named parent: components of the root
+    * itself are never filtered. */
+  private def metaPartsWithLeftovers(): String = {
+    import java.nio.file.{Files, Paths}
+    val base = Paths.get(tmp(), ".parent")
+    val root = base.resolve("bm25_meta_parts")
+    (1 to 3).map(i => (i.toLong, 0)).toDF("v", "batch_id").coalesce(1)
+      .write.mode("overwrite").partitionBy("batch_id").parquet(root.toString)
+    val junk = base.resolve("junk").toString
+    Seq((100L, "x"), (200L, "y")).toDF("v", "junk").coalesce(1)
+      .write.mode("overwrite").parquet(junk)
+    val junkPart = Files.list(Paths.get(junk))
+      .filter(_.getFileName.toString.startsWith("part-")).findFirst().get()
+    for (leftover <- Seq(".spark-staging-x", "_temporary/0")) {
+      val d = Files.createDirectories(root.resolve(leftover))
+      Files.copy(junkPart, d.resolve(junkPart.getFileName))
+    }
+    root.toString
+  }
+
+  test("crash leftovers (.spark-staging-x/, _temporary/0/) beside " +
+      "batch_id=0 are not read: footerRowCount, readLocal, localColumns") {
+    val root = metaPartsWithLeftovers()
+    assert(ArtifactIO.footerRowCount(spark, root) == 3L)
+    assert(ArtifactIO.readLocal(spark, root, "v" -> LongType)
+      .map(_.getLong(0)).sorted == Seq(1L, 2L, 3L))
+    assert(ArtifactIO.localColumns(spark, root) == Seq("v"))
+  }
+
+  test("footerRowCount fails LOUDLY, naming the path, on a directory " +
+      "with no committed part files") {
+    val empty = tmp()
+    val e1 = intercept[IllegalArgumentException] {
+      ArtifactIO.footerRowCount(spark, empty)
+    }
+    assert(e1.getMessage.contains(empty))
+    // only uncommitted leftovers: still no committed part files
+    val root = metaPartsWithLeftovers()
+    val committed = new java.io.File(root, "batch_id=0")
+    committed.listFiles().foreach(_.delete())
+    committed.delete()
+    val e2 = intercept[IllegalArgumentException] {
+      ArtifactIO.footerRowCount(spark, root)
+    }
+    assert(e2.getMessage.contains(root))
+  }
 }
