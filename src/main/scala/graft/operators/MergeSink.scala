@@ -14,10 +14,15 @@ import org.apache.spark.sql.functions._
   * read-merge-atomic-swap sink for a parquet-backed warehouse (this build has
   * no Delta jars; with Delta/Iceberg the same `merge` becomes `MERGE INTO`).
   *
-  * Scale notes: the merge is a single shuffle on the natural key. For a
-  * 100 TB warehouse, partition the target by a stable key prefix (e.g.
-  * hash-bucketed ticker) and merge per-partition so the rewrite touches only
-  * partitions with updates (partition-overwrite mode), not the full table.
+  * Scale notes: the merge is a single shuffle on the natural key. The
+  * warehouse table is hash-bucketed on that key, and a hash-guarded
+  * upsert rewrites only the buckets that receive a CHANGED row: an update
+  * row whose (key, row_hash) the target already holds costs a probe read
+  * of its bucket, never a rewrite. So the rewrite scales with the rows
+  * whose payload changed, not with the rows delivered — a full-snapshot
+  * feed (every history file re-sent whole, one new row) rewrites only the
+  * buckets holding the new rows. Without a hash guard (K4 unconditional
+  * update) every bucket an update key hashes to is rewritten.
   */
 object MergeSink {
 
@@ -31,6 +36,11 @@ object MergeSink {
     * `updates` is deduplicated on the keys first (keep-last by `updateOrder`,
     * mirroring the reference's last-chunk-wins constraint behavior but made
     * deterministic). Output schema = target schema.
+    *
+    * Keys match null-safely (`<=>`), so a NULL key part (holdings'
+    * `as_of_date` in the GenLakeData layout) is an ordinary key value.
+    * Which side of the join a row came from is read from a non-null
+    * marker column per side, never from the key values themselves.
     */
   def merge(target: DataFrame, updates: DataFrame, keys: Seq[String],
             hashCol: Option[String] = Some("row_hash"),
@@ -41,13 +51,15 @@ object MergeSink {
       if (updateOrder.nonEmpty) Dedup.keyedKeepFirst(upd0, keys, updateOrder)
       else upd0.dropDuplicates(keys)
 
-    val t = target.select(cols.map(c => col(c).as(s"t_$c")): _*)
-    val u = upd.select(cols.map(c => col(c).as(s"u_$c")): _*)
+    val t = target.select(
+      cols.map(c => col(c).as(s"t_$c")) :+ lit(true).as("t__present"): _*)
+    val u = upd.select(
+      cols.map(c => col(c).as(s"u_$c")) :+ lit(true).as("u__present"): _*)
     val joinCond = keys.map(k => col(s"t_$k") <=> col(s"u_$k")).reduce(_ && _)
     val joined = t.join(u, joinCond, "full_outer")
 
-    val updPresent = keys.map(k => col(s"u_$k").isNotNull).reduce(_ && _)
-    val tgtPresent = keys.map(k => col(s"t_$k").isNotNull).reduce(_ && _)
+    val updPresent = col("u__present").isNotNull
+    val tgtPresent = col("t__present").isNotNull
     val takeUpdate = hashCol match {
       case Some(h) =>
         updPresent && (!tgtPresent || !(col(s"t_$h") <=> col(s"u_$h")))
@@ -347,19 +359,29 @@ object MergeSink {
     *  1. table layout: path/__bucket=N/..., N = xxhash64(natural key) %
     *     numBuckets (recorded in _graft_meta.json at creation);
     *  2. an upsert computes the DISTINCT buckets its update keys hash to
-    *     (bounded driver collect: <= numBuckets ints), reads ONLY those
-    *     partitions of the target (partition-pruned scan), merges, and
-    *     rewrites ONLY those bucket dirs via a staged marker swap;
-    *  3. untouched buckets are never read, shuffled, or rewritten — at
-    *     100 TB a daily increment touching 1% of keys costs ~1% of the
-    *     table, not a full rewrite;
+    *     (`hit`; bounded driver collect: <= numBuckets ints) and reads
+    *     ONLY those partitions of the target (partition-pruned scan).
+    *     With `hashCol` set, it left-anti-joins the update rows against
+    *     the `(keys, hashCol, __bucket)` projection of the `hit` buckets
+    *     (null-safe `<=>` on every column); the buckets of the surviving,
+    *     CHANGED rows are `touched`. Without `hashCol`, `touched = hit`;
+    *  3. only the `touched` buckets are merged — target buckets with the
+    *     update rows of those buckets — and rewritten via a staged marker
+    *     swap. An empty `touched` writes nothing: no staging, no swap.
+    *     Untouched buckets are never shuffled or rewritten, and buckets
+    *     outside `hit` are never read;
     *  4. a crash mid-swap is healed by [[recoverSwap]] on the next call
     *     (staged bucket dirs roll forward; the table is never lost).
     *
     * A pre-existing UNBUCKETED table is migrated in one full merge+rewrite
     * (flagged by the missing meta file). Idempotent: replaying identical
-    * updates is a value-level no-op (hash guard) — touched buckets are
-    * rewritten with identical rows. */
+    * updates with a hash guard touches no bucket and writes no file.
+    *
+    * Why skipping unchanged rows keeps the output: an update row whose
+    * (key, hash) the target already holds merges back to that target row
+    * (the hash guard keeps `t`), so a bucket holding only such rows would
+    * be rewritten with identical rows. Duplicate-key and null-key update
+    * rows are at worst kept as changed, which only adds buckets. */
   def upsertParquet(spark: SparkSession, path: String, updates: DataFrame,
                     keys: Seq[String], hashCol: Option[String] = Some("row_hash"),
                     numBuckets: Int = 32): Unit = {
@@ -413,13 +435,29 @@ object MergeSink {
           val upd = updates
             .withColumn("__bucket", bucketExpr(keys, nb))
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          def buckets(df: DataFrame): Array[Int] =
+            df.select("__bucket").distinct().collect().map(_.getInt(0)).sorted
+          def inBuckets(df: DataFrame, bs: Array[Int]): DataFrame =
+            df.filter(col("__bucket").isin(bs.map(Int.box): _*))
           try {
-            val touched = upd.select("__bucket").distinct()
-              .collect().map(_.getInt(0)).sorted
+            val hit = buckets(upd)
+            val table = spark.read.parquet(path)
+            // hash-guarded: a bucket is touched only if it receives an
+            // update row whose (keys, hash) the target does not already
+            // hold — every other update row merges back to its target row
+            val touched = hashCol match {
+              case Some(h) if hit.nonEmpty =>
+                val probe = keys :+ h :+ "__bucket"
+                val held = inBuckets(table, hit)
+                  .select(probe.map(c => col(c).as(s"__t_$c")): _*)
+                buckets(upd.join(held,
+                  probe.map(c => upd(c) <=> col(s"__t_$c")).reduce(_ && _),
+                  "left_anti"))
+              case _ => hit
+            }
             if (touched.nonEmpty) {
-              val target = spark.read.parquet(path)
-                .filter(col("__bucket").isin(touched.map(Int.box): _*))
-              val merged = merge(target, upd, keys, hashCol)
+              val merged = merge(inBuckets(table, touched),
+                inBuckets(upd, touched), keys, hashCol)
               merged.write.mode("overwrite").partitionBy("__bucket").parquet(tmp)
               swapDirs(fs, path, tmp, touched.map(n => s"__bucket=$n").toSeq, lock)
               spark.catalog.refreshByPath(path)

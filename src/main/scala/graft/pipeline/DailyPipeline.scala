@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.operators.MergeSink
 import graft.stages._
 import graft.sources.CsvLake
+import graft.util.ArtifactIO
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -78,6 +79,12 @@ object DailyPipeline {
       }
     }
 
+    // a stage's row count is its warehouse table's size, read from the
+    // parquet footers: zero Spark jobs, where a count() is a listing job
+    // plus two scan jobs
+    def tableRows(table: String): Long =
+      ArtifactIO.footerRowCount(spark, s"$warehouseRoot/$table")
+
     // the remediator's ready-dir memoization is RUN-scoped: the dir must
     // be dated, or day 2's run would find day 1's generation and silently
     // load stale data forever (resume-within-a-day still works — a retry
@@ -88,12 +95,12 @@ object DailyPipeline {
     val masterSrcs = sources(spark, s"$lakeRoot/master")
     if (masterSrcs.nonEmpty) stage("master_sync") {
       val readyRoot = s"$warehouseRoot/staging/master_ready"
-      val master = MasterSync.run(spark,
+      MasterSync.run(spark,
         masterSrcs.map { case (_, dir) => CsvLake.readCsv(spark, dir) },
         s"$warehouseRoot/stg_security_master", asOf,
         rejectSink = Some(s"$warehouseRoot/rejects/master"),
         readyDir = Some(s"$readyRoot/dt=$asOfTag"))
-      val n = master.count()
+      val n = tableRows("stg_security_master")
       // retention: prior days' materialized generations have served their
       // resume purpose once this run's load succeeded — without cleanup
       // the staging area accumulates one full master batch per day forever
@@ -110,7 +117,8 @@ object DailyPipeline {
     if (navSrcs.nonEmpty) stage("nav_sync") {
       PerformanceSync.runNav(spark, navSrcs.toMap,
         s"$warehouseRoot/stg_daily_nav", asOf,
-        rejectSink = Some(s"$warehouseRoot/rejects/nav")).count()
+        rejectSink = Some(s"$warehouseRoot/rejects/nav"))
+      tableRows("stg_daily_nav")
     }
 
     // One merge per TARGET TABLE per run: all sources' cleaned frames are
@@ -127,7 +135,7 @@ object DailyPipeline {
       }.reduce(_.unionByName(_, allowMissingColumns = true))
       PerformanceSync.loadHistory(spark, s"$warehouseRoot/stg_price_history",
         PerformanceSync.hashHistory(cleaned, asOf))
-      MergeSink.readTable(spark, s"$warehouseRoot/stg_price_history").count()
+      tableRows("stg_price_history")
     }
 
     val divSrcs = sources(spark, s"$lakeRoot/dividends")
@@ -139,7 +147,7 @@ object DailyPipeline {
       MergeSink.upsertParquet(spark, s"$warehouseRoot/stg_dividend_history",
         PerformanceSync.hashDividends(cleaned, asOf),
         graft.schema.Schemas.naturalKeys("stg_dividend_history"))
-      MergeSink.readTable(spark, s"$warehouseRoot/stg_dividend_history").count()
+      tableRows("stg_dividend_history")
     }
 
     // details follow the same batched pattern as history/dividends: the
@@ -151,7 +159,7 @@ object DailyPipeline {
         DetailSync.prepareWide(CsvLake.readCsv(spark, dir), source)
       }
       val tables = DetailSync.runAll(spark, wides, warehouseRoot, asOf)
-      tables.values.map(_.count()).sum
+      tables.keys.toSeq.map(tableRows).sum
     }
 
     val holdSrcs = sources(spark, s"$lakeRoot/holdings")
@@ -162,7 +170,7 @@ object DailyPipeline {
       }.reduce(_.unionByName(_, allowMissingColumns = true))
       HoldingsSync.loadHoldings(spark,
         s"$warehouseRoot/stg_fund_holdings", cleaned, asOf)
-      MergeSink.readTable(spark, s"$warehouseRoot/stg_fund_holdings").count()
+      tableRows("stg_fund_holdings")
     }
 
     val allocSrcs = sources(spark, s"$lakeRoot/allocations")
@@ -174,7 +182,7 @@ object DailyPipeline {
       }.reduce(_.unionByName(_, allowMissingColumns = true))
       HoldingsSync.loadAllocations(spark,
         s"$warehouseRoot/stg_allocations", cleaned, asOf)
-      MergeSink.readTable(spark, s"$warehouseRoot/stg_allocations").count()
+      tableRows("stg_allocations")
     }
 
     results.result()

@@ -53,6 +53,36 @@ class MergeSinkSpec extends SparkSpec {
     assert(out._2 == 2.0) // keep-first by price desc = highest price wins
   }
 
+  test("merge: a NULL key part (holdings as_of_date) is a key value — a " +
+       "changed payload lands, a new row inserts itself, an unchanged row stays") {
+    val keys = Seq("ticker", "asset_type", "source", "holding_name", "as_of_date")
+    def holdings(rows: (String, Double)*): DataFrame =
+      rows.toDF("holding_name", "weight")
+        .select(lit("AAA").as("ticker"), lit("ETF").as("asset_type"),
+          lit("YF").as("source"), col("holding_name"),
+          lit(null).cast("date").as("as_of_date"), col("weight"))
+        .withColumn("row_hash",
+          HashFns.canonicalRowHash(keys.map(col), Seq(col("weight"))))
+    val target = holdings("Apple" -> 5.0, "Msft" -> 4.0)
+    val updates = holdings("Apple" -> 6.0, "Msft" -> 4.0, "Nvda" -> 3.0)
+    val expected = Seq(
+      ("AAA", "ETF", "YF", "Apple", Some(6.0)),
+      ("AAA", "ETF", "YF", "Msft", Some(4.0)),
+      ("AAA", "ETF", "YF", "Nvda", Some(3.0)))
+    def rows(df: DataFrame) = df.orderBy("holding_name")
+      .select("ticker", "asset_type", "source", "holding_name", "weight")
+      .as[(String, String, String, String, Option[Double])].collect().toSeq
+    val merged = MergeSink.merge(target, updates, keys)
+    assert(rows(merged) == expected)
+    assert(merged.filter(col("as_of_date").isNotNull).isEmpty)
+
+    // the bucketed sink takes the same rows through its changed-row probe
+    val path = java.nio.file.Files.createTempDirectory("merge_nullkey").toString + "/t"
+    MergeSink.upsertParquet(spark, path, target, keys, numBuckets = 4)
+    MergeSink.upsertParquet(spark, path, updates, keys)
+    assert(rows(MergeSink.readTable(spark, path)) == expected)
+  }
+
   test("upsertParquet: create, re-apply (idempotent), update+insert, atomic swap") {
     val dir = java.nio.file.Files.createTempDirectory("merge_sink").toString
     val path = s"$dir/warehouse"
@@ -70,17 +100,22 @@ class MergeSinkSpec extends SparkSpec {
     assert(rows == Seq(("AAA", 10.0), ("BBB", 21.0), ("CCC", 30.0)))
   }
 
-  /** File listing (relative path -> length) of every data file under dir. */
-  private def dataFiles(path: String): Map[String, Long] = {
+  /** Every regular file under dir (relative path -> (length, mtime)). */
+  private def fileStamps(path: String): Map[String, (Long, Long)] = {
     val root = java.nio.file.Paths.get(path)
     val s = java.nio.file.Files.walk(root)
     try s.iterator().asScala
       .filter(p => java.nio.file.Files.isRegularFile(p))
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .map(p => root.relativize(p).toString -> java.nio.file.Files.size(p))
+      .map(p => root.relativize(p).toString ->
+        (java.nio.file.Files.size(p),
+          java.nio.file.Files.getLastModifiedTime(p).toMillis))
       .toMap
     finally s.close()
   }
+
+  /** The parquet part files among [[fileStamps]]. */
+  private def dataFiles(path: String): Map[String, (Long, Long)] =
+    fileStamps(path).filter { case (f, _) => f.endsWith(".parquet") }
 
   test("an EMPTY first upsert does not brick the table: dir reads back, " +
       "the first real upsert migrates it to the bucketed layout") {
@@ -108,13 +143,14 @@ class MergeSinkSpec extends SparkSpec {
       .as[(String, Double, String)].head()._2 == 21.0)
   }
 
+  // enough keys to populate several buckets
+  private val snapshotRows = (0 until 64).map(i => (f"TICK$i%03d", i.toDouble))
+
   test("bucketed upsert touching 1 key rewrites ONLY that key's bucket dir") {
     val dir = java.nio.file.Files.createTempDirectory("merge_bucket").toString
     val path = s"$dir/warehouse"
-    // enough keys to populate several buckets
-    val keys = (0 until 64).map(i => (f"TICK$i%03d", i.toDouble))
     MergeSink.upsertParquet(spark, path,
-      withHash(keys.toDF("ticker", "price")), Seq("ticker"), numBuckets = 8)
+      withHash(snapshotRows.toDF("ticker", "price")), Seq("ticker"), numBuckets = 8)
     val before = dataFiles(path)
     assert(before.keys.map(_.split("/")(0)).toSet.size > 2) // several buckets
 
@@ -132,6 +168,56 @@ class MergeSinkSpec extends SparkSpec {
     assert(rows.filter(col("ticker") === "TICK001")
       .select("price").as[Double].head() == 999.0)
     assert(rows.count() == 64)
+  }
+
+  /** Creates a 64-key table in 8 buckets, re-upserts `snapshot` over it,
+    * and checks the table equals `merge(previous table, snapshot)`.
+    * Returns the file stamps before and after the re-upsert. */
+  private def reUpsert(name: String, snapshot: Seq[(String, Double)])
+      : (String, Map[String, (Long, Long)], Map[String, (Long, Long)]) = {
+    val path = java.nio.file.Files.createTempDirectory(name).toString + "/warehouse"
+    MergeSink.upsertParquet(spark, path,
+      withHash(snapshotRows.toDF("ticker", "price")), Seq("ticker"), numBuckets = 8)
+    val prevDf = MergeSink.readTable(spark, path)
+    val previous = spark.createDataFrame(
+      java.util.Arrays.asList(prevDf.collect(): _*), prevDf.schema)
+    val before = fileStamps(path)
+    Thread.sleep(20) // a rewritten file must not share its predecessor's mtime
+    val upd = withHash(snapshot.toDF("ticker", "price"))
+    MergeSink.upsertParquet(spark, path, upd, Seq("ticker"))
+    val after = fileStamps(path)
+    def canon(df: DataFrame) = df.select("ticker", "price", "row_hash")
+      .as[(String, Double, String)].collect().toSeq.sorted
+    assert(canon(MergeSink.readTable(spark, path)) ==
+      canon(MergeSink.merge(previous, upd, Seq("ticker"))))
+    (path, before, after)
+  }
+
+  test("re-upserting a full snapshot with ONE changed payload rewrites " +
+       "exactly that row's bucket; every other part file is left alone") {
+    val snapshot = snapshotRows.map {
+      case ("TICK017", p) => ("TICK017", p + 0.5)
+      case r => r
+    }
+    val (_, before, after) = reUpsert("merge_changed_only", snapshot)
+    def bucket(f: String) = f.split("/")(0)
+    val changed = (before.keySet ++ after.keySet)
+      .filter(f => before.get(f) != after.get(f)).map(bucket)
+    assert(changed.size == 1, s"expected 1 rewritten bucket, got $changed")
+    val kept = before.filter { case (f, _) => !changed.contains(bucket(f)) }
+    assert(kept.size > 0)
+    kept.foreach { case (f, stamp) =>
+      assert(after.get(f).contains(stamp), s"$f was rewritten")
+    }
+  }
+
+  test("re-upserting an IDENTICAL snapshot changes no file and leaves no " +
+       "staging, backup, marker or lock behind") {
+    val (path, before, after) = reUpsert("merge_replay", snapshotRows)
+    assert(after == before)
+    Seq("__tmp", "__old", "__swap", "__lock").foreach { s =>
+      assert(!new java.io.File(path + s).exists(), s"$path$s left behind")
+    }
   }
 
   test("recoverSwap heals an interrupted bucket swap (staged dir rolls forward)") {

@@ -5,6 +5,7 @@ import graft.functions.HashFns
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
 
 class StreamingIngestSpec extends SparkSpec {
   import spark.implicits._
@@ -47,6 +48,39 @@ class StreamingIngestSpec extends SparkSpec {
     // T3: replayed content (same rows, new file name) is absorbed by the merge
     write(landing, "f3_replay.csv", "ticker,price\nBBB,21.0\nCCC,30.0\n")
     drain()
+    assert(spark.read.parquet(target).count() == 3)
+  }
+
+  test("a replayed micro-batch (at-least-once redelivery) writes no file") {
+    val root = Files.createTempDirectory("stream_replay")
+    val landing = root.resolve("landing")
+    val target = s"$root/warehouse"
+    write(landing, "f1.csv", "ticker,price\nAAA,10.0\nBBB,20.0\nCCC,30.0\n")
+
+    // micro-batches committed so far, from the checkpoint's commit log
+    def drain(): Int = {
+      val stream = StreamingIngest.csvStream(spark, landing.toString, schema)
+        .withColumn("row_hash",
+          HashFns.canonicalRowHash(Seq(col("ticker")), Seq(col("price"))))
+        .drop("origin_file")
+      StreamingIngest.upsertStream(spark, stream, target,
+        Seq("ticker"), s"$root/ckpt").awaitTermination()
+      new java.io.File(s"$root/ckpt/commits").list()
+        .count(_.forall(_.isDigit))
+    }
+    def stamps(): Map[String, Long] = {
+      val s = Files.walk(java.nio.file.Paths.get(target))
+      try s.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis).toMap
+      finally s.close()
+    }
+
+    assert(drain() == 1)
+    val before = stamps()
+    Thread.sleep(20)
+    write(landing, "f1_redelivered.csv", "ticker,price\nAAA,10.0\nBBB,20.0\nCCC,30.0\n")
+    assert(drain() == 2) // the redelivered batch ran through the sink
+    assert(stamps() == before)
     assert(spark.read.parquet(target).count() == 3)
   }
 
