@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   *
   * Re-expresses the reference's pandas row-wise cleaners as codegen-friendly
   * Spark `Column` expressions. Semantics follow the reference's
-  * coerce-to-null behavior (`pd.to_numeric(errors='coerce')`), which requires
-  * `spark.sql.ansi.enabled=false` on the session (set by [[graft.Graft.session]]).
+  * coerce-to-null behavior (`pd.to_numeric(errors='coerce')`), written out
+  * with `try_cast` / `try_to_date`, so an unparseable value is null under
+  * either `spark.sql.ansi.enabled` setting, never an exception.
   *
   * Reference citations (in /root/reference):
   *  - C1/C2 upper/lower+trim: 01_master_sync/00_master_list_cleaner.py:53-65
@@ -42,11 +43,11 @@ object CleanFns {
   /** C4: percent display string ('0.45%', '+1,2%') -> numeric fraction of the
     * printed number (no /100 — the reference rescales separately, see C7). */
   def parsePercent(c: Column): Column =
-    regexp_replace(trim(c), "[%,+\\s]", "").cast("double")
+    regexp_replace(trim(c), "[%,+\\s]", "").try_cast("double")
 
   /** C5: thousands-separated numeric string ('1,234') -> numeric. */
   def parseNumber(c: Column): Column =
-    regexp_replace(trim(c), ",", "").cast("double")
+    regexp_replace(trim(c), ",", "").try_cast("double")
 
   /** C6: magnitude-suffixed display value ('842.33m USD', '1.2b', '515k')
     * -> absolute double. Mirrors bulk_import_from_hashed.py:155-175 as a
@@ -54,7 +55,7 @@ object CleanFns {
   def parseMagnitude(c: Column): Column = {
     val s    = lower(trim(c))
     val num  = regexp_extract(s, "([0-9][0-9,]*\\.?[0-9]*)", 1)
-    val base = regexp_replace(num, ",", "").cast("double")
+    val base = regexp_replace(num, ",", "").try_cast("double")
     val mult = when(s.rlike("[0-9]\\s*t"), lit(1e12))
       .when(s.rlike("[0-9]\\s*b"), lit(1e9))
       .when(s.rlike("[0-9]\\s*m"), lit(1e6))
@@ -81,15 +82,15 @@ object CleanFns {
     * Tries ISO, then 'MMM d yyyy' ('Jan 5 2024'), then 'MM/dd/yyyy'. */
   def parseDate(c: Column): Column =
     coalesce(
-      to_date(c, "yyyy-MM-dd"),
-      to_date(c, "MMM d yyyy"),
-      to_date(c, "MMM d, yyyy"),
-      to_date(c, "MM/dd/yyyy"))
+      try_to_date(c, "yyyy-MM-dd"),
+      try_to_date(c, "MMM d yyyy"),
+      try_to_date(c, "MMM d, yyyy"),
+      try_to_date(c, "MM/dd/yyyy"))
 
   /** C10: as_of_date inferred from a date-named directory component of the
     * input file path. */
   def dateFromPath(pathCol: Column): Column =
-    to_date(regexp_extract(pathCol, "(\\d{4}-\\d{2}-\\d{2})", 1), "yyyy-MM-dd")
+    try_to_date(regexp_extract(pathCol, "(\\d{4}-\\d{2}-\\d{2})", 1), "yyyy-MM-dd")
 
   /** Lineage: ticker from filename stem (00_price_history_cleaner.py:43). */
   def tickerFromPath(pathCol: Column): Column =

@@ -295,12 +295,28 @@ object MergeSink {
     true
   }
 
+  /** Runs a sink's staged write. If it fails before [[swapDirs]] wrote its
+    * marker (a cancelled or failed write job), the half-written
+    * `path__tmp` is garbage that no recovery reads, so it is removed here
+    * instead of outliving the call. */
+  private def cleaningTmp[T](fs: FileSystem, path: String, lock: TableLock)
+                            (body: => T): T =
+    try body
+    catch { case e: Throwable =>
+      // a writer that lost the lock leaves `__tmp` alone: it may be the
+      // new holder's staged generation
+      try if (lock.owned && !fs.exists(swapMarker(path)))
+        fs.delete(new Path(path + "__tmp"), true)
+      catch { case c: Exception => e.addSuppressed(c) }
+      throw e
+    }
+
   /** Writes `df` to a temp dir then swaps it into `path`. Crash-safe via
     * the [[swapDirs]] marker: an interrupted swap is finished by
     * [[recoverSwap]] on the next sink call instead of losing the table. */
   def replaceParquet(spark: SparkSession, path: String, df: DataFrame): Unit = {
     val fs = fsFor(spark, path)
-    withTableLock(fs, path) { lock =>
+    withTableLock(fs, path) { lock => cleaningTmp(fs, path, lock) {
       recoverSwap(spark, path)
       val tmp = path + "__tmp"
       df.write.mode("overwrite").parquet(tmp)
@@ -308,7 +324,7 @@ object MergeSink {
       // drop cached file listings so readers created after the swap see the
       // new generation (stale FileStatusCache entries would 404 on old parts)
       spark.catalog.refreshByPath(path)
-    }
+    }}
   }
 
   // -------------------------------------------------------------- bucketed
@@ -386,7 +402,7 @@ object MergeSink {
                     keys: Seq[String], hashCol: Option[String] = Some("row_hash"),
                     numBuckets: Int = 32): Unit = {
     val fs = fsFor(spark, path)
-    withTableLock(fs, path) { lock =>
+    withTableLock(fs, path) { lock => cleaningTmp(fs, path, lock) {
       recoverSwap(spark, path)
       val tgt = new Path(path)
       val tmp = path + "__tmp"
@@ -464,7 +480,7 @@ object MergeSink {
             }
           } finally upd.unpersist()
       }
-    }
+    }}
   }
 
   // ------------------------------------------------------- ACID formats

@@ -221,16 +221,19 @@ object CorpusPipeline {
       s"pcaP=${cfg.pcaP} needs embedDim >= pcaP stating the vector " +
         s"width, got embedDim=${cfg.embedDim}")
     val results = Seq.newBuilder[StageResult]
+    val runT0 = System.nanoTime()
 
     def stage(name: String)(body: => Long): Unit = {
       val t0 = System.nanoTime()
+      val startMs = (t0 - runT0) / 1000000L
       def elapsedMs = (System.nanoTime() - t0) / 1000000L
       try {
         val rows = body
-        results += StageResult(name, rows, ok = true, durationMs = elapsedMs)
+        results += StageResult(name, rows, ok = true, durationMs = elapsedMs,
+          startMs = startMs)
       } catch { case e: Exception =>
         results += StageResult(name, 0, ok = false, error = Some(e.toString),
-          durationMs = elapsedMs)
+          durationMs = elapsedMs, startMs = startMs)
         if (failFast) throw new PipelineFailedException(results.result(), e)
       }
     }

@@ -4,17 +4,25 @@ import graft.operators.MergeSink
 import graft.stages._
 import graft.sources.CsvLake
 import graft.util.ArtifactIO
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
+import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
 
 /** Daily pipeline orchestrator (SURVEY.md §3.1: main_pipeline.py +
   * per-module orchestrators, re-expressed as one driver program).
   *
   * The reference runs each stage as a subprocess over a CSV file lake,
-  * fail-fast (main_pipeline.py:60-83). Here stages share one SparkSession
-  * and one lineage; "fail-fast" is an exception propagating out of `run`,
-  * and the run summary (A6, src/utils/logger.py:81-117) is returned as
-  * data instead of logged text.
+  * fail-fast, one after another (main_pipeline.py:60-83). That order is a
+  * process boundary, not a data dependency: after `master_sync`, each of
+  * the other six stages reads only its own lake dirs and writes only its
+  * own `stg_*` tables, each under its own [[MergeSink]] table lock. So
+  * here `master_sync` runs first and alone, then the other stages run
+  * concurrently on the one SparkSession, one stage-named thread and one
+  * Spark job group each (the default FIFO scheduler interleaves their
+  * small jobs). The run summary (A6, src/utils/logger.py:81-117) is
+  * returned as data in stage order instead of logged text; "fail-fast" is
+  * an exception propagating out of `run`.
   *
   * Lake layout expected under `lakeRoot` (mirrors the reference's
   * validation_output/ + data/ trees, FIXTURES.md §1):
@@ -32,10 +40,14 @@ object DailyPipeline {
   /** One stage's outcome. `durationMs` mirrors the reference's
     * log_execution_summary per-stage duration (src/utils/logger.py:81-117)
     * — wall-clock of the stage body, populated for failures too (a stage
-    * that dies 40 minutes in should say so). */
+    * that dies 40 minutes in should say so). `startMs` is the stage's
+    * start offset from the run's start: stages that overlap have
+    * durations that no longer sum to the run's wall, and the offsets lay
+    * them out. */
   final case class StageResult(stage: String, rows: Long, ok: Boolean,
                                error: Option[String] = None,
-                               durationMs: Long = 0L)
+                               durationMs: Long = 0L,
+                               startMs: Long = 0L)
 
   /** Fail-fast abort that still carries the A6 run summary: the reference's
     * global pipeline aborts on the first failing stage (main_pipeline.py:
@@ -55,29 +67,32 @@ object DailyPipeline {
       .map(s => s.getPath.getName -> s.getPath.toString).toSeq.sortBy(_._1)
   }
 
-  /** Runs every stage whose input directory exists. Each stage's outcome
-    * (rows or error) is captured as a [[StageResult]]; with
-    * `failFast = true` (the reference's global-pipeline behavior) the
-    * first failure aborts via [[PipelineFailedException]] carrying the
-    * partial summary, with `failFast = false` (the reference's standalone
-    * orchestrators) remaining stages still run and the failed stage is
-    * reported in the returned summary. */
+  /** Runs every stage whose input directory exists: `master_sync` first,
+    * then the others concurrently. Each stage's outcome (rows or error) is
+    * captured as a [[StageResult]], returned in stage order.
+    *
+    * With `failFast = false` (the reference's standalone orchestrators)
+    * every stage runs to completion and failures are reported in the
+    * returned summary.
+    *
+    * With `failFast = true` (the reference's global pipeline) the first
+    * stage to fail, in time, is the cause: the job groups of its siblings
+    * still running are cancelled, and once every stage thread has ended
+    * (so no table lock, staged `__tmp` dir or lock heartbeat outlives the
+    * call) `run` throws a [[PipelineFailedException]]. Its summary lists,
+    * in stage order, the stages ordered before the cause — a cancelled one
+    * as `ok = false` with an error naming the cause — then the cause last.
+    * A sibling ordered after the cause may already have committed its
+    * tables; it stays committed. Every load is an idempotent upsert into
+    * its own tables, so a retry of the day converges. */
   def run(spark: SparkSession, lakeRoot: String, warehouseRoot: String,
           asOf: Column, failFast: Boolean = true): Seq[StageResult] = {
-    val results = Seq.newBuilder[StageResult]
+    val runT0 = System.nanoTime()
 
-    def stage(name: String)(body: => Long): Unit = {
-      val t0 = System.nanoTime()
-      def elapsedMs = (System.nanoTime() - t0) / 1000000L
-      try {
-        val rows = body
-        results += StageResult(name, rows, ok = true, durationMs = elapsedMs)
-      } catch { case e: Exception =>
-        results += StageResult(name, 0, ok = false, error = Some(e.toString),
-          durationMs = elapsedMs)
-        if (failFast) throw new PipelineFailedException(results.result(), e)
-      }
-    }
+    // the stages after master_sync, in stage order, registered here and
+    // scheduled together below
+    val concurrent = Seq.newBuilder[(String, () => Long)]
+    def stage(name: String)(body: => Long): Unit = concurrent += name -> (() => body)
 
     // a stage's row count is its warehouse table's size, read from the
     // parquet footers: zero Spark jobs, where a count() is a listing job
@@ -92,8 +107,9 @@ object DailyPipeline {
     val asOfTag = spark.range(1).select(asOf.cast("string").as("d"))
       .head().getString(0)
 
+    // master_sync runs first and alone
     val masterSrcs = sources(spark, s"$lakeRoot/master")
-    if (masterSrcs.nonEmpty) stage("master_sync") {
+    val master = if (masterSrcs.isEmpty) None else Some(timed(runT0, "master_sync", () => {
       val readyRoot = s"$warehouseRoot/staging/master_ready"
       MasterSync.run(spark,
         masterSrcs.map { case (_, dir) => CsvLake.readCsv(spark, dir) },
@@ -111,6 +127,9 @@ object DailyPipeline {
           p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
         }
       n
+    }))
+    master.foreach { case (r, err) =>
+      if (failFast) err.foreach(e => throw new PipelineFailedException(Seq(r), e))
     }
 
     val navSrcs = sources(spark, s"$lakeRoot/nav")
@@ -185,6 +204,85 @@ object DailyPipeline {
       tableRows("stg_allocations")
     }
 
-    results.result()
+    master.map(_._1).toSeq ++
+      schedule(spark.sparkContext, runT0, concurrent.result(), failFast)
+  }
+
+  /** A stage body's outcome, its start offset taken from `runT0`. */
+  private def timed(runT0: Long, name: String, body: () => Long)
+      : (StageResult, Option[Exception]) = {
+    val t0 = System.nanoTime()
+    def r(rows: Long, error: Option[String]) = StageResult(name, rows,
+      ok = error.isEmpty, error = error, durationMs = (System.nanoTime() - t0) / 1000000L,
+      startMs = (t0 - runT0) / 1000000L)
+    try (r(body(), None), None)
+    catch { case e: Exception => (r(0, Some(e.toString)), Some(e)) }
+  }
+
+  /** Runs `stages` concurrently, one stage-named thread and one job group
+    * each, from a pool created here (outside any SQL execution, so its
+    * threads inherit no `spark.sql.execution.id`) and shut down before
+    * returning. Results come back in stage order. With `failFast` the
+    * first failure cancels the siblings still running and, once every
+    * thread has ended, throws the summary described on [[run]]. */
+  private def schedule(sc: SparkContext, runT0: Long,
+                       stages: Seq[(String, () => Long)],
+                       failFast: Boolean): Seq[StageResult] = {
+    if (stages.isEmpty) return Nil
+    val runId = java.util.UUID.randomUUID().toString
+    def group(name: String) = s"$name-$runId"
+    val results = new Array[StageResult](stages.size)
+    val ended = new Array[Boolean](stages.size)
+    var cause: Option[(Int, Exception)] = None // guarded by `ended`
+
+    def runOne(i: Int): Unit = {
+      val (name, body) = stages(i)
+      Thread.currentThread().setName(s"graft-daily-$name")
+      sc.setJobGroup(group(name), s"daily $name", interruptOnCancel = false)
+      try {
+        val (r, err) = timed(runT0, name, body)
+        ended.synchronized {
+          ended(i) = true
+          results(i) = (err, cause) match {
+            case (Some(e), None) if failFast =>
+              cause = Some(i -> e)
+              // future jobs too: a sibling between two jobs must not start
+              // its next one
+              stages.indices.filterNot(ended).foreach { j =>
+                sc.cancelJobGroupAndFutureJobs(group(stages(j)._1),
+                  s"stage '$name' failed")
+              }
+              r
+            case (Some(_), Some((c, _))) =>
+              r.copy(error = Some(s"cancelled: stage '${stages(c)._1}' failed " +
+                s"first (${r.error.getOrElse("")})"))
+            case _ => r
+          }
+        }
+      } finally sc.clearJobGroup()
+    }
+
+    val pool = Executors.newFixedThreadPool(stages.size)
+    try {
+      val futures = stages.indices.map(i => pool.submit(new Runnable {
+        def run(): Unit = runOne(i)
+      }))
+      // wait for EVERY stage thread, then rethrow the first non-Exception
+      // (an Error) a thread died of
+      val died = futures.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      died.headOption.foreach(throw _)
+    } finally {
+      pool.shutdownNow()
+      pool.awaitTermination(1, TimeUnit.MINUTES)
+    }
+
+    cause match {
+      case Some((c, e)) =>
+        throw new PipelineFailedException(results.take(c + 1).toSeq, e)
+      case None => results.toSeq
+    }
   }
 }

@@ -53,6 +53,32 @@ class CleanFnsSpec extends SparkSpec {
     assert(rows.map(_.getDouble(1)).toSeq == Seq(0.5, 1.5, 15.0))
   }
 
+  test("the cleaners coerce dirty input to null under ANSI off AND on") {
+    val dirty = Seq("Jan 5 2024", "n/a", "12,3x%")
+    def clean(): Seq[Seq[Option[String]]] = {
+      val df = dirty.toDF("s").select(
+        CleanFns.parsePercent(col("s")).cast("string"),
+        CleanFns.parseNumber(col("s")).cast("string"),
+        CleanFns.parseMagnitude(col("s")).cast("string"),
+        CleanFns.parseDate(col("s")).cast("string"),
+        CleanFns.dateFromPath(col("s")).cast("string"))
+      df.collect().toSeq.map(r => (0 until r.length).map(i => Option(r.getString(i))))
+    }
+    val key = "spark.sql.ansi.enabled"
+    val saved = spark.conf.get(key)
+    val byAnsi = try Seq("false", "true").map { v =>
+      spark.conf.set(key, v)
+      v -> clean()
+    } finally spark.conf.set(key, saved)
+    // rows: the three inputs; columns: percent, number, magnitude, date,
+    // date-from-path
+    val want = Seq(
+      Seq(None, None, Some("5.0"), Some("2024-01-05"), None),
+      Seq(None, None, None, None, None),
+      Seq(None, None, Some("123.0"), None, None))
+    byAnsi.foreach { case (v, got) => assert(got == want, s"ansi=$v") }
+  }
+
   test("path lineage extractors (ticker / asset type / date from path)") {
     val df = Seq(
       "file:/lake/etf/2024-05-02/VUSA_history.csv",

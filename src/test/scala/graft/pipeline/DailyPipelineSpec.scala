@@ -5,6 +5,7 @@ import graft.maintenance.Retention
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path}
 import java.time.LocalDate
+import scala.jdk.CollectionConverters._
 
 /** End-to-end daily run over a synthetic file lake shaped like the
   * reference's validation_output/data trees (FIXTURES.md §1). */
@@ -100,6 +101,110 @@ class DailyPipelineSpec extends SparkSpec {
     val failed = e.summary.last
     assert(failed.stage == "detail_sync" && !failed.ok && failed.error.nonEmpty)
     assert(!e.summary.exists(_.stage == "holdings_sync"), "abort must stop later stages")
+  }
+
+  private val stageOrder = Seq("master_sync", "nav_sync", "history_sync",
+    "dividend_sync", "detail_sync", "holdings_sync", "allocations_sync")
+
+  private val goodDetails = "ticker,asset_type,name,expense_ratio,assets_aum\n" +
+    "VUSA,ETF,Vanguard SP500,0.07%,842.33m USD\n"
+
+  /** A lake with every stage's input. */
+  private def fullLake(root: Path): String = {
+    write(root.resolve("lake/master/Financial Times"), "ft_master.csv",
+      "ticker,asset_type,name,status,source,date_added\n" +
+        "VUSA,ETF,Vanguard SP500,new,Financial Times,2024-05-01\n")
+    write(root.resolve("lake/nav/Financial Times"), "nav.csv",
+      "ticker,asset_type,source,nav_price,currency,as_of_date,scrape_date\n" +
+        "VUSA,ETF,Financial Times,101.5,USD,2024-05-01,2024-05-01\n")
+    write(root.resolve("lake/history/Financial Times/etf/2024-05-01"),
+      "VUSA_history.csv",
+      "Date,Open,High,Low,Close,Volume\n2024-04-29,98,99,97,98.5,900\n" +
+        "2024-04-30,99,100,98,99.5,1000\n")
+    write(root.resolve("lake/dividends/Yahoo Finance/fund/2024-05-01"),
+      "ABC_dividend.csv", "Date,Dividend\n2024-03-01,0.52\n")
+    write(root.resolve("lake/details/Stock Analysis"), "screener.csv", goodDetails)
+    write(root.resolve("lake/holdings/Financial Times/etf/2024-05-01"),
+      "VUSA_etf_holdings.csv",
+      "ticker,asset_type,name,symbol,weight\nVUSA,ETF,Apple,AAPL,5.9%\n" +
+        "VUSA,ETF,Microsoft,MSFT,5.1%\n")
+    write(root.resolve("lake/allocations/Stock Analysis/2024-05-01"),
+      "VUSA_allocations.csv",
+      "ticker,sector,percentage,scrape_date\nVUSA,Technology,28.4%,2024-05-01\n")
+    s"$root/lake"
+  }
+  /** Paths under `dir` a sink leaves only while a write is in flight. */
+  private def leftovers(dir: String): Seq[String] = {
+    val all = Files.walk(Path.of(dir))
+    try all.iterator().asScala.map(_.toString)
+      .filter(p => Seq("__lock", "__tmp", "__old", "__swap").exists(p.endsWith)).toSeq
+    finally all.close()
+  }
+
+  /** Row count of every stg_* table under `wh`. */
+  private def tableCounts(wh: String): Map[String, Long] =
+    Files.list(Path.of(wh)).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("stg_"))
+      .map(t => t.getFileName.toString -> spark.read.parquet(t.toString).count())
+      .toMap
+
+  test("concurrent schedule: results in stage order, no sink leftovers") {
+    val root = Files.createTempDirectory("lakeorder")
+    val wh = s"$root/warehouse"
+    val results = DailyPipeline.run(spark, fullLake(root), wh,
+      lit("2024-05-01"))
+    assert(results.forall(_.ok), results.mkString("; "))
+    assert(results.map(_.stage) == stageOrder)
+    // master_sync runs alone before the rest: every other stage starts
+    // after it ended
+    val master = results.head
+    assert(results.tail.forall(_.startMs >= master.startMs + master.durationMs),
+      results.map(r => (r.stage, r.startMs, r.durationMs)).mkString("; "))
+    assert(leftovers(wh).isEmpty, leftovers(wh).mkString("; "))
+    // the stage threads ended with the call
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(t =>
+      t.isAlive && t.getName.startsWith("graft-daily-")))
+  }
+
+  test("failFast: the first failure cancels its siblings, a fixed rerun converges") {
+    val root = Files.createTempDirectory("lakecancel")
+    val lake = root.resolve("lake")
+    val wh = s"$root/warehouse"
+    write(lake.resolve("history/Financial Times/etf/2024-05-01"),
+      "VUSA_history.csv", "Date,Open,High,Low,Close,Volume\n2024-04-30,99,100,98,99.5,1000\n")
+    // no ticker/symbol column: DetailSync's key normalization throws
+    write(lake.resolve("details/Broken Source"), "screener.csv",
+      "name,expense_ratio\nNameless Fund,0.10%\n")
+    write(lake.resolve("holdings/Financial Times/etf/2024-05-01"),
+      "VUSA_etf_holdings.csv",
+      "ticker,asset_type,name,symbol,weight\nVUSA,ETF,Apple,AAPL,5.9%\n")
+    write(lake.resolve("allocations/Stock Analysis/2024-05-01"),
+      "VUSA_allocations.csv",
+      "ticker,sector,percentage,scrape_date\nVUSA,Technology,28.4%,2024-05-01\n")
+
+    val e = intercept[DailyPipeline.PipelineFailedException] {
+      DailyPipeline.run(spark, lake.toString, wh, lit("2024-05-01"))
+    }
+    // no sibling job outlives the call
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    assert(e.summary.last.stage == "detail_sync" && !e.summary.last.ok)
+    // the stages ordered before the cause, in order; a cancelled one names it
+    assert(e.summary.map(_.stage) == Seq("history_sync", "detail_sync"))
+    assert(e.summary.init.forall(r => r.ok || r.error.exists(_.contains("detail_sync"))),
+      e.summary.mkString("; "))
+    assert(leftovers(wh).isEmpty, leftovers(wh).mkString("; "))
+
+    // fix the details CSV: a rerun of the day lands every table as a
+    // clean run of the fixed lake does
+    write(lake.resolve("details/Broken Source"), "screener.csv", goodDetails)
+    val rerun = DailyPipeline.run(spark, lake.toString, wh, lit("2024-05-01"))
+    val clean = DailyPipeline.run(spark, lake.toString, s"$root/clean",
+      lit("2024-05-01"))
+    assert(rerun.forall(_.ok), rerun.mkString("; "))
+    assert(rerun.map(r => r.stage -> r.rows) == clean.map(r => r.stage -> r.rows))
+    assert(tableCounts(wh) == tableCounts(s"$root/clean"))
+    // history, holdings, allocations and the four detail tables
+    assert(tableCounts(wh).keySet.size == 7, tableCounts(wh))
   }
 
   test("Retention.purgeDatedDirs drops only dirs older than the cutoff") {
