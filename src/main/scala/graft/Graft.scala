@@ -5,14 +5,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Session factory + table access for the graft engine. */
 object Graft {
 
-  /** Engine session defaults:
+  /** Local core count: `SPARK_GRAFT_CPUS` when set, else the JVM's
+    * available processors. */
+  private[graft] def localCores(setting: Option[String], available: Int): Int =
+    setting.fold(available)(_.toInt)
+
+  private def hostCores: Int =
+    localCores(sys.env.get("SPARK_GRAFT_CPUS"), Runtime.getRuntime.availableProcessors())
+
+  /** The engine's only session builder: every main, spec and benchmark
+    * takes its SparkSession from here, so they all run one configuration.
+    * By default it runs `local[n]` with `n` shuffle partitions, `n` being
+    * `SPARK_GRAFT_CPUS` or else the JVM's available processors. Settings:
     *  - ANSI off: the reference's semantics are pandas `errors='coerce'`
     *    (bad cast -> null, not exception) — see CleanFns;
-    *  - shuffle partitions sized for local[32] (a real cluster overrides);
     *  - AQE on (runtime coalescing + skew-join splitting at scale).
     */
-  def session(appName: String = "graft", master: String = "local[32]",
-              shufflePartitions: Int = 32): SparkSession = {
+  def session(appName: String = "graft", master: String = s"local[$hostCores]",
+              shufflePartitions: Int = hostCores): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
       .appName(appName)

@@ -4,7 +4,7 @@ package graft
   * (flagship query on sf0.001) and asserts it returns rows. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = Graft.session("graft-smoke", "local[8]", 8)
+    val spark = Graft.session("graft-smoke")
     val df    = SparkEntry.entry(spark)
     val n     = df.count()
     df.show(10, false)

@@ -483,51 +483,6 @@ object MergeSink {
     }}
   }
 
-  // ------------------------------------------------------- ACID formats
-
-  /** True when a transactional table format (Delta Lake) is on the
-    * classpath. No Delta/Iceberg jars ship in this sandbox, so this is
-    * false here — but the MERGE path below is complete and spec-pinned
-    * (golden SQL always; execution auto-enabled the moment the jar and
-    * `io.delta.sql.DeltaSparkSessionExtension` are configured). */
-  lazy val deltaAvailable: Boolean =
-    try { Class.forName("org.apache.spark.sql.delta.DeltaLog"); true }
-    catch { case _: Throwable => false }
-
-  /** The `MERGE INTO` statement equivalent to [[merge]]+[[upsertParquet]]
-    * on a Delta table: hash-guarded update, insert-when-new, key-only
-    * match. Pure text (no Delta classes needed to build it) — with the
-    * Delta extension installed, `spark.sql` executes it and the advisory
-    * file lock becomes unnecessary: Delta's optimistic commit protocol is
-    * the real fix for the concurrent-writer races the lock mitigates. */
-  def deltaMergeSql(path: String, updatesView: String, keys: Seq[String],
-                    hashCol: Option[String] = Some("row_hash")): String = {
-    val on = keys.map(k => s"t.`$k` <=> u.`$k`").mkString(" AND ")
-    val guard = hashCol.fold("")(h =>
-      s" AND NOT (t.`$h` <=> u.`$h`)")
-    s"""MERGE INTO delta.`$path` t
-       |USING $updatesView u
-       |ON $on
-       |WHEN MATCHED$guard THEN UPDATE SET *
-       |WHEN NOT MATCHED THEN INSERT *""".stripMargin
-  }
-
-  /** Routes an upsert through Delta `MERGE INTO` when the format is on
-    * the classpath, else through the parquet swap-sink — the "optional
-    * ACID profile": zero configuration when the jars are absent, full
-    * transactional semantics (no advisory lock, snapshot isolation,
-    * concurrent-writer safety) the moment they're present. `updates` is
-    * deduplicated on the keys exactly like [[merge]] does. */
-  def upsertAuto(spark: SparkSession, path: String, updates: DataFrame,
-                 keys: Seq[String], hashCol: Option[String] = Some("row_hash"),
-                 numBuckets: Int = 32): Unit =
-    if (deltaAvailable) {
-      val view = s"graft_updates_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      updates.dropDuplicates(keys).createOrReplaceTempView(view)
-      try spark.sql(deltaMergeSql(path, view, keys, hashCol))
-      finally spark.catalog.dropTempView(view)
-    } else upsertParquet(spark, path, updates, keys, hashCol, numBuckets)
-
   /** T5 status lifecycle (src/utils/status_manager.py:63-88) as a pure
     * column rewrite of the master table. The reference runs two sequential
     * UPDATEs: first `get_sql_update_inactive` (targets ONLY rows WHERE

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.functions.Bpe
 
 /** Merges-dimension scale measurement for BPE training — the r10 verdict's
@@ -35,14 +33,7 @@ object BpeTrainScale {
     val localMerges = args.lift(2).map(_.toInt).getOrElse(1024)
     val distMerges = args.lift(3).map(_.toInt).getOrElse(32)
     val minCount = args.lift(4).map(_.toLong).getOrElse(2L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-bpe-train-scale").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.session("graft-bpe-train-scale")
 
     val df = spark.read.parquet(s"$docsDir/documents.parquet")
     val nDocs = df.count()

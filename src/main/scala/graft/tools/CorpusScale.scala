@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** One corpus-pipeline-at-scale measurement point: run
@@ -30,14 +29,7 @@ object CorpusScale {
       "usage: CorpusScale <sfDir> <outDir> <label> [<outJson>] [<bpeMerges>] " +
         "[<pplLmOrder>] [<pplSampleMod>]")
     val Array(sfDir, outDir, label) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.session("graft-corpus-scale")
 
     val raw = spark.read.parquet(s"$sfDir/documents.parquet")
     val all = raw.select(col("doc_id"), col("text"), col("source"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
@@ -52,14 +51,7 @@ object CurateSteadyState {
     val workDir = args(0)
     val nBatches = args(1).toInt
     val batchRows = args(2).toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.session("graft-curate-steady-state")
 
     // one single-file parquet per batch: contiguous GenScaleData id slices.
     // vocabSize > 0 swaps GenScaleData's 31-word vocabulary for a hashed

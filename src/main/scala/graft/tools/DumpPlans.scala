@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** r17 optimization-round evidence tool: write `.explain("formatted")`
   * output for every bench query (production twins included — they are
   * what Bench times) to <outDir>/<query>_<suffix>.txt. The judge checks
@@ -22,16 +20,7 @@ object DumpPlans {
     val names =
       if (args.length > 3) args.drop(3).toSeq
       else graft.SparkEntry.benchQueries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.limit.initialNumPartitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session("graft-dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (q <- names) {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Dev tool: print the FINALIZED (post-AQE) physical plan of one or more
@@ -13,12 +12,7 @@ object ExplainQuery {
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session("graft-explain-query")
     spark.sparkContext.setLogLevel("ERROR")
     for (q <- names) {
       val df = graft.SparkEntry.benchQueries(q)(spark, dir)

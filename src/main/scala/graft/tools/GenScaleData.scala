@@ -321,15 +321,7 @@ object GenScaleData {
         "   or: GenScaleData <outBase> --docs-vocab <V> <sf> [<sf2> ...] " +
         "(documents-only, writes <outBase>/rich<sf>/ or v31-<sf>/ for V=0)")
     val outBase = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-gen-scale-data").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.session("graft-gen-scale-data")
     if (args.lift(1).contains("--embs")) {
       // embeddings-only generation (the similarity-family sweep input):
       // --embs <sf> [<sf2> ...] writes <outBase>/emb<sf>/embeddings.parquet

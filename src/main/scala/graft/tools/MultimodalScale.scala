@@ -111,14 +111,7 @@ object MultimodalScale {
     val workDir = args(1)
     val label = args(2)
     val reps = sys.env.getOrElse("SPARK_GRAFT_MM_REPS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.session("graft-multimodal-scale")
 
     val mediaPath = s"$workDir/media.parquet"
     genMedia(spark, n).write.mode("overwrite").parquet(mediaPath)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{CorpusStats, Pca, QualityModel}
@@ -26,16 +26,7 @@ object NewOpsScale {
     val docsDir = args(0)
     val embDir = args(1)
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-newops-scale").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.session("graft-newops-scale")
 
     def docs: DataFrame = spark.read.parquet(s"$docsDir/documents.parquet")
     def embs: DataFrame = spark.read.parquet(s"$embDir/embeddings.parquet")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.lit
 
 /** One pipeline-at-scale measurement point: run the reference-parity
@@ -20,14 +19,7 @@ object PipelineScale {
     require(args.length >= 3,
       "usage: PipelineScale <lakeRoot> <warehouseRoot> <label> [<outJson>]")
     val Array(lake, wh, label) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.session("graft-pipeline-scale")
 
     val t0 = System.nanoTime()
     val results = graft.pipeline.DailyPipeline.run(spark, lake, wh, lit("2024-05-01"))

@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** r17 optimization-round attribution tool (guide §1): run each bench
   * query once through the noop sink and report WHERE the time goes in
@@ -24,16 +23,7 @@ object QueryStats {
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else graft.SparkEntry.benchQueries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.limit.initialNumPartitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session("graft-query-stats")
     spark.sparkContext.setLogLevel("ERROR")
 
     val jobs = new AtomicInteger

@@ -177,13 +177,7 @@ object WindowProbe {
     * host. Usage: jrun graft.tools.WindowProbe [reps] */
   def main(args: Array[String]): Unit = {
     val reps = args.lift(0).map(_.toInt).getOrElse(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.session("graft-window-probe")
     (1 to reps).foreach { i =>
       val s = sample(spark)
       println(s"""{"rep":$i,"sample":${s.json}}""")

@@ -360,29 +360,6 @@ class MergeSinkSpec extends SparkSpec {
     assert(!new java.io.File(path + "__lock").exists())
   }
 
-  test("delta MERGE profile: golden SQL always; execution when the jar ships") {
-    val sql = MergeSink.deltaMergeSql("/wh/master", "upd", Seq("ticker", "date"))
-    assert(sql ==
-      """MERGE INTO delta.`/wh/master` t
-        |USING upd u
-        |ON t.`ticker` <=> u.`ticker` AND t.`date` <=> u.`date`
-        |WHEN MATCHED AND NOT (t.`row_hash` <=> u.`row_hash`) THEN UPDATE SET *
-        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    // no hash guard -> unconditional K4 form
-    assert(MergeSink.deltaMergeSql("/wh/m", "u1", Seq("k"), None)
-      .contains("WHEN MATCHED THEN UPDATE SET *"))
-    // upsertAuto routes to the parquet swap-sink when Delta is absent
-    // (this sandbox), to MERGE INTO when present (asserted only then)
-    if (!MergeSink.deltaAvailable) {
-      val path = java.nio.file.Files.createTempDirectory("autotbl").toString + "/t"
-      val df = withHash(Seq(("A", 1.0)).toDF("ticker", "price"))
-      MergeSink.upsertAuto(spark, path, df, Seq("ticker"))
-      assert(MergeSink.readTable(spark, path).count() == 1)
-    } else {
-      cancel("Delta on classpath: exercise the MERGE INTO execution path")
-    }
-  }
-
   test("applyStatusLifecycle: aging to inactive, new+named to active") {
     val master = Seq(
       ("T1", "2024-01-01", "active", "Fund One"),   // stale -> inactive

@@ -16,5 +16,4 @@ done
 # only (r13 ADVICE). build.sbt pins the same flags for sbt-forked JVMs.
 exec java $OPENS $EXTRA_JVM -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -Duser.language=en -Duser.country=US \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp /root/repo/target/scala-2.13/classes:'/opt/spark/jars/*' "$@"
