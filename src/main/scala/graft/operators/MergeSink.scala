@@ -1,8 +1,10 @@
 package graft.operators
 
+import graft.schema.Schemas
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Hash-guarded upsert — the reference's single most important operator
   * (SURVEY.md §2.5 J3, §2.2 K3–K5, §3.3): `INSERT ... ON CONFLICT (natural
@@ -15,23 +17,49 @@ import org.apache.spark.sql.functions._
   * no Delta jars; with Delta/Iceberg the same `merge` becomes `MERGE INTO`).
   *
   * Scale notes: the merge is a single shuffle on the natural key. The
-  * warehouse table is hash-bucketed on that key, and a hash-guarded
-  * upsert rewrites only the buckets that receive a CHANGED row: an update
-  * row whose (key, row_hash) the target already holds costs a probe read
-  * of its bucket, never a rewrite. So the rewrite scales with the rows
-  * whose payload changed, not with the rows delivered — a full-snapshot
-  * feed (every history file re-sent whole, one new row) rewrites only the
-  * buckets holding the new rows. Without a hash guard (K4 unconditional
-  * update) every bucket an update key hashes to is rewritten.
+  * warehouse table is hash-bucketed on that key, and an upsert rewrites
+  * only the buckets that receive a CHANGED row: an update row whose
+  * `guardCols` values the target already holds costs a probe read of
+  * its bucket, never a rewrite. So the rewrite scales with the rows whose
+  * content changed, not with the rows delivered — a full-snapshot feed
+  * (every history file re-sent whole, one new row) rewrites only the
+  * buckets holding the new rows. A table without a hash column (K4,
+  * `stg_daily_nav`) is guarded on its whole content, so a NAV re-sent
+  * with only a new `updated_at` rewrites nothing either.
   */
 object MergeSink {
 
-  /** MERGE semantics on `keys`:
-    *  - matched + row_hash equal     -> keep target row unchanged (no-op, T2)
-    *  - matched + row_hash differs   -> take update row
-    *  - matched, no hash guard       -> take update row (K4 unconditional)
-    *  - target-only                  -> keep target row
-    *  - update-only                  -> insert update row
+  /** The columns that decide whether a matched update row changes the
+    * table: `keys :+ hashCol` for a hash-guarded table (T2), otherwise
+    * every column of `schema` except [[Schemas.updatedAt]] (K4: the
+    * reference's SET list rewrites every column but `id` and
+    * `updated_at`, so a row re-sent unchanged leaves the stored row as
+    * it was). Fails, naming `table` and the column, when a guard column
+    * holds a map: Spark cannot compare maps with `<=>`. */
+  private def guardCols(schema: StructType, keys: Seq[String],
+                        hashCol: Option[String], table: String): Seq[String] = {
+    def hasMap(t: DataType): Boolean = t match {
+      case _: MapType    => true
+      case s: StructType => s.fields.exists(f => hasMap(f.dataType))
+      case a: ArrayType  => hasMap(a.elementType)
+      case _             => false
+    }
+    val guard = hashCol.fold(
+      schema.fieldNames.toSeq.filterNot(_ == Schemas.updatedAt))(keys :+ _)
+    guard.find(c => hasMap(schema(c).dataType)).foreach { c =>
+      throw new IllegalArgumentException(
+        s"table $table: column `$c` holds a map, which the upsert's change " +
+          "guard cannot compare; give the table a hash column or store the " +
+          "map as a sorted array of entries")
+    }
+    guard
+  }
+
+  /** MERGE semantics on `keys`, with `guard` = `guardCols`:
+    *  - matched + guard columns equal    -> keep target row unchanged (no-op)
+    *  - matched + a guard column differs -> take update row
+    *  - target-only                      -> keep target row
+    *  - update-only                      -> insert update row
     *
     * `updates` is deduplicated on the keys first (keep-last by `updateOrder`,
     * mirroring the reference's last-chunk-wins constraint behavior but made
@@ -60,11 +88,9 @@ object MergeSink {
 
     val updPresent = col("u__present").isNotNull
     val tgtPresent = col("t__present").isNotNull
-    val takeUpdate = hashCol match {
-      case Some(h) =>
-        updPresent && (!tgtPresent || !(col(s"t_$h") <=> col(s"u_$h")))
-      case None => updPresent
-    }
+    val same = guardCols(target.schema, keys, hashCol, "merge target")
+      .map(c => col(s"t_$c") <=> col(s"u_$c")).reduce(_ && _)
+    val takeUpdate = updPresent && (!tgtPresent || !same)
     joined.select(cols.map { c =>
       when(takeUpdate, col(s"u_$c")).otherwise(col(s"t_$c")).as(c)
     }: _*)
@@ -377,10 +403,10 @@ object MergeSink {
     *  2. an upsert computes the DISTINCT buckets its update keys hash to
     *     (`hit`; bounded driver collect: <= numBuckets ints) and reads
     *     ONLY those partitions of the target (partition-pruned scan).
-    *     With `hashCol` set, it left-anti-joins the update rows against
-    *     the `(keys, hashCol, __bucket)` projection of the `hit` buckets
+    *     It left-anti-joins the update rows against the
+    *     `guardCols :+ __bucket` projection of the `hit` buckets
     *     (null-safe `<=>` on every column); the buckets of the surviving,
-    *     CHANGED rows are `touched`. Without `hashCol`, `touched = hit`;
+    *     CHANGED rows are `touched`;
     *  3. only the `touched` buckets are merged — target buckets with the
     *     update rows of those buckets — and rewritten via a staged marker
     *     swap. An empty `touched` writes nothing: no staging, no swap.
@@ -390,14 +416,16 @@ object MergeSink {
     *     (staged bucket dirs roll forward; the table is never lost).
     *
     * A pre-existing UNBUCKETED table is migrated in one full merge+rewrite
-    * (flagged by the missing meta file). Idempotent: replaying identical
-    * updates with a hash guard touches no bucket and writes no file.
+    * (flagged by the missing meta file). Idempotent: replaying updates
+    * whose guard values the table already holds (a K4 row re-sent with
+    * only a new `updated_at`, say) touches no bucket and writes no file.
     *
     * Why skipping unchanged rows keeps the output: an update row whose
-    * (key, hash) the target already holds merges back to that target row
-    * (the hash guard keeps `t`), so a bucket holding only such rows would
-    * be rewritten with identical rows. Duplicate-key and null-key update
-    * rows are at worst kept as changed, which only adds buckets. */
+    * guard values the target already holds merges back to that target row
+    * (`merge` keeps `t` on the same rule), so a bucket holding only such
+    * rows would be rewritten with identical rows. Duplicate-key and
+    * null-key update rows are at worst kept as changed, which only adds
+    * buckets. */
   def upsertParquet(spark: SparkSession, path: String, updates: DataFrame,
                     keys: Seq[String], hashCol: Option[String] = Some("row_hash"),
                     numBuckets: Int = 32): Unit = {
@@ -427,6 +455,8 @@ object MergeSink {
       }
 
       if (!fs.exists(tgt)) {
+        // a table no later upsert could compare is refused before it exists
+        guardCols(updates.schema, keys, hashCol, path)
         val nb = numBuckets
         if (writeWhole(updates.dropDuplicates(keys)
             .withColumn("__bucket", bucketExpr(keys, nb)), path))
@@ -440,7 +470,9 @@ object MergeSink {
           // migration merge works for both states (the half-created case
           // costs one full re-bucket instead of bricking every upsert with
           // an unresolvable-__bucket analysis error)
-          val merged = merge(readTable(spark, path), updates, keys, hashCol)
+          val previous = readTable(spark, path)
+          guardCols(previous.schema, keys, hashCol, path)
+          val merged = merge(previous, updates, keys, hashCol)
             .withColumn("__bucket", bucketExpr(keys, numBuckets))
           val bucketed = writeWhole(merged, tmp)
           swapDirs(fs, path, tmp, Seq(""), lock)
@@ -456,21 +488,22 @@ object MergeSink {
           def inBuckets(df: DataFrame, bs: Array[Int]): DataFrame =
             df.filter(col("__bucket").isin(bs.map(Int.box): _*))
           try {
-            val hit = buckets(upd)
             val table = spark.read.parquet(path)
-            // hash-guarded: a bucket is touched only if it receives an
-            // update row whose (keys, hash) the target does not already
-            // hold — every other update row merges back to its target row
-            val touched = hashCol match {
-              case Some(h) if hit.nonEmpty =>
-                val probe = keys :+ h :+ "__bucket"
+            // a bucket is touched only if it receives an update row whose
+            // guard values the target does not already hold — every other
+            // update row merges back to its target row
+            val probe = guardCols(table.drop("__bucket").schema, keys,
+              hashCol, path) :+ "__bucket"
+            val hit = buckets(upd)
+            val touched =
+              if (hit.isEmpty) hit
+              else {
                 val held = inBuckets(table, hit)
                   .select(probe.map(c => col(c).as(s"__t_$c")): _*)
                 buckets(upd.join(held,
                   probe.map(c => upd(c) <=> col(s"__t_$c")).reduce(_ && _),
                   "left_anti"))
-              case _ => hit
-            }
+              }
             if (touched.nonEmpty) {
               val merged = merge(inBuckets(table, touched),
                 inBuckets(upd, touched), keys, hashCol)

@@ -23,6 +23,12 @@ object Schemas {
   val alloc: DecimalType   = DecimalType(10, 4)
   val bigAmt: DecimalType  = DecimalType(20, 2)
 
+  /** The load-time stamp every table carries. It records when a row was
+    * written, not what the row says, so it is never content: the upsert's
+    * SET list leaves it out (db_connector.py:400-405) and `MergeSink`'s
+    * change guard ignores it. */
+  val updatedAt = "updated_at"
+
   /** stg_security_master (db_connector.py:73-95). Key: ticker, asset_type, source. */
   val securityMaster: StructType = StructType(Seq(
     f("ticker", StringType, nullable = false),
@@ -33,7 +39,7 @@ object Schemas {
     f("row_hash", StringType),
     f("first_seen", DateType),
     f("last_seen", DateType),
-    f("updated_at", TimestampType)))
+    f(updatedAt, TimestampType)))
 
   /** stg_price_history (db_connector.py:97-124). Key: ticker, asset_type, source, date. */
   val priceHistory: StructType = StructType(Seq(
@@ -45,7 +51,7 @@ object Schemas {
     f("adj_close", money),
     f("volume", LongType),
     f("row_hash", StringType),
-    f("updated_at", TimestampType)))
+    f(updatedAt, TimestampType)))
 
   /** stg_daily_nav (db_connector.py:126-147) — the one table WITHOUT row_hash. */
   val dailyNav: StructType = StructType(Seq(
@@ -56,7 +62,7 @@ object Schemas {
     f("nav_price", money),
     f("currency", StringType),
     f("scrape_date", DateType),
-    f("updated_at", TimestampType)))
+    f(updatedAt, TimestampType)))
 
   /** stg_dividend_history (db_connector.py:149-173). */
   val dividendHistory: StructType = StructType(Seq(
@@ -69,7 +75,7 @@ object Schemas {
     f("currency", StringType),
     f("type", StringType),
     f("row_hash", StringType),
-    f("updated_at", TimestampType)))
+    f(updatedAt, TimestampType)))
 
   /** stg_allocations — the EAV-shaped long table (db_connector.py:175-200). */
   val allocations: StructType = StructType(Seq(
@@ -84,7 +90,7 @@ object Schemas {
     f("value_long", alloc),
     f("value_short", alloc),
     f("row_hash", StringType),
-    f("updated_at", TimestampType)))
+    f(updatedAt, TimestampType)))
 
   /** stg_fund_info (db_connector.py:202-234). */
   val fundInfo: StructType = StructType(Seq(
@@ -100,7 +106,7 @@ object Schemas {
     f("shares_out", bigAmt), f("market_cap_size", StringType),
     f("investment_style", StringType),
     f("row_hash", StringType),
-    f("updated_at", TimestampType)))
+    f(updatedAt, TimestampType)))
 
   /** stg_fund_fees (db_connector.py:236-260). */
   val fundFees: StructType = StructType(Seq(
@@ -111,7 +117,7 @@ object Schemas {
     f("assets_aum", bigAmt), f("top_10_hold_pct", metric),
     f("holdings_count", IntegerType), f("holdings_turnover", metric),
     f("row_hash", StringType),
-    f("updated_at", TimestampType)))
+    f(updatedAt, TimestampType)))
 
   /** stg_fund_risk (db_connector.py:262-289), metrics per horizon. */
   val fundRisk: StructType = {
@@ -126,7 +132,7 @@ object Schemas {
       f("moving_avg_200", DecimalType(10, 2)),
       f("morningstar_rating", IntegerType),
       f("row_hash", StringType),
-      f("updated_at", TimestampType)))
+      f(updatedAt, TimestampType)))
   }
 
   /** stg_fund_policy (db_connector.py:291-318). */
@@ -142,7 +148,7 @@ object Schemas {
     f("total_return_ytd", metric), f("total_return_1y", metric),
     f("pe_ratio", metric),
     f("row_hash", StringType),
-    f("updated_at", TimestampType)))
+    f(updatedAt, TimestampType)))
 
   /** stg_fund_holdings (db_connector.py:320-347). */
   val fundHoldings: StructType = StructType(Seq(
@@ -158,7 +164,7 @@ object Schemas {
     f("sector", StringType),
     f("country", StringType),
     f("row_hash", StringType),
-    f("updated_at", TimestampType)))
+    f(updatedAt, TimestampType)))
 
   /** Natural keys per table (UNIQUE constraints, db_connector.py). */
   val naturalKeys: Map[String, Seq[String]] = Map(

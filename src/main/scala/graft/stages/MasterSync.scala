@@ -100,7 +100,7 @@ object MasterSync {
       if (!fs.exists(tgt)) batch.dropDuplicates(keys)
       else {
         val target = spark.read.parquet(path)
-        // preserve first_seen of existing rows through the unconditional merge
+        // preserve first_seen of existing rows through the K4 merge
         val t = target.select(keys.map(col) :+ col("first_seen").as("__first"): _*)
         MergeSink.merge(target, batch, keys, hashCol = None)
           .join(t, keys, "left")

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   *     C1 normalize -> A3 dedup keep-last -> F3 nav>0 -> C9 dates
   *   01_performance_validator.py     F1/F3/F4 masks -> valid/error split
   *   03_daily_nav_loader.py          K3 upsert (stg_daily_nav has NO
-  *     row_hash -> unconditional-update K4 merge)
+  *     row_hash -> K4 merge guarded on every column but `updated_at`)
   *   00_price_history_cleaner.py     S4 identity-from-path
   *   02_history_hasher.py            C14 sha256 hash
   *   03_price_history_loader.py      K5 temp-table hash-guarded upsert
@@ -69,8 +69,11 @@ object PerformanceSync {
   def validateNav(cleaned: DataFrame, today: Column): (DataFrame, DataFrame) =
     Validate.split(cleaned, navRules(today))
 
-  /** Merge into stg_daily_nav — K4 unconditional update (no row_hash on
-    * this table, db_connector.py:126-147). */
+  /** Merge into stg_daily_nav — K4 content-guarded (no row_hash on this
+    * table, db_connector.py:126-147): a matched row is taken only when a
+    * column other than `updated_at` differs. `updated_at` is not content,
+    * as in the reference's SET list, so a NAV re-sent unchanged keeps its
+    * stored row and its bucket is not rewritten. */
   def loadNav(spark: SparkSession, path: String, valid: DataFrame, asOf: Column): Unit =
     MergeSink.upsertParquet(spark, path,
       valid.withColumn("updated_at", asOf.cast("timestamp")),

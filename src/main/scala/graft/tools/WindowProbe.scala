@@ -10,8 +10,8 @@ import org.apache.spark.sql.SparkSession
   * real regressions. This probe makes every measurement artifact
   * SELF-REPORT its window quality: two fixed-work probes — a
   * single-thread CPU probe (sha-256 over a constant buffer, fixed
-  * iteration count) and an all-cores Spark probe (a 32-way xxhash64
-  * aggregation over `spark.range`, fixed row count) — run before and
+  * iteration count) and an all-cores Spark probe (an xxhash64
+  * aggregation over `spark.range`, a fixed row count per core) — run before and
   * after the measured work, and their wall-times are divided by
   * COMMITTED calm-window references measured on this host. A reader then
   * judges the run off the artifact alone:
@@ -20,7 +20,7 @@ import org.apache.spark.sql.SparkSession
   *
   * The probes deliberately exercise the two contention modes observed:
   * CPU steal (single-thread probe inflates) and scheduler/parallelism
-  * pressure (the 32-way probe inflates when other tenants hold cores).
+  * pressure (the all-cores probe inflates when other tenants hold cores).
   * Neither touches the code under measurement, parquet inputs, or any
   * caches — same work every run by construction. References are plain
   * committed constants, NOT auto-calibrated: auto-calibration in a
@@ -63,22 +63,27 @@ object WindowProbe {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** Fixed-work all-cores probe: xxhash64-max over 4e9 generated rows in
-    * 32 range partitions — saturates every executor thread with pure
-    * codegen compute, no I/O, no shuffle beyond the scalar agg. An
-    * untimed small run of the same plan first absorbs codegen/JIT (a
+  /** Fixed-work all-cores probe: xxhash64-max over 1.25e8 generated rows
+    * per range partition, one partition per core (`defaultParallelism`)
+    * — saturates every executor thread with pure codegen compute, no
+    * I/O, no shuffle beyond the scalar agg. Each core does the same work
+    * whatever the core count, so [[RefSparkSec]] (pinned at 32 cores,
+    * 4e9 rows) reads ~1 on a calm host of any size; a fixed 32-partition
+    * job would run 32/cores waves and read as degraded on a small host.
+    * An untimed small run of the same plan first absorbs codegen/JIT (a
     * cold first probe read 8× its steady state — that's compile cost,
     * not window quality). max, not sum: an ANSI-mode long sum of 4e9
     * hashes overflows. */
   def sparkProbeSec(spark: SparkSession): Double = {
     import org.apache.spark.sql.functions._
-    def run(rows: Long): Unit =
-      spark.range(0L, rows, 1L, 32)
+    val parts = spark.sparkContext.defaultParallelism
+    def run(rowsPerPart: Long): Unit =
+      spark.range(0L, rowsPerPart * parts, 1L, parts)
         .agg(max(xxhash64(org.apache.spark.sql.functions.col("id"))))
         .collect()
-    run(10000000L) // untimed warm-up: same plan shape, 0.4% of the work
+    run(312500L) // untimed warm-up: same plan shape, 0.25% of the work
     val t0 = System.nanoTime()
-    run(4000000000L)
+    run(125000000L)
     (System.nanoTime() - t0) / 1e9
   }
 

@@ -170,28 +170,36 @@ class MergeSinkSpec extends SparkSpec {
     assert(rows.count() == 64)
   }
 
-  /** Creates a 64-key table in 8 buckets, re-upserts `snapshot` over it,
-    * and checks the table equals `merge(previous table, snapshot)`.
-    * Returns the file stamps before and after the re-upsert. */
-  private def reUpsert(name: String, snapshot: Seq[(String, Double)])
+  /** Creates `initial` as a table in 8 buckets, re-upserts `upd` over
+    * it, and checks the table equals `merge(previous table, upd)`.
+    * Returns the path and the file stamps before and after the re-upsert. */
+  private def reUpsert(name: String, initial: DataFrame, upd: DataFrame,
+                       keys: Seq[String] = Seq("ticker"),
+                       hashCol: Option[String] = Some("row_hash"))
       : (String, Map[String, (Long, Long)], Map[String, (Long, Long)]) = {
     val path = java.nio.file.Files.createTempDirectory(name).toString + "/warehouse"
-    MergeSink.upsertParquet(spark, path,
-      withHash(snapshotRows.toDF("ticker", "price")), Seq("ticker"), numBuckets = 8)
+    MergeSink.upsertParquet(spark, path, initial, keys, hashCol, numBuckets = 8)
     val prevDf = MergeSink.readTable(spark, path)
     val previous = spark.createDataFrame(
       java.util.Arrays.asList(prevDf.collect(): _*), prevDf.schema)
     val before = fileStamps(path)
     Thread.sleep(20) // a rewritten file must not share its predecessor's mtime
-    val upd = withHash(snapshot.toDF("ticker", "price"))
-    MergeSink.upsertParquet(spark, path, upd, Seq("ticker"))
+    MergeSink.upsertParquet(spark, path, upd, keys, hashCol)
     val after = fileStamps(path)
-    def canon(df: DataFrame) = df.select("ticker", "price", "row_hash")
-      .as[(String, Double, String)].collect().toSeq.sorted
+    def canon(df: DataFrame) = df.orderBy(keys.map(col): _*).collect().toSeq
     assert(canon(MergeSink.readTable(spark, path)) ==
-      canon(MergeSink.merge(previous, upd, Seq("ticker"))))
+      canon(MergeSink.merge(previous, upd, keys, hashCol)))
     (path, before, after)
   }
+
+  private def hashed(rows: Seq[(String, Double)]): DataFrame =
+    withHash(rows.toDF("ticker", "price"))
+
+  /** The bucket dirs whose part files differ between two stamp maps. */
+  private def changedBuckets(before: Map[String, (Long, Long)],
+                             after: Map[String, (Long, Long)]): Set[String] =
+    (before.keySet ++ after.keySet)
+      .filter(f => before.get(f) != after.get(f)).map(_.split("/")(0))
 
   test("re-upserting a full snapshot with ONE changed payload rewrites " +
        "exactly that row's bucket; every other part file is left alone") {
@@ -199,12 +207,11 @@ class MergeSinkSpec extends SparkSpec {
       case ("TICK017", p) => ("TICK017", p + 0.5)
       case r => r
     }
-    val (_, before, after) = reUpsert("merge_changed_only", snapshot)
-    def bucket(f: String) = f.split("/")(0)
-    val changed = (before.keySet ++ after.keySet)
-      .filter(f => before.get(f) != after.get(f)).map(bucket)
+    val (_, before, after) = reUpsert("merge_changed_only",
+      hashed(snapshotRows), hashed(snapshot))
+    val changed = changedBuckets(before, after)
     assert(changed.size == 1, s"expected 1 rewritten bucket, got $changed")
-    val kept = before.filter { case (f, _) => !changed.contains(bucket(f)) }
+    val kept = before.filter { case (f, _) => !changed.contains(f.split("/")(0)) }
     assert(kept.size > 0)
     kept.foreach { case (f, stamp) =>
       assert(after.get(f).contains(stamp), s"$f was rewritten")
@@ -213,11 +220,67 @@ class MergeSinkSpec extends SparkSpec {
 
   test("re-upserting an IDENTICAL snapshot changes no file and leaves no " +
        "staging, backup, marker or lock behind") {
-    val (path, before, after) = reUpsert("merge_replay", snapshotRows)
+    val (path, before, after) = reUpsert("merge_replay",
+      hashed(snapshotRows), hashed(snapshotRows))
     assert(after == before)
     Seq("__tmp", "__old", "__swap", "__lock").foreach { s =>
       assert(!new java.io.File(path + s).exists(), s"$path$s left behind")
     }
+  }
+
+  // a K4 table shaped like stg_daily_nav: natural key, payload and
+  // updated_at, no hash column
+  private val navKeys = Seq("ticker", "asset_type", "source", "as_of_date")
+
+  private def navSnapshot(stamp: String, prices: Seq[(String, Double)]): DataFrame =
+    prices.toDF("ticker", "nav_price")
+      .select(col("ticker"), lit("ETF").as("asset_type"), lit("YF").as("source"),
+        lit("2024-05-01").cast("date").as("as_of_date"), col("nav_price"),
+        lit("USD").as("currency"), lit(stamp).cast("timestamp").as("updated_at"))
+
+  /** A 64-key K4 table stamped day 1, re-upserted with `prices` stamped
+    * day 2 (see [[reUpsert]]); returns the table and the file stamps. */
+  private def reUpsertNav(name: String, prices: Seq[(String, Double)])
+      : (DataFrame, Map[String, (Long, Long)], Map[String, (Long, Long)]) = {
+    val (path, before, after) = reUpsert(name,
+      navSnapshot("2024-05-01", snapshotRows), navSnapshot("2024-05-02", prices),
+      navKeys, hashCol = None)
+    (MergeSink.readTable(spark, path), before, after)
+  }
+
+  test("K4 (no hash column): re-upserting a snapshot that differs only in " +
+       "updated_at changes no file") {
+    val (table, before, after) = reUpsertNav("nav_replay", snapshotRows)
+    assert(after == before)
+    assert(table.filter(col("updated_at") =!= lit("2024-05-01").cast("timestamp"))
+      .isEmpty)
+  }
+
+  test("K4 (no hash column): ONE changed nav_price rewrites exactly that " +
+       "row's bucket; unchanged rows keep their old updated_at") {
+    val snapshot = snapshotRows.map {
+      case ("TICK017", p) => ("TICK017", p + 0.5)
+      case r => r
+    }
+    val (table, before, after) = reUpsertNav("nav_changed_only", snapshot)
+    val changed = changedBuckets(before, after)
+    assert(changed.size == 1, s"expected 1 rewritten bucket, got $changed")
+    val stamps = table.select(col("ticker"), col("nav_price"),
+        col("updated_at").cast("string")).as[(String, Double, String)]
+      .collect().map(r => r._1 -> (r._2, r._3)).toMap
+    assert(stamps("TICK017") == ((17.5, "2024-05-02 00:00:00")))
+    assert((stamps - "TICK017").values.forall(_._2 == "2024-05-01 00:00:00"))
+  }
+
+  test("K4 guard refuses a map column, naming the table and the column") {
+    val path = java.nio.file.Files.createTempDirectory("merge_map").toString + "/attrs"
+    val withAttrs = Seq("AAA").toDF("ticker").withColumn("attrs", map(lit("k"), lit("v")))
+    val e = intercept[IllegalArgumentException](MergeSink.upsertParquet(spark, path,
+      withAttrs, Seq("ticker"), hashCol = None))
+    assert(e.getMessage.contains(path) && e.getMessage.contains("`attrs`"))
+    val m = intercept[IllegalArgumentException](MergeSink.merge(withAttrs, withAttrs,
+      Seq("ticker"), hashCol = None))
+    assert(m.getMessage.contains("merge target") && m.getMessage.contains("`attrs`"))
   }
 
   test("recoverSwap heals an interrupted bucket swap (staged dir rolls forward)") {

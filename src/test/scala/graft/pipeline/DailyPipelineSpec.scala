@@ -16,10 +16,8 @@ class DailyPipelineSpec extends SparkSpec {
     Files.writeString(dir.resolve(name), content)
   }
 
-  test("full pipeline: all stages land, replay is stable") {
-    val root = Files.createTempDirectory("lake")
-    val wh = s"$root/warehouse"
-
+  /** One day of every feed the pipeline reads, under root/lake. */
+  private def writeLake(root: Path): Unit = {
     write(root.resolve("lake/master/Financial Times"), "ft_master.csv",
       "ticker,asset_type,name,status,source,date_added\n" +
         "VUSA,ETF,Vanguard SP500,new,Financial Times,2024-05-01\n" +
@@ -45,6 +43,13 @@ class DailyPipelineSpec extends SparkSpec {
     write(root.resolve("lake/allocations/Stock Analysis/2024-05-01"),
       "VUSA_allocations.csv",
       "ticker,sector,percentage,scrape_date\nVUSA,Technology,28.4%,2024-05-01\n")
+  }
+
+  test("full pipeline: all stages land, replay is stable") {
+    val root = Files.createTempDirectory("lake")
+    val wh = s"$root/warehouse"
+
+    writeLake(root)
 
     val results = DailyPipeline.run(spark, s"$root/lake", wh, lit("2024-05-01"))
     val byStage = results.map(r => r.stage -> r.rows).toMap
@@ -68,6 +73,34 @@ class DailyPipelineSpec extends SparkSpec {
     // replay the whole day -> identical warehouse row counts (idempotence)
     val replay = DailyPipeline.run(spark, s"$root/lake", wh, lit("2024-05-01"))
     assert(replay.map(r => r.stage -> r.rows).toMap == byStage)
+  }
+
+  test("an unchanged lake rerun at the next as-of date leaves every " +
+       "stg_daily_nav file untouched") {
+    val root = Files.createTempDirectory("lakererun")
+    val wh = s"$root/warehouse"
+    writeLake(root)
+    def navFiles(): Map[String, (Seq[Byte], Long)] = {
+      val dir = java.nio.file.Paths.get(s"$wh/stg_daily_nav")
+      val s = Files.walk(dir)
+      try s.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => dir.relativize(p).toString ->
+          (Files.readAllBytes(p).toSeq, Files.getLastModifiedTime(p).toMillis))
+        .toMap
+      finally s.close()
+    }
+    def navRows(rs: Seq[DailyPipeline.StageResult]) = rs.find(_.stage == "nav_sync").get.rows
+
+    val day1 = DailyPipeline.run(spark, s"$root/lake", wh, lit("2024-05-01"))
+    assert(day1.forall(_.ok), day1.mkString("; "))
+    val before = navFiles()
+    assert(before.keys.exists(_.endsWith(".parquet")))
+    Thread.sleep(20) // a rewritten file must not share its predecessor's mtime
+    // the same NAV row arrives again with the next day's updated_at only
+    val day2 = DailyPipeline.run(spark, s"$root/lake", wh, lit("2024-05-02"))
+    assert(day2.forall(_.ok), day2.mkString("; "))
+    assert(navFiles() == before)
+    assert(navRows(day2) == navRows(day1))
   }
 
   test("a failing stage is captured in the run summary (A6 contract)") {
