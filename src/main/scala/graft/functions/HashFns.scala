@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import graft.schema.Schemas
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Row-hash builders for change detection (SURVEY.md §2.9 C13–C15, §2.10 T2).
@@ -34,6 +35,15 @@ object HashFns {
   /** Canonical engine row hash: natural key fields first, then payload. */
   def canonicalRowHash(keyCols: Seq[Column], payloadCols: Seq[Column]): Column =
     sha2Pipe(keyCols ++ payloadCols)
+
+  /** Stamps a warehouse batch: `row_hash` is [[canonicalRowHash]] over
+    * `keys`, then every other column of `df` in frame order, and
+    * `updated_at` is `asOf`. The hash scope is exactly the frame handed
+    * in: a column dropped or added before this call leaves or joins it. */
+  def withRowHash(df: DataFrame, keys: Seq[String], asOf: Column): DataFrame =
+    df.withColumn("row_hash", canonicalRowHash(keys.map(col),
+        df.columns.toSeq.filterNot(keys.contains).map(col)))
+      .withColumn(Schemas.updatedAt, asOf.cast("timestamp"))
 
   /** 64-bit non-cryptographic hash for shuffles/partitioning/LSH seeds —
     * xxhash64 is codegen'd and ~10x cheaper than sha2 at 100 TB scan scale. */

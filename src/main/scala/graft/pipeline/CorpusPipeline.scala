@@ -224,18 +224,9 @@ object CorpusPipeline {
     val runT0 = System.nanoTime()
 
     def stage(name: String)(body: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val startMs = (t0 - runT0) / 1000000L
-      def elapsedMs = (System.nanoTime() - t0) / 1000000L
-      try {
-        val rows = body
-        results += StageResult(name, rows, ok = true, durationMs = elapsedMs,
-          startMs = startMs)
-      } catch { case e: Exception =>
-        results += StageResult(name, 0, ok = false, error = Some(e.toString),
-          durationMs = elapsedMs, startMs = startMs)
-        if (failFast) throw new PipelineFailedException(results.result(), e)
-      }
+      val (r, err) = DailyPipeline.timed(runT0, name, () => body)
+      results += r
+      if (failFast) err.foreach(e => throw new PipelineFailedException(results.result(), e))
     }
 
     def write(df: DataFrame, name: String): Long = {

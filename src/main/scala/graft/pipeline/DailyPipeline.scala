@@ -1,12 +1,9 @@
 package graft.pipeline
 
-import graft.operators.MergeSink
 import graft.stages._
-import graft.sources.CsvLake
 import graft.util.ArtifactIO
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions._
 import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
 
 /** Daily pipeline orchestrator (SURVEY.md §3.1: main_pipeline.py +
@@ -16,7 +13,7 @@ import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
   * fail-fast, one after another (main_pipeline.py:60-83). That order is a
   * process boundary, not a data dependency: after `master_sync`, each of
   * the other six stages reads only its own lake dirs and writes only its
-  * own `stg_*` tables, each under its own [[MergeSink]] table lock. So
+  * own warehouse tables, each under its own table lock. So
   * here `master_sync` runs first and alone, then the other stages run
   * concurrently on the one SparkSession, one stage-named thread and one
   * Spark job group each (the default FIFO scheduler interleaves their
@@ -24,16 +21,8 @@ import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
   * returned as data in stage order instead of logged text; "fail-fast" is
   * an exception propagating out of `run`.
   *
-  * Lake layout expected under `lakeRoot` (mirrors the reference's
-  * validation_output/ + data/ trees, FIXTURES.md §1):
-  *   master/<source>/        per-source master list CSVs
-  *   nav/<source>/           daily NAV scrape CSVs
-  *   history/<source>/       recursive, <T>_history.csv per ticker
-  *   dividends/<source>/     recursive, <T>_dividend.csv per ticker
-  *   details/<source>/       wide static-detail screener CSVs
-  *   holdings/<source>/      recursive, <T>_holdings.csv per ticker
-  *   allocations/<source>/   recursive, <T>_allocations.csv per ticker
-  * Warehouse written under `warehouseRoot/stg_*` as parquet.
+  * Each stage is one `sync` of its stage object (read -> clean -> hash
+  * -> upsert); [[Stages]] says which lake dir feeds it.
   */
 object DailyPipeline {
 
@@ -59,6 +48,32 @@ object DailyPipeline {
     extends RuntimeException(
       s"pipeline aborted at stage '${summary.lastOption.map(_.stage).getOrElse("?")}'", cause)
 
+  /** A stage's load: its (source name, dir) pairs in, tables written out. */
+  private type StageSync = (SparkSession, Seq[(String, String)], String, Column) => Seq[String]
+
+  /** The daily stages in stage order: name, lake dir under `lakeRoot`,
+    * and the sync that loads the dir's per-source subdirs into parquet
+    * tables under `warehouseRoot`. The lake mirrors the reference's
+    * validation_output/ + data/ trees (FIXTURES.md §1). The first stage
+    * runs alone, before the others. */
+  private val Stages: Seq[(String, String, StageSync)] = Seq(
+    // master/<source>/       per-source master list CSVs
+    ("master_sync", "master", MasterSync.sync _),
+    // nav/<source>/          daily NAV scrape CSVs
+    ("nav_sync", "nav", PerformanceSync.syncNav _),
+    // history/<source>/      recursive, <T>_history.csv per ticker
+    ("history_sync", "history", PerformanceSync.syncHistory _),
+    // dividends/<source>/    recursive, <T>_dividend.csv per ticker
+    ("dividend_sync", "dividends", PerformanceSync.syncDividends _),
+    // details/<source>/      wide static-detail screener CSVs
+    ("detail_sync", "details", DetailSync.sync _),
+    // holdings/<source>/     recursive, <T>_holdings.csv per ticker
+    ("holdings_sync", "holdings", HoldingsSync.syncHoldings _),
+    // allocations/<source>/  recursive, <T>_allocations.csv per ticker
+    ("allocations_sync", "allocations", HoldingsSync.syncAllocations _))
+
+  /** The subdirs of `dir` as (name, path), sorted by name; none when
+    * `dir` does not exist. */
   private def sources(spark: SparkSession, dir: String): Seq[(String, String)] = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -69,7 +84,10 @@ object DailyPipeline {
 
   /** Runs every stage whose input directory exists: `master_sync` first,
     * then the others concurrently. Each stage's outcome (rows or error) is
-    * captured as a [[StageResult]], returned in stage order.
+    * captured as a [[StageResult]], returned in stage order. A stage's
+    * rows are the rows of the tables it wrote, read from their parquet
+    * footers: zero Spark jobs, where a count() is a listing job plus two
+    * scan jobs.
     *
     * With `failFast = false` (the reference's standalone orchestrators)
     * every stage runs to completion and failures are reported in the
@@ -88,128 +106,22 @@ object DailyPipeline {
   def run(spark: SparkSession, lakeRoot: String, warehouseRoot: String,
           asOf: Column, failFast: Boolean = true): Seq[StageResult] = {
     val runT0 = System.nanoTime()
-
-    // the stages after master_sync, in stage order, registered here and
-    // scheduled together below
-    val concurrent = Seq.newBuilder[(String, () => Long)]
-    def stage(name: String)(body: => Long): Unit = concurrent += name -> (() => body)
-
-    // a stage's row count is its warehouse table's size, read from the
-    // parquet footers: zero Spark jobs, where a count() is a listing job
-    // plus two scan jobs
-    def tableRows(table: String): Long =
-      ArtifactIO.footerRowCount(spark, s"$warehouseRoot/$table")
-
-    // the remediator's ready-dir memoization is RUN-scoped: the dir must
-    // be dated, or day 2's run would find day 1's generation and silently
-    // load stale data forever (resume-within-a-day still works — a retry
-    // of the same asOf reuses its own generation)
-    val asOfTag = spark.range(1).select(asOf.cast("string").as("d"))
-      .head().getString(0)
-
-    // master_sync runs first and alone
-    val masterSrcs = sources(spark, s"$lakeRoot/master")
-    val master = if (masterSrcs.isEmpty) None else Some(timed(runT0, "master_sync", () => {
-      val readyRoot = s"$warehouseRoot/staging/master_ready"
-      MasterSync.run(spark,
-        masterSrcs.map { case (_, dir) => CsvLake.readCsv(spark, dir) },
-        s"$warehouseRoot/stg_security_master", asOf,
-        rejectSink = Some(s"$warehouseRoot/rejects/master"),
-        readyDir = Some(s"$readyRoot/dt=$asOfTag"))
-      val n = tableRows("stg_security_master")
-      // retention: prior days' materialized generations have served their
-      // resume purpose once this run's load succeeded — without cleanup
-      // the staging area accumulates one full master batch per day forever
-      sources(spark, readyRoot)
-        .filter { case (name, _) => name != s"dt=$asOfTag" }
-        .foreach { case (_, dirPath) =>
-          val p = new org.apache.hadoop.fs.Path(dirPath)
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-        }
-      n
-    }))
-    master.foreach { case (r, err) =>
+    val registered = Stages.flatMap { case (name, dir, sync) =>
+      val srcs = sources(spark, s"$lakeRoot/$dir")
+      if (srcs.isEmpty) None
+      else Some(name -> (() => sync(spark, srcs, warehouseRoot, asOf)
+        .map(t => ArtifactIO.footerRowCount(spark, s"$warehouseRoot/$t")).sum))
+    }
+    val (first, rest) = registered.partition(_._1 == Stages.head._1)
+    val alone = first.map { case (name, body) => timed(runT0, name, body) }
+    alone.foreach { case (r, err) =>
       if (failFast) err.foreach(e => throw new PipelineFailedException(Seq(r), e))
     }
-
-    val navSrcs = sources(spark, s"$lakeRoot/nav")
-    if (navSrcs.nonEmpty) stage("nav_sync") {
-      PerformanceSync.runNav(spark, navSrcs.toMap,
-        s"$warehouseRoot/stg_daily_nav", asOf,
-        rejectSink = Some(s"$warehouseRoot/rejects/nav"))
-      tableRows("stg_daily_nav")
-    }
-
-    // One merge per TARGET TABLE per run: all sources' cleaned frames are
-    // unioned first, then merged once. The per-source alternative (N
-    // sources = N read-merge-rewrite cycles of the same table per day) is
-    // the scale killer VERDICT r1 flagged — at 100 TB each extra cycle is
-    // a full shuffle + rewrite of the table's touched partitions.
-    val histSrcs = sources(spark, s"$lakeRoot/history")
-    if (histSrcs.nonEmpty) stage("history_sync") {
-      val cleaned = histSrcs.map { case (source, dir) =>
-        PerformanceSync.cleanHistory(
-          CsvLake.readRecursive(spark, dir, nameMustContain = "history",
-            nameMustNotContain = "holdings"), source)
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
-      PerformanceSync.loadHistory(spark, s"$warehouseRoot/stg_price_history",
-        PerformanceSync.hashHistory(cleaned, asOf))
-      tableRows("stg_price_history")
-    }
-
-    val divSrcs = sources(spark, s"$lakeRoot/dividends")
-    if (divSrcs.nonEmpty) stage("dividend_sync") {
-      val cleaned = divSrcs.map { case (source, dir) =>
-        PerformanceSync.cleanDividends(
-          CsvLake.readRecursive(spark, dir, nameMustContain = "dividend"), source)
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
-      MergeSink.upsertParquet(spark, s"$warehouseRoot/stg_dividend_history",
-        PerformanceSync.hashDividends(cleaned, asOf),
-        graft.schema.Schemas.naturalKeys("stg_dividend_history"))
-      tableRows("stg_dividend_history")
-    }
-
-    // details follow the same batched pattern as history/dividends: the
-    // per-source halves (normalize + display parse) run per directory, but
-    // each of the four stg_fund_* tables is merged exactly ONCE per run
-    val detailSrcs = sources(spark, s"$lakeRoot/details")
-    if (detailSrcs.nonEmpty) stage("detail_sync") {
-      val wides = detailSrcs.map { case (source, dir) =>
-        DetailSync.prepareWide(CsvLake.readCsv(spark, dir), source)
-      }
-      val tables = DetailSync.runAll(spark, wides, warehouseRoot, asOf)
-      tables.keys.toSeq.map(tableRows).sum
-    }
-
-    val holdSrcs = sources(spark, s"$lakeRoot/holdings")
-    if (holdSrcs.nonEmpty) stage("holdings_sync") {
-      val cleaned = holdSrcs.map { case (source, dir) =>
-        HoldingsSync.cleanHoldings(
-          CsvLake.readRecursive(spark, dir, nameMustContain = "holdings"), source)
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
-      HoldingsSync.loadHoldings(spark,
-        s"$warehouseRoot/stg_fund_holdings", cleaned, asOf)
-      tableRows("stg_fund_holdings")
-    }
-
-    val allocSrcs = sources(spark, s"$lakeRoot/allocations")
-    if (allocSrcs.nonEmpty) stage("allocations_sync") {
-      val cleaned = allocSrcs.map { case (source, dir) =>
-        HoldingsSync.cleanAllocations(
-          CsvLake.readRecursive(spark, dir, nameMustContain = "allocations"),
-          source, "sector")
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
-      HoldingsSync.loadAllocations(spark,
-        s"$warehouseRoot/stg_allocations", cleaned, asOf)
-      tableRows("stg_allocations")
-    }
-
-    master.map(_._1).toSeq ++
-      schedule(spark.sparkContext, runT0, concurrent.result(), failFast)
+    alone.map(_._1) ++ schedule(spark.sparkContext, runT0, rest, failFast)
   }
 
   /** A stage body's outcome, its start offset taken from `runT0`. */
-  private def timed(runT0: Long, name: String, body: () => Long)
+  private[pipeline] def timed(runT0: Long, name: String, body: () => Long)
       : (StageResult, Option[Exception]) = {
     val t0 = System.nanoTime()
     def r(rows: Long, error: Option[String]) = StageResult(name, rows,

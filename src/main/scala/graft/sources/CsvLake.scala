@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.functions.CleanFns
 import graft.operators.Conform
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** File-lake scan operators (SURVEY.md §2.1 S1–S5): lineage-tagged CSV
@@ -17,6 +17,9 @@ import org.apache.spark.sql.functions._
   * All readers attach `origin_file` lineage via input_file_name() — one
   * distributed scan replaces the per-file Python loop, so a directory of a
   * million CSVs is read with full task parallelism and no driver iteration.
+  * Name predicates match the file name only, like the reference's globs:
+  * a directory on the way (`catalog/`, `holdings_history/`) never
+  * filters a file out.
   */
 object CsvLake {
 
@@ -32,20 +35,26 @@ object CsvLake {
     Conform.normHeaders(base(spark).csv(path))
       .withColumn("origin_file", input_file_name())
 
+  /** The last path segment of a file URI. */
+  private def fileName(uri: Column): Column = substring_index(uri, "/", -1)
+
   /** S2: read N per-source directories, tag `source` from the directory
     * name, align schemas by name (missing columns -> null), union. Skips
-    * error/log files like the reference's glob filter. */
-  def readSourceDirs(spark: SparkSession, dirsBySource: Map[String, String]): DataFrame =
+    * error/log files like the reference's glob filter. Each directory is
+    * read flat and is its source's only one, so `origin_file` is the file
+    * name: (`source`, `origin_file`) still names the file. */
+  def readSourceDirs(spark: SparkSession, dirsBySource: Iterable[(String, String)]): DataFrame =
     dirsBySource.map { case (source, dir) =>
       Conform.normHeaders(
           base(spark).option("pathGlobFilter", "*.csv").csv(dir))
-        .withColumn("origin_file", input_file_name())
+        .withColumn("origin_file", fileName(input_file_name()))
         .filter(!lower(col("origin_file")).rlike("error|log"))
         .withColumn("source", lit(source))
     }.reduce(_.unionByName(_, allowMissingColumns = true))
 
   /** S3: recursive scan with a filename predicate pushed to the listing
-    * (pathGlobFilter) plus a post-filter on lineage. */
+    * (pathGlobFilter) plus a post-filter on the file name. `origin_file`
+    * keeps the full URI: [[withPathIdentity]] parses directories too. */
   def readRecursive(spark: SparkSession, root: String,
                     nameMustContain: String = "", nameMustNotContain: String = ""): DataFrame = {
     var df = Conform.normHeaders(
@@ -55,9 +64,9 @@ object CsvLake {
           .csv(root))
       .withColumn("origin_file", input_file_name())
     if (nameMustContain.nonEmpty)
-      df = df.filter(lower(col("origin_file")).contains(nameMustContain))
+      df = df.filter(lower(fileName(col("origin_file"))).contains(nameMustContain))
     if (nameMustNotContain.nonEmpty)
-      df = df.filter(!lower(col("origin_file")).contains(nameMustNotContain))
+      df = df.filter(!lower(fileName(col("origin_file"))).contains(nameMustNotContain))
     df
   }
 

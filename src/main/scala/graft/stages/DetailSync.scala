@@ -1,8 +1,9 @@
 package graft.stages
 
-import graft.functions.{CleanFns, HashFns}
-import graft.operators.{Conform, MergeSink}
+import graft.functions.CleanFns
+import graft.operators.Conform
 import graft.schema.Schemas
+import graft.sources.CsvLake
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -67,17 +68,8 @@ object DetailSync {
       d.withColumn(c, CleanFns.nullifyOutOfRange(
         CleanFns.rescaleOverflow(col(c).cast("double"))).cast(Schemas.metric)))
 
-  private def withHash(df: DataFrame, asOf: Column): DataFrame = {
-    val keys = Seq("ticker", "asset_type", "source")
-    val payload = df.columns.filterNot(keys.contains).map(col).toSeq
-    df.withColumn("row_hash", HashFns.canonicalRowHash(keys.map(col), payload))
-      .withColumn("updated_at", asOf.cast("timestamp"))
-  }
-
   /** Normalize + display-parse one raw source frame into the shared wide
-    * shape — the per-source half of the stage, separated from the merge so
-    * the orchestrator can union MANY sources and merge each target table
-    * ONCE per run (not once per source; see [[runAll]]). */
+    * shape: the per-source half of [[sync]]. */
   def prepareWide(raw: DataFrame, source: String): DataFrame =
     parseDisplay(normalize(raw, source),
       percentCols = Seq("expense_ratio", "initial_charge", "exit_charge",
@@ -87,24 +79,17 @@ object DetailSync {
       numberCols = Seq("holdings_count", "pe_ratio"))
       .filter(length(trim(coalesce(col("ticker"), lit("")))) > 0)
 
-  /** Run one wide source frame into all four detail tables under
-    * `warehouseRoot/stg_fund_{info,fees,risk,policy}`. */
-  def run(spark: SparkSession, raw: DataFrame, source: String,
-          warehouseRoot: String, asOf: Column): Map[String, DataFrame] =
-    runAll(spark, Seq(prepareWide(raw, source)), warehouseRoot, asOf)
-
-  /** Batched detail sync: union the prepared wide frames of ALL sources,
-    * then merge each `stg_fund_*` table exactly once. Per-source merging
-    * (N sources x 4 tables = 4N read-merge-rewrite cycles of the same
-    * parquet tables per day) is the scale killer the round-1 verdict
-    * flagged — every extra cycle re-shuffles and rewrites the table's
-    * touched partitions, so batching cuts the day's merge I/O by Nx. */
-  def runAll(spark: SparkSession, wides: Seq[DataFrame],
-             warehouseRoot: String, asOf: Column): Map[String, DataFrame] = {
-    require(wides.nonEmpty, "runAll needs at least one prepared wide frame")
-    val wide = wides.reduce(_.unionByName(_, allowMissingColumns = true))
-
-    val slices = Map(
+  /** The detail stage: every source dir's screener CSVs prepared, the
+    * union of ALL sources split into the four `stg_fund_*` slices, and
+    * each table merged exactly once. Per-source merging (N sources x 4
+    * tables = 4N read-merge-rewrite cycles per day) is what the batching
+    * avoids. */
+  def sync(spark: SparkSession, sources: Seq[(String, String)],
+           warehouseRoot: String, asOf: Column): Seq[String] = {
+    val wide = Sync.union(sources) { (source, dir) =>
+      prepareWide(CsvLake.readCsv(spark, dir), source)
+    }
+    Seq(
       "stg_fund_info"   -> slice(wide, Schemas.fundInfo),
       "stg_fund_fees"   -> slice(wide, Schemas.fundFees),
       "stg_fund_risk"   -> metricHygiene(slice(wide, Schemas.fundRisk),
@@ -112,13 +97,7 @@ object DetailSync {
           c.contains("sharpe") || c.contains("beta") || c.contains("alpha") ||
             c.contains("stddev") || c.contains("r_squared"))),
       "stg_fund_policy" -> metricHygiene(slice(wide, Schemas.fundPolicy),
-        Seq("dividend_yield", "payout_ratio", "total_return_ytd", "total_return_1y")))
-
-    slices.map { case (table, df) =>
-      val path = s"$warehouseRoot/$table"
-      MergeSink.upsertParquet(spark, path, withHash(df, asOf),
-        Schemas.naturalKeys(table))
-      table -> MergeSink.readTable(spark, path)
-    }
+        Seq("dividend_yield", "payout_ratio", "total_return_ytd", "total_return_1y"))
+    ).map { case (table, df) => Sync.upsertHashed(spark, warehouseRoot, table, asOf, df) }
   }
 }

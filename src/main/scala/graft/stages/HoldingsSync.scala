@@ -1,8 +1,9 @@
 package graft.stages
 
-import graft.functions.{CleanFns, HashFns}
-import graft.operators.{Conform, MergeSink}
+import graft.functions.CleanFns
+import graft.operators.Conform
 import graft.schema.Schemas
+import graft.sources.CsvLake
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -32,7 +33,7 @@ object HoldingsSync {
     val normed = Conform.normHeaders(rawWithLineage)
     val withId =
       (if (normed.columns.contains("ticker")) normed
-       else CsvLakePathId(normed))
+       else CsvLake.withPathIdentity(normed))
         .withColumn("source", lit(source))
     val spec = Conform.SourceSpec(HoldingsRename, Seq(
       "ticker" -> StringType, "asset_type" -> StringType, "source" -> StringType,
@@ -58,9 +59,6 @@ object HoldingsSync {
       .dropDuplicates(Schemas.naturalKeys("stg_fund_holdings"))
   }
 
-  private def CsvLakePathId(df: DataFrame): DataFrame =
-    graft.sources.CsvLake.withPathIdentity(df)
-
   /** Melt a wide per-fund breakdown (one column per category value) into
     * EAV allocation rows using the built-in unpivot — the reference's
     * stg_allocations shape. `valueCols` are the category columns. */
@@ -81,7 +79,7 @@ object HoldingsSync {
                        allocationType: String): DataFrame = {
     val normed = Conform.normHeaders(rawWithLineage)
     val withId =
-      (if (normed.columns.contains("ticker")) normed else CsvLakePathId(normed))
+      (if (normed.columns.contains("ticker")) normed else CsvLake.withPathIdentity(normed))
         .withColumn("source", lit(source))
         .withColumn("allocation_type",
           if (normed.columns.contains("allocation_type"))
@@ -105,23 +103,24 @@ object HoldingsSync {
       .dropDuplicates(Schemas.naturalKeys("stg_allocations"))
   }
 
-  private def withHash(df: DataFrame, keys: Seq[String], asOf: Column): DataFrame = {
-    val payload = df.columns.filterNot(keys.contains).map(col).toSeq
-    df.withColumn("row_hash", HashFns.canonicalRowHash(keys.map(col), payload))
-      .withColumn("updated_at", asOf.cast("timestamp"))
-  }
+  /** The holdings stage: each source's `*holdings*` files, merged once
+    * for all sources into stg_fund_holdings. */
+  def syncHoldings(spark: SparkSession, sources: Seq[(String, String)],
+                   warehouseRoot: String, asOf: Column): Seq[String] =
+    Seq(Sync.upsertHashed(spark, warehouseRoot, "stg_fund_holdings", asOf,
+      Sync.union(sources) { (source, dir) =>
+        cleanHoldings(CsvLake.readRecursive(spark, dir, nameMustContain = "holdings"), source)
+      }))
 
-  def loadHoldings(spark: SparkSession, path: String, cleaned: DataFrame,
-                   asOf: Column): Unit =
-    MergeSink.upsertParquet(spark, path,
-      withHash(cleaned, Schemas.naturalKeys("stg_fund_holdings"), asOf),
-      Schemas.naturalKeys("stg_fund_holdings"))
-
-  def loadAllocations(spark: SparkSession, path: String, cleaned: DataFrame,
-                      asOf: Column): Unit =
-    MergeSink.upsertParquet(spark, path,
-      withHash(cleaned, Schemas.naturalKeys("stg_allocations"), asOf),
-      Schemas.naturalKeys("stg_allocations"))
+  /** The allocations stage: each source's `*allocations*` files (long
+    * sector rows), merged once for all sources into stg_allocations. */
+  def syncAllocations(spark: SparkSession, sources: Seq[(String, String)],
+                      warehouseRoot: String, asOf: Column): Seq[String] =
+    Seq(Sync.upsertHashed(spark, warehouseRoot, "stg_allocations", asOf,
+      Sync.union(sources) { (source, dir) =>
+        cleanAllocations(CsvLake.readRecursive(spark, dir, nameMustContain = "allocations"),
+          source, "sector")
+      }))
 
   /** Top-10 holdings concentration metric (O5): per-fund top-k by weight +
     * the top_10_hold_pct fee metric (02_ft_fees_scraper.py:143-170). */

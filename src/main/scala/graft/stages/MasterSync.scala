@@ -3,6 +3,7 @@ package graft.stages
 import graft.functions.{CleanFns, HashFns}
 import graft.operators.{Conform, Dedup, MergeSink, Validate}
 import graft.schema.Schemas
+import graft.sources.CsvLake
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -22,6 +23,8 @@ import org.apache.spark.sql.types._
   * shuffle, keyed by the natural key.
   */
 object MasterSync {
+
+  private val Table = "stg_security_master"
 
   val ExpectedColumns: Seq[(String, DataType)] = Seq(
     "ticker" -> StringType, "asset_type" -> StringType, "name" -> StringType,
@@ -77,22 +80,20 @@ object MasterSync {
   /** Conform a validated batch to the stg_security_master shape with the
     * canonical row hash and lifecycle columns (04_master_list_loader.py). */
   def toWarehouse(valid: DataFrame, asOf: Column): DataFrame =
-    valid.select(
-        col("ticker"), col("asset_type"), col("source"),
-        col("name"), col("status"))
-      .withColumn("row_hash", HashFns.canonicalRowHash(
-        Seq(col("ticker"), col("asset_type"), col("source")),
-        Seq(col("name"), col("status"))))
+    HashFns.withRowHash(
+        valid.select(col("ticker"), col("asset_type"), col("source"),
+          col("name"), col("status")),
+        Schemas.naturalKeys(Table), asOf)
       .withColumn("first_seen", asOf.cast("date"))
       .withColumn("last_seen", asOf.cast("date"))
-      .withColumn("updated_at", asOf.cast("timestamp"))
+      .select(Schemas.securityMaster.fieldNames.toSeq.map(col): _*)
 
   /** MERGE into the master table. Matched rows always refresh `last_seen`
     * (K4 semantics, 04_master_list_loader.py:75-82) but keep their original
     * `first_seen`; then the T5 status lifecycle runs over the merged table. */
   def load(spark: SparkSession, path: String, batch: DataFrame, asOf: Column,
-           inactiveDays: Int = 7): DataFrame = {
-    val keys = Schemas.naturalKeys("stg_security_master")
+           inactiveDays: Int = 7): Unit = {
+    val keys = Schemas.naturalKeys(Table)
     val hconf = spark.sparkContext.hadoopConfiguration
     val tgt = new org.apache.hadoop.fs.Path(path)
     val fs = tgt.getFileSystem(hconf)
@@ -109,19 +110,14 @@ object MasterSync {
       }
     val aged = MergeSink.applyStatusLifecycle(merged, asOf.cast("date"), inactiveDays)
     MergeSink.replaceParquet(spark, path, aged)
-    spark.read.parquet(path)
   }
 
   /** Remediation hop (03_master_list_remediator.py:26-37): promote the
     * validated batch into the ready-to-load generation. The reference stage
     * is a copy guarded by file-existence memoization (T7: "file already
-    * exists in 04_ready_to_load -> skip") — here, if the generation dir
-    * already exists it is REUSED as-is, so a crashed/replayed run resumes
+    * exists in 04_ready_to_load -> skip"): here an existing generation dir
+    * is REUSED as-is, unconditionally, so a crashed/replayed run resumes
     * from the materialized batch instead of recomputing upstream stages. */
-  /** Resume memoization is PER readyDir: an existing generation is reused
-    * unconditionally (the reference's file-existence-as-state pattern,
-    * T7), so callers MUST scope the dir to the run (e.g. a dt= suffix) —
-    * a fixed path would pin the first run's batch forever. */
   def remediate(spark: SparkSession, valid: DataFrame, readyDir: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(readyDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -129,19 +125,46 @@ object MasterSync {
     spark.read.parquet(readyDir)
   }
 
-  /** The full stage: raw per-source frames in, warehouse state out.
-    * Chain parity with the reference: cleaner -> consolidator -> validator
-    * -> remediator -> loader -> status lifecycle. `readyDir` (when set)
-    * materializes the remediated ready-to-load generation. */
+  /** The chain over raw per-source frames, reading back the warehouse
+    * state it wrote. Chain parity with the reference: cleaner ->
+    * consolidator -> validator -> remediator -> loader -> status
+    * lifecycle. `readyDir` (when set) materializes the remediated
+    * ready-to-load generation. */
   def run(spark: SparkSession, rawBySource: Seq[DataFrame], warehousePath: String,
           asOf: Column, rejectSink: Option[String] = None,
           readyDir: Option[String] = None): DataFrame = {
-    val consolidated = consolidate(rawBySource.map(clean))
-    val (valid, rejects) = validate(consolidated)
-    rejectSink.foreach(p =>
-      rejects.write.mode("overwrite").option("header", "true").csv(p))
+    ingest(spark, rawBySource, warehousePath, asOf, rejectSink, readyDir)
+    spark.read.parquet(warehousePath)
+  }
+
+  private def ingest(spark: SparkSession, rawBySource: Seq[DataFrame],
+                     warehousePath: String, asOf: Column, rejectSink: Option[String],
+                     readyDir: Option[String]): Unit = {
+    val (valid, rejects) = validate(consolidate(rawBySource.map(clean)))
+    rejectSink.foreach(Sync.writeRejects(rejects, _))
     val batch = toWarehouse(valid, asOf)
-    val ready = readyDir.map(remediate(spark, batch, _)).getOrElse(batch)
-    load(spark, warehousePath, ready, asOf)
+    load(spark, warehousePath, readyDir.map(remediate(spark, batch, _)).getOrElse(batch), asOf)
+  }
+
+  /** The master stage: each source dir's master list, rejects to
+    * `rejects/master`, into stg_security_master. The ready-to-load
+    * generation is run-scoped, `staging/master_ready/dt=<asOf>`: a retry
+    * of the same day resumes from it, and a later day never reads an
+    * earlier day's batch. Once the load succeeded, earlier days'
+    * generations have served their resume purpose and are deleted, or
+    * the staging area would hold one master batch per day forever. */
+  def sync(spark: SparkSession, sources: Seq[(String, String)],
+           warehouseRoot: String, asOf: Column): Seq[String] = {
+    val readyRoot = new org.apache.hadoop.fs.Path(s"$warehouseRoot/staging/master_ready")
+    val generation = "dt=" + spark.range(1).select(asOf.cast("string")).head().getString(0)
+    ingest(spark, sources.map { case (_, dir) => CsvLake.readCsv(spark, dir) },
+      s"$warehouseRoot/$Table", asOf,
+      rejectSink = Some(s"$warehouseRoot/rejects/master"),
+      readyDir = Some(s"$readyRoot/$generation"))
+    val fs = readyRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(readyRoot)
+      .filter(s => s.isDirectory && s.getPath.getName != generation)
+      .foreach(s => fs.delete(s.getPath, true))
+    Seq(Table)
   }
 }

@@ -1,6 +1,6 @@
 package graft.stages
 
-import graft.functions.{CleanFns, HashFns}
+import graft.functions.CleanFns
 import graft.operators.{Conform, Dedup, MergeSink, Validate}
 import graft.schema.Schemas
 import graft.sources.CsvLake
@@ -69,26 +69,22 @@ object PerformanceSync {
   def validateNav(cleaned: DataFrame, today: Column): (DataFrame, DataFrame) =
     Validate.split(cleaned, navRules(today))
 
-  /** Merge into stg_daily_nav — K4 content-guarded (no row_hash on this
-    * table, db_connector.py:126-147): a matched row is taken only when a
-    * column other than `updated_at` differs. `updated_at` is not content,
-    * as in the reference's SET list, so a NAV re-sent unchanged keeps its
+  /** The NAV stage: every source dir's NAV files (error/log files
+    * skipped) cleaned, validated with rejects to `rejects/nav`, and merged
+    * into stg_daily_nav — K4 content-guarded (no row_hash on this table,
+    * db_connector.py:126-147): a matched row is taken only when a column
+    * other than `updated_at` differs. `updated_at` is not content, as in
+    * the reference's SET list, so a NAV re-sent unchanged keeps its
     * stored row and its bucket is not rewritten. */
-  def loadNav(spark: SparkSession, path: String, valid: DataFrame, asOf: Column): Unit =
-    MergeSink.upsertParquet(spark, path,
-      valid.withColumn("updated_at", asOf.cast("timestamp")),
-      Schemas.naturalKeys("stg_daily_nav"), hashCol = None)
-
-  /** Full NAV slice: raw dir map -> warehouse (SURVEY.md §7.2). */
-  def runNav(spark: SparkSession, dirsBySource: Map[String, String],
-             warehousePath: String, today: Column,
-             rejectSink: Option[String] = None): DataFrame = {
-    val cleaned = cleanNav(CsvLake.readSourceDirs(spark, dirsBySource))
-    val (valid, rejects) = validateNav(cleaned, today)
-    rejectSink.foreach(p =>
-      rejects.write.mode("overwrite").option("header", "true").csv(p))
-    loadNav(spark, warehousePath, valid, today)
-    MergeSink.readTable(spark, warehousePath)
+  def syncNav(spark: SparkSession, sources: Seq[(String, String)],
+              warehouseRoot: String, asOf: Column): Seq[String] = {
+    val (valid, rejects) = validateNav(cleanNav(CsvLake.readSourceDirs(spark, sources)), asOf)
+    Sync.writeRejects(rejects, s"$warehouseRoot/rejects/nav")
+    val table = "stg_daily_nav"
+    MergeSink.upsertParquet(spark, s"$warehouseRoot/$table",
+      valid.withColumn(Schemas.updatedAt, asOf.cast("timestamp")),
+      Schemas.naturalKeys(table), hashCol = None)
+    Seq(table)
   }
 
   // ------------------------------------------------------------- history
@@ -120,29 +116,17 @@ object PerformanceSync {
       .drop("origin_file")
   }
 
-  /** C14 canonical hash over natural key + OHLCV payload (fixes the
-    * reference's payload-only hash scope, SURVEY.md §2.12). */
-  def hashHistory(cleaned: DataFrame, asOf: Column): DataFrame =
-    cleaned
-      .withColumn("row_hash", HashFns.canonicalRowHash(
-        Seq(col("ticker"), col("asset_type"), col("source"), col("date")),
-        Seq(col("open"), col("high"), col("low"), col("close"),
-          col("adj_close"), col("volume"))))
-      .withColumn("updated_at", asOf.cast("timestamp"))
-
-  /** K5 hash-guarded merge into stg_price_history. */
-  def loadHistory(spark: SparkSession, path: String, hashed: DataFrame): Unit =
-    MergeSink.upsertParquet(spark, path, hashed,
-      Schemas.naturalKeys("stg_price_history"))
-
-  /** Full price-history slice: recursive raw dir -> warehouse. */
-  def runHistory(spark: SparkSession, root: String, source: String,
-                 warehousePath: String, asOf: Column): DataFrame = {
-    val raw = CsvLake.readRecursive(spark, root,
-      nameMustContain = "history", nameMustNotContain = "holdings")
-    loadHistory(spark, warehousePath, hashHistory(cleanHistory(raw, source), asOf))
-    MergeSink.readTable(spark, warehousePath)
-  }
+  /** The price-history stage: each source's `*history*` files (never a
+    * `*holdings*` one), one C14 hash over natural key + OHLCV (fixes the
+    * reference's payload-only hash scope, SURVEY.md §2.12) and one K5
+    * hash-guarded merge into stg_price_history for all sources. */
+  def syncHistory(spark: SparkSession, sources: Seq[(String, String)],
+                  warehouseRoot: String, asOf: Column): Seq[String] =
+    Seq(Sync.upsertHashed(spark, warehouseRoot, "stg_price_history", asOf,
+      Sync.union(sources) { (source, dir) =>
+        cleanHistory(CsvLake.readRecursive(spark, dir,
+          nameMustContain = "history", nameMustNotContain = "holdings"), source)
+      }))
 
   // ------------------------------------------------------------ dividends
 
@@ -170,19 +154,13 @@ object PerformanceSync {
       .dropDuplicates(Schemas.naturalKeys("stg_dividend_history"))
   }
 
-  def hashDividends(cleaned: DataFrame, asOf: Column): DataFrame =
-    cleaned
-      .withColumn("row_hash", HashFns.canonicalRowHash(
-        Schemas.naturalKeys("stg_dividend_history").map(col),
-        Seq(col("currency"))))
-      .withColumn("updated_at", asOf.cast("timestamp"))
-
-  def runDividends(spark: SparkSession, root: String, source: String,
-                   warehousePath: String, asOf: Column): DataFrame = {
-    val raw = CsvLake.readRecursive(spark, root, nameMustContain = "dividend")
-    MergeSink.upsertParquet(spark, warehousePath,
-      hashDividends(cleanDividends(raw, source), asOf),
-      Schemas.naturalKeys("stg_dividend_history"))
-    MergeSink.readTable(spark, warehousePath)
-  }
+  /** The dividend stage: each source's `*dividend*` files, hashed on
+    * stg_dividend_history's natural key (its payload is `currency`) and
+    * merged once for all sources. */
+  def syncDividends(spark: SparkSession, sources: Seq[(String, String)],
+                    warehouseRoot: String, asOf: Column): Seq[String] =
+    Seq(Sync.upsertHashed(spark, warehouseRoot, "stg_dividend_history", asOf,
+      Sync.union(sources) { (source, dir) =>
+        cleanDividends(CsvLake.readRecursive(spark, dir, nameMustContain = "dividend"), source)
+      }))
 }

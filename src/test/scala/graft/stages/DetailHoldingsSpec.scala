@@ -1,6 +1,8 @@
 package graft.stages
 
 import graft.SparkSpec
+import graft.operators.MergeSink
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -8,13 +10,18 @@ class DetailHoldingsSpec extends SparkSpec {
   import spark.implicits._
 
   test("DetailSync: wide screener splits into 4 typed tables with parsed display strings") {
-    val wide = Seq(
-      ("vusa", "ETF", "Vanguard", "0.07%", "842.33m USD", "1,234", "--", "12.5"),
-      ("abc", "FUND", "Alpha", "1.20%", "515k", "87", "3.2", "9.9"))
-      .toDF("Ticker", "Asset Type", "Name", "Expense_Ratio", "Assets_AUM",
-        "Holdings_Count", "Dividend Yield", "PE Ratio")
-    val root = Files.createTempDirectory("details").toString
-    val tables = DetailSync.run(spark, wide, "Stock Analysis", root, lit("2024-05-02"))
+    val root = Files.createTempDirectory("details")
+    Files.createDirectories(root.resolve("lake"))
+    Files.writeString(root.resolve("lake/screener.csv"),
+      "Ticker,Asset Type,Name,Expense_Ratio,Assets_AUM,Holdings_Count,Dividend Yield,PE Ratio\n" +
+        "vusa,ETF,Vanguard,0.07%,842.33m USD,\"1,234\",--,12.5\n" +
+        "abc,FUND,Alpha,1.20%,515k,87,3.2,9.9\n")
+    def sync(asOf: String): Map[String, DataFrame] = {
+      val tables = DetailSync.sync(spark, Seq("Stock Analysis" -> s"$root/lake"),
+        root.toString, lit(asOf))
+      tables.map(t => t -> MergeSink.readTable(spark, s"$root/$t")).toMap
+    }
+    val tables = sync("2024-05-02")
     assert(tables.keySet == Set("stg_fund_info", "stg_fund_fees",
       "stg_fund_risk", "stg_fund_policy"))
 
@@ -34,7 +41,7 @@ class DetailHoldingsSpec extends SparkSpec {
       .select("dividend_yield").head().isNullAt(0))
 
     // replay is a hash-guarded no-op
-    val again = DetailSync.run(spark, wide, "Stock Analysis", root, lit("2024-06-01"))
+    val again = sync("2024-06-01")
     assert(again("stg_fund_fees").select(max(col("updated_at")).cast("date").cast("string"))
       .as[String].head() == "2024-05-02")
   }
