@@ -166,12 +166,14 @@ object Bench {
     val windowRatio = math.max(windowBefore.worst, windowAfter.worst)
     val windowJson = graft.tools.WindowProbe.windowJson(windowBefore, windowAfter)
     val wr = "%.2f".formatLocal(java.util.Locale.ROOT, windowRatio)
+    val mr = "%.2f".formatLocal(java.util.Locale.ROOT,
+      graft.tools.WindowProbe.windowMemRatio(windowBefore, windowAfter))
     // TWO self-contained stdout lines — minima first, MEDIANS LAST (the
     // headline map sits closest to the end, where a head-side clip of
     // the capture window can't reach it; a tail-side clip still leaves
     // the complete minima line). Each repeats both totals.
-    val medLine = s"""{"metric":"total","value":${fmt(total)},"total_min":${fmt(totalMin)},"unit":"sec","sf":"$sfDir","reps":$reps,"window_ratio":$wr$errJson,"queries":$qsShort}"""
-    val minLine = s"""{"metric":"total_min","value":${fmt(totalMin)},"total":${fmt(total)},"unit":"sec","sf":"$sfDir","reps":$reps,"window_ratio":$wr,"queries_min":$qminsShort}"""
+    val medLine = s"""{"metric":"total","value":${fmt(total)},"total_min":${fmt(totalMin)},"unit":"sec","sf":"$sfDir","reps":$reps,"window_ratio":$wr,"mem_ratio":$mr$errJson,"queries":$qsShort}"""
+    val minLine = s"""{"metric":"total_min","value":${fmt(totalMin)},"total":${fmt(total)},"unit":"sec","sf":"$sfDir","reps":$reps,"window_ratio":$wr,"mem_ratio":$mr,"queries_min":$qminsShort}"""
     // The driver parses the bench JSON; sbt decorates stdout with [info]
     // prefixes, so ALSO persist the lines to a file it can read directly
     // — the file keeps FULL query names (the scaling/report tools key on
@@ -183,7 +185,7 @@ object Bench {
     val overrides = SparkEntry.benchOverrideKeys
       .toSeq.sorted.map(short).map("\"" + _ + "\"").mkString("[", ",", "]")
     val medLineFull = s"""{"metric":"total","value":${fmt(total)},"total_min":${fmt(totalMin)},"unit":"sec","sf":"$sfDir","reps":$reps,"window":$windowJson,"production_overrides":$overrides$errJson,"queries":$qs}"""
-    val minLineFull = s"""{"metric":"total_min","value":${fmt(totalMin)},"total":${fmt(total)},"unit":"sec","sf":"$sfDir","reps":$reps,"window_ratio":$wr,"queries_min":$qmins}"""
+    val minLineFull = s"""{"metric":"total_min","value":${fmt(totalMin)},"total":${fmt(total)},"unit":"sec","sf":"$sfDir","reps":$reps,"window_ratio":$wr,"mem_ratio":$mr,"queries_min":$qmins}"""
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), medLineFull + "\n" + minLineFull + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] write $out failed: ${e.getMessage}") }

@@ -41,9 +41,12 @@ object HashFns {
     * `updated_at` is `asOf`. The hash scope is exactly the frame handed
     * in: a column dropped or added before this call leaves or joins it. */
   def withRowHash(df: DataFrame, keys: Seq[String], asOf: Column): DataFrame =
-    df.withColumn("row_hash", canonicalRowHash(keys.map(col),
-        df.columns.toSeq.filterNot(keys.contains).map(col)))
+    df.withColumn("row_hash", rowHash(df.columns.toSeq, keys))
       .withColumn(Schemas.updatedAt, asOf.cast("timestamp"))
+
+  /** [[canonicalRowHash]] over `keys`, then the other `columns` in order. */
+  def rowHash(columns: Seq[String], keys: Seq[String]): Column =
+    canonicalRowHash(keys.map(col), columns.filterNot(keys.contains).map(col))
 
   /** 64-bit non-cryptographic hash for shuffles/partitioning/LSH seeds —
     * xxhash64 is codegen'd and ~10x cheaper than sha2 at 100 TB scan scale. */

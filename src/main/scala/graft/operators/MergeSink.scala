@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.schema.Schemas
+import graft.util.ArtifactIO
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -386,10 +387,16 @@ object MergeSink {
     out.close()
   }
 
+  /** Reads a warehouse table with its `__bucket` partition column, the
+    * schema taken from a part file's footer on the driver
+    * ([[graft.util.ArtifactIO.tableSchema]]): no footer-merge job. */
+  private def readParquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(ArtifactIO.tableSchema(spark, path)).parquet(path)
+
   /** Reads a bucketed warehouse table without the physical `__bucket`
     * partition column. */
   def readTable(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = readParquet(spark, path)
     if (df.columns.contains("__bucket")) df.drop("__bucket") else df
   }
 
@@ -488,7 +495,7 @@ object MergeSink {
           def inBuckets(df: DataFrame, bs: Array[Int]): DataFrame =
             df.filter(col("__bucket").isin(bs.map(Int.box): _*))
           try {
-            val table = spark.read.parquet(path)
+            val table = readParquet(spark, path)
             // a bucket is touched only if it receives an update row whose
             // guard values the target does not already hold — every other
             // update row merges back to its target row

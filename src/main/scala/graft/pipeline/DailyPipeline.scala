@@ -23,6 +23,21 @@ import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
   *
   * Each stage is one `sync` of its stage object (read -> clean -> hash
   * -> upsert); [[Stages]] says which lake dir feeds it.
+  *
+  * A day's cost follows the files that changed. `history_sync`,
+  * `dividend_sync`, `detail_sync`, `holdings_sync` and `allocations_sync`
+  * keep a lake manifest under `<warehouseRoot>/_manifest/<stage>`: each
+  * lake file's path under its source dir and an MD5 of its content. A day
+  * fingerprints the stage's lake on the driver (one byte-read of its
+  * files, no parse, no Spark job) and reads only the files whose
+  * fingerprint the manifest lacks; the manifest takes the new
+  * fingerprints only after the stage's upserts committed. A stage with
+  * no changed file runs no Spark job and writes nothing, and still
+  * reports its tables' rows. `master_sync` and `nav_sync` read their
+  * whole lake every day: the master's `last_seen` and status lifecycle,
+  * and NAV's `future_date` reject, depend on `asOf`, not only on the
+  * files. Delete `_manifest/<stage>` to force a stage's full read; a
+  * missing table does the same (`graft.stages.Sync.changedOnly`).
   */
 object DailyPipeline {
 

@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.functions.CleanFns
 import graft.operators.Conform
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,10 +17,18 @@ import org.apache.spark.sql.functions._
   *
   * All readers attach `origin_file` lineage via input_file_name() — one
   * distributed scan replaces the per-file Python loop, so a directory of a
-  * million CSVs is read with full task parallelism and no driver iteration.
+  * million CSVs is read with full task parallelism.
   * Name predicates match the file name only, like the reference's globs:
   * a directory on the way (`catalog/`, `holdings_history/`) never
   * filters a file out.
+  *
+  * The per-ticker feeds (history, dividends, holdings, allocations) and
+  * the screeners are listed on the driver ([[listRecursive]],
+  * [[listFlat]]) and read from an explicit file list ([[readFiles]]):
+  * the daily stages that load them read only the files whose content
+  * changed since their last commit (`graft.stages.Sync.changedOnly`),
+  * so the listing is a separate step from the read. Master lists and
+  * NAV files are read whole, by directory.
   */
 object CsvLake {
 
@@ -52,23 +61,49 @@ object CsvLake {
         .withColumn("source", lit(source))
     }.reduce(_.unionByName(_, allowMissingColumns = true))
 
-  /** S3: recursive scan with a filename predicate pushed to the listing
-    * (pathGlobFilter) plus a post-filter on the file name. `origin_file`
-    * keeps the full URI: [[withPathIdentity]] parses directories too. */
-  def readRecursive(spark: SparkSession, root: String,
-                    nameMustContain: String = "", nameMustNotContain: String = ""): DataFrame = {
-    var df = Conform.normHeaders(
-        base(spark)
-          .option("recursiveFileLookup", "true")
-          .option("pathGlobFilter", "*.csv")
-          .csv(root))
-      .withColumn("origin_file", input_file_name())
-    if (nameMustContain.nonEmpty)
-      df = df.filter(lower(fileName(col("origin_file"))).contains(nameMustContain))
-    if (nameMustNotContain.nonEmpty)
-      df = df.filter(!lower(fileName(col("origin_file"))).contains(nameMustNotContain))
-    df
+  /** A name Spark's file listing skips, with everything under it. */
+  private def hidden(name: String): Boolean =
+    name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
+
+  /** S3 listing, on the driver: every `*.csv` file under `root`, at any
+    * depth, whose file name (lower-cased) contains `nameMustContain` and
+    * not `nameMustNotContain`, sorted by path. Hidden entries are skipped
+    * as Spark's listing skips them. */
+  def listRecursive(spark: SparkSession, root: String, nameMustContain: String = "",
+                    nameMustNotContain: String = ""): Seq[Path] = {
+    val dir = new Path(root)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(d: Path): Iterator[Path] = fs.listStatus(d).iterator
+      .filterNot(s => hidden(s.getPath.getName))
+      .flatMap(s => if (s.isDirectory) walk(s.getPath) else Iterator(s.getPath))
+    walk(dir).filter { p =>
+      val name = p.getName.toLowerCase(java.util.Locale.ROOT)
+      p.getName.endsWith(".csv") && name.contains(nameMustContain) &&
+        (nameMustNotContain.isEmpty || !name.contains(nameMustNotContain))
+    }.toSeq.sortBy(_.toString)
   }
+
+  /** S1 listing, on the driver: the visible files directly in `dir`,
+    * sorted by path — what a read of the directory itself reads. */
+  def listFlat(spark: SparkSession, dir: String): Seq[Path] = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq
+      .filter(s => s.isFile && !hidden(s.getPath.getName)).map(_.getPath).sortBy(_.toString)
+  }
+
+  /** Reads exactly `files` (at least one) with normalized headers and
+    * `origin_file` lineage as the file's full URI. Glob characters in a
+    * name are escaped: a path here names one file, never a pattern. */
+  def readFiles(spark: SparkSession, files: Seq[Path]): DataFrame =
+    Conform.normHeaders(base(spark).csv(
+        files.map(_.toString.replaceAll("""([\\\[\]{}*?])""", """\\$1""")): _*))
+      .withColumn("origin_file", input_file_name())
+
+  /** S3: [[listRecursive]], then [[readFiles]]. `origin_file` keeps the
+    * full URI: [[withPathIdentity]] parses directories too. */
+  def readRecursive(spark: SparkSession, root: String,
+                    nameMustContain: String = "", nameMustNotContain: String = ""): DataFrame =
+    readFiles(spark, listRecursive(spark, root, nameMustContain, nameMustNotContain))
 
   /** S4: inject (ticker, asset_type, as_of_date) identity parsed from the
     * file path — the reference's filename-stem / path-segment conventions. */

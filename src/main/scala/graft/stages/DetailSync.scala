@@ -79,25 +79,31 @@ object DetailSync {
       numberCols = Seq("holdings_count", "pe_ratio"))
       .filter(length(trim(coalesce(col("ticker"), lit("")))) > 0)
 
-  /** The detail stage: every source dir's screener CSVs prepared, the
-    * union of ALL sources split into the four `stg_fund_*` slices, and
+  private val Tables = Seq("stg_fund_info", "stg_fund_fees", "stg_fund_risk",
+    "stg_fund_policy")
+
+  /** The detail stage: every source dir's changed screener CSVs
+    * ([[Sync.changedOnly]]; the files directly in the dir) prepared, the
+    * union of those sources split into the four `stg_fund_*` slices, and
     * each table merged exactly once. Per-source merging (N sources x 4
     * tables = 4N read-merge-rewrite cycles per day) is what the batching
     * avoids. */
   def sync(spark: SparkSession, sources: Seq[(String, String)],
-           warehouseRoot: String, asOf: Column): Seq[String] = {
-    val wide = Sync.union(sources) { (source, dir) =>
-      prepareWide(CsvLake.readCsv(spark, dir), source)
+           warehouseRoot: String, asOf: Column): Seq[String] =
+    Sync.changedOnly(spark, "detail_sync", sources, warehouseRoot, Tables,
+      CsvLake.listFlat(spark, _)) { parts =>
+      val wide = Sync.union(parts) { (source, files) =>
+        prepareWide(CsvLake.readFiles(spark, files), source)
+      }
+      Tables.zip(Seq(
+        slice(wide, Schemas.fundInfo),
+        slice(wide, Schemas.fundFees),
+        metricHygiene(slice(wide, Schemas.fundRisk),
+          Schemas.fundRisk.fieldNames.toSeq.filter(c =>
+            c.contains("sharpe") || c.contains("beta") || c.contains("alpha") ||
+              c.contains("stddev") || c.contains("r_squared"))),
+        metricHygiene(slice(wide, Schemas.fundPolicy),
+          Seq("dividend_yield", "payout_ratio", "total_return_ytd", "total_return_1y"))
+      )).foreach { case (table, df) => Sync.upsertHashed(spark, warehouseRoot, table, asOf, df) }
     }
-    Seq(
-      "stg_fund_info"   -> slice(wide, Schemas.fundInfo),
-      "stg_fund_fees"   -> slice(wide, Schemas.fundFees),
-      "stg_fund_risk"   -> metricHygiene(slice(wide, Schemas.fundRisk),
-        Schemas.fundRisk.fieldNames.toSeq.filter(c =>
-          c.contains("sharpe") || c.contains("beta") || c.contains("alpha") ||
-            c.contains("stddev") || c.contains("r_squared"))),
-      "stg_fund_policy" -> metricHygiene(slice(wide, Schemas.fundPolicy),
-        Seq("dividend_yield", "payout_ratio", "total_return_ytd", "total_return_1y"))
-    ).map { case (table, df) => Sync.upsertHashed(spark, warehouseRoot, table, asOf, df) }
-  }
 }

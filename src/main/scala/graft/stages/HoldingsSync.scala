@@ -103,24 +103,33 @@ object HoldingsSync {
       .dropDuplicates(Schemas.naturalKeys("stg_allocations"))
   }
 
-  /** The holdings stage: each source's `*holdings*` files, merged once
-    * for all sources into stg_fund_holdings. */
+  /** The holdings stage: each source's changed `*holdings*` files
+    * ([[Sync.changedOnly]]), merged once for all sources into
+    * stg_fund_holdings. */
   def syncHoldings(spark: SparkSession, sources: Seq[(String, String)],
-                   warehouseRoot: String, asOf: Column): Seq[String] =
-    Seq(Sync.upsertHashed(spark, warehouseRoot, "stg_fund_holdings", asOf,
-      Sync.union(sources) { (source, dir) =>
-        cleanHoldings(CsvLake.readRecursive(spark, dir, nameMustContain = "holdings"), source)
-      }))
+                   warehouseRoot: String, asOf: Column): Seq[String] = {
+    val table = "stg_fund_holdings"
+    Sync.changedOnly(spark, "holdings_sync", sources, warehouseRoot, Seq(table),
+      CsvLake.listRecursive(spark, _, nameMustContain = "holdings")) { parts =>
+      Sync.upsertHashed(spark, warehouseRoot, table, asOf, Sync.union(parts) {
+        (source, files) => cleanHoldings(CsvLake.readFiles(spark, files), source)
+      })
+    }
+  }
 
-  /** The allocations stage: each source's `*allocations*` files (long
-    * sector rows), merged once for all sources into stg_allocations. */
+  /** The allocations stage: each source's changed `*allocations*` files
+    * (long sector rows; [[Sync.changedOnly]]), merged once for all
+    * sources into stg_allocations. */
   def syncAllocations(spark: SparkSession, sources: Seq[(String, String)],
-                      warehouseRoot: String, asOf: Column): Seq[String] =
-    Seq(Sync.upsertHashed(spark, warehouseRoot, "stg_allocations", asOf,
-      Sync.union(sources) { (source, dir) =>
-        cleanAllocations(CsvLake.readRecursive(spark, dir, nameMustContain = "allocations"),
-          source, "sector")
-      }))
+                      warehouseRoot: String, asOf: Column): Seq[String] = {
+    val table = "stg_allocations"
+    Sync.changedOnly(spark, "allocations_sync", sources, warehouseRoot, Seq(table),
+      CsvLake.listRecursive(spark, _, nameMustContain = "allocations")) { parts =>
+      Sync.upsertHashed(spark, warehouseRoot, table, asOf, Sync.union(parts) {
+        (source, files) => cleanAllocations(CsvLake.readFiles(spark, files), source, "sector")
+      })
+    }
+  }
 
   /** Top-10 holdings concentration metric (O5): per-fund top-k by weight +
     * the top_10_hold_pct fee metric (02_ft_fees_scraper.py:143-170). */

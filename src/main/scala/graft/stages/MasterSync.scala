@@ -4,7 +4,7 @@ import graft.functions.{CleanFns, HashFns}
 import graft.operators.{Conform, Dedup, MergeSink, Validate}
 import graft.schema.Schemas
 import graft.sources.CsvLake
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -77,12 +77,15 @@ object MasterSync {
   def validate(consolidated: DataFrame): (DataFrame, DataFrame) =
     Validate.split(consolidated, rules)
 
+  /** The delivered columns a master row's `row_hash` covers, key first. */
+  private val Content = Seq("ticker", "asset_type", "source", "name", "status")
+
   /** Conform a validated batch to the stg_security_master shape with the
-    * canonical row hash and lifecycle columns (04_master_list_loader.py). */
+    * canonical row hash and lifecycle columns (04_master_list_loader.py).
+    * The hash covers the row as delivered; [[load]] re-hashes the row it
+    * stores, after the status lifecycle. */
   def toWarehouse(valid: DataFrame, asOf: Column): DataFrame =
-    HashFns.withRowHash(
-        valid.select(col("ticker"), col("asset_type"), col("source"),
-          col("name"), col("status")),
+    HashFns.withRowHash(valid.select(Content.map(col): _*),
         Schemas.naturalKeys(Table), asOf)
       .withColumn("first_seen", asOf.cast("date"))
       .withColumn("last_seen", asOf.cast("date"))
@@ -90,7 +93,9 @@ object MasterSync {
 
   /** MERGE into the master table. Matched rows always refresh `last_seen`
     * (K4 semantics, 04_master_list_loader.py:75-82) but keep their original
-    * `first_seen`; then the T5 status lifecycle runs over the merged table. */
+    * `first_seen`; then the T5 status lifecycle runs over the merged table,
+    * and `row_hash` is taken over the row as stored: a 'new' row promoted
+    * to 'active' hashes as 'active'. */
   def load(spark: SparkSession, path: String, batch: DataFrame, asOf: Column,
            inactiveDays: Int = 7): Unit = {
     val keys = Schemas.naturalKeys(Table)
@@ -100,7 +105,7 @@ object MasterSync {
     val merged =
       if (!fs.exists(tgt)) batch.dropDuplicates(keys)
       else {
-        val target = spark.read.parquet(path)
+        val target = MergeSink.readTable(spark, path)
         // preserve first_seen of existing rows through the K4 merge
         val t = target.select(keys.map(col) :+ col("first_seen").as("__first"): _*)
         MergeSink.merge(target, batch, keys, hashCol = None)
@@ -109,7 +114,8 @@ object MasterSync {
           .drop("__first")
       }
     val aged = MergeSink.applyStatusLifecycle(merged, asOf.cast("date"), inactiveDays)
-    MergeSink.replaceParquet(spark, path, aged)
+    MergeSink.replaceParquet(spark, path,
+      aged.withColumn("row_hash", HashFns.rowHash(Content, keys)))
   }
 
   /** Remediation hop (03_master_list_remediator.py:26-37): promote the
@@ -122,7 +128,7 @@ object MasterSync {
     val p = new org.apache.hadoop.fs.Path(readyDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) valid.write.mode("errorifexists").parquet(readyDir)
-    spark.read.parquet(readyDir)
+    MergeSink.readTable(spark, readyDir)
   }
 
   /** The chain over raw per-source frames, reading back the warehouse
@@ -134,7 +140,7 @@ object MasterSync {
           asOf: Column, rejectSink: Option[String] = None,
           readyDir: Option[String] = None): DataFrame = {
     ingest(spark, rawBySource, warehousePath, asOf, rejectSink, readyDir)
-    spark.read.parquet(warehousePath)
+    MergeSink.readTable(spark, warehousePath)
   }
 
   private def ingest(spark: SparkSession, rawBySource: Seq[DataFrame],
@@ -146,17 +152,28 @@ object MasterSync {
     load(spark, warehousePath, readyDir.map(remediate(spark, batch, _)).getOrElse(batch), asOf)
   }
 
+  /** The `dt=<asOf>` name of a day's ready-to-load generation. `asOf`
+    * is evaluated over a one-row local relation, which the optimizer
+    * folds into a local table scan: the driver computes it, no Spark job
+    * runs. */
+  private[graft] def generation(spark: SparkSession, asOf: Column): String =
+    "dt=" + spark.createDataFrame(java.util.List.of(Row(0)),
+        StructType(Seq(StructField("_", IntegerType))))
+      .select(asOf.cast("string")).head().getString(0)
+
   /** The master stage: each source dir's master list, rejects to
-    * `rejects/master`, into stg_security_master. The ready-to-load
-    * generation is run-scoped, `staging/master_ready/dt=<asOf>`: a retry
-    * of the same day resumes from it, and a later day never reads an
-    * earlier day's batch. Once the load succeeded, earlier days'
-    * generations have served their resume purpose and are deleted, or
-    * the staging area would hold one master batch per day forever. */
+    * `rejects/master`, into stg_security_master. It reads its whole lake
+    * every day (no manifest, see [[Sync]]): `last_seen` and the status
+    * lifecycle follow `asOf`. The ready-to-load generation is
+    * run-scoped, `staging/master_ready/dt=<asOf>`: a retry of the same
+    * day resumes from it, and a later day never reads an earlier day's
+    * batch. Once the load succeeded, earlier days' generations have
+    * served their resume purpose and are deleted, or the staging area
+    * would hold one master batch per day forever. */
   def sync(spark: SparkSession, sources: Seq[(String, String)],
            warehouseRoot: String, asOf: Column): Seq[String] = {
     val readyRoot = new org.apache.hadoop.fs.Path(s"$warehouseRoot/staging/master_ready")
-    val generation = "dt=" + spark.range(1).select(asOf.cast("string")).head().getString(0)
+    val generation = this.generation(spark, asOf)
     ingest(spark, sources.map { case (_, dir) => CsvLake.readCsv(spark, dir) },
       s"$warehouseRoot/$Table", asOf,
       rejectSink = Some(s"$warehouseRoot/rejects/master"),

@@ -116,17 +116,22 @@ object PerformanceSync {
       .drop("origin_file")
   }
 
-  /** The price-history stage: each source's `*history*` files (never a
-    * `*holdings*` one), one C14 hash over natural key + OHLCV (fixes the
-    * reference's payload-only hash scope, SURVEY.md §2.12) and one K5
-    * hash-guarded merge into stg_price_history for all sources. */
+  /** The price-history stage: each source's changed `*history*` files
+    * (never a `*holdings*` one; [[Sync.changedOnly]]), one C14 hash over
+    * natural key + OHLCV (fixes the reference's payload-only hash scope,
+    * SURVEY.md §2.12) and one K5 hash-guarded merge into
+    * stg_price_history for all sources. */
   def syncHistory(spark: SparkSession, sources: Seq[(String, String)],
-                  warehouseRoot: String, asOf: Column): Seq[String] =
-    Seq(Sync.upsertHashed(spark, warehouseRoot, "stg_price_history", asOf,
-      Sync.union(sources) { (source, dir) =>
-        cleanHistory(CsvLake.readRecursive(spark, dir,
-          nameMustContain = "history", nameMustNotContain = "holdings"), source)
-      }))
+                  warehouseRoot: String, asOf: Column): Seq[String] = {
+    val table = "stg_price_history"
+    Sync.changedOnly(spark, "history_sync", sources, warehouseRoot, Seq(table),
+      CsvLake.listRecursive(spark, _, nameMustContain = "history",
+        nameMustNotContain = "holdings")) { parts =>
+      Sync.upsertHashed(spark, warehouseRoot, table, asOf, Sync.union(parts) {
+        (source, files) => cleanHistory(CsvLake.readFiles(spark, files), source)
+      })
+    }
+  }
 
   // ------------------------------------------------------------ dividends
 
@@ -154,13 +159,17 @@ object PerformanceSync {
       .dropDuplicates(Schemas.naturalKeys("stg_dividend_history"))
   }
 
-  /** The dividend stage: each source's `*dividend*` files, hashed on
-    * stg_dividend_history's natural key (its payload is `currency`) and
-    * merged once for all sources. */
+  /** The dividend stage: each source's changed `*dividend*` files
+    * ([[Sync.changedOnly]]), hashed on stg_dividend_history's natural key
+    * (its payload is `currency`) and merged once for all sources. */
   def syncDividends(spark: SparkSession, sources: Seq[(String, String)],
-                    warehouseRoot: String, asOf: Column): Seq[String] =
-    Seq(Sync.upsertHashed(spark, warehouseRoot, "stg_dividend_history", asOf,
-      Sync.union(sources) { (source, dir) =>
-        cleanDividends(CsvLake.readRecursive(spark, dir, nameMustContain = "dividend"), source)
-      }))
+                    warehouseRoot: String, asOf: Column): Seq[String] = {
+    val table = "stg_dividend_history"
+    Sync.changedOnly(spark, "dividend_sync", sources, warehouseRoot, Seq(table),
+      CsvLake.listRecursive(spark, _, nameMustContain = "dividend")) { parts =>
+      Sync.upsertHashed(spark, warehouseRoot, table, asOf, Sync.union(parts) {
+        (source, files) => cleanDividends(CsvLake.readFiles(spark, files), source)
+      })
+    }
+  }
 }

@@ -3,29 +3,87 @@ package graft.stages
 import graft.functions.HashFns
 import graft.operators.MergeSink
 import graft.schema.Schemas
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** The steps every daily stage's `sync` shares. A stage takes its lake
   * sources as (source name, directory) pairs, sorted by name, and returns
-  * the warehouse tables it wrote under `warehouseRoot`. */
+  * the warehouse tables it wrote under `warehouseRoot`.
+  *
+  * Five stages read incrementally through [[changedOnly]]: `history_sync`,
+  * `dividend_sync`, `detail_sync`, `holdings_sync` and `allocations_sync`.
+  * Their tables are hash-guarded upserts of what the files say, whatever
+  * the day, so a file whose content the tables already hold adds nothing
+  * and need not be read. `master_sync` and `nav_sync` read their whole
+  * lake every day: their output depends on `asOf` beyond `updated_at` —
+  * the master's `last_seen` and status lifecycle, and NAV's `future_date`
+  * reject, whose row must load on a later day from the same, unchanged
+  * file. They are also the only stages that write rejects, so
+  * [[writeRejects]] overwrites each day's set whole. */
 private[stages] object Sync {
 
-  /** One frame for all sources: each (source, dir) read and cleaned, then
-    * unioned by name, so each target table is merged ONCE per run. The
-    * per-source alternative (N sources = N read-merge-rewrite cycles of
-    * the same table per day) is the scale killer VERDICT r1 flagged. */
-  def union(sources: Seq[(String, String)])(read: (String, String) => DataFrame): DataFrame =
-    sources.map { case (source, dir) => read(source, dir) }
+  /** The manifest step of an incremental stage:
+    *  1. list each source's files (`list`, the stage's own file-name
+    *     predicate) and fingerprint each by its path under the source
+    *     dir plus an MD5 of its bytes, read on the driver — one byte-read
+    *     of the stage's lake per day, no parse, no Spark job;
+    *  2. `load` the files whose fingerprint the stage's manifest
+    *     (`<warehouseRoot>/_manifest/<stage>`, [[LakeManifest]]) lacks,
+    *     as (source, files) pairs in source order;
+    *  3. once `load` returned — its upserts committed — append those
+    *     fingerprints to the manifest. A `load` that throws leaves the
+    *     manifest as it was, so a rerun reads the same files again.
+    *
+    * With no changed file, `load` is not called: no Spark job, no write.
+    * A missing manifest, or a missing table of `tables`, means every file
+    * is read; deleting `_manifest/<stage>` forces a full read. The
+    * fingerprint is the content, not (length, mtime): a file rewritten
+    * with the same length in the same millisecond (a holdings weight
+    * 5.9% -> 6.1%) is still read. Within one load, rows of several files
+    * with one natural key dedup as the stage's cleaner and the upsert
+    * do; across days the latest changed file's row wins, since a file
+    * that did not change is not read again. Returns those of `tables`
+    * that exist: all of them once a load ran (an upsert of no rows still
+    * creates its table), none when the lake holds no file of the stage
+    * and no day loaded one. */
+  def changedOnly(spark: SparkSession, stage: String, sources: Seq[(String, String)],
+                  warehouseRoot: String, tables: Seq[String], list: String => Seq[Path])
+                 (load: Seq[(String, Seq[Path])] => Unit): Seq[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(warehouseRoot).getFileSystem(conf)
+    def exists(t: String) = fs.exists(new Path(s"$warehouseRoot/$t"))
+    val manifest = new LakeManifest(fs, new Path(s"$warehouseRoot/_manifest/$stage"))
+    val committed =
+      if (tables.forall(exists)) manifest.entries() else Map.empty[String, String]
+    val listed = sources.flatMap { case (source, dir) =>
+      LakeManifest.fingerprint(conf, source, dir, list(dir))
+    }
+    val changed = listed.filterNot(f => committed.get(f.key).contains(f.digest))
+    if (changed.nonEmpty) {
+      load(sources.flatMap { case (source, _) =>
+        val files = changed.filter(_.source == source).map(_.path)
+        if (files.isEmpty) None else Some(source -> files)
+      })
+      manifest.commit(changed, listed)
+    }
+    tables.filter(exists)
+  }
+
+  /** One frame for all sources: each (source, files) read and cleaned,
+    * then unioned by name, so each target table is merged ONCE per run.
+    * The per-source alternative (N sources = N read-merge-rewrite cycles
+    * of the same table per day) is the scale killer VERDICT r1 flagged. */
+  def union(parts: Seq[(String, Seq[Path])])(read: (String, Seq[Path]) => DataFrame): DataFrame =
+    parts.map { case (source, files) => read(source, files) }
       .reduce(_.unionByName(_, allowMissingColumns = true))
 
   /** Row-hashes `batch` on `table`'s natural key and merges it, hash
-    * guarded, into `warehouseRoot/table`. Returns `table`. */
+    * guarded, into `warehouseRoot/table`. */
   def upsertHashed(spark: SparkSession, warehouseRoot: String, table: String,
-                   asOf: Column, batch: DataFrame): String = {
+                   asOf: Column, batch: DataFrame): Unit = {
     val keys = Schemas.naturalKeys(table)
     MergeSink.upsertParquet(spark, s"$warehouseRoot/$table",
       HashFns.withRowHash(batch, keys, asOf), keys)
-    table
   }
 
   /** The validator's rejects with their reasons, as one headed CSV dir —

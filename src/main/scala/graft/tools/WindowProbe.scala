@@ -17,6 +17,8 @@ import org.apache.spark.sql.SparkSession
   * judges the run off the artifact alone:
   * `window_ratio` ≈ 1.0 → calm window, deltas attributable;
   * ≥ ~1.3 → degraded window, treat cross-round deltas as noise.
+  * `window_ratio` is read off the cpu and spark legs; the memory leg
+  * ([[memProbeSec]]) is reported beside it as `mem_ratio`.
   *
   * The probes deliberately exercise the two contention modes observed:
   * CPU steal (single-thread probe inflates) and scheduler/parallelism
@@ -151,7 +153,11 @@ object WindowProbe {
     def cpuRatio: Double = cpuSec / RefCpuSec
     def sparkRatio: Double = sparkSec / RefSparkSec
     def memRatio: Double = memSec / RefMemSec
-    def worst: Double = math.max(math.max(cpuRatio, sparkRatio), memRatio)
+    /** The headline leg: cpu and spark only. The mem leg's reference is
+      * aggregate DRAM bandwidth, which differs by host class: on a calm
+      * 4-core host it read 2.90–2.96 while cpu read 0.87–0.94, so it is
+      * reported beside the headline ([[windowMemRatio]]), not in it. */
+    def worst: Double = math.max(cpuRatio, sparkRatio)
     def json: String =
       f"""{"cpu_sec":$cpuSec%.3f,"spark_sec":$sparkSec%.3f,""" +
         f""""mem_sec":$memSec%.3f,"cpu_ratio":$cpuRatio%.2f,""" +
@@ -166,13 +172,18 @@ object WindowProbe {
       math.min(sparkProbeSec(spark), sparkProbeSec(spark)),
       math.min(memProbeSec(), memProbeSec()))
 
+  /** The worse mem-leg ratio of a (before, after) pair. */
+  def windowMemRatio(before: Sample, after: Sample): Double =
+    math.max(before.memRatio, after.memRatio)
+
   /** The (before, after) pair as one JSON object string, with the
-    * headline `ratio` = worst of the six component ratios — the
+    * headline `ratio` = worst of the four cpu and spark ratios — the
     * conservative read (a window that degraded at EITHER end taints
-    * cross-run attribution). */
+    * cross-run attribution) — and `mem_ratio` beside it. */
   def windowJson(before: Sample, after: Sample): String = {
     val ratio = math.max(before.worst, after.worst)
-    f"""{"ratio":$ratio%.2f,"before":${before.json},"after":${after.json},""" +
+    val mem = windowMemRatio(before, after)
+    f"""{"ratio":$ratio%.2f,"mem_ratio":$mem%.2f,"before":${before.json},"after":${after.json},""" +
       f""""ref_cpu_sec":$RefCpuSec%.2f,"ref_spark_sec":$RefSparkSec%.2f,""" +
       f""""ref_mem_sec":$RefMemSec%.2f}"""
   }

@@ -8,7 +8,8 @@ import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** DRIVER-LOCAL parquet reads for ENGINE-WRITTEN artifacts (frozen LMs,
   * tokenizers, retrieval-index metas/centroids): every declared schema
@@ -160,6 +161,44 @@ object ArtifactIO {
         .map(_.getName).toSeq
     } finally r.close()
   }
+
+  /** The Spark schema of an engine-written parquet table — what
+    * `spark.read.parquet(path).schema` infers, with zero Spark jobs where
+    * that inference runs a footer-merge job. The data columns are the
+    * schema Spark recorded in the footer of the first committed part file
+    * (converted from the parquet schema when a writer recorded none); each
+    * `k=v` directory on that file's path adds a partition column after
+    * them, an int when `v` is one (`__bucket`), else a string. All the
+    * engine's writers give every part file of a table one schema, so one
+    * footer stands for the table. A directory with no committed part
+    * file fails loudly. */
+  def tableSchema(spark: SparkSession, path: String): StructType = {
+    val conf = hadoopConf(spark)
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    require(fs.exists(root), s"parquet path $path does not exist")
+    val file = partFiles(fs, root).headOption.getOrElse(
+      throw new IllegalArgumentException(s"parquet path $path has no parquet part files"))
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val data = try {
+      val meta = r.getFooter.getFileMetaData
+      Option(meta.getKeyValueMetaData.get(SparkSchemaKey))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+        .getOrElse(new ParquetToSparkSchemaConverter(conf).convert(meta.getSchema))
+    } finally r.close()
+    val parts = fs.makeQualified(file).toUri.getPath
+      .stripPrefix(fs.makeQualified(root).toUri.getPath).split('/').toSeq.init
+      .flatMap(_.split("=", 2) match {
+        case Array(k, v) => Some(StructField(k,
+          if (v.toIntOption.isDefined) IntegerType else StringType))
+        case _ => None
+      })
+    StructType(data.fields ++ parts)
+  }
+
+  /** The footer key under which Spark's parquet writer records the
+    * frame's schema as JSON. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** EXACT row count of a parquet table from its footers — zero Spark
     * jobs, zero data pages read (the row count is block metadata parquet

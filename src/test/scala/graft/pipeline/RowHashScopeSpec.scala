@@ -15,14 +15,16 @@ class RowHashScopeSpec extends SparkSpec {
     Files.writeString(dir.resolve(name), content)
   }
 
-  /** A lake with every stage's input. The master rows arrive `active`, a
-    * status the lifecycle leaves as delivered: `row_hash` covers the
-    * delivered batch, and a 'new' row is promoted after it is hashed. */
+  /** A lake with every stage's input. Two master rows arrive `active`, a
+    * status the lifecycle leaves as delivered, and one arrives `new`,
+    * which the lifecycle promotes to `active`: `row_hash` covers the row
+    * as stored, after the promotion. */
   private def lake(root: Path): String = {
     write(root.resolve("lake/master/Financial Times"), "ft_master.csv",
       "ticker,asset_type,name,status,source,date_added\n" +
         "VUSA,ETF,Vanguard SP500,active,Financial Times,2024-05-01\n" +
-        "ABC,FUND,,active,Financial Times,2024-05-01\n")
+        "ABC,FUND,,active,Financial Times,2024-05-01\n" +
+        "XYZ,ETF,Xylem Tracker,new,Financial Times,2024-05-01\n")
     write(root.resolve("lake/nav/Financial Times"), "nav.csv",
       "ticker,asset_type,source,nav_price,currency,as_of_date,scrape_date\n" +
         "VUSA,ETF,Financial Times,101.5,USD,2024-05-01,2024-05-01\n")

@@ -98,4 +98,21 @@ class MasterSyncSpec extends SparkSpec {
       readyDir = Some(ready))
     assert(s2.select("ticker").as[String].collect().toSeq == Seq("VUSA"))
   }
+
+  test("the ready-to-load generation's name is rendered without a Spark job") {
+    val sc = spark.sparkContext
+    val group = s"generation-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "generation name")
+    try {
+      assert(MasterSync.generation(spark, lit("2024-05-01")) == "dt=2024-05-01")
+      assert(MasterSync.generation(spark, lit("2024-05-01").cast("date")) == "dt=2024-05-01")
+      // one marker job in the same group: once the status tracker holds
+      // it, it holds every job the group started before it
+      sc.parallelize(Seq(1), 1).count()
+    } finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30000000000L
+    while (sc.statusTracker.getJobIdsForGroup(group).isEmpty && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    assert(sc.statusTracker.getJobIdsForGroup(group).length == 1)
+  }
 }
