@@ -1,6 +1,7 @@
 package graft.maintenance
 
-import org.apache.hadoop.fs.Path
+import graft.operators.MergeSink
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,7 +19,8 @@ import org.apache.spark.sql.functions._
   *    DataFrame logic (window cumsum), so it is oracle-checkable and runs
   *    distributed over listings of any size.
   *  - [[compactParquetDir]]: the ACTION — list a parquet directory's part
-  *    files, bin-pack them, rewrite each bin as one file, atomically swap.
+  *    files, bin-pack them, rewrite each bin as one file, and publish the
+  *    rewrite through [[graft.operators.MergeSink.swapDirs]].
   *
   * Binning contract: files are taken in a DETERMINISTIC total order
   * (caller-chosen sort key; path order for the FS op) and bin
@@ -70,6 +72,10 @@ object Compaction {
     files.toDF("path", "bytes")
   }
 
+  /** Bin jobs one compaction pass runs at once (driver threads; Spark's
+    * scheduler interleaves their single-task jobs). */
+  private val MaxParallelBins = 4
+
   /** Compact a parquet directory in place: bin-pack its part files at
     * `targetBytes`, rewrite each bin as ONE output file, and atomically
     * swap the rewritten directory over the original. Returns
@@ -79,18 +85,24 @@ object Compaction {
     * bin's own files and writing them back with `coalesce(1)` moves no
     * rows between tasks — the whole rewrite is shuffle-free, and the bins
     * are independent single-task jobs submitted CONCURRENTLY (up to
-    * `maxParallelBins` driver threads; Spark's scheduler interleaves
+    * [[MaxParallelBins]] driver threads; Spark's scheduler interleaves
     * them — Delta OPTIMIZE semantics). Each bin writes its own staging
     * subdirectory: concurrent jobs must not share one output committer's
     * `_temporary`, so isolation is per-job directories and the files are
-    * lifted into the staging root afterwards (driver renames, metadata
-    * cost only). The swap reuses the staging-then-rename discipline of
-    * [[graft.operators.MergeSink]]; readers see old or new, never a mix. */
+    * lifted into the staged dir afterwards (driver renames, metadata
+    * cost only). The rewrite is staged under
+    * [[graft.operators.MergeSink.stagingPath]] and published by
+    * [[graft.operators.MergeSink.swapDirs]], the warehouse sinks' marker
+    * swap; readers see old or new, never a mix. */
   def compactParquetDir(spark: SparkSession, dir: String,
-                        targetBytes: Long,
-                        maxParallelBins: Int = 4): (Int, Int) =
-    compactDirInto(spark, dir, dir + ".compact-staging", dir + ".compact-old",
-      targetBytes, maxParallelBins)
+                        targetBytes: Long): (Int, Int) = {
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    MergeSink.recoverSwap(spark, dir)
+    val (before, bins) = stageCompacted(spark, fs, dir,
+      new Path(MergeSink.stagingPath(dir)), targetBytes)
+    if (before > bins) MergeSink.swapDirs(fs, dir, Seq(""))
+    (before, bins)
+  }
 
   /** [[compactParquetDir]] for a HIVE-PARTITIONED parquet table
     * (`root/key=value/part-*`): compact each partition directory
@@ -101,11 +113,15 @@ object Compaction {
     * this every K batches from an ingestion loop does O(new partitions)
     * work, not O(table).
     *
-    * Staging and swap directories live under SIBLINGS of the table root
-    * (`root.compact-staging/key=value`), NOT inside it: a leftover
-    * `root/key=value.compact-old` from a crash would parse as a bogus
-    * partition value and double-read old rows; outside the root, leftover
-    * state is invisible to readers and cleaned on the next pass.
+    * Every rewritten partition is staged under `root__tmp/key=value` and
+    * the pass publishes them all with ONE marker swap
+    * ([[graft.operators.MergeSink.swapDirs]]). The staging, backup and
+    * marker paths are SIBLINGS of the table root, NOT inside it: a
+    * leftover dir inside the root would parse as a bogus partition value
+    * and double-read old rows; outside it, leftover state is invisible to
+    * readers. A pass that dies mid-swap is healed by
+    * [[graft.operators.MergeSink.recoverSwap]], which every pass runs
+    * first (and which a reader of the dir can run itself).
     *
     * `minFiles` (0 = off) is the ADAPTIVE trigger: partitions holding
     * `minFiles` part files or fewer are skipped without planning a
@@ -115,123 +131,51 @@ object Compaction {
     * unconditional every-N compaction costs more than it saves at short
     * horizons; the file-count rule makes the cost proportional to the
     * problem). Returns (filesBefore, filesAfter) summed over the
-    * partitions it REWROTE (skipped partitions are not counted).
-    * NOTE: crash recovery ([[recoverPartitionedDir]] semantics) still
-    * runs on every call, regardless of skips. */
+    * partitions it planned (skipped partitions are not counted).
+    * Recovery runs on every call, regardless of skips.
+    *
+    * Takes no table lock: a compacted dir has one writer, which calls
+    * this between its own writes. */
   def compactPartitionedDir(spark: SparkSession, root: String,
                             targetBytes: Long,
-                            maxParallelBins: Int = 4,
                             minFiles: Int = 0): (Int, Int) = {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(rootPath)) return (0, 0)
-    // A previous pass may have died between the two swap renames of a
-    // partition (or the rename itself failed — on S3A a directory rename
-    // is a non-atomic copy, so the window is wide): the partition then
-    // exists ONLY under the sibling dirs. It would not be listed below
-    // (the fold only sees dirs present under root), so recover FIRST —
-    // otherwise the end-of-pass cleanup would delete the only copies.
-    recoverInterruptedSwaps(fs, rootPath)
+    MergeSink.recoverSwap(spark, root)
     val parts = fs.listStatus(rootPath).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.contains("="))
       .map(_.getPath).sortBy(_.getName)
-    val out = parts.foldLeft((0, 0)) { case ((b, a), part) =>
-      val skip = minFiles > 0 && {
-        val n = fs.listStatus(part).count(st => st.isFile &&
-          st.getPath.getName.startsWith("part-"))
-        n <= minFiles
-      }
-      if (skip) (b, a)
-      else {
-        val (pb, pa) = compactDirInto(spark, part.toString,
-          s"$root.compact-staging/${part.getName}",
-          s"$root.compact-old/${part.getName}", targetBytes, maxParallelBins)
-        (b + pb, a + pa)
-      }
+    val staging = new Path(MergeSink.stagingPath(root))
+    val planned = parts.filterNot { part =>
+      minFiles > 0 &&
+        fs.listStatus(part).count(st => st.isFile &&
+          st.getPath.getName.startsWith("part-")) <= minFiles
+    }.map { part =>
+      val (b, a) = stageCompacted(spark, fs, part.toString,
+        new Path(staging, part.getName), targetBytes)
+      (part.getName, b, a)
     }
-    // Belt and braces before the irreversible deletes: restore any
-    // partition whose only copy still sits in a sibling dir, then verify
-    // the pass preserved the partition set. A vanished partition here is
-    // data loss in flight — fail LOUDLY rather than hand readers a
-    // silently-thinner index (streaming replay reads these dirs and a
-    // missing partition just looks like fewer rows).
-    recoverInterruptedSwaps(fs, rootPath)
+    val rewritten = planned.collect { case (n, b, a) if b > a => n }
+    if (rewritten.nonEmpty) MergeSink.swapDirs(fs, root, rewritten)
+    // the pass must preserve the partition set: a vanished partition is
+    // data loss, and streaming replay reads these dirs, where a missing
+    // partition just looks like fewer rows — fail LOUDLY instead
     val after = fs.listStatus(rootPath)
       .filter(st => st.isDirectory && st.getPath.getName.contains("="))
       .map(_.getPath.getName).toSet
     parts.map(_.getName).foreach { n =>
-      require(after.contains(n),
-        s"compaction lost partition $n of $root — aborting cleanup so the " +
-          s"surviving copy under $root.compact-old / .compact-staging is kept")
+      require(after.contains(n), s"compaction lost partition $n of $root")
     }
-    fs.delete(new Path(root + ".compact-staging"), true)
-    fs.delete(new Path(root + ".compact-old"), true)
-    out
+    (planned.map(_._2).sum, planned.map(_._3).sum)
   }
 
-  /** Public recovery entry point for readers of a partitioned dir that is
-    * ALSO compacted in place (e.g. the streaming curation loop's index +
-    * sidecar): restores any partition stranded in the swap window by a
-    * crashed [[compactPartitionedDir]] pass, so a replay that runs BEFORE
-    * the next compaction pass never reads a silently-thinner table. No-op
-    * (one FS listing) when there is nothing to recover. */
-  def recoverPartitionedDir(spark: SparkSession, root: String): Unit = {
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(rootPath)) recoverInterruptedSwaps(fs, rootPath)
-  }
-
-  /** Complete or roll back partition swaps interrupted between
-    * `rename(p, old)` and `rename(staging, p)` of [[compactDirInto]]: any
-    * `key=value` dir under `root.compact-old` (preferred — it is the
-    * untouched pre-swap original) or `root.compact-staging` (the fully
-    * rewritten copy; staging dirs are only ever swapped after being fully
-    * built, so if the partition is absent from root the staging copy is
-    * complete) with no corresponding `root/key=value` is renamed back into
-    * the root. Leftovers whose partition DOES exist in root are stale
-    * by-products of a completed swap and are left for the caller's
-    * cleanup. */
-  private def recoverInterruptedSwaps(fs: org.apache.hadoop.fs.FileSystem,
-                                      root: Path): Unit =
-    Seq(new Path(root.toString + ".compact-old"),
-        new Path(root.toString + ".compact-staging")).foreach { side =>
-      if (fs.exists(side))
-        fs.listStatus(side).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-          .foreach { st =>
-            val target = new Path(root, st.getPath.getName)
-            if (!fs.exists(target))
-              require(fs.rename(st.getPath, target),
-                s"compaction recovery: could not restore ${st.getPath} to $target")
-          }
-    }
-
-  private def compactDirInto(spark: SparkSession, dir: String,
-                             stagingDir: String, oldDir: String,
-                             targetBytes: Long,
-                             maxParallelBins: Int): (Int, Int) = {
-    require(maxParallelBins >= 1, s"maxParallelBins must be >= 1, got $maxParallelBins")
-    // Crash-window recovery for the UNPARTITIONED entry point (the
-    // partitioned caller recovers at the root level before listing): if a
-    // previous swap died between its two renames, `dir` is absent and the
-    // data lives only in oldDir (pre-swap original, preferred) or
-    // stagingDir (fully-built rewrite — staging is only ever swapped
-    // after completion, so dir-absent implies it is complete).
-    locally {
-      val p0 = new Path(dir)
-      val fs0 = p0.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs0.exists(p0)) {
-        val oldP = new Path(oldDir); val stg = new Path(stagingDir)
-        if (fs0.exists(oldP)) {
-          require(fs0.rename(oldP, p0),
-            s"compaction recovery: could not restore $oldDir to $dir")
-          fs0.delete(stg, true)
-        } else if (fs0.exists(stg)) {
-          require(fs0.rename(stg, p0),
-            s"compaction recovery: could not publish $stagingDir to $dir")
-        }
-      }
-    }
+  /** Plans `dir`'s bins and, when that would cut its file count, writes
+    * the compacted files into `staged` (created here; it must not exist).
+    * Returns (files, bins): `files > bins` iff `staged` was written. */
+  private def stageCompacted(spark: SparkSession, fs: FileSystem,
+                             dir: String, staged: Path,
+                             targetBytes: Long): (Int, Int) = {
     val listing = listPartFiles(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1)))
     val plan = {
@@ -242,12 +186,8 @@ object Compaction {
     }
     val bins = plan.map(_._2).distinct.sorted
     if (listing.length <= bins.length) return (listing.length, bins.length)
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(stagingDir)
-    fs.delete(staging, true)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(maxParallelBins, bins.length))
+      math.min(MaxParallelBins, bins.length))
     try {
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutor(pool)
@@ -256,32 +196,26 @@ object Compaction {
           val paths = plan.filter(_._2 == b).map(_._1)
           spark.read.parquet(paths: _*).coalesce(1)
             .write.mode(SaveMode.ErrorIfExists)
-            .parquet(new Path(staging, s"bin=$b").toString)
+            .parquet(new Path(staged, s"bin=$b").toString)
         }
       }
       scala.concurrent.Await.result(
         scala.concurrent.Future.sequence(jobs),
         scala.concurrent.duration.Duration.Inf)
     } finally pool.shutdown()
-    // lift each bin's file into the staging root (bin prefix keeps names
+    // lift each bin's file into the staged dir (bin prefix keeps names
     // collision-free), then drop the per-job dirs
     bins.foreach { b =>
-      val binDir = new Path(staging, s"bin=$b")
+      val binDir = new Path(staged, s"bin=$b")
       fs.listStatus(binDir).filter(st => st.isFile &&
           st.getPath.getName.startsWith("part-"))
         .foreach { st =>
           require(fs.rename(st.getPath,
-            new Path(staging, s"part-b$b-${st.getPath.getName.stripPrefix("part-")}")),
+            new Path(staged, s"part-b$b-${st.getPath.getName.stripPrefix("part-")}")),
             s"compaction: could not lift ${st.getPath}")
         }
       fs.delete(binDir, true)
     }
-    val old = new Path(oldDir)
-    fs.delete(old, true)
-    fs.mkdirs(old.getParent)
-    require(fs.rename(p, old), s"compaction swap: could not move $dir aside")
-    require(fs.rename(staging, p), s"compaction swap: could not publish $staging")
-    fs.delete(old, true)
     (listing.length, bins.length)
   }
 }

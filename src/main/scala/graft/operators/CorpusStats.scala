@@ -434,11 +434,6 @@ object CorpusStats {
     org.apache.spark.sql.types.StructField("df",
       org.apache.spark.sql.types.LongType)))
 
-  private def hPath(s: String) = new org.apache.hadoop.fs.Path(s)
-
-  private def hFs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Order-independent exact fingerprint of a (tok, df) frame:
     * (row count, XOR of xxhash64(tok, df)). XOR is commutative,
     * associative and overflow-free, so the aggregate is bit-stable
@@ -455,30 +450,6 @@ object CorpusStats {
         Iterator((n, x))
       }.collect()
     partials.foldLeft((0L, 0L)) { case ((n, x), (pn, px)) => (n + pn, x ^ px) }
-  }
-
-  /** Version dirs under `path`, as (versionNo, hadoopPath), any state. */
-  private def bm25Versions(spark: SparkSession, path: String)
-      : Seq[(Long, org.apache.hadoop.fs.Path)] = {
-    val root = hPath(path)
-    val fs = hFs(spark, root)
-    if (!fs.exists(root)) return Seq.empty
-    fs.listStatus(root).toSeq.collect {
-      case st if st.isDirectory && st.getPath.getName.matches("v=\\d+") =>
-        (st.getPath.getName.drop(2).toLong, st.getPath)
-    }
-  }
-
-  /** True iff the dir holds at least one parquet part file — an empty
-    * or half-created dir (crash between mkdir and commit) is "absent". */
-  private def hasParquet(fs: org.apache.hadoop.fs.FileSystem,
-                         p: org.apache.hadoop.fs.Path): Boolean = {
-    if (!fs.exists(p)) return false
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      if (it.next().getPath.getName.startsWith("part-")) return true
-    }
-    false
   }
 
   /** Read + validate one version's meta. Loud on corruption (wrong tag,
@@ -504,17 +475,9 @@ object CorpusStats {
       r.getSeq[Long](5))
   }
 
-  /** Newest COMPLETE version (meta present), else None. Incomplete
-    * higher versions — crash leftovers with df but no meta — are
-    * skipped, never trusted. */
-  private def latestComplete(spark: SparkSession, path: String)
-      : Option[(Long, org.apache.hadoop.fs.Path, Bm25Meta)] = {
-    val fs = hFs(spark, hPath(path))
-    bm25Versions(spark, path).sortBy(-_._1).collectFirst {
-      case (n, p) if hasParquet(fs, new org.apache.hadoop.fs.Path(p, "bm25_meta")) =>
-        (n, p, readMeta(spark, p))
-    }
-  }
+  /** The artifact's versions: `v=<n>/` dirs committed by `bm25_meta`. */
+  private val Bm25Versions =
+    new graft.util.ArtifactIO.Versioned[Bm25Meta]("bm25_meta", readMeta)
 
   /** Land a new version as one unit: df FIRST, meta (with the df
     * fingerprint measured from what was actually written) LAST, then
@@ -537,7 +500,7 @@ object CorpusStats {
                                stats: () => (Long, Long),
                                batchIds: Seq[Long]): Bm25Index = {
     import spark.implicits._
-    val next = bm25Versions(spark, path).map(_._1).foldLeft(-1L)(math.max) + 1
+    val next = Bm25Versions.nextVersion(spark, path)
     val vDir = s"$path/v=$next"
     dfFrame.select(col("tok"), col("df").cast("long").as("df"))
       .write.mode("overwrite").parquet(s"$vDir/bm25_df")
@@ -548,36 +511,18 @@ object CorpusStats {
       .toDF("n_docs", "sum_dl", "model_tag", "vocab", "df_fp", "batch_ids")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$vDir/bm25_meta") // meta commits the version
-    val fs = hFs(spark, hPath(path))
-    bm25Versions(spark, path).filter(_._1 != next)
-      .foreach { case (_, p) => fs.delete(p, true) }
+    Bm25Versions.pruneExcept(spark, path, next)
     Bm25Index(nDocs, sumDl, written)
   }
 
-  /** Recovery/compaction routine for a versioned BM25 artifact (the
-    * Compaction.recoverPartitionedDir discipline, run by
-    * [[bm25UpdateIndex]] at every entry and safe to run any time):
+  /** Recovery/compaction routine for a versioned BM25 artifact, run by
+    * [[bm25UpdateIndex]] at every entry and safe to run any time:
     * deletes version dirs with no committed meta (interrupted writes)
     * and all complete versions older than the newest (prune leftovers
     * from a crash mid-prune). Returns the surviving version number, or
     * -1 if the artifact has no complete version. */
   def bm25Recover(spark: SparkSession, path: String): Long =
-    recoverKeep(spark, path).map(_._1).getOrElse(-1L)
-
-  /** [[bm25Recover]]'s core, returning the surviving version's meta so
-    * the update path doesn't re-read the 1-row meta parquet it just
-    * resolved (each read is a full Spark job — the r17 QueryStats
-    * profile attributed most of the lifecycle queries' wall to exactly
-    * these repeated tiny jobs). */
-  private def recoverKeep(spark: SparkSession, path: String)
-      : Option[(Long, org.apache.hadoop.fs.Path, Bm25Meta)] = {
-    val fs = hFs(spark, hPath(path))
-    val keep = latestComplete(spark, path)
-    val keepN = keep.map(_._1).getOrElse(-1L)
-    bm25Versions(spark, path).filter(_._1 != keepN)
-      .foreach { case (_, p) => fs.delete(p, true) }
-    keep
-  }
+    Bm25Versions.recoverKeep(spark, path).map(_._1).getOrElse(-1L)
 
   /** Corpus statistics of `df` as a [[Bm25Index]]: one word-count-shaped
     * aggregation (per-doc DISTINCT terms exploded → df per term, with
@@ -642,7 +587,7 @@ object CorpusStats {
     * an artifact it just wrote. */
   def bm25LoadIndex(spark: SparkSession, path: String,
                     validate: Boolean = true): Bm25Index = {
-    val (_, vDir, meta) = latestComplete(spark, path).getOrElse(
+    val (_, vDir, meta) = Bm25Versions.latestComplete(spark, path).getOrElse(
       throw new IllegalArgumentException(
         s"BM25 artifact at $path has no complete version " +
           "(run bm25Recover to prune interrupted writes, or rebuild)"))
@@ -679,7 +624,7 @@ object CorpusStats {
                       batchId: Long = -1L): Bm25Index = {
     // ONE version resolution serves recovery, the ledger check and the
     // merge below (the pre-r17 shape read the meta twice on this path)
-    val (_, vDir, meta) = recoverKeep(spark, path).getOrElse(
+    val (_, vDir, meta) = Bm25Versions.recoverKeep(spark, path).getOrElse(
       throw new IllegalArgumentException(
         s"BM25 artifact at $path has no complete version to update"))
     if (batchId >= 0 && meta.batchIds.contains(batchId)) {
@@ -720,7 +665,8 @@ object CorpusStats {
     * O(batch); [[bm25LoadParts]] pays one vocab-sized merge aggregation
     * at load, which a query stack does once per session, and
     * [[graft.maintenance.Compaction.compactPartitionedDir]] keeps the
-    * partition listings flat on the ingest loop's schedule. */
+    * partition listings flat on the ingest loop's schedule (publishing
+    * through [[MergeSink.swapDirs]], healed by [[MergeSink.recoverSwap]]). */
   def bm25AppendBatch(spark: SparkSession, path: String, batch: DataFrame,
                       idCol: String, textCol: String, batchId: Long): Unit = {
     import spark.implicits._

@@ -57,10 +57,6 @@ object DenseIndex {
     org.apache.spark.sql.types.StructField("centroid_id",
       org.apache.spark.sql.types.LongType)))
 
-  private def hPath(s: String) = new org.apache.hadoop.fs.Path(s)
-  private def hFs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Order-independent exact fingerprint of the (neighbor_id, cv,
     * centroid_id) frame: (count, XOR of xxhash64 over all three) — the
     * [[CorpusStats]] dfFingerprint discipline; ids are unique, so pairs
@@ -77,27 +73,6 @@ object DenseIndex {
         Iterator((n, x))
       }.collect()
     partials.foldLeft((0L, 0L)) { case ((n, x), (pn, px)) => (n + pn, x ^ px) }
-  }
-
-  private def versions(spark: SparkSession, path: String)
-      : Seq[(Long, org.apache.hadoop.fs.Path)] = {
-    val root = hPath(path)
-    val fs = hFs(spark, root)
-    if (!fs.exists(root)) return Seq.empty
-    fs.listStatus(root).toSeq.collect {
-      case st if st.isDirectory && st.getPath.getName.matches("v=\\d+") =>
-        (st.getPath.getName.drop(2).toLong, st.getPath)
-    }
-  }
-
-  private def hasParquet(fs: org.apache.hadoop.fs.FileSystem,
-                         p: org.apache.hadoop.fs.Path): Boolean = {
-    if (!fs.exists(p)) return false
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      if (it.next().getPath.getName.startsWith("part-")) return true
-    }
-    false
   }
 
   private def readMeta(spark: SparkSession,
@@ -121,30 +96,9 @@ object DenseIndex {
       r.getLong(5), r.getSeq[Long](6))
   }
 
-  private def latestComplete(spark: SparkSession, path: String)
-      : Option[(Long, org.apache.hadoop.fs.Path, IvfMeta)] = {
-    val fs = hFs(spark, hPath(path))
-    versions(spark, path).sortBy(-_._1).collectFirst {
-      case (n, p) if hasParquet(fs,
-          new org.apache.hadoop.fs.Path(p, "ivf_meta")) =>
-        (n, p, readMeta(spark, p))
-    }
-  }
-
-  /** [[ivfRecover]]'s core, returning the surviving version's meta so
-    * callers that need it next (append) don't re-read the 1-row meta
-    * parquet — each read is a full Spark job, and the r17 job-count
-    * profile (tools/QueryStats) showed the lifecycle queries spending
-    * most of their wall on exactly these repeated tiny jobs. */
-  private def recoverKeep(spark: SparkSession, path: String)
-      : Option[(Long, org.apache.hadoop.fs.Path, IvfMeta)] = {
-    val fs = hFs(spark, hPath(path))
-    val keep = latestComplete(spark, path)
-    val keepN = keep.map(_._1).getOrElse(-1L)
-    versions(spark, path).filter(_._1 != keepN)
-      .foreach { case (_, p) => fs.delete(p, true) }
-    keep
-  }
+  /** The artifact's versions: `v=<n>/` dirs committed by `ivf_meta`. */
+  private val IvfVersions =
+    new graft.util.ArtifactIO.Versioned[IvfMeta]("ivf_meta", readMeta)
 
   /** Load one ALREADY-RESOLVED version (meta in hand) — the shared core
     * of [[ivfLoadIndex]] and the append path, so resolving a version
@@ -179,8 +133,8 @@ object DenseIndex {
 
   /** Land a new version as one unit: vectors (centroid-partitioned) and
     * centroids FIRST, meta (with the fingerprint measured from what was
-    * actually written) LAST, then best-effort prune of older versions —
-    * the [[CorpusStats]] writeVersion discipline verbatim. */
+    * actually written) LAST, then best-effort prune of older versions
+    * ([[graft.util.ArtifactIO.Versioned]], shared with [[CorpusStats]]). */
   private def writeVersion(spark: SparkSession, path: String,
                            centroids: Seq[(Long, Array[Long])], scale: Int,
                            vecs: DataFrame,
@@ -188,7 +142,7 @@ object DenseIndex {
     import spark.implicits._
     require(centroids.nonEmpty, "IVF artifact needs >= 1 centroid")
     val dim = centroids.head._2.length
-    val next = versions(spark, path).map(_._1).foldLeft(-1L)(math.max) + 1
+    val next = IvfVersions.nextVersion(spark, path)
     val vDir = s"$path/v=$next"
     // cluster rows by centroid BEFORE the partitioned write: each task
     // then writes whole lists (one file per centroid instead of one per
@@ -212,9 +166,7 @@ object DenseIndex {
         "batch_ids")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$vDir/ivf_meta") // commits the version
-    val fs = hFs(spark, hPath(path))
-    versions(spark, path).filter(_._1 != next)
-      .foreach { case (_, p) => fs.delete(p, true) }
+    IvfVersions.pruneExcept(spark, path, next)
     IvfIndex(centroids, scale, n, written)
   }
 
@@ -222,7 +174,7 @@ object DenseIndex {
     * prunes interrupted writes (no meta) and superseded complete
     * versions. Returns the surviving version number, -1 if none. */
   def ivfRecover(spark: SparkSession, path: String): Long =
-    recoverKeep(spark, path).map(_._1).getOrElse(-1L)
+    IvfVersions.recoverKeep(spark, path).map(_._1).getOrElse(-1L)
 
   /** Build an in-memory [[IvfIndex]] from a corpus: coarse centroids
     * (deterministic lowest-id seeds by default — the oracle-portable
@@ -293,7 +245,7 @@ object DenseIndex {
     * probes. */
   def ivfLoadIndex(spark: SparkSession, path: String,
                    validate: Boolean = true): IvfIndex = {
-    val (_, vDir, meta) = latestComplete(spark, path).getOrElse(
+    val (_, vDir, meta) = IvfVersions.latestComplete(spark, path).getOrElse(
       throw new IllegalArgumentException(
         s"IVF artifact at $path has no complete version " +
           "(run ivfRecover to prune interrupted writes, or rebuild)"))
@@ -314,7 +266,7 @@ object DenseIndex {
     // ONE version resolution serves recovery, the ledger check and the
     // load below — the pre-r17 shape re-read the 1-row meta parquet
     // three times on this path (a Spark job each)
-    val (_, vDir, meta) = recoverKeep(spark, path).getOrElse(
+    val (_, vDir, meta) = IvfVersions.recoverKeep(spark, path).getOrElse(
       throw new IllegalArgumentException(
         s"IVF artifact at $path has no complete version to append to"))
     if (batchId >= 0 && meta.batchIds.contains(batchId)) {

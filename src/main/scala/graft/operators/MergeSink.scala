@@ -135,6 +135,20 @@ object MergeSink {
     }
   }
 
+  /** This JVM's `pid@host`, the prefix of every lock holder string. */
+  private val processName =
+    java.lang.management.ManagementFactory.getRuntimeMXBean.getName
+
+  /** True when `holder` (`pid@host/uuid`) names this host and a pid that
+    * is neither this JVM's nor alive: its owner can never release it. */
+  private def deadLocalHolder(holder: String): Boolean =
+    holder.takeWhile(_ != '/').split("@", 2) match {
+      case Array(pid, host) if host == processName.split("@", 2).last =>
+        pid.toLongOption.exists(p => p != ProcessHandle.current().pid &&
+          !ProcessHandle.of(p).filter(h => h.isAlive).isPresent)
+      case _ => false
+    }
+
   /** Table-level writer mutex via atomic create-if-absent of a lock file.
     *
     * The parquet swap-sink is crash-safe (marker + [[recoverSwap]]) but a
@@ -143,7 +157,10 @@ object MergeSink {
     * `FileSystem.create(overwrite = false)`, which is atomic on HDFS and
     * object stores with conditional-put semantics; a writer that died
     * mid-hold is healed by the stale-lock timeout (its swap marker is then
-    * rolled forward by recoverSwap under the new lock).
+    * rolled forward by recoverSwap under the new lock). A holder that is
+    * provably dead — its `pid@host` names this host and a pid other than
+    * this JVM's that is not alive — is broken at once instead of after
+    * `staleAfterMs`; a holder on another host can only go stale.
     *
     * Liveness vs the stale horizon: a daemon HEARTBEAT re-touches the lock
     * mtime every `heartbeatMs` while `body` runs, so a slow-but-alive
@@ -163,7 +180,7 @@ object MergeSink {
                                       heartbeatMs: Long = -1L)
                                      (body: TableLock => T): T = {
     val lp = lockPath(path)
-    val holder = s"${java.lang.management.ManagementFactory.getRuntimeMXBean.getName}/${java.util.UUID.randomUUID()}"
+    val holder = s"$processName/${java.util.UUID.randomUUID()}"
     val lock = new TableLock(fs, path, holder)
     def tryAcquire(): Boolean = {
       val created =
@@ -185,14 +202,15 @@ object MergeSink {
     }
     var acquired = tryAcquire()
     if (!acquired) {
-      // break ONLY the exact stale lock we observed: re-check that the
-      // file still carries the same mtime before deleting, so two writers
-      // probing the same stale lock can't each delete the other's FRESH
-      // replacement
+      // break ONLY the exact stale or dead-holder lock we observed:
+      // re-check that the file still carries the same mtime before
+      // deleting, so two writers probing the same lock can't each delete
+      // the other's FRESH replacement
       val staleMtime =
         try {
           val st = fs.getFileStatus(lp)
-          if (System.currentTimeMillis() - st.getModificationTime > staleAfterMs)
+          if (System.currentTimeMillis() - st.getModificationTime > staleAfterMs ||
+              deadLocalHolder(lock.holderOf))
             Some(st.getModificationTime)
           else None
         } catch { case _: Exception => None } // vanished -> plain retry below
@@ -261,17 +279,27 @@ object MergeSink {
     if (!fs.rename(src, dst))
       throw new java.io.IOException(s"rename failed: $src -> $dst")
 
-  /** Swaps `subdirs` of staged generation `tmp` into `path` (tmp/<d> ->
-    * path/<d>, previous path/<d> parked under path__old until the swap
-    * completes). `subdirs == Seq("")` swaps the whole directory.
+  /** Where a writer stages the next generation of `path`'s subdirs
+    * (`<path>__tmp/<subdir>`, or the whole staged dir for a root swap)
+    * before [[swapDirs]] publishes them. */
+  private[graft] def stagingPath(path: String): String = path + "__tmp"
+
+  /** Publishes `subdirs` of the staged generation under
+    * [[stagingPath]]`(path)` into `path` (tmp/<d> -> path/<d>, previous
+    * path/<d> parked under path__old until the swap completes).
+    * `subdirs == Seq("")` swaps the whole directory. This is the one
+    * directory swap of the engine: the warehouse sinks and
+    * [[graft.maintenance.Compaction]] both publish through it, and
+    * [[recoverSwap]] is the one way an interrupted swap is healed.
     *
-    * Entry gate: re-verifies lock ownership RIGHT BEFORE the first
-    * destructive step. A writer whose lock was stale-broken during the
-    * (long) staged write aborts here with [[LockLostException]] instead of
-    * racing the new holder's renames. */
-  private def swapDirs(fs: FileSystem, path: String, tmp: String,
-                       subdirs: Seq[String], lock: TableLock): Unit = {
-    lock.assertOwned()
+    * Writer exclusion is the caller's: the sinks re-verify their table
+    * lock ([[TableLock.assertOwned]]) right before calling, so a writer
+    * whose lock was stale-broken during the (long) staged write aborts
+    * with [[LockLostException]] instead of racing the new holder's
+    * renames. */
+  private[graft] def swapDirs(fs: FileSystem, path: String,
+                              subdirs: Seq[String]): Unit = {
+    val tmp = stagingPath(path)
     val old = path + "__old"
     fs.delete(new Path(old), true)
     fs.mkdirs(new Path(old))
@@ -290,12 +318,20 @@ object MergeSink {
   }
 
   /** Finishes an interrupted [[swapDirs]]: staged dirs (path__tmp) roll
-    * forward, missing staged dirs roll back from path__old. Called
-    * automatically by the sinks when a marker is present; safe no-op
-    * otherwise. */
+    * forward, missing staged dirs roll back from path__old. With no
+    * marker, a leftover path__tmp or path__old is a write that died
+    * before its swap began (the marker is written before the first
+    * rename and deleted after the last delete), so it is removed. Every
+    * writer calls this before staging, under its own writer exclusion.
+    * Returns whether a marker was found. */
   def recoverSwap(spark: SparkSession, path: String): Boolean = {
     val fs = fsFor(spark, path)
-    if (!fs.exists(swapMarker(path))) return false
+    val old = path + "__old"
+    val tmp = stagingPath(path)
+    if (!fs.exists(swapMarker(path))) {
+      Seq(old, tmp).foreach(d => fs.delete(new Path(d), true))
+      return false
+    }
     val in = fs.open(swapMarker(path))
     val parsed = scala.io.Source.fromInputStream(in, "UTF-8").getLines()
       .filter(_.nonEmpty).map(decodeDir).toList
@@ -305,10 +341,9 @@ object MergeSink {
     // the whole-directory swap it was, or the deletes below would destroy
     // both the backup and the staged generation
     val subdirs = if (parsed.isEmpty) List("") else parsed
-    val old = path + "__old"
     subdirs.foreach { d =>
       val cur = if (d.isEmpty) new Path(path) else new Path(path, d)
-      val stg = if (d.isEmpty) new Path(path + "__tmp") else new Path(path + "__tmp", d)
+      val stg = if (d.isEmpty) new Path(tmp) else new Path(tmp, d)
       val bak = new Path(old, if (d.isEmpty) "__root" else d)
       if (!fs.exists(cur)) {
         if (fs.exists(stg)) renameOrThrow(fs, stg, cur)
@@ -316,7 +351,7 @@ object MergeSink {
       }
     }
     fs.delete(new Path(old), true)
-    fs.delete(new Path(path + "__tmp"), true)
+    fs.delete(new Path(tmp), true)
     fs.delete(swapMarker(path), false)
     spark.catalog.refreshByPath(path)
     true
@@ -333,7 +368,7 @@ object MergeSink {
       // a writer that lost the lock leaves `__tmp` alone: it may be the
       // new holder's staged generation
       try if (lock.owned && !fs.exists(swapMarker(path)))
-        fs.delete(new Path(path + "__tmp"), true)
+        fs.delete(new Path(stagingPath(path)), true)
       catch { case c: Exception => e.addSuppressed(c) }
       throw e
     }
@@ -345,9 +380,9 @@ object MergeSink {
     val fs = fsFor(spark, path)
     withTableLock(fs, path) { lock => cleaningTmp(fs, path, lock) {
       recoverSwap(spark, path)
-      val tmp = path + "__tmp"
-      df.write.mode("overwrite").parquet(tmp)
-      swapDirs(fs, path, tmp, Seq(""), lock)
+      df.write.mode("overwrite").parquet(stagingPath(path))
+      lock.assertOwned()
+      swapDirs(fs, path, Seq(""))
       // drop cached file listings so readers created after the swap see the
       // new generation (stale FileStatusCache entries would 404 on old parts)
       spark.catalog.refreshByPath(path)
@@ -440,7 +475,7 @@ object MergeSink {
     withTableLock(fs, path) { lock => cleaningTmp(fs, path, lock) {
       recoverSwap(spark, path)
       val tgt = new Path(path)
-      val tmp = path + "__tmp"
+      val tmp = stagingPath(path)
 
       // A ZERO-ROW frame through partitionBy writes a FILELESS dir that
       // read-back cannot infer a schema from — an empty FIRST upsert
@@ -482,7 +517,8 @@ object MergeSink {
           val merged = merge(previous, updates, keys, hashCol)
             .withColumn("__bucket", bucketExpr(keys, numBuckets))
           val bucketed = writeWhole(merged, tmp)
-          swapDirs(fs, path, tmp, Seq(""), lock)
+          lock.assertOwned()
+          swapDirs(fs, path, Seq(""))
           if (bucketed) writeMeta(fs, path, keys, numBuckets)
           spark.catalog.refreshByPath(path)
 
@@ -515,7 +551,8 @@ object MergeSink {
               val merged = merge(inBuckets(table, touched),
                 inBuckets(upd, touched), keys, hashCol)
               merged.write.mode("overwrite").partitionBy("__bucket").parquet(tmp)
-              swapDirs(fs, path, tmp, touched.map(n => s"__bucket=$n").toSeq, lock)
+              lock.assertOwned()
+              swapDirs(fs, path, touched.map(n => s"__bucket=$n").toSeq)
               spark.catalog.refreshByPath(path)
             }
           } finally upd.unpersist()

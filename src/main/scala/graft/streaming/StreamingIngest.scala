@@ -459,16 +459,16 @@ object StreamingIngest {
     * growth actually bites (the r9 cadence ablation measured
     * unconditional every-5 compaction as net-negative at short horizons).
     *
-    * Crash safety: the swap inside
-    * [[graft.maintenance.Compaction.compactPartitionedDir]] has a real
-    * window — between its two renames the partition exists only in the
-    * sibling `.compact-old`/`.compact-staging` dirs (on S3A the rename is
-    * a non-atomic copy, so the window is wide). A crash there aborts the
-    * trigger; compaction passes self-heal on their next run, and because
-    * the REPLAYED batch must not dedup against a silently-thinner index
-    * before that next pass, every trigger (when compaction is enabled)
-    * first runs [[graft.maintenance.Compaction.recoverPartitionedDir]] on
-    * the index and sidecar — a no-op listing in the steady state. The
+    * Crash safety: a compaction pass publishes its rewritten partitions
+    * through [[graft.operators.MergeSink.swapDirs]], whose marker swap
+    * has a real window — between its renames a partition exists only
+    * under the `__old`/`__tmp` siblings (on S3A the rename is a
+    * non-atomic copy, so the window is wide). A crash there aborts the
+    * trigger, and because the REPLAYED batch must not dedup against a
+    * silently-thinner index, every trigger (when compaction is enabled)
+    * first runs [[graft.operators.MergeSink.recoverSwap]] on each
+    * compacted dir — the index, its bucket sidecar and the BM25 parts
+    * dirs — a few FS probes in the steady state. The
     * curated/rejects lakes are write-only for this loop; compact those on
     * the consumer's schedule instead. */
   def curateStream(spark: SparkSession, stream: DataFrame, idCol: String,
@@ -543,46 +543,28 @@ object StreamingIngest {
           s"artifact at $langIdPath only scores ${m.langs.mkString(",")} — " +
           "every allowed language must be one the model can predict")
     }
+    // the dirs a compaction pass rewrites: each gains a partition per
+    // batch, and the BM25 parts dirs share the near-dup index's cadence
+    // and replay story (per-partition rewrite under dynamic overwrite)
+    val compacted = Seq(indexPath, bucketsPath(indexPath)) ++
+      (if (bm25IndexPath.isEmpty) Nil
+       else Seq(s"$bm25IndexPath/bm25_df_parts", s"$bm25IndexPath/bm25_meta_parts"))
     val writer = stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (compactEvery > 0) {
           // heal any partition stranded by a compaction crash BEFORE the
           // (possibly replayed) batch probes the index — see scaladoc
-          graft.maintenance.Compaction.recoverPartitionedDir(spark, indexPath)
-          graft.maintenance.Compaction.recoverPartitionedDir(
-            spark, bucketsPath(indexPath))
-          if (bm25IndexPath.nonEmpty) {
-            graft.maintenance.Compaction.recoverPartitionedDir(
-              spark, s"$bm25IndexPath/bm25_df_parts")
-            graft.maintenance.Compaction.recoverPartitionedDir(
-              spark, s"$bm25IndexPath/bm25_meta_parts")
-          }
+          compacted.foreach(graft.operators.MergeSink.recoverSwap(spark, _))
         }
         curateBatch(spark, batch, batchId, idCol, textCol, indexPath,
           curatedPath, rejectsPath, minTokens, minQuality, numHashes,
           bands, shingleN, threshold, maxBucketSize, tokenizer,
           packedIdsPath, seqLen, lm, minXent, maxXent, langAllow, langId,
           bm25IndexPath)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          graft.maintenance.Compaction.compactPartitionedDir(
-            spark, indexPath, compactTargetBytes, minFiles = compactMinFiles)
-          graft.maintenance.Compaction.compactPartitionedDir(
-            spark, bucketsPath(indexPath), compactTargetBytes,
-            minFiles = compactMinFiles)
-          // the BM25 parts dirs accumulate one partition per batch just
-          // like the near-dup index — same cadence, same replay story
-          // (per-partition rewrite under dynamic overwrite)
-          if (bm25IndexPath.nonEmpty) {
-            graft.maintenance.Compaction.compactPartitionedDir(
-              spark, s"$bm25IndexPath/bm25_df_parts", compactTargetBytes,
-              minFiles = compactMinFiles)
-            graft.maintenance.Compaction.compactPartitionedDir(
-              spark, s"$bm25IndexPath/bm25_meta_parts", compactTargetBytes,
-              minFiles = compactMinFiles)
-          }
-          ()
-        }
+        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+          compacted.foreach(graft.maintenance.Compaction.compactPartitionedDir(
+            spark, _, compactTargetBytes, minFiles = compactMinFiles))
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }

@@ -196,6 +196,74 @@ object ArtifactIO {
     StructType(data.fields ++ parts)
   }
 
+  /** True iff `p` holds at least one parquet part file at any depth — an
+    * empty or half-created dir (crash between mkdir and commit) counts as
+    * absent. */
+  private def hasParquet(fs: FileSystem, p: Path): Boolean = {
+    if (!fs.exists(p)) return false
+    val it = fs.listFiles(p, true)
+    while (it.hasNext) {
+      if (it.next().getPath.getName.startsWith("part-")) return true
+    }
+    false
+  }
+
+  /** The version discipline of a VERSIONED artifact (the BM25 corpus
+    * stats, the IVF dense index): each write lands a complete
+    * `$path/v=<n>/` unit whose `metaDir` subdir is written LAST, so a
+    * version whose meta holds a part file is complete and any other is an
+    * interrupted write. Readers take the newest complete version; a write
+    * takes [[nextVersion]] and, once its meta committed, prunes every
+    * other version with [[pruneExcept]]. `readMeta` reads and validates
+    * one version dir's meta (loud on damage: a readable meta is a
+    * completed write). */
+  final class Versioned[M](metaDir: String, readMeta: (SparkSession, Path) => M) {
+
+    /** Version dirs under `path`, as (versionNo, dir), in any state. */
+    private def versions(spark: SparkSession, path: String): Seq[(Long, Path)] = {
+      val root = new Path(path)
+      val fs = root.getFileSystem(hadoopConf(spark))
+      if (!fs.exists(root)) return Seq.empty
+      fs.listStatus(root).toSeq.collect {
+        case st if st.isDirectory && st.getPath.getName.matches("v=\\d+") =>
+          (st.getPath.getName.drop(2).toLong, st.getPath)
+      }
+    }
+
+    /** Newest COMPLETE version with its meta, else None. Incomplete
+      * higher versions are skipped, never trusted; only the chosen
+      * version's meta is read. */
+    def latestComplete(spark: SparkSession, path: String): Option[(Long, Path, M)] = {
+      val fs = new Path(path).getFileSystem(hadoopConf(spark))
+      versions(spark, path).sortBy(-_._1).collectFirst {
+        case (n, p) if hasParquet(fs, new Path(p, metaDir)) =>
+          (n, p, readMeta(spark, p))
+      }
+    }
+
+    /** Deletes every version dir but `keep` (-1 keeps none). */
+    def pruneExcept(spark: SparkSession, path: String, keep: Long): Unit = {
+      val fs = new Path(path).getFileSystem(hadoopConf(spark))
+      versions(spark, path).filter(_._1 != keep)
+        .foreach { case (_, p) => fs.delete(p, true) }
+    }
+
+    /** Recovery, safe to run any time: keeps the newest complete version
+      * and prunes interrupted writes and superseded versions (leftovers
+      * of a crash mid-prune). Returns the kept version with its meta, so
+      * a caller that needs the meta next reads it once. */
+    def recoverKeep(spark: SparkSession, path: String): Option[(Long, Path, M)] = {
+      val keep = latestComplete(spark, path)
+      pruneExcept(spark, path, keep.map(_._1).getOrElse(-1L))
+      keep
+    }
+
+    /** The version number the next write lands as: one above any
+      * existing version dir, complete or not. */
+    def nextVersion(spark: SparkSession, path: String): Long =
+      versions(spark, path).map(_._1).foldLeft(-1L)(math.max) + 1
+  }
+
   /** The footer key under which Spark's parquet writer records the
     * frame's schema as JSON. */
   private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"

@@ -84,9 +84,10 @@ class CompactionSpec extends SparkSpec {
     // second pass is a no-op (the amortized-O(1) loop contract)
     val (b2, a2) = Compaction.compactPartitionedDir(spark, root, 1L << 30)
     assert(b2 == 3 && a2 == 3, s"second pass not a no-op: $b2 -> $a2")
-    // staging/old siblings cleaned; nothing inside the root but partitions
+    // staging/old/marker siblings cleaned; nothing inside the root but partitions
     val parent = new java.io.File(root).getParentFile.listFiles().map(_.getName).toSet
-    assert(!parent.exists(_.contains("compact-")), s"staging debris: $parent")
+    assert(!parent.exists(n => Seq("__tmp", "__old", "__swap").exists(n.contains)),
+      s"staging debris: $parent")
     val inRoot = new java.io.File(root).listFiles().map(_.getName)
       .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
     assert(inRoot == Set("batch_id=0", "batch_id=1", "batch_id=2"), s"root contents: $inRoot")
@@ -103,22 +104,25 @@ class CompactionSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def strand(sibling: String, part: String): Unit = {
-      // simulate a crash between rename(p, old) and rename(staging, p):
-      // the partition exists ONLY under the sibling dir
+      // simulate a crash inside the marker swap: the partition exists
+      // ONLY under the sibling dir
       val side = new org.apache.hadoop.fs.Path(root + sibling, part)
       fs.mkdirs(side.getParent)
       assert(fs.rename(new org.apache.hadoop.fs.Path(root, part), side))
       assert(!fs.exists(new org.apache.hadoop.fs.Path(root, part)))
     }
-    strand(".compact-old", "batch_id=1")      // pre-swap original stranded
-    strand(".compact-staging", "batch_id=2")  // fully-built rewrite stranded
+    strand("__old", "batch_id=1")  // original parked, rewrite not staged
+    strand("__tmp", "batch_id=2")  // rewrite staged, not yet published
+    val marker = fs.create(new org.apache.hadoop.fs.Path(root + "__swap"), true)
+    marker.write("batch_id=1\nbatch_id=2".getBytes("UTF-8")); marker.close()
     val (_, after) = Compaction.compactPartitionedDir(spark, root, 1L << 30)
     assert(after == 3, s"expected 3 files after recovery+compaction, got $after")
     // every row of every partition survived, including both stranded ones
     assert(spark.read.parquet(root)
       .select("batch_id", "id", "v").as[(Long, Long, Long)].collect().toSet == expect)
     val parent = new java.io.File(root).getParentFile.listFiles().map(_.getName).toSet
-    assert(!parent.exists(_.contains("compact-")), s"staging debris: $parent")
+    assert(!parent.exists(n => Seq("__tmp", "__old", "__swap").exists(n.contains)),
+      s"staging debris: $parent")
   }
 
   test("compactPartitionedDir minFiles skips small partitions (adaptive trigger)") {

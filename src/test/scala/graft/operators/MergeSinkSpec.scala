@@ -368,6 +368,41 @@ class MergeSinkSpec extends SparkSpec {
     assert(!new java.io.File(path + "__lock").exists())
   }
 
+  /** Plants a FRESH lock on `path` naming `holder`. */
+  private def plantLock(path: String, holder: String): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(new org.apache.hadoop.fs.Path(path + "__lock"), false)
+    out.write(holder.getBytes("UTF-8")); out.close()
+  }
+
+  private def thisHost =
+    java.lang.management.ManagementFactory.getRuntimeMXBean.getName
+      .split("@", 2).last
+
+  test("writer lock: a fresh lock whose holder is a dead pid on this host " +
+       "is broken at once, not waited out") {
+    val path = java.nio.file.Files.createTempDirectory("deadpid").toString + "/t"
+    // Int.MaxValue is above any Linux pid_max: no process has that pid
+    plantLock(path, s"${Int.MaxValue}@$thisHost/dead-writer")
+    MergeSink.upsertParquet(spark, path,
+      withHash(Seq(("A", 1.0)).toDF("ticker", "price")), Seq("ticker"))
+    assert(MergeSink.readTable(spark, path).count() == 1)
+    assert(!new java.io.File(path + "__lock").exists())
+  }
+
+  test("writer lock: a fresh lock from another host is honored") {
+    val path = java.nio.file.Files.createTempDirectory("otherhost").toString + "/t"
+    val holder = s"${Int.MaxValue}@not-$thisHost/other-writer"
+    plantLock(path, holder)
+    val e = intercept[MergeSink.ConcurrentWriteException] {
+      MergeSink.upsertParquet(spark, path,
+        withHash(Seq(("A", 1.0)).toDF("ticker", "price")), Seq("ticker"))
+    }
+    assert(e.getMessage.contains(holder))
+    assert(new java.io.File(path + "__lock").exists())
+  }
+
   test("writer lock: heartbeat keeps a slow-but-alive writer's lock fresh " +
        "past the stale horizon") {
     val path = java.nio.file.Files.createTempDirectory("hbtbl").toString + "/t"

@@ -1,0 +1,105 @@
+package graft.operators
+
+import graft.{FaultFileSystem, SparkSpec}
+import graft.maintenance.Compaction
+import java.nio.file.Files
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.functions._
+
+/** Crash at every step of the one directory swap ([[MergeSink.swapDirs]],
+  * which both the warehouse sinks and [[Compaction]] publish through): a
+  * [[FaultFileSystem]] stops the swap before its k-th mutating call, for
+  * every k a clean swap makes. [[MergeSink.recoverSwap]] and the caller's
+  * next call (a compaction pass) then run on the plain file system, and
+  * the dir must hold every subdir, each wholly of the old generation or
+  * wholly of the new one, with no staging, backup or marker left. */
+class SwapCrashSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def localFs: FileSystem =
+    FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+
+  private val ids = 0L until 40L
+
+  /** `gen`'s rows in partitions p=1 and p=2 (several files each), or
+    * unpartitioned when `partitioned` is false. */
+  private def writeGen(dir: String, gen: String, partitioned: Boolean): Unit = {
+    val df = ids.toDF("id")
+      .select((col("id") % 2 + 1).as("p"), col("id"), lit(gen).as("gen"))
+      .repartition(3)
+    if (partitioned) df.write.partitionBy("p").parquet(dir)
+    else df.write.parquet(dir)
+  }
+
+  /** A dir holding the old generation with the new one staged for the
+    * swap, as a caller leaves it right before [[MergeSink.swapDirs]]. */
+  private def fixture(name: String, partitioned: Boolean): String = {
+    val path = Files.createTempDirectory(name).resolve("t").toString
+    writeGen(path, "old", partitioned)
+    writeGen(MergeSink.stagingPath(path), "new", partitioned)
+    path
+  }
+
+  /** Every (id, gen) row, by partition value `p`. */
+  private def rowsByPartition(path: String): Map[Long, Set[(Long, String)]] =
+    spark.read.parquet(path).select(col("p").cast("long"), col("id"), col("gen"))
+      .as[(Long, Long, String)].collect().toSeq
+      .groupBy(_._1).map { case (p, rs) => p -> rs.map(r => (r._2, r._3)).toSet }
+
+  /** Both partitions hold all their rows, and each swapped unit (a
+    * partition, or the whole dir) holds one generation. */
+  private def assertWhole(path: String, partitioned: Boolean, k: Int): Unit = {
+    val got = rowsByPartition(path)
+    assert(got.keySet == Set(1L, 2L), s"k=$k: partitions ${got.keySet}")
+    got.foreach { case (p, rows) =>
+      assert(rows.map(_._1) == ids.filter(_ % 2 + 1 == p).toSet,
+        s"k=$k: p=$p lost rows")
+    }
+    val units = if (partitioned) got.values else Seq(got.values.flatten)
+    units.foreach { rows =>
+      val gens = rows.map(_._2).toSet
+      assert(gens.size == 1, s"k=$k: a swapped unit mixes generations $gens")
+    }
+    Seq("__tmp", "__old", "__swap").foreach { s =>
+      assert(!new java.io.File(path + s).exists(), s"k=$k: $s left behind")
+    }
+  }
+
+  /** Mutating calls of a clean swap of `subdirs` (k = 0: no fault),
+    * which must publish the new generation whole. */
+  private def cleanCalls(partitioned: Boolean, subdirs: Seq[String]): Int = {
+    val path = fixture("swap_clean", partitioned)
+    val fs = new FaultFileSystem(localFs, failAt = 0)
+    MergeSink.swapDirs(fs, path, subdirs)
+    assertWhole(path, partitioned, k = 0)
+    assert(rowsByPartition(path).values.flatten.map(_._2).toSet == Set("new"))
+    fs.calls
+  }
+
+  private def crashEveryStep(partitioned: Boolean, subdirs: Seq[String])
+                            (nextCall: String => Unit): Unit = {
+    val k0 = cleanCalls(partitioned, subdirs)
+    assert(k0 >= 2 * subdirs.size + 3, s"clean swap made only $k0 calls")
+    info(s"a clean swap of ${subdirs.size} subdir(s) makes $k0 mutating calls")
+    (1 to k0).foreach { k =>
+      val path = fixture(s"swap_k$k", partitioned)
+      val fs = new FaultFileSystem(localFs, failAt = k)
+      intercept[FaultFileSystem.Fault](MergeSink.swapDirs(fs, path, subdirs))
+      MergeSink.recoverSwap(spark, path)
+      nextCall(path)
+      assertWhole(path, partitioned, k)
+    }
+  }
+
+  test("a partition swap crashed at every step recovers to whole generations") {
+    crashEveryStep(partitioned = true, Seq("p=1", "p=2")) { path =>
+      Compaction.compactPartitionedDir(spark, path, 1L << 30)
+    }
+  }
+
+  test("a whole-dir swap crashed at every step recovers to one generation") {
+    crashEveryStep(partitioned = false, Seq("")) { path =>
+      Compaction.compactParquetDir(spark, path, 1L << 30)
+    }
+  }
+}
