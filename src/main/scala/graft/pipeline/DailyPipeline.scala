@@ -11,13 +11,13 @@ import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
   *
   * The reference runs each stage as a subprocess over a CSV file lake,
   * fail-fast, one after another (main_pipeline.py:60-83). That order is a
-  * process boundary, not a data dependency: after `master_sync`, each of
-  * the other six stages reads only its own lake dirs and writes only its
-  * own warehouse tables, each under its own table lock. So
-  * here `master_sync` runs first and alone, then the other stages run
-  * concurrently on the one SparkSession, one stage-named thread and one
-  * Spark job group each (the default FIFO scheduler interleaves their
-  * small jobs). The run summary (A6, src/utils/logger.py:81-117) is
+  * process boundary, not a data dependency: each stage reads only its own
+  * lake dirs and writes only its own warehouse tables, each under its own
+  * table lock, and no stage reads `stg_security_master`. So here all
+  * seven stages start together on the one SparkSession, one stage-named
+  * thread and one Spark job group each (the default FIFO scheduler
+  * interleaves their small jobs), and a day lasts as long as its slowest
+  * stage. The run summary (A6, src/utils/logger.py:81-117) is
   * returned as data in stage order instead of logged text; "fail-fast" is
   * an exception propagating out of `run`.
   *
@@ -69,8 +69,8 @@ object DailyPipeline {
   /** The daily stages in stage order: name, lake dir under `lakeRoot`,
     * and the sync that loads the dir's per-source subdirs into parquet
     * tables under `warehouseRoot`. The lake mirrors the reference's
-    * validation_output/ + data/ trees (FIXTURES.md §1). The first stage
-    * runs alone, before the others. */
+    * validation_output/ + data/ trees (FIXTURES.md §1). The order is the
+    * reference's and the run summary's; every stage starts at once. */
   private val Stages: Seq[(String, String, StageSync)] = Seq(
     // master/<source>/       per-source master list CSVs
     ("master_sync", "master", MasterSync.sync _),
@@ -97,9 +97,9 @@ object DailyPipeline {
       .map(s => s.getPath.getName -> s.getPath.toString).toSeq.sortBy(_._1)
   }
 
-  /** Runs every stage whose input directory exists: `master_sync` first,
-    * then the others concurrently. Each stage's outcome (rows or error) is
-    * captured as a [[StageResult]], returned in stage order. A stage's
+  /** Runs every stage whose input directory exists, all of them
+    * concurrently. Each stage's outcome (rows or error) is captured as a
+    * [[StageResult]], returned in stage order. A stage's
     * rows are the rows of the tables it wrote, read from their parquet
     * footers: zero Spark jobs, where a count() is a listing job plus two
     * scan jobs.
@@ -121,18 +121,12 @@ object DailyPipeline {
   def run(spark: SparkSession, lakeRoot: String, warehouseRoot: String,
           asOf: Column, failFast: Boolean = true): Seq[StageResult] = {
     val runT0 = System.nanoTime()
-    val registered = Stages.flatMap { case (name, dir, sync) =>
+    schedule(spark.sparkContext, runT0, Stages.flatMap { case (name, dir, sync) =>
       val srcs = sources(spark, s"$lakeRoot/$dir")
       if (srcs.isEmpty) None
       else Some(name -> (() => sync(spark, srcs, warehouseRoot, asOf)
         .map(t => ArtifactIO.footerRowCount(spark, s"$warehouseRoot/$t")).sum))
-    }
-    val (first, rest) = registered.partition(_._1 == Stages.head._1)
-    val alone = first.map { case (name, body) => timed(runT0, name, body) }
-    alone.foreach { case (r, err) =>
-      if (failFast) err.foreach(e => throw new PipelineFailedException(Seq(r), e))
-    }
-    alone.map(_._1) ++ schedule(spark.sparkContext, runT0, rest, failFast)
+    }, failFast)
   }
 
   /** A stage body's outcome, its start offset taken from `runT0`. */

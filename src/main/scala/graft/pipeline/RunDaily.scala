@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions.lit
   *
   * Prints one line per stage (name, landed row count, start offset and
   * duration), then the run's wall, and exits non-zero if any stage failed
-  * — the reference's fail-fast contract. Stages after `master_sync`
-  * overlap, so their durations do not sum to the wall.
+  * — the reference's fail-fast contract. The stages overlap, so their
+  * durations do not sum to the wall.
   */
 object RunDaily {
   def main(args: Array[String]): Unit = {

@@ -2,9 +2,16 @@ package graft.sources
 
 import graft.functions.CleanFns
 import graft.operators.Conform
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
 
 /** File-lake scan operators (SURVEY.md §2.1 S1–S5): lineage-tagged CSV
   * readers replacing the reference's glob-walk + pd.read_csv loops.
@@ -15,9 +22,24 @@ import org.apache.spark.sql.functions._
   *  - S4 identity-from-path       (00_price_history_cleaner.py:36-68)
   *  - S5 BOM-tolerant read        (00_holdings_data_cleaner.py:183)
   *
-  * All readers attach `origin_file` lineage via input_file_name() — one
-  * distributed scan replaces the per-file Python loop, so a directory of a
-  * million CSVs is read with full task parallelism.
+  * Every read lists its files on the driver and binds each file's
+  * columns by that file's own header, as pd.read_csv does per file. The
+  * header (first non-blank line, BOM stripped) is read on the driver and
+  * parsed with Spark's own CSV parser settings; blank and duplicate names
+  * get Spark's safe names (`_c<i>`, name plus index). The files are then
+  * grouped by header and each group is read with an explicit all-string
+  * schema of its names: no schema-inference job runs, and two files with
+  * swapped columns come back by name, where a plain multi-file read binds
+  * every file by position to the first file's header. A 0-byte file has
+  * no header and is skipped; a read with no file left fails naming what
+  * it read.
+  *
+  * Each header group is handed to the caller's `conform` on its own, and
+  * the conformed groups are unioned by name: a per-file decision (does
+  * this file carry `ticker`?) is made per header, and a rename (`price`
+  * -> `nav_price`) cannot collide with a file that already has the
+  * target name. Each group is one distributed scan with `origin_file`
+  * lineage via input_file_name().
   * Name predicates match the file name only, like the reference's globs:
   * a directory on the way (`catalog/`, `holdings_history/`) never
   * filters a file out.
@@ -32,34 +54,71 @@ import org.apache.spark.sql.functions._
   */
 object CsvLake {
 
-  private def base(spark: SparkSession) =
-    spark.read
-      .option("header", "true")
-      .option("encoding", "UTF-8")          // S5: Spark strips the BOM
-      .option("nullValue", "")
-      .option("mode", "PERMISSIVE")
+  private val Options = Map("header" -> "true", "encoding" -> "UTF-8",
+    "nullValue" -> "", "mode" -> "PERMISSIVE")
 
-  /** S1: read one staged CSV with normalized headers + lineage. */
-  def readCsv(spark: SparkSession, path: String): DataFrame =
-    Conform.normHeaders(base(spark).csv(path))
-      .withColumn("origin_file", input_file_name())
+  /** A file's first non-blank line with any BOM stripped; None for a
+    * file with no such line (0 bytes, or blank lines only). */
+  private def headerLine(conf: Configuration, file: Path): Option[String] = {
+    val in = new BufferedReader(new InputStreamReader(
+      file.getFileSystem(conf).open(file), StandardCharsets.UTF_8))
+    try Iterator.continually(in.readLine()).takeWhile(_ != null)
+      .map(_.stripPrefix("\uFEFF")).find(_.trim.nonEmpty)
+    finally in.close()
+  }
 
-  /** The last path segment of a file URI. */
-  private def fileName(uri: Column): Column = substring_index(uri, "/", -1)
+  /** Reads `files` bound by header (see above): one all-string scan per
+    * distinct header, in the order of each header's first file, with
+    * normalized headers and `origin_file` = `lineage` of the file's URI,
+    * each passed through `conform`, then unioned by name. `what` names
+    * the read when no file has a header. */
+  private def read(spark: SparkSession, files: Seq[Path], what: => String,
+                   lineage: Column => Column, conform: DataFrame => DataFrame): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val sql = spark.sessionState.conf
+    val opts = new CSVOptions(Options, columnPruning = true, sql.sessionLocalTimeZone)
+    val parser = new CsvParser(opts.asParserSettings)
+    val headed = files.flatMap(f => headerLine(conf, f).map { line =>
+      CSVUtils.makeSafeHeader(parser.parseLine(line), sql.caseSensitiveAnalysis, opts)
+        .toSeq -> f
+    })
+    require(headed.nonEmpty, s"no CSV file with a header in $what")
+    headed.map(_._1).distinct.map { names =>
+      val group = headed.collect { case (`names`, f) =>
+        f.toString.replaceAll("""([\\\[\]{}*?])""", """\\$1""")
+      }
+      conform(Conform.normHeaders(spark.read.options(Options)
+          .schema(StructType(names.map(StructField(_, StringType))))
+          .csv(group: _*))
+        .withColumn("origin_file", lineage(input_file_name())))
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
+  }
+
+  /** S1: read one staged CSV, or the visible files of a dir, with
+    * normalized headers + lineage, each header group through `conform`. */
+  def readCsv(spark: SparkSession, path: String,
+              conform: DataFrame => DataFrame = identity): DataFrame =
+    read(spark, listFlat(spark, path), path, identity, conform)
 
   /** S2: read N per-source directories, tag `source` from the directory
     * name, align schemas by name (missing columns -> null), union. Skips
-    * error/log files like the reference's glob filter. Each directory is
-    * read flat and is its source's only one, so `origin_file` is the file
-    * name: (`source`, `origin_file`) still names the file. */
-  def readSourceDirs(spark: SparkSession, dirsBySource: Iterable[(String, String)]): DataFrame =
+    * error/log files in the listing, like the reference's glob filter:
+    * they are never opened. Each directory is read flat and is its
+    * source's only one, so `origin_file` is the file name: (`source`,
+    * `origin_file`) still names the file. `conform` sees each header
+    * group with `source` set. */
+  def readSourceDirs(spark: SparkSession, dirsBySource: Iterable[(String, String)],
+                     conform: DataFrame => DataFrame = identity): DataFrame = {
+    require(dirsBySource.nonEmpty, "no source dir to read")
     dirsBySource.map { case (source, dir) =>
-      Conform.normHeaders(
-          base(spark).option("pathGlobFilter", "*.csv").csv(dir))
-        .withColumn("origin_file", fileName(input_file_name()))
-        .filter(!lower(col("origin_file")).rlike("error|log"))
-        .withColumn("source", lit(source))
+      val files = listFlat(spark, dir).filter { p =>
+        p.getName.endsWith(".csv") &&
+          !p.getName.toLowerCase(java.util.Locale.ROOT).matches(".*(error|log).*")
+      }
+      read(spark, files, dir, substring_index(_, "/", -1),
+        df => conform(df.withColumn("source", lit(source))))
     }.reduce(_.unionByName(_, allowMissingColumns = true))
+  }
 
   /** A name Spark's file listing skips, with everything under it. */
   private def hidden(name: String): Boolean =
@@ -91,19 +150,21 @@ object CsvLake {
       .filter(s => s.isFile && !hidden(s.getPath.getName)).map(_.getPath).sortBy(_.toString)
   }
 
-  /** Reads exactly `files` (at least one) with normalized headers and
-    * `origin_file` lineage as the file's full URI. Glob characters in a
-    * name are escaped: a path here names one file, never a pattern. */
-  def readFiles(spark: SparkSession, files: Seq[Path]): DataFrame =
-    Conform.normHeaders(base(spark).csv(
-        files.map(_.toString.replaceAll("""([\\\[\]{}*?])""", """\\$1""")): _*))
-      .withColumn("origin_file", input_file_name())
+  /** Reads exactly `files` (at least one with a header), bound by
+    * header, with normalized headers and `origin_file` lineage as the
+    * file's full URI, each header group through `conform`. Glob
+    * characters in a name are escaped: a path here names one file, never
+    * a pattern. */
+  def readFiles(spark: SparkSession, files: Seq[Path],
+                conform: DataFrame => DataFrame = identity): DataFrame =
+    read(spark, files, files.mkString("[", ", ", "]"), identity, conform)
 
   /** S3: [[listRecursive]], then [[readFiles]]. `origin_file` keeps the
     * full URI: [[withPathIdentity]] parses directories too. */
   def readRecursive(spark: SparkSession, root: String,
                     nameMustContain: String = "", nameMustNotContain: String = ""): DataFrame =
-    readFiles(spark, listRecursive(spark, root, nameMustContain, nameMustNotContain))
+    read(spark, listRecursive(spark, root, nameMustContain, nameMustNotContain), root,
+      identity, identity)
 
   /** S4: inject (ticker, asset_type, as_of_date) identity parsed from the
     * file path — the reference's filename-stem / path-segment conventions. */

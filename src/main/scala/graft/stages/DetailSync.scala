@@ -68,8 +68,8 @@ object DetailSync {
       d.withColumn(c, CleanFns.nullifyOutOfRange(
         CleanFns.rescaleOverflow(col(c).cast("double"))).cast(Schemas.metric)))
 
-  /** Normalize + display-parse one raw source frame into the shared wide
-    * shape: the per-source half of [[sync]]. */
+  /** Normalize + display-parse one header group of a source's screener
+    * files into the shared wide shape: the per-group half of [[sync]]. */
   def prepareWide(raw: DataFrame, source: String): DataFrame =
     parseDisplay(normalize(raw, source),
       percentCols = Seq("expense_ratio", "initial_charge", "exit_charge",
@@ -93,7 +93,7 @@ object DetailSync {
     Sync.changedOnly(spark, "detail_sync", sources, warehouseRoot, Tables,
       CsvLake.listFlat(spark, _)) { parts =>
       val wide = Sync.union(parts) { (source, files) =>
-        prepareWide(CsvLake.readFiles(spark, files), source)
+        CsvLake.readFiles(spark, files, prepareWide(_, source))
       }
       Tables.zip(Seq(
         slice(wide, Schemas.fundInfo),

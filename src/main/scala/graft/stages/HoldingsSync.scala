@@ -26,9 +26,9 @@ object HoldingsSync {
     "weight" -> "holding_percentage", "value" -> "holding_percentage",
     "shares" -> "shares_held")
 
-  /** Clean per-source holdings files: identity-from-path when columns are
-    * missing, percent strings parsed, FT footer rows dropped (F7),
-    * over-long holding tickers nullified (F9). */
+  /** Clean one header group of a source's holdings files: identity from
+    * the path when the header has no `ticker`, percent strings parsed, FT
+    * footer rows dropped (F7), over-long holding tickers nullified (F9). */
   def cleanHoldings(rawWithLineage: DataFrame, source: String): DataFrame = {
     val normed = Conform.normHeaders(rawWithLineage)
     val withId =
@@ -74,7 +74,9 @@ object HoldingsSync {
   }
 
   /** Conform already-long allocation rows (FT/SA shape: item_name + value
-    * columns) to the stg_allocations schema. */
+    * columns), one header group at a time, to the stg_allocations schema:
+    * identity from the path when the header has no `ticker`, and
+    * `allocationType` where it has no `allocation_type`. */
   def cleanAllocations(rawWithLineage: DataFrame, source: String,
                        allocationType: String): DataFrame = {
     val normed = Conform.normHeaders(rawWithLineage)
@@ -112,7 +114,7 @@ object HoldingsSync {
     Sync.changedOnly(spark, "holdings_sync", sources, warehouseRoot, Seq(table),
       CsvLake.listRecursive(spark, _, nameMustContain = "holdings")) { parts =>
       Sync.upsertHashed(spark, warehouseRoot, table, asOf, Sync.union(parts) {
-        (source, files) => cleanHoldings(CsvLake.readFiles(spark, files), source)
+        (source, files) => CsvLake.readFiles(spark, files, cleanHoldings(_, source))
       })
     }
   }
@@ -126,7 +128,7 @@ object HoldingsSync {
     Sync.changedOnly(spark, "allocations_sync", sources, warehouseRoot, Seq(table),
       CsvLake.listRecursive(spark, _, nameMustContain = "allocations")) { parts =>
       Sync.upsertHashed(spark, warehouseRoot, table, asOf, Sync.union(parts) {
-        (source, files) => cleanAllocations(CsvLake.readFiles(spark, files), source, "sector")
+        (source, files) => CsvLake.readFiles(spark, files, cleanAllocations(_, source, "sector"))
       })
     }
   }

@@ -36,12 +36,18 @@ object MasterSync {
     "full_ticker" -> "ticker", "symbol" -> "ticker", "fund_name" -> "name",
     "fund" -> "name", "type" -> "asset_type")
 
-  /** Clean one source file (00_master_list_cleaner.py:22-77): header
-    * normalize, rename, conform, key normalize, enum fixes, within-source
-    * dedup keep-first. */
+  /** Clean one source file, or one header group of a source dir's files
+    * (00_master_list_cleaner.py:22-77): header normalize, rename, conform,
+    * key normalize, enum fixes, dedup keep-first. [[consolidate]] dedups
+    * the groups of one source on the same key and order. A list with no
+    * ticker column after the renames fails, naming its columns: its rows
+    * could only all be rejected, and the list would silently stop
+    * refreshing its source's tickers. */
   def clean(raw: DataFrame): DataFrame = {
-    val spec = Conform.SourceSpec(RenameMap, ExpectedColumns)
-    val conformed = spec(raw)
+    val named = Conform.rename(Conform.normHeaders(raw), RenameMap)
+    require(named.columns.contains("ticker"),
+      s"master list has no ticker column: ${named.columns.mkString(", ")}")
+    val conformed = Conform.conform(named, ExpectedColumns)
       .withColumn("ticker", CleanFns.normKey(col("ticker")))
       .withColumn("asset_type", CleanFns.mapEnum(CleanFns.normKey(col("asset_type")),
         Map("MUTUAL FUND" -> "FUND", "MUTUALFUND" -> "FUND")))
@@ -54,14 +60,15 @@ object MasterSync {
   }
 
   /** Consolidate cleaned per-source frames (01_source_consolidator.py:67-95):
-    * union-by-name, J4 keyed dedup keep-first after multi-key sort. Duplicates
-    * ACROSS sources are deliberately kept (same ticker from FT and YF are two
-    * rows — source is part of the key). */
+    * union-by-name, J4 keyed dedup keep-first after multi-key sort, ties
+    * broken by name as [[clean]] breaks them. Duplicates ACROSS sources
+    * are deliberately kept (same ticker from FT and YF are two rows —
+    * source is part of the key). */
   def consolidate(cleaned: Seq[DataFrame]): DataFrame = {
     val all = cleaned.reduce(_.unionByName(_, allowMissingColumns = true))
     Dedup.keyedKeepFirst(all, Seq("ticker", "asset_type", "source"),
       Seq(col("source").asc, col("asset_type").asc, col("ticker").asc,
-        col("date_added").asc_nulls_last))
+        col("date_added").asc_nulls_last, col("name").asc_nulls_last))
   }
 
   /** Validation rules (02_master_list_validator.py:37-62), in the
@@ -139,14 +146,14 @@ object MasterSync {
   def run(spark: SparkSession, rawBySource: Seq[DataFrame], warehousePath: String,
           asOf: Column, rejectSink: Option[String] = None,
           readyDir: Option[String] = None): DataFrame = {
-    ingest(spark, rawBySource, warehousePath, asOf, rejectSink, readyDir)
+    ingest(spark, rawBySource.map(clean), warehousePath, asOf, rejectSink, readyDir)
     MergeSink.readTable(spark, warehousePath)
   }
 
-  private def ingest(spark: SparkSession, rawBySource: Seq[DataFrame],
+  private def ingest(spark: SparkSession, cleaned: Seq[DataFrame],
                      warehousePath: String, asOf: Column, rejectSink: Option[String],
                      readyDir: Option[String]): Unit = {
-    val (valid, rejects) = validate(consolidate(rawBySource.map(clean)))
+    val (valid, rejects) = validate(consolidate(cleaned))
     rejectSink.foreach(Sync.writeRejects(rejects, _))
     val batch = toWarehouse(valid, asOf)
     load(spark, warehousePath, readyDir.map(remediate(spark, batch, _)).getOrElse(batch), asOf)
@@ -161,20 +168,21 @@ object MasterSync {
         StructType(Seq(StructField("_", IntegerType))))
       .select(asOf.cast("string")).head().getString(0)
 
-  /** The master stage: each source dir's master list, rejects to
-    * `rejects/master`, into stg_security_master. It reads its whole lake
-    * every day (no manifest, see [[Sync]]): `last_seen` and the status
-    * lifecycle follow `asOf`. The ready-to-load generation is
-    * run-scoped, `staging/master_ready/dt=<asOf>`: a retry of the same
-    * day resumes from it, and a later day never reads an earlier day's
-    * batch. Once the load succeeded, earlier days' generations have
-    * served their resume purpose and are deleted, or the staging area
-    * would hold one master batch per day forever. */
+  /** The master stage: each source dir's master list (each header group
+    * cleaned on its own), rejects to `rejects/master`, into
+    * stg_security_master. It reads its whole lake every day (no
+    * manifest, see [[Sync]]): `last_seen` and the status lifecycle follow
+    * `asOf`. The ready-to-load generation is run-scoped,
+    * `staging/master_ready/dt=<asOf>`: a retry of the same day resumes
+    * from it, and a later day never reads an earlier day's batch. Once
+    * the load succeeded, earlier days' generations have served their
+    * resume purpose and are deleted, or the staging area would hold one
+    * master batch per day forever. */
   def sync(spark: SparkSession, sources: Seq[(String, String)],
            warehouseRoot: String, asOf: Column): Seq[String] = {
     val readyRoot = new org.apache.hadoop.fs.Path(s"$warehouseRoot/staging/master_ready")
     val generation = this.generation(spark, asOf)
-    ingest(spark, sources.map { case (_, dir) => CsvLake.readCsv(spark, dir) },
+    ingest(spark, sources.map { case (_, dir) => CsvLake.readCsv(spark, dir, clean) },
       s"$warehouseRoot/$Table", asOf,
       rejectSink = Some(s"$warehouseRoot/rejects/master"),
       readyDir = Some(s"$readyRoot/$generation"))

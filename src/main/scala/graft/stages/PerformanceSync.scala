@@ -29,32 +29,37 @@ object PerformanceSync {
     "nav_price" -> StringType, "currency" -> StringType,
     "as_of_date" -> StringType, "scrape_date" -> StringType)
 
-  /** Clean a glob-union of raw NAV files (00_performance_data_cleaner.py:45-146):
-    * conform, normalize keys, dedup keep-last (last file read wins, made
-    * deterministic by origin_file ordering), coerce dates/prices.
-    *
-    * `origin_file` lineage survives the clean — the reference persists it
-    * through the merge (00_performance_data_cleaner.py:79) and it reaches
-    * stg_daily_nav. Within one file the reference keeps the last row READ;
-    * CSV row order isn't an exposed column in a distributed scan, so
-    * payload columns pin a deterministic within-file survivor instead. */
-  def cleanNav(raw: DataFrame): DataFrame = {
-    val spec = Conform.SourceSpec(
-      renameMap = Map("price" -> "nav_price", "date" -> "as_of_date"),
-      expected = NavColumns ++ Seq("origin_file" -> StringType))
-    val conformed = spec(raw)
+  /** Conform one header group of raw NAV files
+    * (00_performance_data_cleaner.py:45-146): rename drift, normalize
+    * keys, coerce dates/prices. `origin_file` lineage survives — the
+    * reference persists it through the merge
+    * (00_performance_data_cleaner.py:79) and it reaches stg_daily_nav. */
+  def conformNav(raw: DataFrame): DataFrame =
+    Conform.SourceSpec(
+        renameMap = Map("price" -> "nav_price", "date" -> "as_of_date"),
+        expected = NavColumns ++ Seq("origin_file" -> StringType))(raw)
       .withColumn("ticker", CleanFns.normKey(col("ticker")))
       .withColumn("asset_type", CleanFns.normKey(col("asset_type")))
       .withColumn("nav_price", col("nav_price").cast(Schemas.money))
       .withColumn("as_of_date", CleanFns.parseDate(col("as_of_date")))
       .withColumn("scrape_date", CleanFns.parseDate(col("scrape_date")))
+
+  /** Dedup conformed NAV rows keep-last: the last file read wins, made
+    * deterministic by origin_file ordering. Within one file the reference
+    * keeps the last row READ; CSV row order isn't an exposed column in a
+    * distributed scan, so payload columns pin a deterministic within-file
+    * survivor instead. */
+  def latestNav(conformed: DataFrame): DataFrame =
     Dedup.keyedKeepFirst(conformed,
       Seq("ticker", "asset_type", "source", "as_of_date"),
       Seq(col("origin_file").desc_nulls_last,
         col("scrape_date").desc_nulls_last,
         col("nav_price").desc_nulls_last,
         col("currency").desc_nulls_last))
-  }
+
+  /** Clean a union of raw NAV files with one header: [[conformNav]], then
+    * [[latestNav]]. */
+  def cleanNav(raw: DataFrame): DataFrame = latestNav(conformNav(raw))
 
   /** Validator rules (01_performance_validator.py:42-78) with explicit
     * reason priority: missing > non-positive > future (SURVEY.md §7.4.4). */
@@ -70,7 +75,7 @@ object PerformanceSync {
     Validate.split(cleaned, navRules(today))
 
   /** The NAV stage: every source dir's NAV files (error/log files
-    * skipped) cleaned, validated with rejects to `rejects/nav`, and merged
+    * skipped), each header group conformed on its own, deduped, validated with rejects to `rejects/nav`, and merged
     * into stg_daily_nav — K4 content-guarded (no row_hash on this table,
     * db_connector.py:126-147): a matched row is taken only when a column
     * other than `updated_at` differs. `updated_at` is not content, as in
@@ -78,7 +83,8 @@ object PerformanceSync {
     * stored row and its bucket is not rewritten. */
   def syncNav(spark: SparkSession, sources: Seq[(String, String)],
               warehouseRoot: String, asOf: Column): Seq[String] = {
-    val (valid, rejects) = validateNav(cleanNav(CsvLake.readSourceDirs(spark, sources)), asOf)
+    val (valid, rejects) =
+      validateNav(latestNav(CsvLake.readSourceDirs(spark, sources, conformNav)), asOf)
     Sync.writeRejects(rejects, s"$warehouseRoot/rejects/nav")
     val table = "stg_daily_nav"
     MergeSink.upsertParquet(spark, s"$warehouseRoot/$table",
@@ -99,8 +105,9 @@ object PerformanceSync {
     "low" -> StringType, "close" -> StringType, "adj_close" -> StringType,
     "volume" -> StringType)
 
-  /** Clean per-ticker history files (00_price_history_cleaner.py:36-68):
-    * identity from path, header drift absorbed, display-numerics parsed. */
+  /** Clean one header group of per-ticker history files
+    * (00_price_history_cleaner.py:36-68): identity from path, header
+    * drift absorbed, display-numerics parsed. */
   def cleanHistory(rawWithLineage: DataFrame, source: String): DataFrame = {
     val withId = CsvLake.withPathIdentity(Conform.normHeaders(rawWithLineage))
       .withColumn("source", lit(source))
@@ -128,7 +135,7 @@ object PerformanceSync {
       CsvLake.listRecursive(spark, _, nameMustContain = "history",
         nameMustNotContain = "holdings")) { parts =>
       Sync.upsertHashed(spark, warehouseRoot, table, asOf, Sync.union(parts) {
-        (source, files) => cleanHistory(CsvLake.readFiles(spark, files), source)
+        (source, files) => CsvLake.readFiles(spark, files, cleanHistory(_, source))
       })
     }
   }
@@ -139,9 +146,9 @@ object PerformanceSync {
     "date" -> "ex_date", "ex_dividend_date" -> "ex_date",
     "dividend" -> "amount", "cash_amount" -> "amount")
 
-  /** Clean per-ticker dividend files (00_dividend_history_cleaner.py:28-44,
-    * 03_dividend_loader.py:37-64): rename drift, defaults, F1 key drop,
-    * A4 full-natural-key dedup. */
+  /** Clean one header group of per-ticker dividend files
+    * (00_dividend_history_cleaner.py:28-44, 03_dividend_loader.py:37-64):
+    * rename drift, defaults, F1 key drop, A4 full-natural-key dedup. */
   def cleanDividends(rawWithLineage: DataFrame, source: String): DataFrame = {
     val withId = CsvLake.withPathIdentity(Conform.normHeaders(rawWithLineage))
       .withColumn("source", lit(source))
@@ -168,7 +175,7 @@ object PerformanceSync {
     Sync.changedOnly(spark, "dividend_sync", sources, warehouseRoot, Seq(table),
       CsvLake.listRecursive(spark, _, nameMustContain = "dividend")) { parts =>
       Sync.upsertHashed(spark, warehouseRoot, table, asOf, Sync.union(parts) {
-        (source, files) => cleanDividends(CsvLake.readFiles(spark, files), source)
+        (source, files) => CsvLake.readFiles(spark, files, cleanDividends(_, source))
       })
     }
   }

@@ -188,10 +188,9 @@ class DailyPipelineSpec extends SparkSpec {
       lit("2024-05-01"))
     assert(results.forall(_.ok), results.mkString("; "))
     assert(results.map(_.stage) == stageOrder)
-    // master_sync runs alone before the rest: every other stage starts
-    // after it ended
-    val master = results.head
-    assert(results.tail.forall(_.startMs >= master.startMs + master.durationMs),
+    // one schedule: every stage starts before the first stage ends
+    val firstEnd = results.map(r => r.startMs + r.durationMs).min
+    assert(results.forall(_.startMs < firstEnd),
       results.map(r => (r.stage, r.startMs, r.durationMs)).mkString("; "))
     assert(leftovers(wh).isEmpty, leftovers(wh).mkString("; "))
     // the stage threads ended with the call
@@ -238,6 +237,39 @@ class DailyPipelineSpec extends SparkSpec {
     assert(tableCounts(wh) == tableCounts(s"$root/clean"))
     // history, holdings, allocations and the four detail tables
     assert(tableCounts(wh).keySet.size == 7, tableCounts(wh))
+  }
+
+  test("failFast: a failing master cancels its siblings like any stage, " +
+       "a fixed rerun converges") {
+    val root = Files.createTempDirectory("lakemaster")
+    val wh = s"$root/warehouse"
+    val lake = Path.of(fullLake(root))
+    val goodMaster = "ticker,asset_type,name,status,source,date_added\n" +
+      "VUSA,ETF,Vanguard SP500,new,Financial Times,2024-05-01\n"
+    // a master list with no ticker column
+    write(lake.resolve("master/Financial Times"), "ft_master.csv",
+      "asset_type,name,status,source,date_added\n" +
+        "ETF,Vanguard SP500,new,Financial Times,2024-05-01\n")
+
+    val e = intercept[DailyPipeline.PipelineFailedException] {
+      DailyPipeline.run(spark, lake.toString, wh, lit("2024-05-01"))
+    }
+    assert(e.summary.map(_.stage) == Seq("master_sync") && !e.summary.head.ok,
+      e.summary.mkString("; "))
+    assert(e.summary.head.error.exists(_.contains("no ticker column")), e.summary)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    assert(leftovers(wh).isEmpty, leftovers(wh).mkString("; "))
+
+    write(lake.resolve("master/Financial Times"), "ft_master.csv", goodMaster)
+    val rerun = DailyPipeline.run(spark, lake.toString, wh, lit("2024-05-01"))
+    val clean = DailyPipeline.run(spark, lake.toString, s"$root/clean",
+      lit("2024-05-01"))
+    assert(rerun.forall(_.ok), rerun.mkString("; "))
+    assert(rerun.map(r => r.stage -> r.rows) == clean.map(r => r.stage -> r.rows))
+    assert(rerun.map(_.stage) == stageOrder)
+    assert(tableCounts(wh) == tableCounts(s"$root/clean"))
+    // the seven stages' ten stg_* tables, the four detail ones included
+    assert(tableCounts(wh).keySet.size == 10, tableCounts(wh))
   }
 
   test("Retention.purgeDatedDirs drops only dirs older than the cutoff") {

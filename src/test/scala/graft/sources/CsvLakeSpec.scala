@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.operators.Conform
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path}
 
@@ -57,5 +58,68 @@ class CsvLakeSpec extends SparkSpec {
     assert(rows == Set(
       ("VUSA", "ETF", "2024-05-02"),
       ("ABC", "FUND", "2024-05-02")))
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Set[(String, String)] =
+    df.select("ticker", "name").as[(String, String)].collect().toSet
+
+  private val swapped = Set(("VUSA", "Vanguard"), ("ABC", "Alpha"))
+
+  test("readSourceDirs: files with swapped headers come back by name") {
+    val dir = Files.createTempDirectory("swapped").resolve("ft")
+    write(dir, "a.csv", "ticker,name\nVUSA,Vanguard\n")
+    write(dir, "b.csv", "name,ticker\nAlpha,ABC\n")
+    assert(rows(CsvLake.readSourceDirs(spark, Seq("ft" -> dir.toString))) == swapped)
+  }
+
+  test("readFiles: files with swapped headers in a recursive root come back by name") {
+    val root = Files.createTempDirectory("swapped_rec")
+    write(root.resolve("x"), "a_history.csv", "ticker,name\nVUSA,Vanguard\n")
+    write(root.resolve("y").resolve("z"), "b_history.csv", "name,ticker\nAlpha,ABC\n")
+    assert(rows(CsvLake.readFiles(spark,
+      CsvLake.listRecursive(spark, root.toString, "history"))) == swapped)
+  }
+
+  test("header edge cases: BOM, quoted comma, Spark's safe names, " +
+       "header-only and 0-byte files, no file") {
+    val root = Files.createTempDirectory("headers")
+    write(root.resolve("plain"), "a.csv", "Ticker,Name\nVUSA,Vanguard\n")
+    write(root.resolve("bom"), "a.csv", "\uFEFFTicker,Name\nVUSA,Vanguard\n")
+    def read(d: String) = CsvLake.readCsv(spark, root.resolve(d).toString)
+      .drop("origin_file").as[(String, String)].collect().toSeq
+    assert(read("bom") == read("plain"))
+    assert(CsvLake.readCsv(spark, root.resolve("bom").toString).columns.toSeq ==
+      Seq("ticker", "name", "origin_file"))
+
+    write(root.resolve("quoted"), "a.csv", "ticker,\"name, full\"\nVUSA,\"Vanguard, Inc\"\n")
+    val quoted = CsvLake.readCsv(spark, root.resolve("quoted").toString)
+    assert(quoted.columns.toSeq == Seq("ticker", "name,_full", "origin_file"))
+    assert(quoted.select("`name,_full`").as[String].head() == "Vanguard, Inc")
+
+    // blank and duplicate names: the names Spark's own header inference gives
+    val odd = root.resolve("odd")
+    write(odd, "a.csv", "a,,B,b,a\n1,2,3,4,5\n")
+    val inferred = Conform.normHeaders(spark.read.option("header", "true")
+      .csv(odd.toString)).columns.toSeq
+    assert(inferred == Seq("a0", "_c1", "b2", "b3", "a4"))
+    val df = CsvLake.readCsv(spark, odd.toString)
+    assert(df.columns.toSeq == inferred :+ "origin_file")
+    assert(df.drop("origin_file").as[(String, String, String, String, String)]
+      .collect().toSeq == Seq(("1", "2", "3", "4", "5")))
+
+    write(root.resolve("empty"), "header_only.csv", "ticker,name\n")
+    write(root.resolve("empty"), "zero.csv", "")
+    assert(CsvLake.readCsv(spark, root.resolve("empty").toString).count() == 0)
+    write(root.resolve("zero"), "zero.csv", "")
+    write(root.resolve("zero"), "z.csv", "ticker,name\nVUSA,Vanguard\n")
+    assert(rows(CsvLake.readCsv(spark, root.resolve("zero").toString)) ==
+      Set(("VUSA", "Vanguard")))
+
+    val none = root.resolve("none")
+    write(none, "notes.txt", "not a csv\n")
+    val e = intercept[IllegalArgumentException] {
+      CsvLake.readSourceDirs(spark, Seq("src" -> none.toString))
+    }
+    assert(e.getMessage.contains(none.toString), e.getMessage)
   }
 }

@@ -72,6 +72,23 @@ class DetailHoldingsSpec extends SparkSpec {
     assert(top == ("12.1000", 3))
   }
 
+  test("HoldingsSync: a file with `ticker` and one without each bind their own rows") {
+    val root = Files.createTempDirectory("holdings_mixed")
+    val day = root.resolve("lake/etf/2024-05-02")
+    Files.createDirectories(day)
+    // sorted first: carries its ticker in a column
+    Files.writeString(day.resolve("AAA_etf_holdings.csv"),
+      "ticker,asset_type,name,symbol,weight\nVUSA,ETF,Apple,AAPL,5.9%\n")
+    // no ticker column: identity from the file name
+    Files.writeString(day.resolve("BBB_etf_holdings.csv"),
+      "name,symbol,weight\nMicrosoft,MSFT,5.1%\n")
+    assert(HoldingsSync.syncHoldings(spark, Seq("Financial Times" -> s"$root/lake"),
+      root.toString, lit("2024-05-02")) == Seq("stg_fund_holdings"))
+    val rows = MergeSink.readTable(spark, s"$root/stg_fund_holdings")
+      .select("ticker", "holding_name").as[(String, String)].collect().toSet
+    assert(rows == Set(("VUSA", "Apple"), ("BBB", "Microsoft")))
+  }
+
   test("HoldingsSync: EAV melt via unpivot matches the stg_allocations shape") {
     val wide = Seq(("VUSA", "ETF", "Financial Times", "2024-05-02", 62.1, 25.3, 12.6))
       .toDF("ticker", "asset_type", "source", "as_of_date",

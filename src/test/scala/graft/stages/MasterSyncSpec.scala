@@ -29,6 +29,21 @@ class MasterSyncSpec extends SparkSpec {
     assert(MasterSync.consolidate(Seq(ft, yf)).count() == 2)
   }
 
+  test("sync binds each master file by its own header") {
+    val root = Files.createTempDirectory("master_swapped")
+    val dir = root.resolve("lake/ft")
+    Files.createDirectories(dir)
+    Files.writeString(dir.resolve("a.csv"),
+      "ticker,name,asset_type,status,source\nVUSA,Vanguard,ETF,new,Financial Times\n")
+    Files.writeString(dir.resolve("b.csv"),
+      "name,ticker,asset_type,status,source\nAlpha,ABC,FUND,new,Financial Times\n")
+    MasterSync.sync(spark, Seq("Financial Times" -> dir.toString), root.toString,
+      lit("2024-05-01"))
+    val rows = spark.read.parquet(s"$root/stg_security_master")
+      .select("ticker", "name").as[(String, String)].collect().toSet
+    assert(rows == Set(("VUSA", "Vanguard"), ("ABC", "Alpha")))
+  }
+
   test("validate: reference rules with ordered reasons") {
     val df = Seq(
       ("VUSA", "ETF", "ok", "new", "FT", "2024-01-01"),

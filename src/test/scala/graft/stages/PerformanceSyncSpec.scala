@@ -131,6 +131,22 @@ class PerformanceSyncSpec extends SparkSpec {
       Seq("VUSA"))
   }
 
+  test("a NAV dir with a `price` file and a `nav_price` file loads both") {
+    val root = Files.createTempDirectory("nav_drift")
+    write(root.resolve("ft"), "a.csv", navHeader +
+      "VUSA,ETF,Financial Times,101.5,USD,2024-05-01,2024-05-01\n")
+    // its own column order too: bound by name, not by a.csv's positions
+    write(root.resolve("ft"), "b.csv",
+      "price,ticker,asset_type,source,currency,as_of_date,scrape_date\n" +
+        "50.25,ABC,FUND,Financial Times,USD,2024-05-01,2024-05-01\n")
+    val rows = syncNav(root, "2024-05-01")
+      .select(col("ticker"), col("asset_type"), col("nav_price").cast("string"),
+        col("origin_file"))
+      .as[(String, String, String, String)].collect().toSet
+    assert(rows == Set(("VUSA", "ETF", "101.5000", "a.csv"),
+      ("ABC", "FUND", "50.2500", "b.csv")))
+  }
+
   test("a history root under a directory whose name contains 'holdings' keeps its rows") {
     val root = Files.createTempDirectory("holdings_history")
     val lake = root.resolve("lake")
