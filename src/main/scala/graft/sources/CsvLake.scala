@@ -5,7 +5,7 @@ import graft.operators.Conform
 import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
@@ -67,13 +67,12 @@ object CsvLake {
     finally in.close()
   }
 
-  /** Reads `files` bound by header (see above): one all-string scan per
+  /** `files` bound by header (see above): one all-string scan per
     * distinct header, in the order of each header's first file, with
-    * normalized headers and `origin_file` = `lineage` of the file's URI,
-    * each passed through `conform`, then unioned by name. `what` names
-    * the read when no file has a header. */
-  private def read(spark: SparkSession, files: Seq[Path], what: => String,
-                   lineage: Column => Column, conform: DataFrame => DataFrame): DataFrame = {
+    * normalized headers and `origin_file` lineage as the file's URI, each
+    * passed through `conform`. Empty when no file has a header. */
+  private def scans(spark: SparkSession, files: Seq[Path],
+                    conform: DataFrame => DataFrame): Seq[DataFrame] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val sql = spark.sessionState.conf
     val opts = new CSVOptions(Options, columnPruning = true, sql.sessionLocalTimeZone)
@@ -82,7 +81,6 @@ object CsvLake {
       CSVUtils.makeSafeHeader(parser.parseLine(line), sql.caseSensitiveAnalysis, opts)
         .toSeq -> f
     })
-    require(headed.nonEmpty, s"no CSV file with a header in $what")
     headed.map(_._1).distinct.map { names =>
       val group = headed.collect { case (`names`, f) =>
         f.toString.replaceAll("""([\\\[\]{}*?])""", """\\$1""")
@@ -90,35 +88,42 @@ object CsvLake {
       conform(Conform.normHeaders(spark.read.options(Options)
           .schema(StructType(names.map(StructField(_, StringType))))
           .csv(group: _*))
-        .withColumn("origin_file", lineage(input_file_name())))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
+        .withColumn("origin_file", input_file_name()))
+    }
+  }
+
+  /** The scans unioned by name; `what` names the read when there is none. */
+  private def union(scans: Seq[DataFrame], what: => String): DataFrame = {
+    require(scans.nonEmpty, s"no CSV file with a header in $what")
+    scans.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** S1: read one staged CSV, or the visible files of a dir, with
     * normalized headers + lineage, each header group through `conform`. */
   def readCsv(spark: SparkSession, path: String,
               conform: DataFrame => DataFrame = identity): DataFrame =
-    read(spark, listFlat(spark, path), path, identity, conform)
+    union(scans(spark, listFlat(spark, path), conform), path)
 
   /** S2: read N per-source directories, tag `source` from the directory
     * name, align schemas by name (missing columns -> null), union. Skips
     * error/log files in the listing, like the reference's glob filter:
-    * they are never opened. Each directory is read flat and is its
-    * source's only one, so `origin_file` is the file name: (`source`,
+    * they are never opened, and a dir holding only such files (a day
+    * whose scrape failed) or only 0-byte files adds no rows; some dir
+    * must hold a file with a header. Each directory is read flat and is
+    * its source's only one, so `origin_file` is the file name: (`source`,
     * `origin_file`) still names the file. `conform` sees each header
-    * group with `source` set. */
+    * group with both set. */
   def readSourceDirs(spark: SparkSession, dirsBySource: Iterable[(String, String)],
-                     conform: DataFrame => DataFrame = identity): DataFrame = {
-    require(dirsBySource.nonEmpty, "no source dir to read")
-    dirsBySource.map { case (source, dir) =>
+                     conform: DataFrame => DataFrame = identity): DataFrame =
+    union(dirsBySource.toSeq.flatMap { case (source, dir) =>
       val files = listFlat(spark, dir).filter { p =>
         p.getName.endsWith(".csv") &&
           !p.getName.toLowerCase(java.util.Locale.ROOT).matches(".*(error|log).*")
       }
-      read(spark, files, dir, substring_index(_, "/", -1),
-        df => conform(df.withColumn("source", lit(source))))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
+      scans(spark, files, df => conform(df
+        .withColumn("origin_file", substring_index(col("origin_file"), "/", -1))
+        .withColumn("source", lit(source))))
+    }, dirsBySource.map(_._2).mkString("[", ", ", "]"))
 
   /** A name Spark's file listing skips, with everything under it. */
   private def hidden(name: String): Boolean =
@@ -157,14 +162,14 @@ object CsvLake {
     * a pattern. */
   def readFiles(spark: SparkSession, files: Seq[Path],
                 conform: DataFrame => DataFrame = identity): DataFrame =
-    read(spark, files, files.mkString("[", ", ", "]"), identity, conform)
+    union(scans(spark, files, conform), files.mkString("[", ", ", "]"))
 
   /** S3: [[listRecursive]], then [[readFiles]]. `origin_file` keeps the
     * full URI: [[withPathIdentity]] parses directories too. */
   def readRecursive(spark: SparkSession, root: String,
                     nameMustContain: String = "", nameMustNotContain: String = ""): DataFrame =
-    read(spark, listRecursive(spark, root, nameMustContain, nameMustNotContain), root,
-      identity, identity)
+    union(scans(spark, listRecursive(spark, root, nameMustContain, nameMustNotContain),
+      identity), root)
 
   /** S4: inject (ticker, asset_type, as_of_date) identity parsed from the
     * file path — the reference's filename-stem / path-segment conventions. */

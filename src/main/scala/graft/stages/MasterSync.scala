@@ -128,13 +128,18 @@ object MasterSync {
   /** Remediation hop (03_master_list_remediator.py:26-37): promote the
     * validated batch into the ready-to-load generation. The reference stage
     * is a copy guarded by file-existence memoization (T7: "file already
-    * exists in 04_ready_to_load -> skip"): here an existing generation dir
-    * is REUSED as-is, unconditionally, so a crashed/replayed run resumes
-    * from the materialized batch instead of recomputing upstream stages. */
+    * exists in 04_ready_to_load -> skip"): here a complete generation dir
+    * (one whose write committed its `_SUCCESS` marker) is REUSED as-is,
+    * so a crashed/replayed run resumes from the materialized batch instead
+    * of recomputing upstream stages. A dir with no marker is a write that
+    * failed or was cancelled (a failing sibling stage cancels this one):
+    * the job's setup created the dir and its abort removed only
+    * `_temporary`. It is overwritten, so a retry of the day never reads
+    * a generation that was not written whole. */
   def remediate(spark: SparkSession, valid: DataFrame, readyDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(readyDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) valid.write.mode("errorifexists").parquet(readyDir)
+    val done = new org.apache.hadoop.fs.Path(readyDir, "_SUCCESS")
+    if (!done.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(done))
+      valid.write.mode("overwrite").parquet(readyDir)
     MergeSink.readTable(spark, readyDir)
   }
 

@@ -57,10 +57,6 @@ object PerformanceSync {
         col("nav_price").desc_nulls_last,
         col("currency").desc_nulls_last))
 
-  /** Clean a union of raw NAV files with one header: [[conformNav]], then
-    * [[latestNav]]. */
-  def cleanNav(raw: DataFrame): DataFrame = latestNav(conformNav(raw))
-
   /** Validator rules (01_performance_validator.py:42-78) with explicit
     * reason priority: missing > non-positive > future (SURVEY.md §7.4.4). */
   def navRules(today: Column): Seq[Validate.Rule] = Seq(
@@ -75,8 +71,8 @@ object PerformanceSync {
     Validate.split(cleaned, navRules(today))
 
   /** The NAV stage: every source dir's NAV files (error/log files
-    * skipped), each header group conformed on its own, deduped, validated with rejects to `rejects/nav`, and merged
-    * into stg_daily_nav — K4 content-guarded (no row_hash on this table,
+    * skipped), each header group conformed on its own, deduped, validated
+    * with rejects to `rejects/nav`, and merged into stg_daily_nav — K4 content-guarded (no row_hash on this table,
     * db_connector.py:126-147): a matched row is taken only when a column
     * other than `updated_at` differs. `updated_at` is not content, as in
     * the reference's SET list, so a NAV re-sent unchanged keeps its

@@ -272,6 +272,38 @@ class DailyPipelineSpec extends SparkSpec {
     assert(tableCounts(wh).keySet.size == 10, tableCounts(wh))
   }
 
+  test("failFast: a failing sibling cancels master, a fixed rerun converges") {
+    val root = Files.createTempDirectory("lakesibling")
+    val wh = s"$root/warehouse"
+    val lake = Path.of(fullLake(root))
+    // no ticker/symbol column: DetailSync's key normalization throws
+    write(lake.resolve("details/Stock Analysis"), "screener.csv",
+      "name,expense_ratio\nNameless Fund,0.10%\n")
+
+    val e = intercept[DailyPipeline.PipelineFailedException] {
+      DailyPipeline.run(spark, lake.toString, wh, lit("2024-05-01"))
+    }
+    assert(e.summary.last.stage == "detail_sync" && !e.summary.last.ok,
+      e.summary.mkString("; "))
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    assert(leftovers(wh).isEmpty, leftovers(wh).mkString("; "))
+
+    // however far master got, leave what its write leaves when cancelled
+    // after the job's setup: the day's generation dir, empty
+    val generation = new java.io.File(s"$wh/staging/master_ready/dt=2024-05-01")
+    org.apache.commons.io.FileUtils.deleteDirectory(generation)
+    assert(generation.mkdirs())
+
+    write(lake.resolve("details/Stock Analysis"), "screener.csv", goodDetails)
+    val rerun = DailyPipeline.run(spark, lake.toString, wh, lit("2024-05-01"))
+    val clean = DailyPipeline.run(spark, lake.toString, s"$root/clean",
+      lit("2024-05-01"))
+    assert(rerun.forall(_.ok), rerun.mkString("; "))
+    assert(rerun.map(r => r.stage -> r.rows) == clean.map(r => r.stage -> r.rows))
+    assert(tableCounts(wh) == tableCounts(s"$root/clean"))
+    assert(tableCounts(wh).get("stg_security_master").contains(1L), tableCounts(wh))
+  }
+
   test("Retention.purgeDatedDirs drops only dirs older than the cutoff") {
     val root = Files.createTempDirectory("retention")
     Files.createDirectories(root.resolve("2024-01-01"))

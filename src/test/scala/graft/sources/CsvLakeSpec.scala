@@ -72,6 +72,24 @@ class CsvLakeSpec extends SparkSpec {
     assert(rows(CsvLake.readSourceDirs(spark, Seq("ft" -> dir.toString))) == swapped)
   }
 
+  test("readSourceDirs: a dir with only error or 0-byte files adds no rows") {
+    val root = Files.createTempDirectory("failed_scrape")
+    write(root.resolve("ft"), "a.csv", "ticker,name\nVUSA,Vanguard\n")
+    write(root.resolve("yf"), "error_log.csv", "ticker,msg\nZZZ,boom\n")
+    write(root.resolve("sa"), "empty.csv", "")
+    val df = CsvLake.readSourceDirs(spark, Seq("ft", "yf", "sa")
+      .map(s => s -> root.resolve(s).toString))
+    assert(rows(df) == Set(("VUSA", "Vanguard")))
+    assert(df.select("source", "origin_file").as[(String, String)].collect().toSeq ==
+      Seq(("ft", "a.csv")))
+    // no dir with a header at all: the read fails naming its dirs
+    val e = intercept[IllegalArgumentException] {
+      CsvLake.readSourceDirs(spark, Seq("yf", "sa").map(s => s -> root.resolve(s).toString))
+    }
+    assert(e.getMessage.contains(root.resolve("yf").toString) &&
+      e.getMessage.contains(root.resolve("sa").toString), e.getMessage)
+  }
+
   test("readFiles: files with swapped headers in a recursive root come back by name") {
     val root = Files.createTempDirectory("swapped_rec")
     write(root.resolve("x"), "a_history.csv", "ticker,name\nVUSA,Vanguard\n")

@@ -114,6 +114,21 @@ class MasterSyncSpec extends SparkSpec {
     assert(s2.select("ticker").as[String].collect().toSeq == Seq("VUSA"))
   }
 
+  test("remediator hop: a generation dir with no _SUCCESS is rewritten, not reused") {
+    val root = java.nio.file.Files.createTempDirectory("master_cancelled")
+    val path = s"$root/stg_security_master"
+    val ready = root.resolve("ready")
+    // what a write cancelled after its job setup leaves: the dir, nothing in it
+    java.nio.file.Files.createDirectories(ready)
+    val day1 = Seq(
+      ("VUSA", "ETF", "Vanguard", "new", "Financial Times", "2024-05-01"))
+      .toDF("ticker", "asset_type", "name", "status", "source", "date_added")
+    val s1 = MasterSync.run(spark, Seq(day1), path, lit("2024-05-01"),
+      readyDir = Some(ready.toString))
+    assert(s1.select("ticker").as[String].collect().toSeq == Seq("VUSA"))
+    assert(java.nio.file.Files.exists(ready.resolve("_SUCCESS")))
+  }
+
   test("the ready-to-load generation's name is rendered without a Spark job") {
     val sc = spark.sparkContext
     val group = s"generation-${java.util.UUID.randomUUID()}"

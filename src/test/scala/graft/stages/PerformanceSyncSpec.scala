@@ -23,7 +23,7 @@ class PerformanceSyncSpec extends SparkSpec {
       ("ABC", "FUND", "FT", "garbage", "USD", "2024-05-02", "2024-05-02", "a.csv"))
       .toDF("ticker", "asset_type", "source", "nav_price", "currency",
         "as_of_date", "scrape_date", "origin_file")
-    val out = PerformanceSync.cleanNav(raw).orderBy("ticker")
+    val out = PerformanceSync.latestNav(PerformanceSync.conformNav(raw)).orderBy("ticker")
     assert(out.count() == 2) // keep-last wins on the duplicate key
     val vusa = out.filter(col("ticker") === "VUSA")
       .select(col("nav_price").cast("string")).as[String].head()
