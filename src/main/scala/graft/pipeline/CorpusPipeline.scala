@@ -235,7 +235,12 @@ object CorpusPipeline {
       // the parquet footers (block metadata) — no re-scan job per stage
       graft.util.ArtifactIO.footerRowCount(spark, s"$outDir/$name")
     }
-    def read(name: String): DataFrame = spark.read.parquet(s"$outDir/$name")
+    // the schema comes from the stage output's own footer: no
+    // schema-inference job per read
+    def read(name: String): DataFrame = {
+      val path = s"$outDir/$name"
+      spark.read.schema(graft.util.ArtifactIO.tableSchema(spark, path)).parquet(path)
+    }
 
     cfg.urlCol.foreach { uc =>
       stage("url_dedup") {

@@ -24,6 +24,16 @@ class SessionFactorySpec extends AnyFunSuite {
     assert(builders == List(Paths.get("graft", "Graft.scala").toString))
   }
 
+  test("the session holds a whole run's codegen classes and trims the status store") {
+    val conf = SparkSpec.session.sparkContext.getConf
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") == "256")
+    assert(conf.get("spark.ui.retainedJobs") == "10")
+    assert(conf.get("spark.ui.retainedStages") == "10")
+    assert(conf.get("spark.ui.retainedTasks") == "100")
+    assert(conf.get("spark.sql.ui.retainedExecutions") == "10")
+    assert(org.apache.spark.sql.internal.SQLConf.get.codegenCacheMaxEntries == 256)
+  }
+
   test("the default core count is SPARK_GRAFT_CPUS, else the available processors") {
     assert(Graft.localCores(Some("6"), available = 4) == 6)
     assert(Graft.localCores(None, available = 4) == 4)
