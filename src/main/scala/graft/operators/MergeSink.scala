@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.BoundValue
 import graft.schema.Schemas
 import graft.util.ArtifactIO
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -528,8 +529,11 @@ object MergeSink {
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           def buckets(df: DataFrame): Array[Int] =
             df.select("__bucket").distinct().collect().map(_.getInt(0)).sorted
+          // the bucket set is bound as data, not inlined as literals, so
+          // an upsert that hits other buckets reuses the compiled classes;
+          // on the table it is still a partition filter
           def inBuckets(df: DataFrame, bs: Array[Int]): DataFrame =
-            df.filter(col("__bucket").isin(bs.map(Int.box): _*))
+            df.filter(array_contains(BoundValue.ints(bs), col("__bucket")))
           try {
             val table = readParquet(spark, path)
             // a bucket is touched only if it receives an update row whose

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.functions.BoundValue
 import graft.stages._
 import graft.util.ArtifactIO
 import org.apache.spark.SparkContext
@@ -38,6 +39,13 @@ import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
   * and NAV's `future_date` reject, depend on `asOf`, not only on the
   * files. Delete `_manifest/<stage>` to force a stage's full read; a
   * missing table does the same (`graft.stages.Sync.changedOnly`).
+  *
+  * The day is bound once per run: `run` evaluates `asOf` on the driver
+  * (no Spark job) and hands every stage its value as data
+  * ([[graft.functions.BoundValue]]), of `asOf`'s own type. Generated
+  * code reads that value instead of inlining it as a literal, so a new
+  * day produces the same generated source as the day before and Spark's
+  * codegen cache serves a steady day's classes without compiling any.
   */
 object DailyPipeline {
 
@@ -121,10 +129,11 @@ object DailyPipeline {
   def run(spark: SparkSession, lakeRoot: String, warehouseRoot: String,
           asOf: Column, failFast: Boolean = true): Seq[StageResult] = {
     val runT0 = System.nanoTime()
+    val day = BoundValue.bind(spark, asOf)
     schedule(spark.sparkContext, runT0, Stages.flatMap { case (name, dir, sync) =>
       val srcs = sources(spark, s"$lakeRoot/$dir")
       if (srcs.isEmpty) None
-      else Some(name -> (() => sync(spark, srcs, warehouseRoot, asOf)
+      else Some(name -> (() => sync(spark, srcs, warehouseRoot, day)
         .map(t => ArtifactIO.footerRowCount(spark, s"$warehouseRoot/$t")).sum))
     }, failFast)
   }

@@ -1,10 +1,10 @@
 package graft.stages
 
-import graft.functions.{CleanFns, HashFns}
+import graft.functions.{BoundValue, CleanFns, HashFns}
 import graft.operators.{Conform, Dedup, MergeSink, Validate}
 import graft.schema.Schemas
 import graft.sources.CsvLake
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -164,14 +164,11 @@ object MasterSync {
     load(spark, warehousePath, readyDir.map(remediate(spark, batch, _)).getOrElse(batch), asOf)
   }
 
-  /** The `dt=<asOf>` name of a day's ready-to-load generation. `asOf`
-    * is evaluated over a one-row local relation, which the optimizer
-    * folds into a local table scan: the driver computes it, no Spark job
-    * runs. */
+  /** The `dt=<asOf>` name of a day's ready-to-load generation, from the
+    * bound day's value ([[BoundValue.text]]): no Spark job, and for the
+    * day `DailyPipeline.run` binds, no query either. */
   private[graft] def generation(spark: SparkSession, asOf: Column): String =
-    "dt=" + spark.createDataFrame(java.util.List.of(Row(0)),
-        StructType(Seq(StructField("_", IntegerType))))
-      .select(asOf.cast("string")).head().getString(0)
+    "dt=" + BoundValue.text(spark, asOf)
 
   /** The master stage: each source dir's master list (each header group
     * cleaned on its own), rejects to `rejects/master`, into

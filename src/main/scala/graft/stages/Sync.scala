@@ -19,7 +19,12 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * the master's `last_seen` and status lifecycle, and NAV's `future_date`
   * reject, whose row must load on a later day from the same, unchanged
   * file. They are also the only stages that write rejects, so
-  * [[writeRejects]] overwrites each day's set whole. */
+  * [[writeRejects]] overwrites each day's set whole.
+  *
+  * A stage's `asOf` is the day `DailyPipeline.run` bound once per run
+  * ([[graft.functions.BoundValue]]): a value that generated code reads as
+  * data, so a stage compiles the same classes on every day. A stage
+  * called with a plain literal works the same, but inlines the day. */
 private[stages] object Sync {
 
   /** The manifest step of an incremental stage:

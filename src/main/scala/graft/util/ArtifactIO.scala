@@ -2,8 +2,11 @@ package graft.util
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
@@ -25,10 +28,30 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType,
   *
   * Declared types must match the writer exactly (the reader refuses
   * silent int32→int64 widening), which is itself a guard: a foreign
-  * file in an artifact slot fails at read, not as garbage rows. */
+  * file in an artifact slot fails at read, not as garbage rows.
+  *
+  * Every read here takes its parquet read options from the session's
+  * Hadoop conf ([[openFooter]]). parquet-hadoop's convenience entry
+  * points build a fresh `Configuration` per file, which costs more than
+  * the footer read itself; these helpers are also the warehouse's
+  * footer reads (`DailyPipeline`'s row counts, `MergeSink`'s schema
+  * probe, `CorpusPipeline`'s stage reads), so that cost was paid per
+  * file on every pipeline run. */
 object ArtifactIO {
   private def hadoopConf(spark: SparkSession) =
     spark.sparkContext.hadoopConfiguration
+
+  /** A reader of `f`'s footer whose read options come from the session's
+    * Hadoop conf. parquet-hadoop's one-argument `ParquetFileReader.open`
+    * (and `ParquetReader.builder(support, path)`, which [[readLocal]]
+    * avoids the same way) builds its options from a fresh Hadoop
+    * `Configuration`, and a fresh one parses `core-default.xml` again by
+    * probing every jar on the classpath. [[footerRowCount]] over a
+    * 64-file table (4-core host) took ~11–13 ms per file that way and
+    * ~1–4 ms per file here. A day's row counts alone open ~200 footers. */
+  private def openFooter(conf: Configuration, f: Path): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(f, conf),
+      HadoopReadOptions.builder(conf, f).build())
 
   /** All COMMITTED parquet part files under `path` (recursive — covers
     * both flat artifact dirs and partitioned ones like
@@ -80,8 +103,11 @@ object ArtifactIO {
     require(fs.exists(root), s"artifact path $path does not exist")
     val out = ArrayBuffer.empty[Row]
     partFiles(fs, root).foreach { file =>
-      val reader = ParquetReader.builder(new GroupReadSupport(), file)
-        .withConf(conf).build()
+      // built on an InputFile, the builder takes the file's (the
+      // session's) conf, where `builder(support, path)` makes a fresh one
+      val reader = new ParquetReader.Builder[Group](HadoopInputFile.fromPath(file, conf)) {
+        override protected def getReadSupport(): ReadSupport[Group] = new GroupReadSupport()
+      }.build()
       try {
         var g = reader.read()
         while (g != null) {
@@ -154,7 +180,7 @@ object ArtifactIO {
     require(fs.exists(root), s"artifact path $path does not exist")
     val files = partFiles(fs, root)
     require(files.nonEmpty, s"artifact path $path has no parquet part files")
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(files.head, conf))
+    val r = openFooter(conf, files.head)
     try {
       import scala.jdk.CollectionConverters._
       r.getFooter.getFileMetaData.getSchema.getFields.asScala
@@ -179,7 +205,7 @@ object ArtifactIO {
     require(fs.exists(root), s"parquet path $path does not exist")
     val file = partFiles(fs, root).headOption.getOrElse(
       throw new IllegalArgumentException(s"parquet path $path has no parquet part files"))
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val r = openFooter(conf, file)
     val data = try {
       val meta = r.getFooter.getFileMetaData
       Option(meta.getKeyValueMetaData.get(SparkSchemaKey))
@@ -284,7 +310,7 @@ object ArtifactIO {
     val files = partFiles(fs, root)
     require(files.nonEmpty, s"parquet path $path has no parquet part files")
     files.iterator.map { f =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      val r = openFooter(conf, f)
       try r.getRecordCount finally r.close()
     }.sum
   }

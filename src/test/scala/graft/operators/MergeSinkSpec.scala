@@ -3,7 +3,11 @@ package graft.operators
 import graft.SparkSpec
 import graft.functions.HashFns
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
 
 class MergeSinkSpec extends SparkSpec {
@@ -168,6 +172,56 @@ class MergeSinkSpec extends SparkSpec {
     assert(rows.filter(col("ticker") === "TICK001")
       .select("price").as[Double].head() == 999.0)
     assert(rows.count() == 64)
+  }
+
+  /** The file scans of an executed plan, into adaptive stages and cached
+    * relations. */
+  private def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+    case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
+    case q: QueryStageExec => fileScans(q.plan)
+    case i: InMemoryTableScanExec => fileScans(i.relation.cachedPlan)
+    case c: CommandResultExec => fileScans(c.commandPhysicalPlan)
+    case f: FileSourceScanExec => Seq(f)
+    case other => (other.children ++ other.subqueries).flatMap(fileScans)
+  }
+
+  test("a one-key upsert into a 32-bucket table scans only the hit " +
+       "bucket's files, in its probe and in its merge") {
+    val dir = java.nio.file.Files.createTempDirectory("merge_prune").toString
+    val path = s"$dir/warehouse"
+    MergeSink.upsertParquet(spark, path, hashed(snapshotRows), Seq("ticker"))
+    val files = dataFiles(path).keys.toSeq
+    val bucketOf = spark.read.parquet(path).filter(col("ticker") === "TICK005")
+      .select("__bucket").as[Int].head()
+    val hitFiles = files.count(_.startsWith(s"__bucket=$bucketOf/"))
+    assert(hitFiles > 0 && hitFiles < files.size)
+
+    // (execution, files) of every scan of the table, as the scan counted them
+    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+    val root = new org.apache.hadoop.fs.Path(path).toUri.getPath
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        fileScans(qe.executedPlan)
+          .filter(_.relation.location.rootPaths.exists(_.toUri.getPath == root))
+          .foreach(f => scanned.add(funcName -> f.metrics("numFiles").value))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      MergeSink.upsertParquet(spark, path, hashed(Seq(("TICK005", 555.0))), Seq("ticker"))
+      // execution events arrive on the listener bus after the action returns
+      val deadline = System.currentTimeMillis() + 10000
+      while (scanned.size < 2 && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      Thread.sleep(200)
+    } finally spark.listenerManager.unregister(listener)
+    val scans = scanned.asScala.toSeq
+    // the probe (a collect) and the merge (the staged write)
+    assert(scans.size >= 2, s"scans of the table: $scans")
+    assert(scans.forall(_._2 == hitFiles),
+      s"every scan should read the $hitFiles file(s) of bucket $bucketOf " +
+        s"(of ${files.size}): $scans")
+    assert(MergeSink.readTable(spark, path).filter(col("ticker") === "TICK005")
+      .select("price").as[Double].head() == 555.0)
   }
 
   /** Creates `initial` as a table in 8 buckets, re-upserts `upd` over

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import graft.SparkSpec
 import graft.maintenance.Retention
+import graft.schema.Schemas
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path}
 import java.time.LocalDate
@@ -10,6 +12,7 @@ import scala.jdk.CollectionConverters._
 /** End-to-end daily run over a synthetic file lake shaped like the
   * reference's validation_output/data trees (FIXTURES.md §1). */
 class DailyPipelineSpec extends SparkSpec {
+  import spark.implicits._
 
   private def write(dir: Path, name: String, content: String): Unit = {
     Files.createDirectories(dir)
@@ -302,6 +305,51 @@ class DailyPipelineSpec extends SparkSpec {
     assert(rerun.map(r => r.stage -> r.rows) == clean.map(r => r.stage -> r.rows))
     assert(tableCounts(wh) == tableCounts(s"$root/clean"))
     assert(tableCounts(wh).get("stg_security_master").contains(1L), tableCounts(wh))
+  }
+
+  test("a steady day compiles no class: the day and the touched buckets " +
+       "are bound as data, not inlined into generated code") {
+    val root = Files.createTempDirectory("lakecompile")
+    val wh = s"$root/warehouse"
+    val lake = Path.of(fullLake(root))
+    def nav(vusa: String, abc: String): Unit =
+      write(lake.resolve("nav/Financial Times"), "nav.csv",
+        "ticker,asset_type,source,nav_price,currency,as_of_date,scrape_date\n" +
+          s"VUSA,ETF,Financial Times,$vusa,USD,2024-05-01,2024-05-01\n" +
+          s"ABC,FUND,Financial Times,$abc,USD,2024-05-01,2024-05-01\n")
+    def history(close: String): Unit =
+      write(lake.resolve("history/Financial Times/etf/2024-05-01"), "VUSA_history.csv",
+        s"Date,Open,High,Low,Close,Volume\n2024-04-29,98,99,97,$close,900\n")
+    def day(asOf: String): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val results = DailyPipeline.run(spark, lake.toString, wh, lit(asOf))
+      assert(results.forall(_.ok), results.mkString("; "))
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    def navBucket(ticker: String): Int = spark.read.parquet(s"$wh/stg_daily_nav")
+      .filter(col("ticker") === ticker).select("__bucket").as[Int].head()
+
+    // a fresh context classloader keys the driver-side entries apart from
+    // any an earlier suite left
+    val t = Thread.currentThread
+    val loader = t.getContextClassLoader
+    t.setContextClassLoader(new java.net.URLClassLoader(Array.empty, loader))
+    val (first, second) = try {
+      nav("101.5", "12.0"); history("98.5")
+      day("2024-05-01") // creates the warehouse
+      assert(navBucket("VUSA") != navBucket("ABC"))
+      nav("101.7", "12.0"); history("98.6")
+      val first = day("2024-05-02") // the first upsert into each table
+      nav("101.7", "12.2"); history("98.7")
+      (first, day("2024-05-03")) // a new day, another NAV bucket
+    } finally t.setContextClassLoader(loader)
+    info(s"compiled classes: day 1 $first, day 2 $second")
+    assert(second == 0, s"day 1 compiled $first classes, day 2 $second")
+    assert(spark.read.parquet(s"$wh/stg_daily_nav").filter(col("ticker") === "ABC")
+      .select(col("nav_price").cast("double")).as[Double].head() == 12.2)
+    assert(spark.read.parquet(s"$wh/stg_daily_nav")
+      .select(max(Schemas.updatedAt).cast("date").cast("string")).as[String].head() ==
+      "2024-05-03")
   }
 
   test("Retention.purgeDatedDirs drops only dirs older than the cutoff") {

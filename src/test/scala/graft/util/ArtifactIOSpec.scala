@@ -99,6 +99,47 @@ class ArtifactIOSpec extends SparkSpec {
       "a bare parquet FILE (the testdata layout) must count too")
   }
 
+  /** Counts the lookups of `core-default.xml` made through it: a fresh
+    * Hadoop `Configuration` takes the thread's context classloader and
+    * asks it for that file when it first parses its defaults. */
+  private final class ConfProbeLoader(parent: ClassLoader) extends ClassLoader(parent) {
+    val lookups = new java.util.concurrent.atomic.AtomicInteger()
+    override def getResource(name: String): java.net.URL = {
+      if (name == "core-default.xml") lookups.incrementAndGet()
+      super.getResource(name)
+    }
+  }
+
+  test("footer and row reads build no Hadoop Configuration per file: " +
+      "footerRowCount, tableSchema, localColumns, readLocal") {
+    val dir = tmp()
+    (1 to 80).map(i => (i.toLong, s"s$i", i % 2 == 0)).toDF("v", "s", "even")
+      .repartition(8).write.mode("overwrite").parquet(dir)
+    val parts = new java.io.File(dir).listFiles()
+      .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    assert(parts >= 8, s"expected at least 8 part files, got $parts")
+    val t = Thread.currentThread
+    val previous = t.getContextClassLoader
+    val loader = new ConfProbeLoader(previous)
+    t.setContextClassLoader(loader)
+    val (rows, schema, columns, local) = try (
+      ArtifactIO.footerRowCount(spark, dir),
+      ArtifactIO.tableSchema(spark, dir),
+      ArtifactIO.localColumns(spark, dir),
+      ArtifactIO.readLocal(spark, dir, "v" -> LongType, "s" -> StringType,
+        "even" -> BooleanType))
+    finally t.setContextClassLoader(previous)
+    assert(loader.lookups.get == 0,
+      s"${loader.lookups.get} Configurations parsed core-default.xml over $parts files")
+    assert(rows == 80L)
+    // the schema Spark's writer recorded in the footer, nullability included
+    assert(schema == StructType(Seq(StructField("v", LongType, nullable = false),
+      StructField("s", StringType), StructField("even", BooleanType, nullable = false))))
+    assert(columns == Seq("v", "s", "even"))
+    assert(local.map(r => (r.getLong(0), r.getString(1), r.getBoolean(2))).sortBy(_._1) ==
+      (1 to 80).map(i => (i.toLong, s"s$i", i % 2 == 0)))
+  }
+
   /** A partitioned artifact (`bm25_meta_parts/batch_id=0`) with a crashed
     * writer's leftovers beside it: one task file under
     * `.spark-staging-x/` and one under `_temporary/0/`. Both leftovers
