@@ -403,46 +403,25 @@ object Bpe {
   }
 
   /** Load a complete tokenizer artifact (merges + vocab + model tag)
-    * from `path`, accepting BOTH on-disk layouts (r12 ADVICE:
-    * CorpusPipeline persisted `$outDir/tokenizer` + `$outDir/tokenizer_vocab`
-    * while curateStream expected `$path/{merges,vocab}`, so pointing one
-    * at the other's output failed at startup):
-    *  - unified (current): `$path/{merges,vocab,meta}`;
-    *  - legacy (pre-r13 CorpusPipeline): merges at `$path` itself, vocab
-    *    at the `${path}_vocab` sibling (always the marked word model —
-    *    the faithful model postdates the layout).
-    * Same loud re-validation as [[loadMerges]]/[[loadVocab]]; an
-    * unrecognized model tag fails loudly (encoding under the wrong word
-    * model silently mis-tokenizes everything). */
+    * from `$path/{merges,vocab,meta}`, the layout [[saveTokenizer]]
+    * writes. Same loud re-validation as [[loadMerges]]/[[loadVocab]]; a
+    * missing or unrecognized model tag fails loudly (encoding under the
+    * wrong word model silently mis-tokenizes everything). */
   def loadTokenizer(spark: org.apache.spark.sql.SparkSession,
                     path: String): Tokenizer = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(path, "merges"))) {
-      val model =
-        if (!fs.exists(new org.apache.hadoop.fs.Path(path, "meta")))
-          ModelWordMarked // pre-meta unified artifacts were marked-word
-        else {
-          val kv = graft.util.ArtifactIO.readLocal(spark, s"$path/meta",
-              "key" -> org.apache.spark.sql.types.StringType,
-              "value" -> org.apache.spark.sql.types.StringType)
-            .map(r => r.getString(0) -> r.getString(1)).toMap
-          kv.getOrElse("model", ModelWordMarked)
-        }
-      require(model == ModelWordMarked || model == ModelFaithful,
-        s"tokenizer artifact at $path carries unknown word model '$model'")
-      Tokenizer(loadMerges(spark, s"$path/merges"),
-        loadVocab(spark, s"$path/vocab"), model)
-    } else if (fs.exists(new org.apache.hadoop.fs.Path(path + "_vocab")))
-      Tokenizer(loadMerges(spark, path), loadVocab(spark, path + "_vocab"),
-        ModelWordMarked)
-    else throw new IllegalArgumentException(
-      s"no tokenizer artifact at $path: expected $path/{merges,vocab} " +
-        s"(unified layout) or $path + ${path}_vocab (legacy layout)")
+    val model = graft.util.ArtifactIO.readLocal(spark, s"$path/meta",
+        "key" -> org.apache.spark.sql.types.StringType,
+        "value" -> org.apache.spark.sql.types.StringType)
+      .map(r => r.getString(0) -> r.getString(1)).toMap.get("model")
+    require(model.contains(ModelWordMarked) || model.contains(ModelFaithful),
+      s"tokenizer artifact at $path carries word model ${model.getOrElse("(none)")}, " +
+        s"expected '$ModelWordMarked' or '$ModelFaithful'")
+    Tokenizer(loadMerges(spark, s"$path/merges"),
+      loadVocab(spark, s"$path/vocab"), model.get)
   }
 
-  /** Persist a complete tokenizer artifact in the unified layout
-    * [[loadTokenizer]] reads first: `$path/{merges,vocab,meta}`. */
+  /** Persist a complete tokenizer artifact in the layout
+    * [[loadTokenizer]] reads: `$path/{merges,vocab,meta}`. */
   def saveTokenizer(spark: org.apache.spark.sql.SparkSession,
                     merges: Seq[Merge], vocab: Seq[(String, Int)],
                     path: String, model: String = ModelWordMarked): Unit = {

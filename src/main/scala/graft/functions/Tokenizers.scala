@@ -19,8 +19,7 @@ import org.apache.spark.sql.{Column, SparkSession}
   *
   * Artifact layouts (each family keeps its own save/load with its own
   * loud validation — this object only DISPATCHES):
-  *  - BPE ([[Bpe.saveTokenizer]]): `$path/{merges,vocab,meta}` (or the
-  *    legacy `$path` + `${path}_vocab` pair);
+  *  - BPE ([[Bpe.saveTokenizer]]): `$path/{merges,vocab,meta}`;
   *  - unigram ([[UnigramLm.save]]): `$path/{unigram_pieces,unigram_meta}`.
   * The two are disjoint by construction, so detection is one
   * existence probe, and a path holding BOTH fails loudly (a mixed
@@ -76,9 +75,7 @@ object Tokenizers {
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hasUnigram =
       fs.exists(new org.apache.hadoop.fs.Path(path, "unigram_meta"))
-    val hasBpe =
-      fs.exists(new org.apache.hadoop.fs.Path(path, "merges")) ||
-        fs.exists(new org.apache.hadoop.fs.Path(path + "_vocab"))
+    val hasBpe = fs.exists(new org.apache.hadoop.fs.Path(path, "merges"))
     require(!(hasUnigram && hasBpe),
       s"tokenizer path $path holds BOTH a unigram and a BPE artifact — " +
         "a mixed directory is a deployment bug; ship one artifact per path")

@@ -340,21 +340,12 @@ object UnigramLm {
   def load(spark: org.apache.spark.sql.SparkSession, path: String): Model = {
     import spark.implicits._
     import org.apache.spark.sql.types.{IntegerType => ITyp, LongType => LTyp, StringType => STyp}
-    // layout detection from the parquet FOOTER (zero Spark jobs, r18):
-    // word_model postdates the r16 artifacts — absent means the
-    // lowercasing word model (the only one that existed then)
-    val metaPath = s"$path/unigram_meta"
-    val hasWordModel = graft.util.ArtifactIO.localColumns(spark, metaPath)
-      .contains("word_model")
-    val baseFields = Seq("max_piece_len" -> ITyp, "max_word_len" -> ITyp,
-      "seed_size" -> ITyp, "vocab_size" -> ITyp, "n_rounds" -> ITyp,
-      "model_tag" -> STyp)
-    val meta = graft.util.ArtifactIO.readLocal(spark, metaPath,
-        (if (hasWordModel) baseFields :+ ("word_model" -> STyp)
-         else baseFields): _*)
+    val meta = graft.util.ArtifactIO.readLocal(spark, s"$path/unigram_meta",
+        "max_piece_len" -> ITyp, "max_word_len" -> ITyp, "seed_size" -> ITyp,
+        "vocab_size" -> ITyp, "n_rounds" -> ITyp, "model_tag" -> STyp,
+        "word_model" -> STyp)
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3),
-        r.getInt(4), r.getString(5),
-        if (hasWordModel) r.getString(6) else Bpe.ModelWordMarked))
+        r.getInt(4), r.getString(5), r.getString(6)))
     require(meta.length == 1,
       s"unigram meta at $path/unigram_meta has ${meta.length} rows")
     val (p, lw, ss, vs, nRounds, tag, wordModel) = meta.head

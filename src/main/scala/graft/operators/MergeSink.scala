@@ -431,10 +431,8 @@ object MergeSink {
 
   /** Reads a bucketed warehouse table without the physical `__bucket`
     * partition column. */
-  def readTable(spark: SparkSession, path: String): DataFrame = {
-    val df = readParquet(spark, path)
-    if (df.columns.contains("__bucket")) df.drop("__bucket") else df
-  }
+  def readTable(spark: SparkSession, path: String): DataFrame =
+    readParquet(spark, path).drop("__bucket")
 
   /** Partition-pruned, crash-safe MERGE into a hash-bucketed parquet
     * warehouse table (the scale-safe replacement for a full-table
@@ -442,7 +440,13 @@ object MergeSink {
     * rows contract at the granularity Spark files allow):
     *
     *  1. table layout: path/__bucket=N/..., N = xxhash64(natural key) %
-    *     numBuckets (recorded in _graft_meta.json at creation);
+    *     numBuckets (recorded in _graft_meta.json at creation). The
+    *     creating upsert stages the deduplicated rows and the meta under
+    *     [[stagingPath]] and publishes them with one whole-dir
+    *     [[swapDirs]], so a table dir never exists without its meta and a
+    *     killed create is healed like any other staged write. A create
+    *     with no rows writes one schema-bearing empty file as bucket 0:
+    *     an empty table is an ordinary bucketed table;
     *  2. an upsert computes the DISTINCT buckets its update keys hash to
     *     (`hit`; bounded driver collect: <= numBuckets ints) and reads
     *     ONLY those partitions of the target (partition-pruned scan).
@@ -458,10 +462,11 @@ object MergeSink {
     *  4. a crash mid-swap is healed by [[recoverSwap]] on the next call
     *     (staged bucket dirs roll forward; the table is never lost).
     *
-    * A pre-existing UNBUCKETED table is migrated in one full merge+rewrite
-    * (flagged by the missing meta file). Idempotent: replaying updates
-    * whose guard values the table already holds (a K4 row re-sent with
-    * only a new `updated_at`, say) touches no bucket and writes no file.
+    * An existing dir without the meta is not a table this sink wrote; the
+    * upsert fails naming it instead of guessing its layout. Idempotent:
+    * replaying updates whose guard values the table already holds (a K4
+    * row re-sent with only a new `updated_at`, say) touches no bucket and
+    * writes no file.
     *
     * Why skipping unchanged rows keeps the output: an update row whose
     * guard values the target already holds merges back to that target row
@@ -475,52 +480,29 @@ object MergeSink {
     val fs = fsFor(spark, path)
     withTableLock(fs, path) { lock => cleaningTmp(fs, path, lock) {
       recoverSwap(spark, path)
-      val tgt = new Path(path)
       val tmp = stagingPath(path)
 
-      // A ZERO-ROW frame through partitionBy writes a FILELESS dir that
-      // read-back cannot infer a schema from — an empty FIRST upsert
-      // would brick the table for every later call (the same class as
-      // the streaming fileless-sink and empty-shard lessons). Empty
-      // frames are written UNPARTITIONED without the __bucket column
-      // and WITHOUT meta: the dir reads back (0 rows, full schema) as
-      // a legacy-unbucketed table, and the first non-empty upsert
-      // migrates it to the bucketed layout through the None branch
-      // below. The emptiness probe is one limit-1 job on a frame that
-      // is batch-sized (create) or rare (migration).
-      def writeWhole(df: DataFrame, dest: String): Boolean = {
-        val nonEmpty = !df.isEmpty
-        if (nonEmpty)
-          df.write.mode("overwrite").partitionBy("__bucket").parquet(dest)
-        else
-          df.drop("__bucket").write.mode("overwrite").parquet(dest)
-        nonEmpty
-      }
+      readNumBuckets(fs, path) match {
+        case None if fs.exists(new Path(path)) =>
+          throw new IllegalStateException(
+            s"table $path exists but has no ${metaPath(path).getName}: not a " +
+              "table this sink wrote, or a copy that lost its meta; " +
+              "restore the meta or remove the dir")
 
-      if (!fs.exists(tgt)) {
-        // a table no later upsert could compare is refused before it exists
-        guardCols(updates.schema, keys, hashCol, path)
-        val nb = numBuckets
-        if (writeWhole(updates.dropDuplicates(keys)
-            .withColumn("__bucket", bucketExpr(keys, nb)), path))
-          writeMeta(fs, path, keys, nb)
-        spark.catalog.refreshByPath(path)
-      } else readNumBuckets(fs, path) match {
         case None =>
-          // legacy unbucketed layout — OR a bucketed table whose meta write
-          // was lost to a crash between the data write and writeMeta (the
-          // two aren't atomic). readTable hides any __bucket column, so the
-          // migration merge works for both states (the half-created case
-          // costs one full re-bucket instead of bricking every upsert with
-          // an unresolvable-__bucket analysis error)
-          val previous = readTable(spark, path)
-          guardCols(previous.schema, keys, hashCol, path)
-          val merged = merge(previous, updates, keys, hashCol)
+          // a table no later upsert could compare is refused before it exists
+          guardCols(updates.schema, keys, hashCol, path)
+          val rows = updates.dropDuplicates(keys)
             .withColumn("__bucket", bucketExpr(keys, numBuckets))
-          val bucketed = writeWhole(merged, tmp)
+          rows.write.mode("overwrite").partitionBy("__bucket").parquet(tmp)
+          // zero rows through partitionBy write no part file, and a dir
+          // without one has no schema to read back: an empty create
+          // writes one schema-bearing empty file as bucket 0
+          if (fs.globStatus(new Path(tmp, "__bucket=*")).isEmpty)
+            rows.drop("__bucket").limit(0).write.parquet(s"$tmp/__bucket=0")
+          writeMeta(fs, tmp, keys, numBuckets)
           lock.assertOwned()
           swapDirs(fs, path, Seq(""))
-          if (bucketed) writeMeta(fs, path, keys, numBuckets)
           spark.catalog.refreshByPath(path)
 
         case Some(nb) =>

@@ -161,7 +161,7 @@ object CorpusPipeline {
       // the pipeline gains a "tokenizer" stage: a BPE merge table of
       // this size is trained ON the decontaminated corpus (the text the
       // model will actually see), persisted as the versioned artifact
-      // under outDir/tokenizer (+ _vocab), and everything downstream of
+      // under outDir/tokenizer, and everything downstream of
       // it is denominated in REAL tokenizer tokens — the mixture budget,
       // the packing coordinates, and a final "pack_ids" stage that
       // materializes the training file itself (s8b_packed_ids: packed
@@ -503,12 +503,10 @@ object CorpusPipeline {
     var tok: graft.functions.Tokenizers.Tok = null
     def tokenizerArtifacts(): graft.functions.Tokenizers.Tok = {
       if (tok == null)
-        // family-dispatching, layout-tolerant load (r16 verdict #1c):
-        // detects unigram vs BPE by layout, finds this run's unified BPE
-        // layout OR a previous run's legacy pair (r12 ADVICE); each
-        // family's meta tag says which word model trained it — encoding
-        // under the wrong model would silently mis-tokenize, so the tag
-        // travels with the artifact
+        // family-dispatching load (r16 verdict #1c): detects unigram vs
+        // BPE by layout; each family's meta tag says which word model
+        // trained it — encoding under the wrong model would silently
+        // mis-tokenize, so the tag travels with the artifact
         tok = graft.functions.Tokenizers.load(spark, s"$outDir/tokenizer")
       tok
     }

@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.functions.CleanFns
 import graft.operators.Conform
+import graft.util.ArtifactIO
 import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -125,10 +126,6 @@ object CsvLake {
         .withColumn("source", lit(source))))
     }, dirsBySource.map(_._2).mkString("[", ", ", "]"))
 
-  /** A name Spark's file listing skips, with everything under it. */
-  private def hidden(name: String): Boolean =
-    name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
-
   /** S3 listing, on the driver: every `*.csv` file under `root`, at any
     * depth, whose file name (lower-cased) contains `nameMustContain` and
     * not `nameMustNotContain`, sorted by path. Hidden entries are skipped
@@ -138,7 +135,7 @@ object CsvLake {
     val dir = new Path(root)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def walk(d: Path): Iterator[Path] = fs.listStatus(d).iterator
-      .filterNot(s => hidden(s.getPath.getName))
+      .filterNot(s => ArtifactIO.hidden(s.getPath.getName))
       .flatMap(s => if (s.isDirectory) walk(s.getPath) else Iterator(s.getPath))
     walk(dir).filter { p =>
       val name = p.getName.toLowerCase(java.util.Locale.ROOT)
@@ -152,7 +149,8 @@ object CsvLake {
   def listFlat(spark: SparkSession, dir: String): Seq[Path] = {
     val p = new Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq
-      .filter(s => s.isFile && !hidden(s.getPath.getName)).map(_.getPath).sortBy(_.toString)
+      .filter(s => s.isFile && !ArtifactIO.hidden(s.getPath.getName))
+      .map(_.getPath).sortBy(_.toString)
   }
 
   /** Reads exactly `files` (at least one with a header), bound by
@@ -163,13 +161,6 @@ object CsvLake {
   def readFiles(spark: SparkSession, files: Seq[Path],
                 conform: DataFrame => DataFrame = identity): DataFrame =
     union(scans(spark, files, conform), files.mkString("[", ", ", "]"))
-
-  /** S3: [[listRecursive]], then [[readFiles]]. `origin_file` keeps the
-    * full URI: [[withPathIdentity]] parses directories too. */
-  def readRecursive(spark: SparkSession, root: String,
-                    nameMustContain: String = "", nameMustNotContain: String = ""): DataFrame =
-    union(scans(spark, listRecursive(spark, root, nameMustContain, nameMustNotContain),
-      identity), root)
 
   /** S4: inject (ticker, asset_type, as_of_date) identity parsed from the
     * file path — the reference's filename-stem / path-segment conventions. */

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.MergeSink
+import graft.util.ArtifactIO
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
@@ -104,22 +105,6 @@ object StreamingIngest {
     * dirs would corrupt partition discovery). */
   def bucketsPath(indexPath: String): String = indexPath + "_buckets"
 
-  /** "Exists" for a parquet dataset = the directory holds at least one
-    * part file, not merely the directory: a fully-rejected FIRST batch
-    * writes an EMPTY dynamic-overwrite sink (base dir + _SUCCESS, zero
-    * part files), and a bare `fs.exists` would then route the next batch
-    * into `spark.read.parquet` on a fileless dir — an
-    * UNABLE_TO_INFER_SCHEMA crash on day two of a production loop. */
-  private def hasParquetData(fs: org.apache.hadoop.fs.FileSystem,
-                             path: org.apache.hadoop.fs.Path): Boolean = {
-    if (!fs.exists(path)) return false
-    val it = fs.listFiles(path, true)
-    while (it.hasNext) {
-      if (it.next().getPath.getName.startsWith("part-")) return true
-    }
-    false
-  }
-
   /** Replay-safe read of the bucket sidecar for [[curateBatch]]'s pruned
     * probe: this batch's ids anti-joined out (same contract as
     * [[replaySafeIndex]]). Bootstrap/migration: an index WITHOUT a sidecar
@@ -159,7 +144,7 @@ object StreamingIngest {
     val hBuckets = new org.apache.hadoop.fs.Path(bPath)
     val hIndex = new org.apache.hadoop.fs.Path(indexPath)
     val fs = hBuckets.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!hasParquetData(fs, hBuckets) && hasParquetData(fs, hIndex)) {
+    if (!ArtifactIO.hasParquet(fs, hBuckets) && ArtifactIO.hasParquet(fs, hIndex)) {
       val idx = spark.read
         .schema(indexSchema(batch, idCol, textCol, numHashes, shingleN))
         .parquet(indexPath)
@@ -169,7 +154,7 @@ object StreamingIngest {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id").parquet(bPath)
     }
-    if (hasParquetData(fs, hBuckets))
+    if (ArtifactIO.hasParquet(fs, hBuckets))
       spark.read
         .schema(bucketsSchema(batch, idCol, textCol, numHashes, bands,
           shingleN))
@@ -189,7 +174,7 @@ object StreamingIngest {
     import graft.operators.Dedup
     val hPath = new org.apache.hadoop.fs.Path(indexPath)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (hasParquetData(fs, hPath))
+    if (ArtifactIO.hasParquet(fs, hPath))
       // the batch id set is micro-batch-sized, broadcast probe
       spark.read
         .schema(indexSchema(batch, idCol, textCol, numHashes, shingleN))
@@ -506,10 +491,9 @@ object StreamingIngest {
     // comparable within one artifact version — ship a new artifact at a
     // new path and restart.
     val tokenizer = if (tokenizerPath.isEmpty) None else
-      // family-dispatching, layout-tolerant load (Tokenizers.load):
-      // detects a unigram artifact ($path/unigram_meta) or a BPE one
-      // (unified $path/{merges,vocab} OR the legacy $path +
-      // ${path}_vocab pair -- r12 ADVICE), so a stream can point
+      // family-dispatching load (Tokenizers.load): detects a unigram
+      // artifact ($path/unigram_meta) or a BPE one
+      // ($path/{merges,vocab,meta}), so a stream can point
       // straight at a pipeline's outDir/tokenizer whatever family
       // trained it. The requireOpen default insists on the open
       // byte-fallback layout for BPE (day-2 batches WILL contain code

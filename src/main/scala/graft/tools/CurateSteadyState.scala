@@ -106,8 +106,7 @@ object CurateSteadyState {
       import graft.functions.Bpe
       val merges = Bpe.trainMergesLocal(all, "text", tokenizerMerges, 2L)
       val vocab = Bpe.vocabMarkedBytes(all, "text", merges)
-      Bpe.saveMerges(spark, merges, s"$workDir/tok/merges")
-      Bpe.saveVocab(spark, vocab, s"$workDir/tok/vocab")
+      Bpe.saveTokenizer(spark, merges, vocab, s"$workDir/tok", Bpe.ModelWordMarked)
       println(s"[steady] tokenizer: ${merges.size} merges, |V|=${vocab.size}")
       s"$workDir/tok"
     } else ""

@@ -22,9 +22,9 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType,
   * by explicit schemas, and r18 removes the remaining collect
   * round-trip: these tables are driver-sized by construction (every
   * caller collects them anyway), so they are read in-process via
-  * parquet-hadoop, zero Spark jobs. Layout-DETECTING loads (loadLm's lm_order probe,
-  * UnigramLm.load's word_model presence check) key on [[localColumns]]:
-  * the column set is the information, and the footer already holds it.
+  * parquet-hadoop, zero Spark jobs. A layout-DETECTING load (loadLm's
+  * lm_order probe) keys on [[localColumns]]: the column set is the
+  * information, and the footer already holds it.
   *
   * Declared types must match the writer exactly (the reader refuses
   * silent int32→int64 widening), which is itself a guard: a foreign
@@ -53,6 +53,12 @@ object ArtifactIO {
     ParquetFileReader.open(HadoopInputFile.fromPath(f, conf),
       HadoopReadOptions.builder(conf, f).build())
 
+  /** A name Spark's file listing skips, with everything under it
+    * (`shouldFilterOut`): a `.`- or `_`-prefixed name, except a `_`-named
+    * partition dir (`k=v`). */
+  private[graft] def hidden(name: String): Boolean =
+    name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
+
   /** All COMMITTED parquet part files under `path` (recursive — covers
     * both flat artifact dirs and partitioned ones like
     * `bm25_meta_parts/batch_id=N`), name-sorted so multi-file reads are
@@ -64,20 +70,19 @@ object ArtifactIO {
     * `.spark-staging-*` task files are never read as data. Components of
     * `path` itself are not checked. A `path` that is itself a single
     * parquet FILE (the testdata layout) is returned as-is. */
-  private def partFiles(fs: FileSystem, root: Path): Seq[Path] = {
-    if (fs.getFileStatus(root).isFile) return Seq(root)
-    def hidden(name: String): Boolean =
-      name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
-    def walk(dir: Path): Iterator[Path] =
-      fs.listStatus(dir).iterator
-        .filterNot(s => hidden(s.getPath.getName))
-        .flatMap { s =>
-          if (s.isDirectory) walk(s.getPath)
-          else if (s.getPath.getName.startsWith("part-")) Iterator(s.getPath)
-          else Iterator.empty
-        }
-    walk(root).toSeq.sortBy(_.toString)
-  }
+  private def partFiles(fs: FileSystem, root: Path): Seq[Path] =
+    if (fs.getFileStatus(root).isFile) Seq(root)
+    else committedParts(fs, root).toSeq.sortBy(_.toString)
+
+  /** The committed part files below `dir`, lazily, in listing order. */
+  private def committedParts(fs: FileSystem, dir: Path): Iterator[Path] =
+    fs.listStatus(dir).iterator
+      .filterNot(s => hidden(s.getPath.getName))
+      .flatMap { s =>
+        if (s.isDirectory) committedParts(fs, s.getPath)
+        else if (s.getPath.getName.startsWith("part-")) Iterator(s.getPath)
+        else Iterator.empty
+      }
 
   /** DRIVER-LOCAL read of an ENGINE-WRITTEN artifact table: the same
     * rows `readParquet(...).select(fields).collect()` returns, with ZERO
@@ -170,9 +175,9 @@ object ArtifactIO {
 
   /** The column names of an artifact table, from the parquet FOOTER of
     * its first part file — zero Spark jobs. This is the layout-detection
-    * primitive (loadLm's lm_order probe, UnigramLm.load's word_model
-    * presence check): the column SET is the information those loads
-    * previously paid a schema-inference job to learn. */
+    * primitive (loadLm's lm_order probe): the column SET is the
+    * information that load previously paid a schema-inference job to
+    * learn. */
   def localColumns(spark: SparkSession, path: String): Seq[String] = {
     val conf = hadoopConf(spark)
     val root = new Path(path)
@@ -222,17 +227,14 @@ object ArtifactIO {
     StructType(data.fields ++ parts)
   }
 
-  /** True iff `p` holds at least one parquet part file at any depth — an
-    * empty or half-created dir (crash between mkdir and commit) counts as
-    * absent. */
-  private def hasParquet(fs: FileSystem, p: Path): Boolean = {
-    if (!fs.exists(p)) return false
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      if (it.next().getPath.getName.startsWith("part-")) return true
-    }
-    false
-  }
+  /** True iff `p` holds at least one COMMITTED part file at any depth
+    * (the [[partFiles]] listing rule) — an empty or half-created dir
+    * (crash between mkdir and commit, task files left under
+    * `_temporary/`), or a write of zero rows through a partitioned or
+    * dynamic-overwrite sink (base dir + `_SUCCESS`, no part file), counts
+    * as absent: Spark cannot infer a schema from it. */
+  private[graft] def hasParquet(fs: FileSystem, p: Path): Boolean =
+    fs.exists(p) && committedParts(fs, p).hasNext
 
   /** The version discipline of a VERSIONED artifact (the BM25 corpus
     * stats, the IVF dense index): each write lands a complete

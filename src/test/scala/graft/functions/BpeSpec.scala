@@ -585,8 +585,8 @@ class BpeSpec extends SparkSpec {
     }
   }
 
-  test("tokenizer artifact meta: model tag round-trips; legacy artifacts " +
-      "default to the marked word model") {
+  test("tokenizer artifact meta: model tag round-trips; an artifact " +
+      "without its meta fails loudly") {
     val dir = java.nio.file.Files.createTempDirectory("tok_meta").toString
     val merges = Bpe.trainMergesLocal(docs, "text", 2, 1L, faithful = true)
     val vocab = Bpe.vocabBytesFrom(Bpe.vocab(docs, "text", merges, faithful = true))
@@ -594,15 +594,10 @@ class BpeSpec extends SparkSpec {
     val t = Bpe.loadTokenizer(spark, dir)
     assert(t.model == Bpe.ModelFaithful && t.faithful)
     assert(t.merges == merges && t.vocab == vocab)
-    // unified layout WITHOUT meta (a pre-r13 artifact) -> word model
-    val dir2 = java.nio.file.Files.createTempDirectory("tok_meta2").toString
-    Bpe.saveMerges(spark, merges, s"$dir2/merges")
-    Bpe.saveVocab(spark, vocab, s"$dir2/vocab")
-    assert(Bpe.loadTokenizer(spark, dir2).model == Bpe.ModelWordMarked)
-    // legacy sibling layout -> word model
-    val dir3 = java.nio.file.Files.createTempDirectory("tok_meta3").toString
-    Bpe.saveMerges(spark, merges, s"$dir3/tokenizer")
-    Bpe.saveVocab(spark, vocab, s"$dir3/tokenizer_vocab")
-    assert(Bpe.loadTokenizer(spark, s"$dir3/tokenizer").model == Bpe.ModelWordMarked)
+    val bare = java.nio.file.Files.createTempDirectory("tok_bare").toString
+    Bpe.saveMerges(spark, merges, s"$bare/merges")
+    Bpe.saveVocab(spark, vocab, s"$bare/vocab")
+    val e = intercept[IllegalArgumentException](Bpe.loadTokenizer(spark, bare))
+    assert(e.getMessage.contains(s"$bare/meta"), e.getMessage)
   }
 }

@@ -188,9 +188,9 @@ class UnigramLmSpec extends SparkSpec {
       .getField("pieces")).as[Seq[String]].collect().toSeq
     assert(a == b)
     // corrupted tag rejected
-    Seq((5, 16, 50, 30, 3, "not-unigram"))
+    Seq((5, 16, 50, 30, 3, "not-unigram", Bpe.ModelWordMarked))
       .toDF("max_piece_len", "max_word_len", "seed_size", "vocab_size",
-        "n_rounds", "model_tag")
+        "n_rounds", "model_tag", "word_model")
       .write.mode("overwrite").parquet(s"$root/unigram_meta")
     val e = intercept[IllegalArgumentException] {
       UnigramLm.load(spark, root)

@@ -122,7 +122,7 @@ class MergeSinkSpec extends SparkSpec {
     fileStamps(path).filter { case (f, _) => f.endsWith(".parquet") }
 
   test("an EMPTY first upsert does not brick the table: dir reads back, " +
-      "the first real upsert migrates it to the bucketed layout") {
+      "an empty table is bucket 0 and the first real upsert updates it") {
     val dir = java.nio.file.Files.createTempDirectory("merge_empty").toString
     val path = s"$dir/warehouse"
     val none = withHash(Seq.empty[(String, Double)].toDF("ticker", "price"))
@@ -137,14 +137,73 @@ class MergeSinkSpec extends SparkSpec {
     assert(MergeSink.readTable(spark, path).orderBy("ticker")
       .as[(String, Double, String)].collect().toSeq.map(r => (r._1, r._2))
       == Seq(("AAA", 10.0), ("BBB", 20.0)))
-    // migration landed the bucketed layout (partition dirs present), so
-    // later upserts take the touched-buckets fast path
+    // the table is bucketed from its create on (partition dirs present),
+    // so every upsert takes the touched-buckets path
     assert(new java.io.File(path).listFiles()
       .exists(_.getName.startsWith("__bucket=")))
     val b2 = withHash(Seq(("BBB", 21.0)).toDF("ticker", "price"))
     MergeSink.upsertParquet(spark, path, b2, Seq("ticker"))
     assert(MergeSink.readTable(spark, path).filter(col("ticker") === "BBB")
       .as[(String, Double, String)].head()._2 == 21.0)
+  }
+
+  test("a create publishes through the staged swap: the table dir never " +
+      "exists without its meta") {
+    val path = java.nio.file.Files.createTempDirectory("merge_create")
+      .toString + "/t"
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val meta = new org.apache.hadoop.fs.Path(path, "_graft_meta.json")
+    val checks = new java.util.concurrent.atomic.AtomicInteger(0)
+    val bare = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+        checks.incrementAndGet()
+        if (fs.exists(new org.apache.hadoop.fs.Path(path)) && !fs.exists(meta))
+          bare.add(fs.listStatus(new org.apache.hadoop.fs.Path(path))
+            .map(_.getPath.getName).sorted.mkString(", "))
+      }
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      MergeSink.upsertParquet(spark, path,
+        withHash(snapshotRows.toDF("ticker", "price").repartition(4)),
+        Seq("ticker"), numBuckets = 8)
+      // one marker job, then wait until the listener saw it: the create's
+      // task ends were delivered before it
+      val marker = s"marker-${java.util.UUID.randomUUID()}"
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.contains(marker) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(jobs.contains(marker))
+    } finally sc.removeSparkListener(listener)
+    assert(checks.get() >= 4, s"only ${checks.get()} task ends seen")
+    assert(bare.isEmpty, s"table dir without its meta at a task end: " +
+      bare.asScala.take(3).mkString("; "))
+    assert(fs.exists(meta))
+    assert(MergeSink.readTable(spark, path).count() == snapshotRows.size)
+  }
+
+  test("an upsert into an existing parquet dir without the meta fails " +
+      "naming the dir") {
+    val path = java.nio.file.Files.createTempDirectory("merge_nometa")
+      .toString + "/t"
+    withHash(Seq(("AAA", 10.0)).toDF("ticker", "price")).write.parquet(path)
+    val e = intercept[IllegalStateException] {
+      MergeSink.upsertParquet(spark, path,
+        withHash(Seq(("BBB", 20.0)).toDF("ticker", "price")), Seq("ticker"))
+    }
+    assert(e.getMessage.contains(path), e.getMessage)
+    assert(e.getMessage.contains("_graft_meta.json"), e.getMessage)
+    // the dir is left as it was
+    assert(spark.read.parquet(path).as[(String, Double, String)].collect()
+      .map(r => (r._1, r._2)).toSeq == Seq(("AAA", 10.0)))
   }
 
   // enough keys to populate several buckets

@@ -97,6 +97,48 @@ class SwapCrashSpec extends SparkSpec {
     }
   }
 
+  test("a create swap crashed at every step recovers to a readable table " +
+      "with its meta") {
+    val created = ids.map(i => (i, s"v$i"))
+    val more = Seq((100L, "v100"))
+    def rows(r: Seq[(Long, String)]) = r.toDF("id", "v")
+    // a staged create as upsertParquet stages it: bucketed rows and meta
+    // under the staging dir, no table dir yet
+    val staged = Files.createTempDirectory("create_src").resolve("t").toString
+    MergeSink.upsertParquet(spark, staged, rows(created), Seq("id"), None,
+      numBuckets = 4)
+    def fixture(name: String): String = {
+      val path = Files.createTempDirectory(name).resolve("t").toString
+      org.apache.hadoop.fs.FileUtil.copy(localFs, new Path(staged), localFs,
+        new Path(MergeSink.stagingPath(path)), false,
+        spark.sparkContext.hadoopConfiguration)
+      path
+    }
+    val clean = fixture("create_clean")
+    val counter = new FaultFileSystem(localFs, failAt = 0)
+    MergeSink.swapDirs(counter, clean, Seq(""))
+    val k0 = counter.calls
+    assert(k0 >= 5, s"clean create swap made only $k0 calls")
+    assert(MergeSink.readTable(spark, clean).as[(Long, String)].collect().toSet ==
+      created.toSet)
+    (1 to k0).foreach { k =>
+      val path = fixture(s"create_k$k")
+      intercept[FaultFileSystem.Fault](
+        MergeSink.swapDirs(new FaultFileSystem(localFs, failAt = k), path, Seq("")))
+      MergeSink.recoverSwap(spark, path)
+      MergeSink.upsertParquet(spark, path, rows(more), Seq("id"), None)
+      val got = MergeSink.readTable(spark, path).as[(Long, String)].collect().toSet
+      // the create published whole, or not at all and the next upsert
+      // created the table
+      assert(got == (created ++ more).toSet || got == more.toSet,
+        s"k=$k: ${got.size} rows")
+      assert(new java.io.File(path, "_graft_meta.json").exists(), s"k=$k: no meta")
+      Seq("__tmp", "__old", "__swap").foreach { s =>
+        assert(!new java.io.File(path + s).exists(), s"k=$k: $s left behind")
+      }
+    }
+  }
+
   test("a whole-dir swap crashed at every step recovers to one generation") {
     crashEveryStep(partitioned = false, Seq("")) { path =>
       Compaction.compactParquetDir(spark, path, 1L << 30)

@@ -13,8 +13,6 @@ import org.apache.spark.metrics.source.CodegenMetrics
 class CodegenReuseSpec extends SparkSpec {
   import spark.implicits._
 
-  // Int ids and config values no other spec uses, so that few of the first
-  // run's task-side classes are left in the cache by an earlier suite
   private val docs = (1 to 12).map { i =>
     (i, s"document $i tells a story about river $i and the boats upon it", s"src${i % 3}")
   }.toDF("doc_id", "text", "source")
@@ -36,13 +34,9 @@ class CodegenReuseSpec extends SparkSpec {
   }
 
   test("a second identical corpus run compiles fewer than half the classes of the first") {
-    // a fresh context classloader keys the driver-side entries apart from
-    // any an earlier suite left
-    val t = Thread.currentThread
-    val loader = t.getContextClassLoader
-    t.setContextClassLoader(new java.net.URLClassLoader(Array.empty, loader))
-    val (first, second) = try (compiled(run()), compiled(run()))
-      finally t.setContextClassLoader(loader)
+    SparkSpec.clearCodegenCache()
+    val first = compiled(run())
+    val second = compiled(run())
     info(s"compiled classes: first run $first, second run $second")
     // not zero: the cache is four LRU segments, and one may overflow
     assert(second * 2 < first, s"first run compiled $first classes, second $second")

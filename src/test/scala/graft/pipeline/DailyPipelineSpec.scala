@@ -329,20 +329,14 @@ class DailyPipelineSpec extends SparkSpec {
     def navBucket(ticker: String): Int = spark.read.parquet(s"$wh/stg_daily_nav")
       .filter(col("ticker") === ticker).select("__bucket").as[Int].head()
 
-    // a fresh context classloader keys the driver-side entries apart from
-    // any an earlier suite left
-    val t = Thread.currentThread
-    val loader = t.getContextClassLoader
-    t.setContextClassLoader(new java.net.URLClassLoader(Array.empty, loader))
-    val (first, second) = try {
-      nav("101.5", "12.0"); history("98.5")
-      day("2024-05-01") // creates the warehouse
-      assert(navBucket("VUSA") != navBucket("ABC"))
-      nav("101.7", "12.0"); history("98.6")
-      val first = day("2024-05-02") // the first upsert into each table
-      nav("101.7", "12.2"); history("98.7")
-      (first, day("2024-05-03")) // a new day, another NAV bucket
-    } finally t.setContextClassLoader(loader)
+    SparkSpec.clearCodegenCache()
+    nav("101.5", "12.0"); history("98.5")
+    day("2024-05-01") // creates the warehouse
+    assert(navBucket("VUSA") != navBucket("ABC"))
+    nav("101.7", "12.0"); history("98.6")
+    val first = day("2024-05-02") // the first upsert into each table
+    nav("101.7", "12.2"); history("98.7")
+    val second = day("2024-05-03") // a new day, another NAV bucket
     info(s"compiled classes: day 1 $first, day 2 $second")
     assert(second == 0, s"day 1 compiled $first classes, day 2 $second")
     assert(spark.read.parquet(s"$wh/stg_daily_nav").filter(col("ticker") === "ABC")

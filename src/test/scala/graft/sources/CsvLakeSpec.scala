@@ -48,10 +48,11 @@ class CsvLakeSpec extends SparkSpec {
     assert(df.columns.contains("as_of_date") && df.columns.contains("currency"))
   }
 
-  test("readRecursive + withPathIdentity: filename predicate and path identity") {
-    val df = CsvLake.withPathIdentity(
-      CsvLake.readRecursive(spark, lake.resolve("hist").toString,
-        nameMustContain = "history", nameMustNotContain = "holdings"))
+  test("listRecursive + readFiles + withPathIdentity: filename predicate and " +
+      "path identity") {
+    val df = CsvLake.withPathIdentity(CsvLake.readFiles(spark,
+      CsvLake.listRecursive(spark, lake.resolve("hist").toString,
+        nameMustContain = "history", nameMustNotContain = "holdings")))
     val rows = df.select("ticker", "asset_type", "as_of_date")
       .withColumn("as_of_date", col("as_of_date").cast("string"))
       .as[(String, String, String)].collect().toSet

@@ -475,8 +475,7 @@ class StreamingIngestSpec extends SparkSpec {
     val merges = Bpe.trainMergesLocal(trainCorpus, "text", 8, 2L)
     assert(merges.nonEmpty)
     val vocab = Bpe.vocabMarkedBytes(trainCorpus, "text", merges)
-    Bpe.saveMerges(spark, merges, s"$root/tok/merges")
-    Bpe.saveVocab(spark, vocab, s"$root/tok/vocab")
+    Bpe.saveTokenizer(spark, merges, vocab, s"$root/tok", Bpe.ModelWordMarked)
 
     def drain(): Unit = {
       val stream = spark.readStream.schema(docSchema)

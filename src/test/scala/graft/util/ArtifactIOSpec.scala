@@ -190,5 +190,8 @@ class ArtifactIOSpec extends SparkSpec {
       ArtifactIO.footerRowCount(spark, root)
     }
     assert(e2.getMessage.contains(root))
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    assert(!ArtifactIO.hasParquet(fs, new org.apache.hadoop.fs.Path(empty)))
+    assert(!ArtifactIO.hasParquet(fs, new org.apache.hadoop.fs.Path(root)))
   }
 }
