@@ -2,12 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Cast, LeafExpression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{LeafExpression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral, JavaCode, TrueLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ExprBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StructField, StructType}
 
 /** A value computed once on the driver and read by generated code as
   * data. Generated code takes it as a codegen reference object, as
@@ -54,14 +54,6 @@ object BoundValue {
       val t = df.schema.head.dataType
       val row = df.queryExecution.executedPlan.executeCollect().head
       ExprBridge.column(BoundValue(InternalRow.copyValue(row.get(0, t)), t))
-  }
-
-  /** `c`'s bound value as a string, as `c.cast("string")` renders it. */
-  def text(spark: SparkSession, c: Column): String = {
-    val BoundValue(v, t) = ExprBridge.expression(bind(spark, c)): @unchecked
-    val s = Cast(Literal(v, t), StringType,
-      Some(spark.conf.get("spark.sql.session.timeZone"))).eval()
-    if (s == null) null else s.toString
   }
 
   /** An int array bound as data — the partition values a filter keeps,

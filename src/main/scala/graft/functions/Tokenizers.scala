@@ -63,14 +63,12 @@ object Tokenizers {
   }
 
   /** Load a tokenizer artifact of EITHER family from `path`, detected
-    * by layout. `requireOpen` (default true — every deployment caller)
-    * additionally insists the artifact can encode day-2 text: a BPE
+    * by layout. It insists the artifact can encode day-2 text: a BPE
     * artifact must carry the byte-fallback vocabulary (the
     * [[Bpe.vocabBytesFrom]] reserved block); a unigram artifact is
     * always open ([[UnigramLm.tokenIdsMarked]] builds the byte layout
     * from the model at load — there is no closed on-disk variant). */
-  def load(spark: SparkSession, path: String,
-           requireOpen: Boolean = true): Tok = {
+  def load(spark: SparkSession, path: String): Tok = {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hasUnigram =
@@ -82,7 +80,7 @@ object Tokenizers {
     if (hasUnigram) UnigramTok(UnigramLm.load(spark, path))
     else {
       val t = Bpe.loadTokenizer(spark, path)
-      require(!requireOpen || t.vocab.exists(_._1.startsWith("\u0002")),
+      require(t.vocab.exists(_._1.startsWith("\u0002")),
         s"tokenizer artifact at $path has a CLOSED vocabulary — " +
           "deployment needs the open byte-fallback layout (vocabBytes / " +
           "vocabMarkedBytes): day-2 batches WILL contain code points the " +

@@ -694,22 +694,15 @@ object CorpusStats {
 
   /** Load a [[bm25AppendBatch]] artifact: per-batch metas sum to
     * (N, Σdl) and the df partitions merge by term. An index with no
-    * batches yet (or only fully-rejected ones) loads as the EMPTY index
-    * rather than crashing on a fileless directory — day one of a
-    * production loop. */
+    * batches yet (or only fully-rejected ones, or only a crashed write's
+    * part files under `_temporary/`) loads as the EMPTY index rather
+    * than crashing on a fileless directory — day one of a production
+    * loop. */
   def bm25LoadParts(spark: SparkSession, path: String): Bm25Index = {
     import spark.implicits._
     val metaPath = new org.apache.hadoop.fs.Path(s"$path/bm25_meta_parts")
     val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hasData(p: org.apache.hadoop.fs.Path): Boolean = {
-      if (!fs.exists(p)) return false
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        if (it.next().getPath.getName.startsWith("part-")) return true
-      }
-      false
-    }
-    if (!hasData(metaPath))
+    if (!graft.util.ArtifactIO.hasParquet(fs, metaPath))
       return Bm25Index(0L, 0L,
         Seq.empty[(String, Long)].toDF("tok", "df"))
     val metas = {
@@ -725,7 +718,7 @@ object CorpusStats {
       s"BM25 batch artifact at $path has model_tag '$tag'") }
     val dfPath = new org.apache.hadoop.fs.Path(s"$path/bm25_df_parts")
     val df =
-      if (hasData(dfPath))
+      if (graft.util.ArtifactIO.hasParquet(fs, dfPath))
         spark.read.parquet(dfPath.toString)
           .groupBy(col("tok")).agg(sum(col("df")).as("df"))
       else Seq.empty[(String, Long)].toDF("tok", "df")

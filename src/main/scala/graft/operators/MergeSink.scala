@@ -322,9 +322,11 @@ object MergeSink {
     * forward, missing staged dirs roll back from path__old. With no
     * marker, a leftover path__tmp or path__old is a write that died
     * before its swap began (the marker is written before the first
-    * rename and deleted after the last delete), so it is removed. Every
-    * writer calls this before staging, under its own writer exclusion.
-    * Returns whether a marker was found. */
+    * rename and deleted after the last delete), so it is removed. A
+    * marker with no entries is a writer killed between creating and
+    * closing it, before any rename: nothing is renamed, so the write
+    * rolls back. Every writer calls this before staging, under its own
+    * writer exclusion. Returns whether a marker was found. */
   def recoverSwap(spark: SparkSession, path: String): Boolean = {
     val fs = fsFor(spark, path)
     val old = path + "__old"
@@ -334,14 +336,9 @@ object MergeSink {
       return false
     }
     val in = fs.open(swapMarker(path))
-    val parsed = scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+    val subdirs = scala.io.Source.fromInputStream(in, "UTF-8").getLines()
       .filter(_.nonEmpty).map(decodeDir).toList
     in.close()
-    // a marker that parses to ZERO entries is a pre-sentinel root-swap
-    // marker (the empty subdir serialized to an empty file) — treat it as
-    // the whole-directory swap it was, or the deletes below would destroy
-    // both the backup and the staged generation
-    val subdirs = if (parsed.isEmpty) List("") else parsed
     subdirs.foreach { d =>
       val cur = if (d.isEmpty) new Path(path) else new Path(path, d)
       val stg = if (d.isEmpty) new Path(tmp) else new Path(tmp, d)

@@ -769,11 +769,9 @@ object QualityModel {
     * reality: vocab ≪ corpus, so when the count frame fits the broadcast
     * threshold Spark's AQE promotes join (2) to a broadcast-hash probe
     * at runtime with NO corpus shuffle — from the aggregate's MEASURED
-    * output size, which is exactly the right signal. `hintSmallVocab`
-    * FORCES the broadcast for callers who know their vocab is bounded
-    * (a trained top-K vocab with OOV smoothing, the production variant);
-    * it defaults to false because a forced broadcast of an UNBOUNDED
-    * web-corpus vocabulary (URLs, typos, hex blobs can push V past the
+    * output size, which is exactly the right signal. The join is never
+    * forced to broadcast: a forced broadcast of an UNBOUNDED web-corpus
+    * vocabulary (URLs, typos, hex blobs can push V past the
     * driver/broadcast limit) fails the job outright, whereas the AQE
     * path degrades to a shuffle join and completes.
     *
@@ -1326,7 +1324,6 @@ object QualityModel {
     }
 
   def unigramCrossEntropy(df: DataFrame, idCol: String, textCol: String,
-                          hintSmallVocab: Boolean = false,
                           tokensOf: Column => Column = TextFns.tokens,
                           maxLocalVocab: Int = 2000000): DataFrame = {
     val toksDf = df.select(col(idCol),
@@ -1352,8 +1349,7 @@ object QualityModel {
     }
     val totals = counts.agg(
       sum(col("cnt")).as("n_total"), count(lit(1)).as("vocab"))
-    val cHinted = if (hintSmallVocab) broadcast(counts) else counts
-    val lp = toksDf.join(cHinted, "tok")
+    val lp = toksDf.join(counts, "tok")
       .crossJoin(broadcast(totals))
       .select(col(idCol),
         lpOf(col("cnt"), col("n_total"), col("vocab")).as("lp_i"))

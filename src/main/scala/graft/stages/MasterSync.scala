@@ -1,6 +1,6 @@
 package graft.stages
 
-import graft.functions.{BoundValue, CleanFns, HashFns}
+import graft.functions.{CleanFns, HashFns}
 import graft.operators.{Conform, Dedup, MergeSink, Validate}
 import graft.schema.Schemas
 import graft.sources.CsvLake
@@ -17,6 +17,10 @@ import org.apache.spark.sql.types._
   * 02_master_list_validator.py -> 04_master_list_loader.py ->
   * 05_status_manager.py); here each stage is a DataFrame -> DataFrame
   * function and the only materialization is the final warehouse merge.
+  * The reference's 03_master_list_remediator.py copies the validated list
+  * into 04_ready_to_load and skips the copy when the file exists; in one
+  * lineage that hop is the identity, so it has no counterpart here, and
+  * a same-day rerun after the list was fixed loads the fixed list.
   *
   * Scale: the master list is small (thousands of rows) — every join against
   * it elsewhere in the engine broadcasts. The consolidate dedup is the one
@@ -103,8 +107,7 @@ object MasterSync {
     * `first_seen`; then the T5 status lifecycle runs over the merged table,
     * and `row_hash` is taken over the row as stored: a 'new' row promoted
     * to 'active' hashes as 'active'. */
-  def load(spark: SparkSession, path: String, batch: DataFrame, asOf: Column,
-           inactiveDays: Int = 7): Unit = {
+  def load(spark: SparkSession, path: String, batch: DataFrame, asOf: Column): Unit = {
     val keys = Schemas.naturalKeys(Table)
     val hconf = spark.sparkContext.hadoopConfiguration
     val tgt = new org.apache.hadoop.fs.Path(path)
@@ -120,78 +123,22 @@ object MasterSync {
           .withColumn("first_seen", coalesce(col("__first"), col("first_seen")))
           .drop("__first")
       }
-    val aged = MergeSink.applyStatusLifecycle(merged, asOf.cast("date"), inactiveDays)
+    val aged = MergeSink.applyStatusLifecycle(merged, asOf.cast("date"))
     MergeSink.replaceParquet(spark, path,
       aged.withColumn("row_hash", HashFns.rowHash(Content, keys)))
   }
 
-  /** Remediation hop (03_master_list_remediator.py:26-37): promote the
-    * validated batch into the ready-to-load generation. The reference stage
-    * is a copy guarded by file-existence memoization (T7: "file already
-    * exists in 04_ready_to_load -> skip"): here a complete generation dir
-    * (one whose write committed its `_SUCCESS` marker) is REUSED as-is,
-    * so a crashed/replayed run resumes from the materialized batch instead
-    * of recomputing upstream stages. A dir with no marker is a write that
-    * failed or was cancelled (a failing sibling stage cancels this one):
-    * the job's setup created the dir and its abort removed only
-    * `_temporary`. It is overwritten, so a retry of the day never reads
-    * a generation that was not written whole. */
-  def remediate(spark: SparkSession, valid: DataFrame, readyDir: String): DataFrame = {
-    val done = new org.apache.hadoop.fs.Path(readyDir, "_SUCCESS")
-    if (!done.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(done))
-      valid.write.mode("overwrite").parquet(readyDir)
-    MergeSink.readTable(spark, readyDir)
-  }
-
-  /** The chain over raw per-source frames, reading back the warehouse
-    * state it wrote. Chain parity with the reference: cleaner ->
-    * consolidator -> validator -> remediator -> loader -> status
-    * lifecycle. `readyDir` (when set) materializes the remediated
-    * ready-to-load generation. */
-  def run(spark: SparkSession, rawBySource: Seq[DataFrame], warehousePath: String,
-          asOf: Column, rejectSink: Option[String] = None,
-          readyDir: Option[String] = None): DataFrame = {
-    ingest(spark, rawBySource.map(clean), warehousePath, asOf, rejectSink, readyDir)
-    MergeSink.readTable(spark, warehousePath)
-  }
-
-  private def ingest(spark: SparkSession, cleaned: Seq[DataFrame],
-                     warehousePath: String, asOf: Column, rejectSink: Option[String],
-                     readyDir: Option[String]): Unit = {
-    val (valid, rejects) = validate(consolidate(cleaned))
-    rejectSink.foreach(Sync.writeRejects(rejects, _))
-    val batch = toWarehouse(valid, asOf)
-    load(spark, warehousePath, readyDir.map(remediate(spark, batch, _)).getOrElse(batch), asOf)
-  }
-
-  /** The `dt=<asOf>` name of a day's ready-to-load generation, from the
-    * bound day's value ([[BoundValue.text]]): no Spark job, and for the
-    * day `DailyPipeline.run` binds, no query either. */
-  private[graft] def generation(spark: SparkSession, asOf: Column): String =
-    "dt=" + BoundValue.text(spark, asOf)
-
   /** The master stage: each source dir's master list (each header group
-    * cleaned on its own), rejects to `rejects/master`, into
-    * stg_security_master. It reads its whole lake every day (no
-    * manifest, see [[Sync]]): `last_seen` and the status lifecycle follow
-    * `asOf`. The ready-to-load generation is run-scoped,
-    * `staging/master_ready/dt=<asOf>`: a retry of the same day resumes
-    * from it, and a later day never reads an earlier day's batch. Once
-    * the load succeeded, earlier days' generations have served their
-    * resume purpose and are deleted, or the staging area would hold one
-    * master batch per day forever. */
+    * cleaned on its own), consolidated and validated, rejects to
+    * `rejects/master`, the valid rows into stg_security_master. It reads
+    * its whole lake every day (no manifest, see [[Sync]]): `last_seen`
+    * and the status lifecycle follow `asOf`. */
   def sync(spark: SparkSession, sources: Seq[(String, String)],
            warehouseRoot: String, asOf: Column): Seq[String] = {
-    val readyRoot = new org.apache.hadoop.fs.Path(s"$warehouseRoot/staging/master_ready")
-    val generation = this.generation(spark, asOf)
-    ingest(spark, sources.map { case (_, dir) => CsvLake.readCsv(spark, dir, clean) },
-      s"$warehouseRoot/$Table", asOf,
-      rejectSink = Some(s"$warehouseRoot/rejects/master"),
-      readyDir = Some(s"$readyRoot/$generation"))
-    val fs = readyRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(readyRoot)
-      .filter(s => s.isDirectory && s.getPath.getName != generation)
-      .foreach(s => fs.delete(s.getPath, true))
+    val (valid, rejects) = validate(consolidate(
+      sources.map { case (_, dir) => CsvLake.readCsv(spark, dir, clean) }))
+    Sync.writeRejects(rejects, s"$warehouseRoot/rejects/master")
+    load(spark, s"$warehouseRoot/$Table", toWarehouse(valid, asOf), asOf)
     Seq(Table)
   }
 }

@@ -87,30 +87,11 @@ object StreamingIngest {
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }
 
-  /** One micro-batch of [[incrementalDedupStream]], callable directly so
-    * replay semantics are testable: running it twice with the SAME
-    * batchId (what a post-crash Structured Streaming replay does) must
-    * leave identical pairs/index partitions. */
-  /** Replay-safe index read for [[incrementalDedupBatch]] (and the
-    * fat-set fetch inside [[curateBatch]]): the persisted signature index
-    * with any ids of THIS batch anti-joined out (present iff this is a
-    * post-crash replay whose index write already landed), so a replay
-    * sees exactly the index state the original run saw. Path-resolved
-    * Hadoop FS, not
-    * java.io.File — the index lives wherever the deployment's warehouse
-    * does (HDFS/S3 at 100 TB); a local-only check would silently dedup
-    * every batch against an empty index there. */
   /** The bucket sidecar's conventional location, derived from the index
     * path: a SIBLING directory (never inside the index root, where its
     * dirs would corrupt partition discovery). */
   def bucketsPath(indexPath: String): String = indexPath + "_buckets"
 
-  /** Replay-safe read of the bucket sidecar for [[curateBatch]]'s pruned
-    * probe: this batch's ids anti-joined out (same contract as
-    * [[replaySafeIndex]]). Bootstrap/migration: an index WITHOUT a sidecar
-    * (a deployment predating it) gets the sidecar derived from the full
-    * index and written ONCE — O(corpus) on that batch only; every later
-    * batch appends its own partition incrementally. */
   /** The persisted index's schema, derived from the SAME builder that
     * writes it, on an empty slice — plan-only, zero Spark jobs. Every
     * micro-batch read below passes it explicitly, so the loop never pays
@@ -135,6 +116,12 @@ object StreamingIngest {
       .schema.add("batch_id", org.apache.spark.sql.types.LongType)
   }
 
+  /** Replay-safe read of the bucket sidecar for [[curateBatch]]'s pruned
+    * probe: this batch's ids anti-joined out (same contract as
+    * [[replaySafeIndex]]). Bootstrap/migration: an index WITHOUT a sidecar
+    * (a deployment predating it) gets the sidecar derived from the full
+    * index and written ONCE — O(corpus) on that batch only; every later
+    * batch appends its own partition incrementally. */
   private def replaySafeBuckets(spark: SparkSession, batch: DataFrame,
                                 idCol: String, textCol: String,
                                 indexPath: String, numHashes: Int,
@@ -167,6 +154,15 @@ object StreamingIngest {
         .withColumn("batch_id", lit(null).cast("long"))
   }
 
+  /** Replay-safe index read for [[incrementalDedupBatch]] (and the
+    * fat-set fetch inside [[curateBatch]]): the persisted signature index
+    * with any ids of THIS batch anti-joined out (present iff this is a
+    * post-crash replay whose index write already landed), so a replay
+    * sees exactly the index state the original run saw. Path-resolved
+    * Hadoop FS, not
+    * java.io.File — the index lives wherever the deployment's warehouse
+    * does (HDFS/S3 at 100 TB); a local-only check would silently dedup
+    * every batch against an empty index there. */
   private def replaySafeIndex(spark: SparkSession, batch: DataFrame,
                               idCol: String, textCol: String,
                               indexPath: String, numHashes: Int,
@@ -183,6 +179,10 @@ object StreamingIngest {
     else Dedup.nearDupIndex(batch.limit(0), idCol, textCol, numHashes, shingleN)
   }
 
+  /** One micro-batch of [[incrementalDedupStream]], callable directly so
+    * replay semantics are testable: running it twice with the SAME
+    * batchId (what a post-crash Structured Streaming replay does) must
+    * leave identical pairs/index partitions. */
   def incrementalDedupBatch(spark: SparkSession, batch: DataFrame,
                             batchId: Long, idCol: String, textCol: String,
                             indexPath: String, pairsPath: String,
@@ -495,7 +495,7 @@ object StreamingIngest {
       // artifact ($path/unigram_meta) or a BPE one
       // ($path/{merges,vocab,meta}), so a stream can point
       // straight at a pipeline's outDir/tokenizer whatever family
-      // trained it. The requireOpen default insists on the open
+      // trained it. The load insists on the open
       // byte-fallback layout for BPE (day-2 batches WILL contain code
       // points the training corpus lacked -- a closed artifact fails
       // the stream loudly at startup); a unigram artifact is always

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class CorpusStatsSpec extends SparkSpec {
   import spark.implicits._
@@ -380,6 +381,24 @@ class CorpusStatsSpec extends SparkSpec {
     // replay batch 1: dynamic overwrite rewrites only its partition
     CorpusStats.bm25AppendBatch(spark, root, b1, "doc_id", "text", 1L)
     assert(snapshot() == s1, "a replayed batch must leave the index unchanged")
+    // a parts dir whose only part files sit where an uncommitted task
+    // attempt leaves them (a crashed write) loads as empty too
+    val leftover = java.nio.file.Files.createTempDirectory("bm25_leftover")
+    Seq("bm25_meta_parts", "bm25_df_parts").foreach { parts =>
+      val from = java.nio.file.Paths.get(root, parts)
+      val walk = java.nio.file.Files.walk(from)
+      try walk.iterator().asScala
+        .filter(_.getFileName.toString.startsWith("part-")).toList
+        .foreach { f =>
+          val to = leftover.resolve(parts)
+            .resolve("_temporary/0/_temporary/attempt_0").resolve(from.relativize(f))
+          java.nio.file.Files.createDirectories(to.getParent)
+          java.nio.file.Files.copy(f, to)
+        }
+      finally walk.close()
+    }
+    val crashed = CorpusStats.bm25LoadParts(spark, leftover.toString)
+    assert(crashed.nDocs == 0L && crashed.sumDl == 0L && crashed.df.count() == 0L)
   }
 
   test("bm25TopKQueries: batched result == per-query bm25TopK, query by " +

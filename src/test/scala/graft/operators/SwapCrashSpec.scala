@@ -139,6 +139,46 @@ class SwapCrashSpec extends SparkSpec {
     }
   }
 
+  test("an empty swap marker (writer killed before closing it) rolls back " +
+      "a staged bucket generation and a staged create") {
+    def table(name: String, gen: String): String = {
+      val path = Files.createTempDirectory(name).resolve("t").toString
+      MergeSink.upsertParquet(spark, path, ids.map(i => (i, gen)).toDF("id", "v"),
+        Seq("id"), None, numBuckets = 4)
+      path
+    }
+    def copy(src: String, dst: String): Unit =
+      org.apache.hadoop.fs.FileUtil.copy(localFs, new Path(src), localFs,
+        new Path(dst), false, spark.sparkContext.hadoopConfiguration)
+    // what swapDirs leaves when killed between creating its marker and
+    // closing it: the backup dir made, the marker empty, nothing renamed
+    def crashBeforeClose(path: String): Unit = {
+      assert(localFs.mkdirs(new Path(path + "__old")))
+      localFs.create(new Path(path + "__swap"), true).close()
+    }
+    def assertNoLeftovers(path: String): Unit =
+      Seq("__tmp", "__old", "__swap").foreach { s =>
+        assert(!new java.io.File(path + s).exists(), s"$s left behind")
+      }
+
+    val updated = table("empty_marker_new", "new")
+    val bucketed = table("empty_marker_bucket", "old")
+    val bucket = new java.io.File(updated).list().filter(_.startsWith("__bucket=")).min
+    copy(s"$updated/$bucket", s"${MergeSink.stagingPath(bucketed)}/$bucket")
+    crashBeforeClose(bucketed)
+    assert(MergeSink.recoverSwap(spark, bucketed))
+    assert(MergeSink.readTable(spark, bucketed).as[(Long, String)].collect().toSet ==
+      ids.map(i => (i, "old")).toSet)
+    assertNoLeftovers(bucketed)
+
+    val create = Files.createTempDirectory("empty_marker_create").resolve("t").toString
+    copy(updated, MergeSink.stagingPath(create))
+    crashBeforeClose(create)
+    assert(MergeSink.recoverSwap(spark, create))
+    assert(!new java.io.File(create).exists(), "a create with no marker entry rolled forward")
+    assertNoLeftovers(create)
+  }
+
   test("a whole-dir swap crashed at every step recovers to one generation") {
     crashEveryStep(partitioned = false, Seq("")) { path =>
       Compaction.compactParquetDir(spark, path, 1L << 30)

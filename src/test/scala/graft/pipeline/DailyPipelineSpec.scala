@@ -76,6 +76,10 @@ class DailyPipelineSpec extends SparkSpec {
     // replay the whole day -> identical warehouse row counts (idempotence)
     val replay = DailyPipeline.run(spark, s"$root/lake", wh, lit("2024-05-01"))
     assert(replay.map(r => r.stage -> r.rows).toMap == byStage)
+    // the tables, the rejects and the lake manifests: no staging area
+    val top = new java.io.File(wh).list().toSeq
+    assert(top.filterNot(d => d.startsWith("stg_") || d == "rejects" || d == "_manifest")
+      .isEmpty, top.sorted)
   }
 
   test("an unchanged lake rerun at the next as-of date leaves every " +
@@ -290,12 +294,6 @@ class DailyPipelineSpec extends SparkSpec {
       e.summary.mkString("; "))
     assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
     assert(leftovers(wh).isEmpty, leftovers(wh).mkString("; "))
-
-    // however far master got, leave what its write leaves when cancelled
-    // after the job's setup: the day's generation dir, empty
-    val generation = new java.io.File(s"$wh/staging/master_ready/dt=2024-05-01")
-    org.apache.commons.io.FileUtils.deleteDirectory(generation)
-    assert(generation.mkdirs())
 
     write(lake.resolve("details/Stock Analysis"), "screener.csv", goodDetails)
     val rerun = DailyPipeline.run(spark, lake.toString, wh, lit("2024-05-01"))

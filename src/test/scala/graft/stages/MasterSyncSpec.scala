@@ -56,93 +56,47 @@ class MasterSyncSpec extends SparkSpec {
   }
 
   test("end-to-end: load twice is idempotent; lifecycle ages stale rows; first_seen preserved") {
-    val dir = Files.createTempDirectory("master_sync").toString
-    val path = s"$dir/stg_security_master"
-    val day1 = Seq(
-      ("VUSA", "ETF", "Vanguard", "new", "Financial Times", "2024-05-01"),
-      ("ABC", "FUND", "Alpha", "active", "Financial Times", "2024-05-01"))
-      .toDF("ticker", "asset_type", "name", "status", "source", "date_added")
+    val root = Files.createTempDirectory("master_sync")
+    val dir = root.resolve("lake/ft")
+    Files.createDirectories(dir)
+    val header = "ticker,asset_type,name,status,source,date_added\n"
+    def deliver(rows: String*): Unit =
+      Files.writeString(dir.resolve("ft_master.csv"), header + rows.map(_ + "\n").mkString)
+    def sync(asOf: String): Seq[org.apache.spark.sql.Row] = {
+      MasterSync.sync(spark, Seq("Financial Times" -> dir.toString), root.toString, lit(asOf))
+      // materialized before a later sync overwrites the files underneath
+      spark.read.parquet(s"$root/stg_security_master").orderBy("ticker")
+        .drop("updated_at").collect().toSeq
+    }
+    def state(rows: Seq[org.apache.spark.sql.Row], ticker: String) =
+      rows.find(_.getAs[String]("ticker") == ticker).map(r => (r.getAs[String]("name"),
+        r.getAs[String]("status"), r.getAs[java.sql.Date]("first_seen").toString,
+        r.getAs[java.sql.Date]("last_seen").toString))
 
-    val s1 = MasterSync.run(spark, Seq(day1), path, lit("2024-05-01"))
-    // materialize before the replay overwrites the files underneath
-    val s1rows = s1.orderBy("ticker").drop("updated_at").collect().toSeq
-    assert(s1rows.length == 2)
+    deliver("VUSA,ETF,Vanguard,new,Financial Times,2024-05-01",
+      "ABC,FUND,Alpha,active,Financial Times,2024-05-01")
+    val s1 = sync("2024-05-01")
+    assert(s1.length == 2)
     // 'new' with non-blank name promotes to active (T5)
-    assert(s1rows.exists(r => r.getString(0) == "VUSA" && r.getString(4) == "active"))
+    assert(state(s1, "VUSA") == Some(("Vanguard", "active", "2024-05-01", "2024-05-01")))
 
     // replay same batch -> same state (idempotence)
-    val s2 = MasterSync.run(spark, Seq(day1), path, lit("2024-05-01"))
-    assert(s2.orderBy("ticker").drop("updated_at").collect().toSeq == s1rows)
+    assert(sync("2024-05-01") == s1)
+
+    // the list is fixed and the day rerun: the rerun loads the fixed list
+    deliver("VUSA,ETF,Vanguard S&P 500,new,Financial Times,2024-05-01",
+      "ABC,FUND,Alpha,active,Financial Times,2024-05-01",
+      "XYZ,ETF,Xylo,new,Financial Times,2024-05-01")
+    val fixed = sync("2024-05-01")
+    assert(fixed.map(_.getAs[String]("ticker")) == Seq("ABC", "VUSA", "XYZ"))
+    assert(state(fixed, "VUSA") ==
+      Some(("Vanguard S&P 500", "active", "2024-05-01", "2024-05-01")))
 
     // 9 days later only VUSA re-appears: ABC ages to inactive, first_seen kept
-    val day9 = Seq(("VUSA", "ETF", "Vanguard", "active", "Financial Times", "2024-05-09"))
-      .toDF("ticker", "asset_type", "name", "status", "source", "date_added")
-    val s3 = MasterSync.run(spark, Seq(day9), path, lit("2024-05-10"))
-    val abc = s3.filter(col("ticker") === "ABC")
-      .select(col("status"), col("first_seen").cast("string"),
-        col("last_seen").cast("string"))
-      .as[(String, String, String)].head()
-    assert(abc == ("inactive", "2024-05-01", "2024-05-01"))
-    val vusa = s3.filter(col("ticker") === "VUSA")
-      .select(col("status"), col("first_seen").cast("string"),
-        col("last_seen").cast("string"))
-      .as[(String, String, String)].head()
-    assert(vusa == ("active", "2024-05-01", "2024-05-10"))
-  }
-
-  test("remediator hop: ready-to-load generation reaches the warehouse and memoizes") {
-    val root = java.nio.file.Files.createTempDirectory("master_remediate")
-    val path = s"$root/stg_security_master"
-    val ready = s"$root/ready"
-    val day1 = Seq(
-      ("VUSA", "ETF", "Vanguard", "new", "Financial Times", "2024-05-01"))
-      .toDF("ticker", "asset_type", "name", "status", "source", "date_added")
-
-    val s1 = MasterSync.run(spark, Seq(day1), path, lit("2024-05-01"),
-      readyDir = Some(ready))
-    assert(s1.count() == 1) // remediated row reached the warehouse
-    assert(new java.io.File(ready).isDirectory) // generation materialized
-
-    // T7 memoization: a changed upstream batch does NOT recompute the
-    // existing ready generation — the materialized file wins (reference
-    // remediator: "file already exists ... skipping copy")
-    val changed = Seq(
-      ("ABCD", "ETF", "Other", "new", "Financial Times", "2024-05-01"))
-      .toDF("ticker", "asset_type", "name", "status", "source", "date_added")
-    val s2 = MasterSync.run(spark, Seq(changed), path, lit("2024-05-01"),
-      readyDir = Some(ready))
-    assert(s2.select("ticker").as[String].collect().toSeq == Seq("VUSA"))
-  }
-
-  test("remediator hop: a generation dir with no _SUCCESS is rewritten, not reused") {
-    val root = java.nio.file.Files.createTempDirectory("master_cancelled")
-    val path = s"$root/stg_security_master"
-    val ready = root.resolve("ready")
-    // what a write cancelled after its job setup leaves: the dir, nothing in it
-    java.nio.file.Files.createDirectories(ready)
-    val day1 = Seq(
-      ("VUSA", "ETF", "Vanguard", "new", "Financial Times", "2024-05-01"))
-      .toDF("ticker", "asset_type", "name", "status", "source", "date_added")
-    val s1 = MasterSync.run(spark, Seq(day1), path, lit("2024-05-01"),
-      readyDir = Some(ready.toString))
-    assert(s1.select("ticker").as[String].collect().toSeq == Seq("VUSA"))
-    assert(java.nio.file.Files.exists(ready.resolve("_SUCCESS")))
-  }
-
-  test("the ready-to-load generation's name is rendered without a Spark job") {
-    val sc = spark.sparkContext
-    val group = s"generation-${java.util.UUID.randomUUID()}"
-    sc.setJobGroup(group, "generation name")
-    try {
-      assert(MasterSync.generation(spark, lit("2024-05-01")) == "dt=2024-05-01")
-      assert(MasterSync.generation(spark, lit("2024-05-01").cast("date")) == "dt=2024-05-01")
-      // one marker job in the same group: once the status tracker holds
-      // it, it holds every job the group started before it
-      sc.parallelize(Seq(1), 1).count()
-    } finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30000000000L
-    while (sc.statusTracker.getJobIdsForGroup(group).isEmpty && System.nanoTime() < deadline)
-      Thread.sleep(20)
-    assert(sc.statusTracker.getJobIdsForGroup(group).length == 1)
+    deliver("VUSA,ETF,Vanguard S&P 500,active,Financial Times,2024-05-09")
+    val s3 = sync("2024-05-10")
+    assert(state(s3, "ABC") == Some(("Alpha", "inactive", "2024-05-01", "2024-05-01")))
+    assert(state(s3, "VUSA") ==
+      Some(("Vanguard S&P 500", "active", "2024-05-01", "2024-05-10")))
   }
 }
