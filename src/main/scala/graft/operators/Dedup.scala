@@ -527,11 +527,14 @@ object Dedup {
 
   /** [[incrementalNearDups]] against a MATERIALIZED bucket sidecar — the
     * deployment shape the [[nearDupIndex]] scaladoc prescribes, with the
-    * set fetch partition-pruned. Same pair set as [[incrementalNearDups]]
-    * over the same index; the difference is
-    * per-batch IO (DedupSpec pins the equality in BOTH cap regimes —
-    * uncapped, and with a maxBucketSize that actually truncates a hot
-    * bucket, the branch the production curateBatch default exercises):
+    * set fetch partition-pruned. It is the one probe of both streaming
+    * loops (`StreamingIngest.incrementalDedupStream` and `curateStream`),
+    * which append each batch's sidecar partition beside its index
+    * partition. Same pair set as [[incrementalNearDups]] over the same
+    * index — q65's operator stays the reference, and DedupSpec pins the
+    * equality in BOTH cap regimes (uncapped, and with a maxBucketSize
+    * that actually truncates a hot bucket, the branch the production
+    * curateBatch default exercises); the difference is per-batch IO:
     *
     *  - [[incrementalNearDups]] re-derives band buckets from the FULL
     *    index's signature column every batch (O(index x bands) explode +

@@ -753,6 +753,54 @@ object QualityModel {
   def langPredictTrained(text: Column, model: LangIdModel): Column =
     langPredictFromMargins(langMargins(text, model), model.langs)
 
+  /** The curators' one gate rule: `df` plus `drop_reason`, the FIRST
+    * failed gate in the order empty_after_clean, too_short, low_quality,
+    * high_perplexity, low_perplexity, wrong_language (NULL = kept). A gate
+    * left at its default is off; the others read `n_tokens`, `quality`
+    * and `xent`. [[graft.streaming.StreamingIngest.curateBatch]] runs
+    * every gate in one call; [[graft.pipeline.CorpusPipeline]] runs the
+    * xent band in its own ppl_gate stage, whose LM trains on the quality
+    * stage's survivors.
+    *
+    * With `langAllow` nonempty the frame also gains the `lang` audit
+    * column: the argmax of the TRAINED char-n-gram classifier when
+    * `langId` supplies a loaded artifact (the fastText deployment shape:
+    * train offline, freeze, score through plan-literal weights), else the
+    * marker argmax (q36, [[TextFns.langPredict]]). Margins materialize
+    * ONCE before the argmax reads fields — the HOF-CodegenFallback
+    * contract ([[langMargins]]). */
+  def gate(df: DataFrame, textCol: String, dropEmpty: Boolean = false,
+           minTokens: Option[Long] = None, minQuality: Option[Double] = None,
+           xentBand: Option[(Double, Double)] = None,
+           langAllow: Seq[String] = Nil,
+           langId: Option[LangIdModel] = None): DataFrame = {
+    val withLang =
+      if (langAllow.isEmpty) df
+      else langId match {
+        case Some(m) =>
+          df.withColumn("__lmg", langMargins(col(textCol), m))
+            .withColumn("lang", langPredictFromMargins(col("__lmg"), m.langs))
+            .drop("__lmg")
+        case None => df.withColumn("lang", TextFns.langPredict(col(textCol)))
+      }
+    val rules: Seq[(Column, String)] =
+      (if (dropEmpty) Seq((length(col(textCol)) === 0) -> "empty_after_clean")
+       else Nil) ++
+        minTokens.map(m => (col("n_tokens") < m) -> "too_short") ++
+        minQuality.map(q => (col("quality") < q) -> "low_quality") ++
+        xentBand.toSeq.flatMap { case (lo, hi) =>
+          Seq((col("xent") > hi) -> "high_perplexity",
+            (col("xent") < lo) -> "low_perplexity")
+        } ++
+        (if (langAllow.isEmpty) Nil
+         else Seq((!col("lang").isin(langAllow.map(lit): _*)) -> "wrong_language"))
+    require(rules.nonEmpty, "gate: every gate is off")
+    val reason = rules.tail.foldLeft(when(rules.head._1, lit(rules.head._2))) {
+      case (r, (failed, why)) => r.when(failed, lit(why))
+    }
+    withLang.withColumn("drop_reason", reason)
+  }
+
   /** Per-document cross-entropy under a corpus-trained add-one-smoothed
     * unigram LM: xent(d) = mean over tokens t of −ln P(t), with
     * P(t) = (count(t) + 1) / (N + V) over the whole corpus (N = total

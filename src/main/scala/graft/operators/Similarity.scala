@@ -557,7 +557,7 @@ object Similarity {
     * join stage; only scalar survivors reach the dedup exchange).
     * Precondition: batch ids are disjoint from index ids (enforce by
     * anti-joining a replayed batch out of the index read — see
-    * StreamingIngest.replaySafeIndex for the pattern). */
+    * StreamingIngest.probeIndex for the pattern). */
   def incrementalEmbedNearDups(batch: DataFrame, index: DataFrame,
                                idCol: String, vecCol: String, dim: Int,
                                thresholdNum: Int = 3, thresholdDen: Int = 10,

@@ -300,34 +300,15 @@ object CorpusPipeline {
       val in = read("s0_clean")
       // langAllow nonempty => the language gate rides the SAME pass:
       // docs outside the allow-list drop as wrong_language, kept docs
-      // carry the `lang` audit column. Empty list = gate off, schema
-      // unchanged. The predictor is the marker argmax (q36,
-      // TextFns.langPredict) unless cfg.langIdModel supplies the
-      // TRAINED char-n-gram classifier (q112) — same column contract,
-      // same single scan.
-      val scored0 = in.select(col("doc_id"), col("text"), col("source"),
-        TextFns.tokenCount(col("text")).cast("long").as("n_tokens"),
-        TextFns.qualityScore(col("text")).as("quality"))
-      val scored =
-        if (cfg.langAllow.isEmpty) scored0
-        else cfg.langIdModel match {
-          case Some(m) =>
-            // margins materialize ONCE, then the argmax reads fields —
-            // the HOF-CodegenFallback contract (QualityModel.langMargins)
-            scored0.withColumn("__lm",
-                graft.operators.QualityModel.langMargins(col("text"), m))
-              .withColumn("lang", graft.operators.QualityModel
-                .langPredictFromMargins(col("__lm"), m.langs))
-              .drop("__lm")
-          case None =>
-            scored0.withColumn("lang", TextFns.langPredict(col("text")))
-        }
-      val baseReason = when(col("n_tokens") < cfg.minTokens, lit("too_short"))
-        .when(col("quality") < cfg.minQuality, lit("low_quality"))
-      val gated = scored.withColumn("drop_reason",
-        if (cfg.langAllow.isEmpty) baseReason
-        else baseReason.when(
-          !col("lang").isin(cfg.langAllow.map(lit): _*), lit("wrong_language")))
+      // carry the `lang` audit column (QualityModel.gate). Empty list =
+      // gate off, schema unchanged.
+      val gated = QualityModel.gate(
+        in.select(col("doc_id"), col("text"), col("source"),
+          TextFns.tokenCount(col("text")).cast("long").as("n_tokens"),
+          TextFns.qualityScore(col("text")).as("quality")),
+        "text", minTokens = Some(cfg.minTokens),
+        minQuality = Some(cfg.minQuality), langAllow = cfg.langAllow,
+        langId = cfg.langIdModel)
       write(gated.filter(col("drop_reason").isNotNull), "rejects_quality")
       write(gated.filter(col("drop_reason").isNull)
         .drop("drop_reason"), "s1_quality")
@@ -371,10 +352,8 @@ object CorpusPipeline {
         }
         else if (cfg.pplLmOrder == 2) QualityModel.withBigramXent(in, "doc_id", "text")
         else QualityModel.withUnigramXent(in, "doc_id", "text")
-      val gated = scored
-        .withColumn("drop_reason",
-          when(col("xent") > cfg.maxXent, lit("high_perplexity"))
-            .when(col("xent") < cfg.minXent, lit("low_perplexity")))
+      val gated = QualityModel.gate(scored, "text",
+          xentBand = Some((cfg.minXent, cfg.maxXent)))
         // persist across the rejects/keep split: predicate pushdown
         // otherwise substitutes the xent definition into each write's
         // filter AND projection — 4 scorer evaluations of the corpus

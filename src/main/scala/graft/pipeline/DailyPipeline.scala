@@ -96,12 +96,15 @@ object DailyPipeline {
     ("allocations_sync", "allocations", HoldingsSync.syncAllocations _))
 
   /** The subdirs of `dir` as (name, path), sorted by name; none when
-    * `dir` does not exist. */
+    * `dir` does not exist. A hidden subdir (`.`/`_`-named, the
+    * [[graft.util.ArtifactIO.hidden]] rule every lake listing follows) is
+    * no source: an editor's `.ipynb_checkpoints/` copy is not a feed. */
   private def sources(spark: SparkSession, dir: String): Seq[(String, String)] = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Nil
-    else fs.listStatus(p).filter(_.isDirectory)
+    else fs.listStatus(p)
+      .filter(s => s.isDirectory && !ArtifactIO.hidden(s.getPath.getName))
       .map(s => s.getPath.getName -> s.getPath.toString).toSeq.sortBy(_._1)
   }
 

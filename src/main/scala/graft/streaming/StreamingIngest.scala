@@ -5,7 +5,7 @@ import graft.util.ArtifactIO
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Structured Streaming ingest (SURVEY.md §2.10): the reference's daily
   * cron + repair-pass + hash-upsert incremental semantics, re-expressed as
@@ -56,19 +56,18 @@ object StreamingIngest {
     * PERSISTED [[graft.operators.Dedup.nearDupIndex]] parquet at
     * `indexPath` (near-dup pairs land under `pairsPath`), then the
     * batch's own index rows are appended — so batch N+1 sees every doc
-    * from batches 1..N without ever re-reading their text.
+    * from batches 1..N without ever re-reading their text. The probe and
+    * the append are [[curateBatch]]'s own ([[probeIndex]],
+    * [[appendIndex]]): the index carries its bucket sidecar at
+    * [[bucketsPath]], so either loop can continue the other's index.
     *
-    * Exactly-once on replay WITHOUT transactions: both sinks partition by
-    * batch_id and use DYNAMIC partition overwrite, so a crashed batch
+    * Exactly-once on replay WITHOUT transactions: every sink partitions
+    * by batch_id and uses DYNAMIC partition overwrite, so a crashed batch
     * rewrites only its own partition. A replay whose index append already
     * landed is still correct: the batch's ids are anti-joined OUT of the
-    * index read (enforcing incrementalNearDups' disjoint-id precondition
+    * index reads (enforcing the probe's disjoint-id precondition
     * mechanically), so the replayed batch sees exactly the index state
-    * the original run saw and rewrites identical partitions.
-    *
-    * 100 TB: the index grows by one parquet partition per batch; compact
-    * periodically and materialize its [[graft.operators.Dedup.bandBuckets]]
-    * partitioned for probe-side partition pruning (see incrementalNearDups). */
+    * the original run saw and rewrites identical partitions. */
   def incrementalDedupStream(spark: SparkSession, stream: DataFrame,
                              idCol: String, textCol: String,
                              indexPath: String, pairsPath: String,
@@ -92,91 +91,77 @@ object StreamingIngest {
     * dirs would corrupt partition discovery). */
   def bucketsPath(indexPath: String): String = indexPath + "_buckets"
 
-  /** The persisted index's schema, derived from the SAME builder that
-    * writes it, on an empty slice — plan-only, zero Spark jobs. Every
-    * micro-batch read below passes it explicitly, so the loop never pays
-    * a per-batch schema-inference job on files this engine wrote (the
-    * ArtifactIO discipline applied to the streaming sidecars; batch_id
-    * is the partition column, typed so its filter prunes partitions). */
-  private def indexSchema(batch: DataFrame, idCol: String, textCol: String,
-                          numHashes: Int, shingleN: Int)
-      : org.apache.spark.sql.types.StructType =
-    graft.operators.Dedup
-      .nearDupIndex(batch.limit(0), idCol, textCol, numHashes, shingleN)
-      .schema.add("batch_id", org.apache.spark.sql.types.LongType)
-
-  private def bucketsSchema(batch: DataFrame, idCol: String, textCol: String,
-                            numHashes: Int, bands: Int, shingleN: Int)
-      : org.apache.spark.sql.types.StructType = {
+  /** The near-dup pairs (id_a, id_b, jaccard) between `batch` and the
+    * persisted index, plus those within the batch: the
+    * [[graft.operators.Dedup.incrementalNearDupsIndexed]] probe over the
+    * bucket sidecar, with shingle sets fetched only from the batch_id
+    * partitions that collided. Per-batch work is O(batch) plus an
+    * O(index) thin-bucket scan at ~24 B x bands per indexed doc (see that
+    * method's doc for the floor argument).
+    *
+    * Replay-safe: both index reads anti-join this batch's ids out
+    * (present iff this is a post-crash replay whose append already
+    * landed), so a replay sees exactly the index state the original run
+    * saw. Path-resolved Hadoop FS, not java.io.File — the index lives
+    * wherever the deployment's warehouse does (HDFS/S3 at 100 TB); a
+    * local-only check would silently dedup every batch against an empty
+    * index there. The pairs are checkpointed: they never read
+    * `indexPath`, so a sink may overwrite it. */
+  private def probeIndex(spark: SparkSession, batch: DataFrame,
+                         idCol: String, textCol: String, indexPath: String,
+                         numHashes: Int, bands: Int, shingleN: Int,
+                         threshold: Double, maxBucketSize: Int): DataFrame = {
     import graft.operators.Dedup
-    Dedup.bandBuckets(
-        Dedup.nearDupIndex(batch.limit(0), idCol, textCol, numHashes,
-          shingleN),
-        idCol, bands, numHashes)
-      .schema.add("batch_id", org.apache.spark.sql.types.LongType)
+    val bPath = new org.apache.hadoop.fs.Path(bucketsPath(indexPath))
+    val fs = bPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the batch id set is micro-batch-sized: a broadcast probe
+    def replaySafe(index: DataFrame): DataFrame =
+      index.join(broadcast(batch.select(col(idCol))), Seq(idCol), "left_anti")
+    // Both reads pass the schema of the SAME builders that write the
+    // files, derived on an empty slice (plan-only, zero Spark jobs), so
+    // the loop never pays a per-batch schema-inference job on files this
+    // engine wrote; batch_id is the partition column, typed so its filter
+    // prunes partitions.
+    val emptyIdx = Dedup.nearDupIndex(batch.limit(0), idCol, textCol,
+      numHashes, shingleN)
+    val emptyBuckets = Dedup.bandBuckets(emptyIdx, idCol, bands, numHashes)
+    def read(path: String, empty: DataFrame): DataFrame =
+      spark.read.schema(empty.schema.add("batch_id", LongType)).parquet(path)
+    val iBuckets =
+      if (ArtifactIO.hasParquet(fs, bPath))
+        replaySafe(read(bPath.toString, emptyBuckets))
+      else emptyBuckets.withColumn("batch_id", lit(null).cast(LongType))
+    val fetchSets = (parts: Seq[Any]) =>
+      replaySafe(read(indexPath, emptyIdx)
+        .filter(col("batch_id").isin(parts: _*)))
+    Dedup.incrementalNearDupsIndexed(batch, iBuckets, fetchSets, idCol,
+      "batch_id", numHashes, bands, shingleN, threshold, maxBucketSize,
+      textCol)
   }
 
-  /** Replay-safe read of the bucket sidecar for [[curateBatch]]'s pruned
-    * probe: this batch's ids anti-joined out (same contract as
-    * [[replaySafeIndex]]). Bootstrap/migration: an index WITHOUT a sidecar
-    * (a deployment predating it) gets the sidecar derived from the full
-    * index and written ONCE — O(corpus) on that batch only; every later
-    * batch appends its own partition incrementally. */
-  private def replaySafeBuckets(spark: SparkSession, batch: DataFrame,
-                                idCol: String, textCol: String,
-                                indexPath: String, numHashes: Int,
-                                bands: Int, shingleN: Int): DataFrame = {
-    import graft.operators.Dedup
-    val bPath = bucketsPath(indexPath)
-    val hBuckets = new org.apache.hadoop.fs.Path(bPath)
-    val hIndex = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = hBuckets.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!ArtifactIO.hasParquet(fs, hBuckets) && ArtifactIO.hasParquet(fs, hIndex)) {
-      val idx = spark.read
-        .schema(indexSchema(batch, idCol, textCol, numHashes, shingleN))
-        .parquet(indexPath)
-      Dedup.bandBuckets(idx, idCol, bands, numHashes)
-        .join(idx.select(col(idCol), col("batch_id")), Seq(idCol))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(bPath)
-    }
-    if (ArtifactIO.hasParquet(fs, hBuckets))
-      spark.read
-        .schema(bucketsSchema(batch, idCol, textCol, numHashes, bands,
-          shingleN))
-        .parquet(bPath)
-        .join(broadcast(batch.select(col(idCol))), Seq(idCol), "left_anti")
-    else
-      Dedup.bandBuckets(
-          Dedup.nearDupIndex(batch.limit(0), idCol, textCol, numHashes, shingleN),
-          idCol, bands, numHashes)
-        .withColumn("batch_id", lit(null).cast("long"))
-  }
+  /** Writes `df` as the `batchId` partition of `path` with dynamic
+    * partition overwrite: a replayed batch replaces only its own
+    * partition. */
+  private def sinkBatch(df: DataFrame, batchId: Long, path: String): Unit =
+    df.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id").parquet(path)
 
-  /** Replay-safe index read for [[incrementalDedupBatch]] (and the
-    * fat-set fetch inside [[curateBatch]]): the persisted signature index
-    * with any ids of THIS batch anti-joined out (present iff this is a
-    * post-crash replay whose index write already landed), so a replay
-    * sees exactly the index state the original run saw. Path-resolved
-    * Hadoop FS, not
-    * java.io.File — the index lives wherever the deployment's warehouse
-    * does (HDFS/S3 at 100 TB); a local-only check would silently dedup
-    * every batch against an empty index there. */
-  private def replaySafeIndex(spark: SparkSession, batch: DataFrame,
-                              idCol: String, textCol: String,
-                              indexPath: String, numHashes: Int,
-                              shingleN: Int): DataFrame = {
+  /** Appends `docs` to the index as its `batchId` partition, then their
+    * band buckets to the sidecar at [[bucketsPath]]: buckets are computed
+    * ONCE here, at write time, so later batches probe 3 thin int64
+    * columns instead of re-deriving buckets from every indexed signature
+    * (same batch_id partitioning and dynamic overwrite, so the same
+    * replay story as the index itself). */
+  private def appendIndex(docs: DataFrame, batchId: Long, idCol: String,
+                          textCol: String, indexPath: String,
+                          numHashes: Int, bands: Int, shingleN: Int): Unit = {
     import graft.operators.Dedup
-    val hPath = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (ArtifactIO.hasParquet(fs, hPath))
-      // the batch id set is micro-batch-sized, broadcast probe
-      spark.read
-        .schema(indexSchema(batch, idCol, textCol, numHashes, shingleN))
-        .parquet(indexPath).drop("batch_id")
-        .join(broadcast(batch.select(col(idCol))), Seq(idCol), "left_anti")
-    else Dedup.nearDupIndex(batch.limit(0), idCol, textCol, numHashes, shingleN)
+    val idx = Dedup.nearDupIndex(docs, idCol, textCol, numHashes, shingleN)
+    sinkBatch(idx, batchId, indexPath)
+    sinkBatch(Dedup.bandBuckets(idx, idCol, bands, numHashes), batchId,
+      bucketsPath(indexPath))
   }
 
   /** One micro-batch of [[incrementalDedupStream]], callable directly so
@@ -188,20 +173,10 @@ object StreamingIngest {
                             indexPath: String, pairsPath: String,
                             numHashes: Int, bands: Int, shingleN: Int,
                             threshold: Double, maxBucketSize: Int): Unit = {
-    import graft.operators.Dedup
-    val index = replaySafeIndex(spark, batch, idCol, textCol, indexPath,
-      numHashes, shingleN)
-    Dedup.incrementalNearDups(batch, index, idCol, textCol,
-        numHashes, bands, shingleN, threshold, maxBucketSize)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(pairsPath)
-    Dedup.nearDupIndex(batch, idCol, textCol, numHashes, shingleN)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(indexPath)
+    sinkBatch(probeIndex(spark, batch, idCol, textCol, indexPath, numHashes,
+      bands, shingleN, threshold, maxBucketSize), batchId, pairsPath)
+    appendIndex(batch, batchId, idCol, textCol, indexPath, numHashes, bands,
+      shingleN)
   }
 
   /** Streaming corpus curation — the "corpus grows daily" twin of
@@ -211,16 +186,10 @@ object StreamingIngest {
     * re-read, never index-vs-index), and appended to the curated lake;
     * every drop lands beside it with a `drop_reason`.
     *
-    * Per-batch index cost, measured (r9 steady state, 25 x 2k-doc
-    * batches): probing through the plain [[graft.operators.Dedup
-    * .incrementalNearDups]] re-derived buckets from every indexed
-    * signature each batch and drifted +160 ms/batch; the
-    * [[graft.operators.Dedup.incrementalNearDupsIndexed]] probe used here
-    * reads the thin bucket SIDECAR (written incrementally below) and
-    * fetches shingle sets only from the batch_id partitions that actually
-    * collided — per-batch work is O(batch) plus an O(index) thin-bucket
-    * scan at ~24 B x bands per indexed doc (see that method's doc for the
-    * floor argument).
+    * The probe and the index append are [[incrementalDedupBatch]]'s
+    * ([[probeIndex]], [[appendIndex]]): the thin bucket sidecar, and
+    * shingle sets fetched only from the batch_id partitions that
+    * collided.
     *
     * Near-dup keep rules: a batch doc yields to ANY history match (the
     * canonical already shipped — it cannot be unshipped) and to a
@@ -250,8 +219,7 @@ object StreamingIngest {
                   langId: Option[graft.operators.QualityModel.LangIdModel]
                     = None,
                   bm25IndexPath: String = ""): Unit = {
-    import graft.functions.{Bpe, TextFns}
-    import graft.operators.Dedup
+    import graft.functions.TextFns
     // TOKENIZER MODE (tokenizer = Some(loaded artifact)): n_tokens — and
     // therefore the minTokens gate — is denominated in the artifact's BPE
     // tokens, the unit the training run downstream actually budgets in;
@@ -283,61 +251,20 @@ object StreamingIngest {
     }
     // LANGUAGE GATE (langAllow nonempty): the CorpusPipeline quality
     // stage's gate on the stream — docs outside the allow-list drop as
-    // wrong_language, kept docs carry the `lang` audit column. The
-    // predictor is the TRAINED char-n-gram classifier when langId
-    // supplies a loaded artifact (the fastText deployment shape: train
-    // offline, freeze, score day-2 batches through plan-literal
-    // weights — one zero-shuffle scan), else the marker argmax (q36).
-    // Margins materialize ONCE before the argmax reads fields — the
-    // HOF-CodegenFallback contract (QualityModel.langMargins).
-    val base2 =
-      if (langAllow.isEmpty) base1
-      else langId match {
-        case Some(m) =>
-          base1.withColumn("__lmg",
-              graft.operators.QualityModel.langMargins(col(textCol), m))
-            .withColumn("lang", graft.operators.QualityModel
-              .langPredictFromMargins(col("__lmg"), m.langs))
-            .drop("__lmg")
-        case None =>
-          base1.withColumn("lang", TextFns.langPredict(col(textCol)))
-      }
-    val baseReason = when(length(col(textCol)) === 0, lit("empty_after_clean"))
-      .when(col("n_tokens") < minTokens, lit("too_short"))
-      .when(col("quality") < minQuality, lit("low_quality"))
-    val lmReason =
-      if (lm.isDefined)
-        baseReason
-          .when(col("xent") > maxXent, lit("high_perplexity"))
-          .when(col("xent") < minXent, lit("low_perplexity"))
-      else baseReason
-    val scored = base2.withColumn("drop_reason",
-      if (langAllow.isEmpty) lmReason
-      else lmReason.when(
-        !col("lang").isin(langAllow.map(lit): _*), lit("wrong_language")))
+    // wrong_language, kept docs carry the `lang` audit column, scored by
+    // the trained classifier when langId supplies a loaded artifact
+    // (QualityModel.gate).
+    val scored = graft.operators.QualityModel.gate(base1, textCol,
+      dropEmpty = true, minTokens = Some(minTokens),
+      minQuality = Some(minQuality), xentBand = lm.map(_ => (minXent, maxXent)),
+      langAllow = langAllow, langId = langId)
     // the gated batch is consumed four times (signature build, pair gen,
     // kept anti-join, index write) — one persist, released before return
     val passed = scored.filter(col("drop_reason").isNull).drop("drop_reason")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // Probe through the materialized bucket sidecar + partition-pruned
-      // set fetch (Dedup.incrementalNearDupsIndexed), NOT the plain
-      // incrementalNearDups: the plain probe re-derives band buckets from
-      // the full index and scans every indexed doc's shingle-set array
-      // each batch, so per-batch wall grows with the corpus (the measured
-      // r9 steady-state drift). Here the per-batch index IO is the thin
-      // bucket scan plus only the COLLIDED batch_id partitions' sets.
-      val iBuckets = replaySafeBuckets(spark, passed, idCol, textCol,
-        indexPath, numHashes, bands, shingleN)
-      val fetchSets = (parts: Seq[Any]) =>
-        spark.read
-          .schema(indexSchema(passed, idCol, textCol, numHashes, shingleN))
-          .parquet(indexPath)
-          .filter(col("batch_id").isin(parts: _*))
-          .join(broadcast(passed.select(col(idCol))), Seq(idCol), "left_anti")
-      val pairs = Dedup.incrementalNearDupsIndexed(passed, iBuckets,
-        fetchSets, idCol, "batch_id", numHashes, bands, shingleN,
-        threshold, maxBucketSize, textCol)
+      val pairs = probeIndex(spark, passed, idCol, textCol, indexPath,
+        numHashes, bands, shingleN, threshold, maxBucketSize)
       // orient every pair both ways; batch ids and index ids are
       // disjoint, so "other side NOT in this batch" = history match and
       // everything else is within-batch — classified against the
@@ -364,13 +291,7 @@ object StreamingIngest {
         .localCheckpoint(true)
       val kept = passed.join(drops, Seq(idCol), "left_anti")
 
-      def sink(df: DataFrame, path: String): Unit =
-        df.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(path)
-
-      sink(kept, curatedPath)
+      sinkBatch(kept, batchId, curatedPath)
       // BM25 INDEX MODE (bm25IndexPath nonempty): the batch's KEPT docs
       // append to the streaming retrieval index as their own batch_id
       // partition (CorpusStats.bm25AppendBatch) — O(batch) stats, and a
@@ -402,20 +323,15 @@ object StreamingIngest {
         // wrong model
         val ids = kept.select(col(idCol),
           t.encodeIds(col(textCol)).as("ids"))
-        sink(graft.operators.Packer.packTokenIds(spark, ids, idCol, "ids",
-          seqLen), packedIdsPath)
+        sinkBatch(graft.operators.Packer.packTokenIds(spark, ids, idCol,
+          "ids", seqLen), batchId, packedIdsPath)
       }
-      sink(scored.filter(col("drop_reason").isNotNull)
+      sinkBatch(scored.filter(col("drop_reason").isNotNull)
         .unionByName(passed.join(drops, Seq(idCol), "left_semi")
-          .withColumn("drop_reason", lit("near_duplicate"))), rejectsPath)
-      val keptIdx = Dedup.nearDupIndex(kept, idCol, textCol, numHashes, shingleN)
-      sink(keptIdx, indexPath)
-      // bucket sidecar: band buckets computed ONCE here, at write time, so
-      // future batches probe 3 thin int64 columns instead of re-deriving
-      // buckets from every indexed signature (same batch_id partitioning
-      // and dynamic overwrite -> same replay story as the index itself)
-      sink(Dedup.bandBuckets(keptIdx, idCol, bands, numHashes),
-        bucketsPath(indexPath))
+          .withColumn("drop_reason", lit("near_duplicate"))), batchId,
+        rejectsPath)
+      appendIndex(kept, batchId, idCol, textCol, indexPath, numHashes, bands,
+        shingleN)
     } finally passed.unpersist()
   }
 
@@ -427,10 +343,8 @@ object StreamingIngest {
     * in place ([[graft.maintenance.Compaction.compactPartitionedDir]]).
     * Each batch appends one partition of small files; compaction keeps
     * per-file open/footer costs bounded as batches accumulate (measured
-    * r9 A/B: with ~1 file/partition file count was NOT the drift driver —
-    * the probe's full-index bucket re-derivation was, which is why
-    * [[curateBatch]] now probes the materialized sidecar — but a
-    * many-task production batch writes `shuffle.partitions` files per
+    * r9 A/B: with ~1 file/partition file count was NOT what drove
+    * per-batch cost — but a many-task production batch writes `shuffle.partitions` files per
     * partition, where compaction is what keeps listings flat).
     * Per-partition compaction preserves the replay contract (dynamic
     * partition overwrite still replaces whole `batch_id=` dirs) and is
@@ -450,10 +364,12 @@ object StreamingIngest {
     * under the `__old`/`__tmp` siblings (on S3A the rename is a
     * non-atomic copy, so the window is wide). A crash there aborts the
     * trigger, and because the REPLAYED batch must not dedup against a
-    * silently-thinner index, every trigger (when compaction is enabled)
-    * first runs [[graft.operators.MergeSink.recoverSwap]] on each
-    * compacted dir — the index, its bucket sidecar and the BM25 parts
-    * dirs — a few FS probes in the steady state. The
+    * silently-thinner index, every trigger first runs
+    * [[graft.operators.MergeSink.recoverSwap]] on each compacted dir —
+    * the index, its bucket sidecar and the BM25 parts dirs — a few FS
+    * probes in the steady state. It runs whatever `compactEvery` is: a
+    * run restarted with compaction off still finds a crashed pass's
+    * stranded partitions. The
     * curated/rejects lakes are write-only for this loop; compact those on
     * the consumer's schedule instead. */
   def curateStream(spark: SparkSession, stream: DataFrame, idCol: String,
@@ -536,11 +452,9 @@ object StreamingIngest {
     val writer = stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0) {
-          // heal any partition stranded by a compaction crash BEFORE the
-          // (possibly replayed) batch probes the index — see scaladoc
-          compacted.foreach(graft.operators.MergeSink.recoverSwap(spark, _))
-        }
+        // heal any partition stranded by a compaction crash BEFORE the
+        // (possibly replayed) batch probes the index — see scaladoc
+        compacted.foreach(graft.operators.MergeSink.recoverSwap(spark, _))
         curateBatch(spark, batch, batchId, idCol, textCol, indexPath,
           curatedPath, rejectsPath, minTokens, minQuality, numHashes,
           bands, shingleN, threshold, maxBucketSize, tokenizer,
@@ -594,6 +508,26 @@ object StreamingIngest {
   final case class Change(key: String, row_hash: String, change_type: String,
                           changes: Long)
 
+  /** The change-detect step both state APIs run: each row of `key`
+    * against its last accepted hash — insert on first sight, update on a
+    * changed hash, nothing on an unchanged one. Returns the key's new
+    * state and the emitted changes. */
+  private def transition(key: String, prior: Option[KeyState],
+                         rows: Iterator[KeyedRow]): (KeyState, Iterator[Change]) = {
+    var st = prior.getOrElse(KeyState(null, 0L))
+    val out = Seq.newBuilder[Change]
+    rows.foreach { r =>
+      if (st.lastHash == null) {
+        st = KeyState(r.row_hash, 0L)
+        out += Change(key, r.row_hash, "insert", 0L)
+      } else if (st.lastHash != r.row_hash) {
+        st = KeyState(r.row_hash, st.changes + 1)
+        out += Change(key, r.row_hash, "update", st.changes)
+      }
+    }
+    (st, out.result().iterator)
+  }
+
   /** Custom-state change detection over a keyed stream
     * (KeyValueGroupedDataset.flatMapGroupsWithState): GroupState holds each
     * key's last row_hash across micro-batches, so the operator classifies
@@ -625,20 +559,10 @@ object StreamingIngest {
             state.remove()
             Iterator(Change(key, st.lastHash, "expired", st.changes))
           } else {
-            var st = state.getOption.getOrElse(KeyState(null, 0L))
-            val out = Seq.newBuilder[Change]
-            it.foreach { r =>
-              if (st.lastHash == null) {
-                st = KeyState(r.row_hash, 0L)
-                out += Change(key, r.row_hash, "insert", 0L)
-              } else if (st.lastHash != r.row_hash) {
-                st = KeyState(r.row_hash, st.changes + 1)
-                out += Change(key, r.row_hash, "update", st.changes)
-              } // unchanged hash: no-op, emit nothing
-            }
+            val (st, out) = transition(key, state.getOption, it)
             state.update(st)
             idleTimeout.foreach(state.setTimeoutDuration)
-            out.result().iterator
+            out
           }
       }
   }
@@ -661,19 +585,10 @@ object StreamingIngest {
 
     override def handleInputRows(key: String, rows: Iterator[KeyedRow],
                                  timerValues: TimerValues): Iterator[Change] = {
-      var st = if (state.exists()) state.get() else KeyState(null, 0L)
-      val out = Seq.newBuilder[Change]
-      rows.foreach { r =>
-        if (st.lastHash == null) {
-          st = KeyState(r.row_hash, 0L)
-          out += Change(key, r.row_hash, "insert", 0L)
-        } else if (st.lastHash != r.row_hash) {
-          st = KeyState(r.row_hash, st.changes + 1)
-          out += Change(key, r.row_hash, "update", st.changes)
-        } // unchanged hash: no-op
-      }
+      val (st, out) =
+        transition(key, if (state.exists()) Some(state.get()) else None, rows)
       state.update(st)
-      out.result().iterator
+      out
     }
   }
 

@@ -110,6 +110,32 @@ class DailyPipelineSpec extends SparkSpec {
     assert(navRows(day2) == navRows(day1))
   }
 
+  test("a hidden source dir (an editor's checkpoint copy) loads nothing") {
+    def stgRows(withHidden: Boolean): Map[String, Set[String]] = {
+      val root = Files.createTempDirectory("lakehidden")
+      writeLake(root)
+      if (withHidden)
+        write(root.resolve("lake/nav/.ipynb_checkpoints"), "nav-checkpoint.csv",
+          "ticker,asset_type,source,nav_price,currency,as_of_date,scrape_date\n" +
+            "VUSA,ETF,Financial Times,101.5,USD,2024-05-01,2024-05-01\n")
+      val wh = s"$root/warehouse"
+      val results = DailyPipeline.run(spark, s"$root/lake", wh, lit("2024-05-01"))
+      assert(results.forall(_.ok), results.mkString("; "))
+      new java.io.File(wh).list().filter(_.startsWith("stg_")).map { t =>
+        val df = spark.read.parquet(s"$wh/$t")
+        // load-time stamps differ between the two runs; every other
+        // column must match
+        val cols = df.schema.fields
+          .filterNot(_.dataType == org.apache.spark.sql.types.TimestampType)
+          .map(f => col(f.name))
+        t -> df.select(to_json(struct(cols.toSeq: _*))).as[String].collect().toSet
+      }.toMap
+    }
+    val plain = stgRows(withHidden = false)
+    assert(plain.contains("stg_daily_nav"))
+    assert(stgRows(withHidden = true) == plain)
+  }
+
   test("a failing stage is captured in the run summary (A6 contract)") {
     val root = Files.createTempDirectory("lakefail")
     val wh = s"$root/warehouse"

@@ -800,6 +800,93 @@ class StreamingIngestSpec extends SparkSpec {
       "batch 2 must dedup against the history index")
   }
 
+  test("incrementalDedupStream writes curateBatch's index layout: the " +
+      "sidecar holds each batch's band buckets, and curation dedups against it") {
+    val root = Files.createTempDirectory("incdedupsc")
+    val landing = root.resolve("landing")
+    val indexPath = s"$root/index"
+    val docSchema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType)))
+    def drain(): Unit =
+      StreamingIngest.incrementalDedupStream(spark,
+        spark.readStream.schema(docSchema).option("header", "true")
+          .option("maxFilesPerTrigger", 1).csv(landing.toString),
+        "doc_id", "text", indexPath, s"$root/pairs", s"$root/ckpt",
+        maxBucketSize = Int.MaxValue).awaitTermination()
+    val a = "the quick brown fox jumps over the lazy dog near the river bank"
+    val b = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+    write(landing, "b1.csv", s"doc_id,text\n1,$a\n2,$b\n")
+    drain()
+    val docs2 = Seq(5L -> b, 6L -> b.replace("mu", "nu"), 7L -> a.replace("dog", "cat"))
+    write(landing, "b2.csv",
+      docs2.map { case (i, t) => s"$i,$t\n" }.mkString("doc_id,text\n", "", ""))
+    drain()
+    // the same-batchId replay of batch 2, whose appends already landed
+    StreamingIngest.incrementalDedupBatch(spark, docs2.toDF("doc_id", "text"),
+      batchId = 1L, "doc_id", "text", indexPath, s"$root/pairs", numHashes = 64,
+      bands = 32, shingleN = 3, threshold = 0.5, maxBucketSize = Int.MaxValue)
+
+    val index = spark.read.parquet(indexPath)
+    assert(index.select("batch_id", "doc_id").as[(Long, Long)].collect().toSet ==
+      Set((0L, 1L), (0L, 2L), (1L, 5L), (1L, 6L), (1L, 7L)))
+    val expected = graft.operators.Dedup.bandBuckets(index, "doc_id", 32, 64)
+      .join(index.select("doc_id", "batch_id"), "doc_id")
+    def rows(df: DataFrame): Seq[(Long, Int, Long, Long)] =
+      df.select(col("batch_id"), col("band"), col("bucket"), col("doc_id"))
+        .as[(Long, Int, Long, Long)].collect().toSeq.sorted
+    val sidecar = rows(spark.read.parquet(StreamingIngest.bucketsPath(indexPath)))
+    assert(sidecar.nonEmpty && sidecar == rows(expected))
+
+    // curation continues the dedup loop's index
+    StreamingIngest.curateBatch(spark,
+      Seq((9L, a.replace("bank", "shore"))).toDF("doc_id", "text"),
+      batchId = 2L, "doc_id", "text", indexPath, s"$root/curated",
+      s"$root/rejects", minTokens = 8L, maxBucketSize = Int.MaxValue)
+    assert(spark.read.parquet(s"$root/rejects")
+      .select("doc_id", "drop_reason").as[(Long, String)].collect().toSeq ==
+      Seq(9L -> "near_duplicate"))
+  }
+
+  test("curateStream heals a partition stranded by a compaction crash even " +
+      "with compaction off") {
+    val root = Files.createTempDirectory("curaterec")
+    val landing = root.resolve("landing")
+    val indexPath = s"$root/index"
+    val docSchema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType)))
+    def drain(): Unit =
+      StreamingIngest.curateStream(spark,
+        spark.readStream.schema(docSchema).option("header", "true")
+          .option("maxFilesPerTrigger", 1).csv(landing.toString),
+        "doc_id", "text", indexPath, s"$root/curated", s"$root/rejects",
+        s"$root/ckpt", minTokens = 8L, maxBucketSize = Int.MaxValue,
+        compactEvery = 0).awaitTermination()
+    val a = "the quick brown fox jumps over the lazy dog near the river bank"
+    write(landing, "b0.csv", s"doc_id,text\n1,$a\n")
+    drain()
+    // a compaction pass crashed inside its marker swap: index partition 0
+    // exists ONLY under the `__old` sibling
+    val fs = new org.apache.hadoop.fs.Path(indexPath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val part = new org.apache.hadoop.fs.Path(indexPath, "batch_id=0")
+    val parked = new org.apache.hadoop.fs.Path(indexPath + "__old", "batch_id=0")
+    fs.mkdirs(parked.getParent)
+    assert(fs.rename(part, parked))
+    val marker = fs.create(new org.apache.hadoop.fs.Path(indexPath + "__swap"), true)
+    marker.write("batch_id=0".getBytes("UTF-8")); marker.close()
+
+    // the restart runs with compaction off; its batch holds a near-dup of
+    // the stranded partition's doc
+    write(landing, "b1.csv", s"doc_id,text\n7,${a.replace("dog", "cat")}\n")
+    drain()
+    assert(spark.read.parquet(s"$root/curated").select("doc_id")
+      .as[Long].collect().toSeq == Seq(1L))
+    assert(spark.read.parquet(s"$root/rejects")
+      .select("doc_id", "drop_reason").as[(Long, String)].collect().toSeq ==
+      Seq(7L -> "near_duplicate"))
+    assert(fs.exists(part) && !fs.exists(parked.getParent))
+  }
+
   test("dedupWithinWatermark drops redelivered keys via bounded state") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.Trigger

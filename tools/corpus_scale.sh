@@ -5,14 +5,14 @@
 # tools/corpus_report.py -> SCALING_r07_corpus.json.
 set -e
 cd "$(dirname "$0")/.."
-WORK="${1:-/root/repo/scaledata/r07}"
+WORK="${1:-scaledata/r07}"
 mkdir -p "$WORK"
 
 for sf in 0.1 0.5 1 2; do
   rm -rf "$WORK/corpus_out_$sf"
   SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" SPARK_DRIVER_MEM=16g \
   tools/jrun.sh graft.tools.CorpusScale \
-    "/root/repo/scaledata/sf$sf" "$WORK/corpus_out_$sf" "$sf" \
+    "scaledata/sf$sf" "$WORK/corpus_out_$sf" "$sf" \
     "$WORK/corpus_$sf.json" 2> "$WORK/corpus_$sf.log"
   echo "done sf$sf rc=$?" >> "$WORK/corpus_status.txt"
 done

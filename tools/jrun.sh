@@ -1,7 +1,9 @@
 #!/bin/bash
-# Run a graft main class directly from compiled classes + /opt/spark/jars,
-# bypassing sbt — long sweeps then don't hold the sbt project lock.
+# Run a graft main class directly from the compiled classes of the checkout
+# this script lives in + $SPARK_HOME/jars, bypassing sbt — long sweeps then
+# don't hold the sbt project lock.
 # Usage: tools/jrun.sh <mainClass> [args...]   (env: SPARK_DRIVER_MEM=8g)
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -16,4 +18,4 @@ done
 # only (r13 ADVICE). build.sbt pins the same flags for sbt-forked JVMs.
 exec java $OPENS $EXTRA_JVM -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -Duser.language=en -Duser.country=US \
-  -cp /root/repo/target/scala-2.13/classes:'/opt/spark/jars/*' "$@"
+  -cp "$ROOT/target/scala-2.13/classes":"${SPARK_HOME:?SPARK_HOME must name the Spark install}/jars/*" "$@"

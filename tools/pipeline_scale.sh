@@ -3,10 +3,10 @@
 # run DailyPipeline end-to-end over each in its OWN JVM (the isolation
 # lesson from the r6 tail sweep), then fit per-stage slopes with
 # tools/pipeline_report.py -> SCALING_r07_pipeline.json.
-# Usage: tools/pipeline_scale.sh [workDir=/root/repo/scaledata/pipeline]
+# Usage: tools/pipeline_scale.sh [workDir=scaledata/pipeline, under the checkout]
 set -e
 cd "$(dirname "$0")/.."
-WORK="${1:-/root/repo/scaledata/pipeline}"
+WORK="${1:-scaledata/pipeline}"
 mkdir -p "$WORK"
 
 # sizes: tickers per point (per-ticker files x4 + 9 per-source files);
