@@ -18,6 +18,9 @@ object Verify {
     val selected = only.fold(SparkEntry.queries)(names =>
       SparkEntry.queries.filter { case (n, _) => names(n) })
     selected.foreach { case (name, fn) =>
+      // a query that throws leaves no dir, never a previous run's output
+      // for the compare to pass on
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$outDir/$name"))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -42,7 +45,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter { case (k, _) => selected.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

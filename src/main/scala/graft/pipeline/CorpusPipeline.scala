@@ -198,6 +198,17 @@ object CorpusPipeline {
     require(!(bpeMerges > 0 && unigramVocabSize > 0),
       "bpeMerges and unigramVocabSize are mutually exclusive — one " +
         "tokenizer family per run (ship two runs for an A/B)")
+    require(pplLmOrder >= 1 && pplLmOrder <= 3,
+      s"pplLmOrder must be 1 (unigram), 2 (bigram) or 3 (trigram, " +
+        s"sampled-frozen mode only), got $pplLmOrder")
+    require(pplSampleMod >= 0,
+      s"pplSampleMod must be >= 0, got $pplSampleMod")
+    require(pplLmOrder < 3 || pplSampleMod > 0,
+      "pplLmOrder=3 requires pplSampleMod > 0: the self-trained exact " +
+        "trigram gate would pay a distinct-TRIGRAM frame that grows " +
+        "super-linearly on an open-vocabulary corpus (the order-2 " +
+        "lesson, worse); the deployment shape is sample-train + frozen " +
+        "scoring (q117)")
     /** The "tokenizer" stage (and everything token-denominated after
       * it) runs when EITHER family is selected. */
     def tokenizerOn: Boolean = bpeMerges > 0 || unigramVocabSize > 0
@@ -209,7 +220,6 @@ object CorpusPipeline {
     * `outDir`. */
   def run(spark: SparkSession, docs: DataFrame, benchmark: DataFrame,
           outDir: String, cfg: Config = Config(),
-          failFast: Boolean = true,
           embeddings: Option[DataFrame] = None): Seq[StageResult] = {
     require(cfg.semCentroids == 0 || embeddings.nonEmpty,
       "semCentroids > 0 turns the semantic-dedup stage on, which needs " +
@@ -226,7 +236,7 @@ object CorpusPipeline {
     def stage(name: String)(body: => Long): Unit = {
       val (r, err) = DailyPipeline.timed(runT0, name, () => body)
       results += r
-      if (failFast) err.foreach(e => throw new PipelineFailedException(results.result(), e))
+      err.foreach(e => throw new PipelineFailedException(results.result(), e))
     }
 
     def write(df: DataFrame, name: String): Long = {
@@ -321,17 +331,6 @@ object CorpusPipeline {
       // corpus×corpus join to re-attach xent; see withUnigramXent);
       // xent rides along as an audit column until span_rewrite
       // re-projects.
-      require(cfg.pplLmOrder >= 1 && cfg.pplLmOrder <= 3,
-        s"pplLmOrder must be 1 (unigram), 2 (bigram) or 3 (trigram, " +
-          s"sampled-frozen mode only), got ${cfg.pplLmOrder}")
-      require(cfg.pplSampleMod >= 0,
-        s"pplSampleMod must be >= 0, got ${cfg.pplSampleMod}")
-      require(cfg.pplLmOrder < 3 || cfg.pplSampleMod > 0,
-        "pplLmOrder=3 requires pplSampleMod > 0: the self-trained exact " +
-          "trigram gate would pay a distinct-TRIGRAM frame that grows " +
-          "super-linearly on an open-vocabulary corpus (the order-2 " +
-          "lesson, worse); the deployment shape is sample-train + frozen " +
-          "scoring (q117)")
       val scored =
         if (cfg.pplSampleMod > 0) {
           // sampled-frozen gate (see Config.pplSampleMod): train on the
@@ -469,26 +468,9 @@ object CorpusPipeline {
       write(in.join(contaminated, Seq("doc_id"), "left_anti"), "s6_clean")
     }
 
-    // Trained in the "tokenizer" stage (bpeMerges > 0) and consumed by
-    // every stage after it. `tokenizerOk` distinguishes "trained this
-    // run" from "stage failed under failFast=false": an empty `merges`
-    // is a LEGAL training outcome (no pair reached minCount on a tiny
-    // corpus), so emptiness alone cannot signal failure — without the
-    // flag, a failed tokenizer stage would let mixture run Bpe.tokenCount
-    // with an empty table, silently mis-denominating the budget as
-    // per-codepoint counts (r11 ADVICE, medium). When the flag is down,
-    // downstream stages RELOAD the persisted artifact from a previous
-    // run — the restart path — and fail loudly if none exists.
+    // Trained in the "tokenizer" stage and consumed by every stage after
+    // it; a failed tokenizer stage aborts the run before they start.
     var tok: graft.functions.Tokenizers.Tok = null
-    def tokenizerArtifacts(): graft.functions.Tokenizers.Tok = {
-      if (tok == null)
-        // family-dispatching load (r16 verdict #1c): detects unigram vs
-        // BPE by layout; each family's meta tag says which word model
-        // trained it — encoding under the wrong model would silently
-        // mis-tokenize, so the tag travels with the artifact
-        tok = graft.functions.Tokenizers.load(spark, s"$outDir/tokenizer")
-      tok
-    }
     if (cfg.tokenizerOn) stage("tokenizer") {
       val in = read("s6_clean")
       if (cfg.unigramVocabSize > 0) {
@@ -537,11 +519,8 @@ object CorpusPipeline {
       val in0 = read("s6_clean")
       // tokenizerOn: the budget below means what a training run means
       // by "tokens" — re-denominate with the in-scan encode expression
-      // (artifact reloaded if the tokenizer stage didn't run this run)
-      val in = if (cfg.tokenizerOn) {
-        val t = tokenizerArtifacts()
-        in0.withColumn("n_tokens", t.nTokens(col("text")))
-      } else in0
+      val in = if (cfg.tokenizerOn) in0.withColumn("n_tokens", tok.nTokens(col("text")))
+        else in0
       // equal per-source weights: budget splits evenly across the sources
       // present (the q64 machinery with weight=1 for each)
       val nSources = in.select(col("source")).distinct().count()
@@ -579,8 +558,7 @@ object CorpusPipeline {
       // legacy, unigram) Tok.decodeIds reconstructs the word-model
       // text (CorpusPipelineSpec pins all three end to end).
       val in = read("s7_mixture")
-      val t = tokenizerArtifacts()
-      val ids = in.select(col("doc_id"), t.encodeIds(col("text")).as("ids"))
+      val ids = in.select(col("doc_id"), tok.encodeIds(col("text")).as("ids"))
       write(Packer.packTokenIds(spark, ids, "doc_id", "ids",
         cfg.seqLen.toLong), "s8b_packed_ids")
     }

@@ -597,6 +597,13 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(bad == 0L, s"$bad day-2 rows failed the EXACT artifact round trip")
   }
 
+  test("Config rejects a bad LM setting at construction, before any stage writes") {
+    intercept[IllegalArgumentException](CorpusPipeline.Config(pplLmOrder = 4))
+    intercept[IllegalArgumentException](CorpusPipeline.Config(pplSampleMod = -1))
+    intercept[IllegalArgumentException](CorpusPipeline.Config(pplLmOrder = 3))
+    CorpusPipeline.Config(pplLmOrder = 3, pplSampleMod = 4)
+  }
+
   test("fail-fast: a broken stage aborts with the partial summary intact") {
     val out = Files.createTempDirectory("corpus_fail").toString
     val bad = docs.withColumnRenamed("text", "body") // quality stage can't resolve `text`

@@ -104,6 +104,10 @@ def main(sf_dir: str, out_dir: str) -> int:
         else:
             print(f"✓ {name}: {len(spark_df)} rows{dt_note}")
             n_pass += 1
+    for name in sorted(oracle):
+        if not os.path.isdir(os.path.join(out_dir, name)):
+            print(f"✗ {name}: no Verify output")
+            n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
     return 1 if n_fail else 0
 
